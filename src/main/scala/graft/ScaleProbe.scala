@@ -413,35 +413,6 @@ object ScaleProbe {
         } finally s.close()
       }
     }
-    // ---- BPE pair-maintenance decades over a REAL word universe ----
-    // The corpus fixtures above have 10¹–10³ unique words — far too small
-    // to exercise the round-22 incremental delta-fold, which the
-    // production path enables only at IncrementalMinWords (~4M). These
-    // rows feed both loops the SAME synthetic unique-word table (md5 hex
-    // prefixes: 16-char alphabet, length 10, cnt=1 — pair universe ≈ 16²,
-    // affected fraction per merge round ≈ len/16² ≈ 4%) and compare the
-    // per-round shuffle: the recount re-explodes every adjacent pair of
-    // every word each round, the delta-fold only the affected words'
-    // pairs plus the distinct-pair table.
-    if (filters.isEmpty || filters.exists(f => "bpe vocab".contains(f)
-        || f.contains("bpe vocab"))) {
-      for (n <- Seq(100000L, 1000000L, 4000000L)) {
-        val wc = spark.range(n).select(
-            substring(md5(concat(lit("bpevocab:"),
-              col("id").cast("string"))), 1, 10).as("word"),
-            lit(1L).as("cnt"))
-          .localCheckpoint(true) // both rows read one materialized input
-        measure(s"bpe vocab incr n=$n", "merges=4 incremental delta-fold") {
-          val (m, w) = graft.ext.Bpe.trainFromWordCountsIncremental(wc, 4)
-          val k = w.count(); w.unpersist(false); k + m.length
-        }
-        measure(s"bpe vocab recount n=$n", "merges=4 full recount") {
-          val (m, w) = graft.ext.Bpe.trainFromWordCountsRecount(wc, 4)
-          val k = w.count(); w.unpersist(false); k + m.length
-        }
-        wc.unpersist(false)
-      }
-    }
     for (factor <- Seq(1, 10, 100)) {
       // 100-node chains: edge count scales linearly, diameter stays 100, so
       // the large-star/small-star rounds are constant across factors

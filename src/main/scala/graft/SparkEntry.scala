@@ -640,6 +640,56 @@ object SparkEntry {
       path
     })
 
+  /** A file stream that delivers `batches` as consecutive micro-batches:
+    * each is written as one parquet file under `b<i>` of a fresh temp dir,
+    * and every batch but the last is back-dated (b0 oldest), so
+    * `Trigger.AvailableNow` with `maxFilesPerTrigger=1`, which takes files
+    * in modification-time order, delivers them in order without sleeping. */
+  private def batchFileStream(s: SparkSession, tag: String,
+                              batches: DataFrame*): DataFrame = {
+    import java.nio.file.{Files, Paths}
+    val src = Files.createTempDirectory(s"graft-$tag-src-")
+    batches.zipWithIndex.foreach { case (b, i) =>
+      b.coalesce(1).write.parquet(s"$src/b$i")
+    }
+    batches.indices.init.foreach { i =>
+      val files = Files.walk(Paths.get(s"$src/b$i"))
+      try files.forEach(p => Files.setLastModifiedTime(p,
+        java.nio.file.attribute.FileTime
+          .fromMillis(1000000000000L + i * 100000000000L)))
+      finally files.close()
+    }
+    s.readStream
+      .schema(s.read.parquet(s"$src/b0").schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(batches.indices.map(i => s"b$i")
+        .mkString(s"$src/{", ",", "}/*.parquet"))
+  }
+
+  /** Runs a `*ToSink` operator as `run(sink, checkpoint)` into a fresh
+    * temp sink and checkpoint dir, and returns the sink root. */
+  private def runSink(tag: String)(run: (String, String) => Unit): String = {
+    val sink = java.nio.file.Files
+      .createTempDirectory(s"graft-$tag-out-").toString
+    val ckpt = java.nio.file.Files
+      .createTempDirectory(s"graft-$tag-ck-").toString
+    run(sink, ckpt)
+    sink
+  }
+
+  /** Reads a sink table back: every batch's rows without the `batch_id`
+    * partition column, or with `newestOnly` only the newest `batch_id=B`
+    * directory (a running state or card, or the last batch's verdicts). */
+  private def readSink(s: SparkSession, dir: String,
+                       newestOnly: Boolean = false): DataFrame =
+    if (!newestOnly) s.read.parquet(dir).drop("batch_id")
+    else {
+      val newest = new java.io.File(dir).list()
+        .filter(_.startsWith("batch_id="))
+        .maxBy(_.stripPrefix("batch_id=").toLong)
+      s.read.parquet(s"$dir/$newest")
+    }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     queries("q1_agg")(spark, "/root/testdata/sf0.001")
@@ -1644,7 +1694,8 @@ object SparkEntry {
 
     "q_domain_cap_stream" -> ((s, dir) => {
       // the STREAMING form of the per-source quota: two id-ranged
-      // micro-batches flow through the flatMapGroupsWithState counter —
+      // micro-batches flow through the carried per-source count
+      // (sourceQuotaToSink, read back without batch ids) —
       // at most 3 docs admitted per source over the stream's life, in
       // (batch, doc_id) order. Because the batches are id-ranged and
       // each batch's group admits id-sorted, global admission order per
@@ -1653,20 +1704,12 @@ object SparkEntry {
       // offline it can; the online form admits first-N, the crawler-
       // frontier semantics. Both gated, each against its own oracle.)
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
-      val src = java.nio.file.Files.createTempDirectory("graft-dcs-src-")
-      docs.filter(col("doc_id") < 500).coalesce(1)
-        .write.parquet(s"$src/b0")
-      docs.filter(col("doc_id") >= 500).coalesce(1)
-        .write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.sourceQuotaAvailableNow(
-          stream, "source", "doc_id", maxPerSource = 3)
+      val stream = batchFileStream(s, "dcs",
+        docs.filter(col("doc_id") < 500), docs.filter(col("doc_id") >= 500))
+      val sink = runSink("dcs")((sink, ckpt) =>
+        graft.streaming.Streaming.sourceQuotaToSink(stream, "source",
+          "doc_id", maxPerSource = 3, sink, ckpt))
+      readSink(s, s"$sink/data")
         .select(col("source"), col("doc_id"), col("n_kept"))
         .orderBy(col("source"), col("n_kept"))
     }),
@@ -1682,24 +1725,11 @@ object SparkEntry {
       // doc_id-order first-3 and each verdict's batch_id is determined
       // by its id range. Forced-restart replay pinned in StreamingSpec.
       val docs = t(s, dir, "documents").select(col("doc_id"), col("source"))
-      val src = java.nio.file.Files.createTempDirectory("graft-qsink-src-")
-      docs.filter(col("doc_id") < 500).coalesce(1)
-        .write.parquet(s"$src/b0")
-      docs.filter(col("doc_id") >= 500).coalesce(1)
-        .write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-qsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-qsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.sourceQuotaToSink(stream, "source",
-        "doc_id", maxPerSource = 3, sink, ckpt)
+      val stream = batchFileStream(s, "qsink",
+        docs.filter(col("doc_id") < 500), docs.filter(col("doc_id") >= 500))
+      val sink = runSink("qsink")((sink, ckpt) =>
+        graft.streaming.Streaming.sourceQuotaToSink(stream, "source",
+          "doc_id", maxPerSource = 3, sink, ckpt))
       s.read.parquet(s"$sink/data")
         .select(col("batch_id").cast("long").as("batch_id"), col("source"),
           col("doc_id"), col("n_kept"))
@@ -1811,13 +1841,18 @@ object SparkEntry {
       // its bit positions into the carried bitmap (bit-set union is an
       // OR monoid ⇒ slicing-invariant; multi-batch == batch pinned in
       // StreamingSpec), then the identical corpus probe runs against the
-      // streamed filter
+      // streamed filter, read back from the sink's newest state
       val schema = t(s, dir, "documents").schema
       val refStream = s.readStream.schema(schema)
         .parquet(s"$dir/documents.parque[t]")
         .filter(col("doc_id") < 2000).select(col("text"))
-      val words = graft.streaming.Streaming.bloomBitmapAvailableNow(
-        refStream, "text", BloomK, BloomM)
+      val sink = runSink("blstream")((sink, ckpt) =>
+        graft.streaming.Streaming.bloomBitmapToSink(refStream, "text",
+          BloomK, BloomM, sink, ckpt))
+      // numBits/64 words: the bitmap rides the probe plan as a literal
+      val words = readSink(s, s"$sink/_state", newestOnly = true)
+        .select(col("idx"), col("word")).orderBy(col("idx"))
+        .collect().map(_.getLong(1))
       val docs = t(s, dir, "documents")
       val ref = docs.filter(col("doc_id") < 2000).select(col("text"))
       docs.select(col("doc_id"), col("text"))
@@ -1835,14 +1870,20 @@ object SparkEntry {
       // the word stream folds into the carried counter matrix per
       // micro-batch (sum monoid ⇒ slicing-invariant; multi-batch == batch
       // pinned in StreamingSpec), then the identical top-20 probe runs
-      // against the streamed counters
+      // against the streamed counters, read back from the sink's newest
+      // state
       val schema = t(s, dir, "documents").schema
       val words = s.readStream.schema(schema)
         .parquet(s"$dir/documents.parque[t]")
         .select(explode(filter(split(trim(col("text")), "\\s+"),
           w => length(w) > 0)).as("word"))
-      val sk = graft.streaming.Streaming.cmsSketchAvailableNow(
-        words, "word", CmsDepth, CmsWidth)
+      val sink = runSink("cmsstream")((sink, ckpt) =>
+        graft.streaming.Streaming.cmsSketchToSink(words, "word",
+          CmsDepth, CmsWidth, sink, ckpt))
+      val sk = readSink(s, s"$sink/_state", newestOnly = true)
+        .select(col("row").cast("int").as("row"),
+          col("bucket").cast("long").as("bucket"),
+          col("cnt").cast("long").as("cnt"))
       val occ = t(s, dir, "documents")
         .select(explode(filter(split(trim(col("text")), "\\s+"),
           w => length(w) > 0)).as("word"))
@@ -1865,13 +1906,17 @@ object SparkEntry {
 
     "q_stats_stream" -> ((s, dir) => {
       // the STREAMING data card under the SAME oracle as q_stats_graph:
-      // single-file fixture → one micro-batch; the adversarial-slicing
-      // monoid equality is pinned in StreamingSpec
+      // single-file fixture → one micro-batch, the sink's newest card read
+      // back; the adversarial-slicing monoid equality is pinned in
+      // StreamingSpec
       val schema = t(s, dir, "documents").schema
       val stream = s.readStream.schema(schema)
         .parquet(s"$dir/documents.parque[t]")
-      graft.streaming.Streaming.corpusReportAvailableNow(
-          stream, "lang", "text", KmvK)
+      val sink = runSink("statsstream")((sink, ckpt) =>
+        graft.streaming.Streaming.corpusReportToSink(stream, "lang", "text",
+          KmvK, sink, ckpt))
+      readSink(s, s"$sink/card", newestOnly = true)
+        .withColumnRenamed("lang", "group")
         .orderBy(col("group"))
     }),
 
@@ -1929,15 +1974,18 @@ object SparkEntry {
       // the STREAMING token-budget twin under the SAME oracle as
       // q_token_budget: the single-file fixture arrives as one batch (the
       // equality-contract trivial case; the carried-fill multi-batch case
-      // is pinned in StreamingSpec), verdicts realized as the kept cut
+      // is pinned in StreamingSpec), verdicts read back from the sink and
+      // realized as the kept cut
       val schema = t(s, dir, "documents").schema
       val stream = s.readStream.schema(schema)
         .parquet(s"$dir/documents.parque[t]")
         .select(col("doc_id"), col("lang"), col("n_chars"),
           graft.ext.TextAnalysis.tokenCount(col("text")).cast("long")
             .as("n_tokens"))
-      graft.streaming.Streaming.tokenBudgetAvailableNow(
-          stream, "lang", "doc_id", "n_chars", "n_tokens", TbBudget)
+      val sink = runSink("tbstream")((sink, ckpt) =>
+        graft.streaming.Streaming.tokenBudgetToSink(stream, "lang", "doc_id",
+          "n_chars", "n_tokens", TbBudget, sink, ckpt))
+      readSink(s, s"$sink/data")
         .filter(col("keep"))
         .select(col("doc_id"), col("lang"), col("n_tokens"),
           col("cum_tokens").cast("long").as("cum_tokens"))
@@ -1997,25 +2045,13 @@ object SparkEntry {
       // the true online-curation semantics. Verdicts are read back from
       // the sink per batch; forced-restart replay pinned in StreamingSpec.
       val docs = t(s, dir, "documents")
-      val src = java.nio.file.Files.createTempDirectory("graft-lmsink-src-")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$src/b0")
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-lmsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-lmsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
+      val stream = batchFileStream(s, "lmsink",
+          docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0))
         .select(col("doc_id"), col("text"))
-      graft.streaming.Streaming.lmScoreToSink(stream, "doc_id", "text",
-        sink, ckpt)
+      val sink = runSink("lmsink")((sink, ckpt) =>
+        graft.streaming.Streaming.lmScoreToSink(stream, "doc_id", "text",
+          sink, ckpt))
       Seq(0, 1).map { b =>
         s.read.parquet(s"$sink/data/batch_id=$b")
           .select(lit(b.toLong).as("batch_id"), col("doc_id"),
@@ -2032,26 +2068,14 @@ object SparkEntry {
       // against everything (the sum monoid makes it equal the batch
       // operator). Exactly-once restart pinned in StreamingSpec.
       val docs = t(s, dir, "documents")
-      val src = java.nio.file.Files.createTempDirectory("graft-cmssink-src-")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$src/b0")
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-cmssink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-cmssink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
+      val stream = batchFileStream(s, "cmssink",
+          docs.filter(col("doc_id") % 2 === 0),
+          docs.filter(col("doc_id") % 2 =!= 0))
         .select(explode(filter(split(trim(col("text")), "\\s+"),
           w => length(w) > 0)).as("word"))
-      graft.streaming.Streaming.cmsSketchToSink(stream, "word",
-        CmsDepth, CmsWidth, sink, ckpt)
+      val sink = runSink("cmssink")((sink, ckpt) =>
+        graft.streaming.Streaming.cmsSketchToSink(stream, "word",
+          CmsDepth, CmsWidth, sink, ckpt))
       val occ = docs.select(explode(filter(split(trim(col("text")), "\\s+"),
         w => length(w) > 0)).as("word"))
       val top = occ.groupBy("word").agg(count(lit(1)).as("exact_cnt"))
@@ -2080,25 +2104,13 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val ref = docs.filter(col("doc_id") < 2000)
         .select(col("doc_id"), col("text"))
-      val src = java.nio.file.Files.createTempDirectory("graft-blsink-src-")
-      ref.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$src/b0")
-      ref.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-blsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-blsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
+      val stream = batchFileStream(s, "blsink",
+          ref.filter(col("doc_id") % 2 === 0),
+          ref.filter(col("doc_id") % 2 =!= 0))
         .select(col("text"))
-      graft.streaming.Streaming.bloomBitmapToSink(stream, "text",
-        BloomK, BloomM, sink, ckpt)
+      val sink = runSink("blsink")((sink, ckpt) =>
+        graft.streaming.Streaming.bloomBitmapToSink(stream, "text",
+          BloomK, BloomM, sink, ckpt))
       Seq(0, 1).map { b =>
         val words = s.read.parquet(s"$sink/_state/batch_id=$b")
           .select(col("idx"), col("word")).orderBy(col("idx"))
@@ -2125,25 +2137,12 @@ object SparkEntry {
       // the prefix that batch saw — the oracle replays both prefixes.
       // Exactly-once across restarts is pinned in StreamingSpec.
       val docs = t(s, dir, "documents")
-      val src = java.nio.file.Files
-        .createTempDirectory("graft-cardsink-src-")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$src/b0")
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-cardsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-cardsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.corpusReportToSink(stream, "lang", "text",
-        KmvK, sink, ckpt)
+      val stream = batchFileStream(s, "cardsink",
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 =!= 0))
+      val sink = runSink("cardsink")((sink, ckpt) =>
+        graft.streaming.Streaming.corpusReportToSink(stream, "lang", "text",
+          KmvK, sink, ckpt))
       Seq(0, 1).map(b => s.read.parquet(s"$sink/card/batch_id=$b")
           .select(lit(b.toLong).as("batch_id"), col("lang"),
             col("n_docs"), col("n_tokens"), col("n_chars"),
@@ -2163,25 +2162,12 @@ object SparkEntry {
         col("n_chars"),
         graft.ext.TextAnalysis.tokenCount(col("text")).cast("long")
           .as("n_tokens"))
-      val src = java.nio.file.Files
-        .createTempDirectory("graft-tbsink-src-")
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.parquet(s"$src/b0")
-      docs.filter(col("doc_id") % 2 =!= 0)
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-tbsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-tbsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.tokenBudgetToSink(stream, "lang", "doc_id",
-        "n_chars", "n_tokens", TbBudget, sink, ckpt)
+      val stream = batchFileStream(s, "tbsink",
+        docs.filter(col("doc_id") % 2 === 0),
+        docs.filter(col("doc_id") % 2 =!= 0))
+      val sink = runSink("tbsink")((sink, ckpt) =>
+        graft.streaming.Streaming.tokenBudgetToSink(stream, "lang", "doc_id",
+          "n_chars", "n_tokens", TbBudget, sink, ckpt))
       s.read.parquet(s"$sink/data")
         .select(col("batch_id").cast("long").as("batch_id"), col("doc_id"),
           col("lang"), col("n_tokens"),
@@ -2193,7 +2179,7 @@ object SparkEntry {
       // the STREAMING k-means twin under the SAME oracle as q_kmeans:
       // the exact model is fitted once on the static corpus
       // (fit-batch/serve-stream), then the availableNow stream re-scores
-      // every row through the stateless map-only scorer
+      // every row through the stateless map-only scorer into the sink
       val static = t(s, dir, "embeddings")
       val fit = graft.ml.ExactKMeans.fit(static, "vec_id", "embedding",
         KmInitIds, KmIters)
@@ -2201,8 +2187,10 @@ object SparkEntry {
       val stream = s.readStream.schema(schema)
         .parquet(s"$dir/embeddings.parque[t]")
         .select(col("vec_id").cast("long").as("vid"), col("embedding"))
-      graft.streaming.Streaming.kmeansAssignAvailableNow(
-          stream, "vid", "embedding", fit)
+      val sink = runSink("kmstream")((sink, ckpt) =>
+        graft.streaming.Streaming.kmeansAssignToSink(stream, "vid",
+          "embedding", fit, sink, ckpt))
+      readSink(s, s"$sink/data")
         .orderBy(col("id"))
     }),
 
@@ -2219,22 +2207,11 @@ object SparkEntry {
         KmInitIds, KmIters)
       val emb = static
         .select(col("vec_id").cast("long").as("vid"), col("embedding"))
-      val src = java.nio.file.Files.createTempDirectory("graft-kmsink-src-")
-      emb.filter(col("vid") < 30).coalesce(1).write.parquet(s"$src/b0")
-      emb.filter(col("vid") >= 30).coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-kmsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-kmsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.kmeansAssignToSink(stream, "vid",
-        "embedding", fit, sink, ckpt)
+      val stream = batchFileStream(s, "kmsink",
+        emb.filter(col("vid") < 30), emb.filter(col("vid") >= 30))
+      val sink = runSink("kmsink")((sink, ckpt) =>
+        graft.streaming.Streaming.kmeansAssignToSink(stream, "vid",
+          "embedding", fit, sink, ckpt))
       // artifact gate: the pinned model must read back as the fit
       val model = s.read.parquet(s"$sink/_model")
         .select(col("cell"), col("dim"), col("qm")).collect()
@@ -2961,17 +2938,20 @@ object SparkEntry {
     }),
 
     "q_incr_stream" -> ((s, dir) => {
-      // the STREAMING ingest twin of q_dedup_incr: the planted batch
+      // the STREAMING ingest form of q_dedup_incr: the planted batch
       // arrives as one micro-batch over a FRESH copy of the old-corpus
-      // index (the twin MUTATES its index — probe then append — so the
-      // q_dedup_incr cache cannot be shared); the probe-then-append
-      // multi-batch equality is pinned in StreamingSpec
+      // index (the sink MUTATES its index — probe then append — so the
+      // q_dedup_incr cache cannot be shared); the pair ledger is read
+      // back without batch ids. The probe-then-append multi-batch
+      // equality is pinned in StreamingSpec
       val idx = copyDir(minhashIndexFor(s, dir))
       val batchPath = incrBatchFixtureFor(s, dir)
       val stream = s.readStream
         .schema(s.read.parquet(batchPath).schema).parquet(batchPath)
-      graft.streaming.Streaming.minhashDedupIngestAvailableNow(
-          stream, idx, "text", "doc_id", threshold = 0.9)
+      val sink = runSink("incrstream")((sink, ckpt) =>
+        graft.streaming.Streaming.minhashDedupIngestToSink(stream, idx,
+          "text", "doc_id", sink, ckpt, threshold = 0.9))
+      readSink(s, sink)
         .orderBy(col("id_a"), col("id_b"))
     }),
 
@@ -3217,27 +3197,12 @@ object SparkEntry {
       Similarity.buildIvfIndex(head, "vec_id", "embedding",
         Similarity.centroidsByIds(head, "vec_id", "embedding", 0L until 8L),
         idx)
-      val src = java.nio.file.Files
-        .createTempDirectory("graft-annstream-src-")
-      emb.filter(col("vec_id") >= 20 && col("vec_id") < 30)
-        .coalesce(1).write.parquet(s"$src/b0")
-      emb.filter(col("vec_id") >= 30 && col("vec_id") < 40)
-        .coalesce(1).write.parquet(s"$src/b1")
-      // deterministic batch order without sleeping: AvailableNow with
-      // maxFilesPerTrigger=1 triggers in modification-time order
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-annstream-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-annstream-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.ivfIngestToSink(stream, idx, "vec_id",
-        "embedding", k = 5, nprobe = 2, sink, ckpt, autoCompactAt = 1)
+      val stream = batchFileStream(s, "annstream",
+        emb.filter(col("vec_id") >= 20 && col("vec_id") < 30),
+        emb.filter(col("vec_id") >= 30 && col("vec_id") < 40))
+      val sink = runSink("annstream")((sink, ckpt) =>
+        graft.streaming.Streaming.ivfIngestToSink(stream, idx, "vec_id",
+          "embedding", k = 5, nprobe = 2, sink, ckpt, autoCompactAt = 1))
       s.read.parquet(sink)
         .select(col("batch_id").cast("long").as("batch_id"),
           col("query_id"), col("corpus_id"), col("cosine"), col("rank"))
@@ -3263,25 +3228,12 @@ object SparkEntry {
         Similarity.pqCodebooksByIds(head, "vec_id", "embedding", m = 8,
           0L to 15L),
         idx)
-      val src = java.nio.file.Files
-        .createTempDirectory("graft-pqstream-src-")
-      emb.filter(col("vec_id") >= 20 && col("vec_id") < 30)
-        .coalesce(1).write.parquet(s"$src/b0")
-      emb.filter(col("vec_id") >= 30 && col("vec_id") < 40)
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-pqstream-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-pqstream-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.pqIngestToSink(stream, idx, "vec_id",
-        "embedding", k = 5, nprobe = 2, sink, ckpt, autoCompactAt = 1)
+      val stream = batchFileStream(s, "pqstream",
+        emb.filter(col("vec_id") >= 20 && col("vec_id") < 30),
+        emb.filter(col("vec_id") >= 30 && col("vec_id") < 40))
+      val sink = runSink("pqstream")((sink, ckpt) =>
+        graft.streaming.Streaming.pqIngestToSink(stream, idx, "vec_id",
+          "embedding", k = 5, nprobe = 2, sink, ckpt, autoCompactAt = 1))
       s.read.parquet(sink)
         .select(col("batch_id").cast("long").as("batch_id"),
           col("query_id"), col("corpus_id"), col("score"), col("rank"))
@@ -3565,16 +3517,19 @@ object SparkEntry {
       // in 2 micro-batches appended into a fresh COPY of the head-built
       // index (postings append + vocab-bounded df merge behind a staged
       // rename + additive stats LAST — probe-anytime consistency); the
-      // standing query against the final index shares q_bm25's oracle:
-      // streamed build == batch corpus scan, bit for bit
+      // standing query against the final index (the sink's last batch)
+      // shares q_bm25's oracle: streamed build == batch corpus scan, bit
+      // for bit
       val idx = copyDir(bm25HeadIndexFor(s, dir))
       val tail = bm25TailFixtureFor(s, dir)
       val stream = s.readStream
         .schema(s.read.parquet(tail).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(tail)
-      graft.streaming.Streaming.bm25IngestAvailableNow(stream, idx,
-          "doc_id", "text", RrfTerms, k = 10)
+      val sink = runSink("bm25stream")((sink, ckpt) =>
+        graft.streaming.Streaming.bm25IngestToSink(stream, idx, "doc_id",
+          "text", RrfTerms, k = 10, sink, ckpt))
+      readSink(s, sink, newestOnly = true)
         .orderBy(col("rank"))
     }),
 
@@ -3767,14 +3722,17 @@ object SparkEntry {
       // the STREAMING twin under the SAME oracle as q_lm_perplexity: an
       // availableNow file stream scored per micro-batch against the STATIC
       // model fit on the even doc_ids — no cross-batch state, so the
-      // result equals the batch scorer's bit for bit (multi-batch
-      // invariance pinned in StreamingSpec)
+      // verdicts read back from the sink equal the batch scorer's bit for
+      // bit (multi-batch invariance pinned in StreamingSpec)
       val static = t(s, dir, "documents")
       val lm = LangModel.fit(static.filter(col("doc_id") % 2 === 0), "text")
       val stream = s.readStream.schema(static.schema)
         .parquet(s"$dir/documents.parque[t]")
-      graft.streaming.Streaming.scoreLmAvailableNow(
-          stream.select(col("doc_id"), col("text")), "doc_id", "text", lm)
+      val sink = runSink("lmstream")((sink, ckpt) =>
+        graft.streaming.Streaming.pinnedLmScoreToSink(
+          stream.select(col("doc_id"), col("text")), "doc_id", "text", lm,
+          sink, ckpt))
+      readSink(s, s"$sink/data")
         .orderBy(col("doc_id"))
     }),
 
@@ -4089,10 +4047,10 @@ object SparkEntry {
     }),
 
     "q_pack_stream" -> ((s, dir) => {
-      // the STREAMING twin under the SAME oracle: an availableNow file
+      // the STREAMING form under the SAME oracle: an availableNow file
       // stream over the corpus, per-batch distributed packing + the
-      // running token total carried as one driver scalar (round 12,
-      // VERDICT r11 #7) — for the single-file fixture the layout equals
+      // running token total carried in the sink's state — for the
+      // single-file fixture the layout read back from the sink equals
       // the batch layout exactly; the multi-batch contiguity contract is
       // pinned in StreamingSpec
       val static = t(s, dir, "documents")
@@ -4101,9 +4059,11 @@ object SparkEntry {
       // sf dir the base and the file the match
       val stream = s.readStream.schema(static.schema)
         .parquet(s"$dir/documents.parque[t]")
-      graft.streaming.Streaming.packSequencesAvailableNow(
+      val sink = runSink("packstream")((sink, ckpt) =>
+        graft.streaming.Streaming.packSequencesToSink(
           stream.select(col("doc_id"), col("text")), "doc_id",
-          size(Corpus.words(col("text"))), seqLen = 512L)
+          size(Corpus.words(col("text"))), seqLen = 512L, sink, ckpt))
+      readSink(s, s"$sink/data")
         .orderBy(col("doc_id"))
     }),
 
@@ -4301,24 +4261,11 @@ object SparkEntry {
         .unionByName(docs.filter(col("doc_id") === 3 || col("doc_id") === 70)
           .select((col("doc_id") + 200000L).as("doc_id"), col("lang"),
             col("text"), col("n_chars")))
-      val src = java.nio.file.Files
-        .createTempDirectory("graft-curstream-src-")
-      b0.coalesce(1).write.parquet(s"$src/b0")
-      b1.coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-curstream-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-curstream-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.curateIngestToSink(stream, "doc_id",
-        "text", "lang", "n_chars", idx, threshold = 0.9, minTokens = 5L,
-        budget = TbBudget, sink, ckpt)
+      val stream = batchFileStream(s, "curstream", b0, b1)
+      val sink = runSink("curstream")((sink, ckpt) =>
+        graft.streaming.Streaming.curateIngestToSink(stream, "doc_id",
+          "text", "lang", "n_chars", idx, threshold = 0.9, minTokens = 5L,
+          budget = TbBudget, sink, ckpt))
       s.read.parquet(s"$sink/data")
         .select(col("batch_id").cast("long").as("batch_id"), col("doc_id"),
           col("quality_ok"), col("is_dup"), col("cum_tokens"),
@@ -4338,25 +4285,15 @@ object SparkEntry {
         .select(col("vec_id"), col("embedding"))
       val cents = Similarity.centroidsByIds(emb, "vec_id", "embedding",
         0L to 7L)
-      val src = java.nio.file.Files.createTempDirectory("graft-semsink-src-")
-      emb.filter(col("vec_id") < 30).coalesce(1).write.parquet(s"$src/b0")
-      emb.filter(col("vec_id") >= 30 && col("vec_id") < 60)
-        .union(emb.filter(col("vec_id") >= 30 && col("vec_id") < 40)
-          .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
-        .coalesce(1).write.parquet(s"$src/b1")
-      java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/b0"))
-        .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-          java.nio.file.attribute.FileTime.fromMillis(1000000000000L)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-semsink-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-semsink-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1}/*.parquet")
-      graft.streaming.Streaming.semanticDedupToSink(stream, "vec_id",
-        "embedding", cents, threshold = 0.8, sink, ckpt)
+      val stream = batchFileStream(s, "semsink",
+        emb.filter(col("vec_id") < 30),
+        emb.filter(col("vec_id") >= 30 && col("vec_id") < 60)
+          .union(emb.filter(col("vec_id") >= 30 && col("vec_id") < 40)
+            .select((col("vec_id") + 100000L).as("vec_id"),
+              col("embedding"))))
+      val sink = runSink("semsink")((sink, ckpt) =>
+        graft.streaming.Streaming.semanticDedupToSink(stream, "vec_id",
+          "embedding", cents, threshold = 0.8, sink, ckpt))
       s.read.parquet(s"$sink/data")
         .select(col("batch_id").cast("long").as("batch_id"),
           col("id").as("vec_id"), col("cell"), col("keep"))
@@ -4379,33 +4316,23 @@ object SparkEntry {
         .select(col("vec_id"), col("embedding"))
       val cents = Similarity.centroidsByIds(emb, "vec_id", "embedding",
         0L to 7L)
-      val src = java.nio.file.Files.createTempDirectory("graft-semhor-src-")
-      emb.filter(col("vec_id") < 20).coalesce(1).write.parquet(s"$src/b0")
-      emb.filter(col("vec_id") >= 20 && col("vec_id") < 40)
-        .union(emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
-          .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
-        .coalesce(1).write.parquet(s"$src/b1")
-      emb.filter(col("vec_id") >= 40 && col("vec_id") < 60)
-        .union(emb.filter(col("vec_id") >= 20 && col("vec_id") < 30)
-          .select((col("vec_id") + 200000L).as("vec_id"), col("embedding")))
-        .union(emb.filter(col("vec_id") < 10)
-          .select((col("vec_id") + 300000L).as("vec_id"), col("embedding")))
-        .coalesce(1).write.parquet(s"$src/b2")
-      for ((b, t) <- Seq("b0" -> 1000000000000L, "b1" -> 1100000000000L))
-        java.nio.file.Files.walk(java.nio.file.Paths.get(s"$src/$b"))
-          .forEach(p => java.nio.file.Files.setLastModifiedTime(p,
-            java.nio.file.attribute.FileTime.fromMillis(t)))
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-semhor-out-").toString
-      val ckpt = java.nio.file.Files
-        .createTempDirectory("graft-semhor-ck-").toString
-      val stream = s.readStream
-        .schema(s.read.parquet(s"$src/b0").schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(s"$src/{b0,b1,b2}/*.parquet")
-      graft.streaming.Streaming.semanticDedupToSink(stream, "vec_id",
-        "embedding", cents, threshold = 0.8, sink, ckpt,
-        horizonBatches = 1)
+      val stream = batchFileStream(s, "semhor",
+        emb.filter(col("vec_id") < 20),
+        emb.filter(col("vec_id") >= 20 && col("vec_id") < 40)
+          .union(emb.filter(col("vec_id") >= 10 && col("vec_id") < 20)
+            .select((col("vec_id") + 100000L).as("vec_id"),
+              col("embedding"))),
+        emb.filter(col("vec_id") >= 40 && col("vec_id") < 60)
+          .union(emb.filter(col("vec_id") >= 20 && col("vec_id") < 30)
+            .select((col("vec_id") + 200000L).as("vec_id"),
+              col("embedding")))
+          .union(emb.filter(col("vec_id") < 10)
+            .select((col("vec_id") + 300000L).as("vec_id"),
+              col("embedding"))))
+      val sink = runSink("semhor")((sink, ckpt) =>
+        graft.streaming.Streaming.semanticDedupToSink(stream, "vec_id",
+          "embedding", cents, threshold = 0.8, sink, ckpt,
+          horizonBatches = 1))
       s.read.parquet(s"$sink/data")
         .select(col("batch_id").cast("long").as("batch_id"),
           col("id").as("vec_id"), col("cell"), col("keep"))
@@ -4417,10 +4344,11 @@ object SparkEntry {
       // q_dedup_semantic: an availableNow stream of the corpus (originals ∪
       // planted copies, built by the same transformations on the streaming
       // frame) deduped against PINNED centroids (vec_id 0..7, fit from the
-      // static corpus — the stored-centroid shape). Single-file fixture →
-      // one micro-batch → equals the batch operator exactly; the
-      // multi-batch == batch invariance (carried per-cell seen-set) is
-      // pinned in StreamingSpec.
+      // static corpus — the stored-centroid shape), exact (no horizon).
+      // Single-file fixture → one micro-batch → the verdicts read back
+      // from the sink equal the batch operator exactly; the multi-batch
+      // == batch invariance (carried per-cell state) is pinned in
+      // StreamingSpec.
       val static = t(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
       val cents = Similarity.centroidsByIds(
         static.union(static.filter(col("vec_id") < 50)
@@ -4432,8 +4360,11 @@ object SparkEntry {
         .select(col("vec_id"), col("embedding"))
       val streamU = stream.union(stream.filter(col("vec_id") < 50)
         .select((col("vec_id") + 100000L).as("vec_id"), col("embedding")))
-      graft.streaming.Streaming.semanticDedupAvailableNow(
-          streamU, "vec_id", "embedding", cents, threshold = 0.8)
+      val sink = runSink("semstream")((sink, ckpt) =>
+        graft.streaming.Streaming.semanticDedupToSink(streamU, "vec_id",
+          "embedding", cents, threshold = 0.8, sink, ckpt,
+          horizonBatches = 0))
+      readSink(s, s"$sink/data")
         .select(col("id").as("vec_id"), col("cell"), col("keep"))
         .orderBy(col("vec_id"))
     })

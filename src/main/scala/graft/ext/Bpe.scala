@@ -61,24 +61,11 @@ object Bpe {
   }
 
   /** Learn `numMerges` merges. Returns (merges in order, final symbol
-    * table). Each round: deterministic 1-row argmax over the MAINTAINED
-    * pair-count table → merge applied to the unique-word table →
-    * incremental pair-count delta-fold. */
+    * table). Each round: deterministic 1-row argmax over the recounted
+    * pair-count table → merge applied to the unique-word table. */
   def train(df: DataFrame, textCol: String, numMerges: Int):
       (Seq[(String, String)], DataFrame) =
     trainFromWordCounts(wordCounts(df, textCol), numMerges)
-
-  /** `exists`-predicate: does the symbol sequence contain the adjacent
-    * pair (a, b)? Pure plan expression (codegen'd higher-order function —
-    * no UDF), the filter that bounds each merge round's delta-fold to the
-    * words the merge can actually change. */
-  private def containsPair(symbolsCol: Column, a: String, b: String): Column = {
-    val n = size(symbolsCol)
-    exists(arrays_zip(
-        slice(symbolsCol, lit(1), n - 1).as("a"),
-        slice(symbolsCol, lit(2), n - 1).as("b")),
-      p => p.getField("a") === a && p.getField("b") === b)
-  }
 
   /** [[train]] over a precomputed (word, cnt) table — callers that already
     * hold the unique-word table (or train several tokenizers on the same
@@ -87,143 +74,21 @@ object Bpe {
     * Stays on the FULL-RECOUNT loop at every scale (round 22, measured):
     * the per-round pair aggregation's SHUFFLE is bounded by the
     * DISTINCT-pair universe, not the word universe — map-side partial
-    * aggregation collapses the explode before the exchange (ScaleProbe
+    * aggregation collapses the explode before the exchange (SCALING.md,
     * `bpe vocab` decades: shuffleWrite flat at ~0.9 MB/round from 10⁵ to
     * 4×10⁶ unique words). The per-round cost is therefore the one fused
     * map pass (merge-apply + pair explode + partial agg), which is
-    * already the first-principles minimum; the incremental delta-fold
-    * ([[trainFromWordCountsIncremental]], kept as the probed/spec-pinned
-    * experiment) pays EXTRA full passes to find affected words and
-    * measured 2.3× slower at every decade while "saving" shuffle that
-    * was never being paid. */
+    * already the first-principles minimum; an incremental pair-count
+    * delta-fold was built, measured 2.3× slower at every decade (it pays
+    * EXTRA full passes to find affected words while "saving" shuffle that
+    * was never being paid) and deleted — SCALING.md keeps the table. */
   def trainFromWordCounts(wc: DataFrame, numMerges: Int):
       (Seq[(String, String)], DataFrame) = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
-    trainLoopRecount(
-      wc.select(split(col("word"), "").as("symbols"), col("cnt")).persist(),
-      numMerges)
-  }
-
-  /** The INCREMENTAL delta-fold loop — VERDICT r21 #3's proposal,
-    * implemented to be MEASURED and rejected (see
-    * [[trainFromWordCounts]]): maintain the pair-count table as
-    *
-    *   counts' = counts + pairs(merged affected) − pairs(affected)
-    *
-    * with `affected = words containing the merged adjacency`. Equals the
-    * full recount EXACTLY (integer sums; pairs falling to 0 drop out,
-    * matching a recount that never emits them — bit-identical merges
-    * pinned in BpeSpec on adversarial fixtures). NOT a production path:
-    * the ScaleProbe `bpe vocab` decades show it 2.3× slower in wall with
-    * MORE shuffle at 10⁵/10⁶/4×10⁶ unique words, because the recount's
-    * exchange was already distinct-pair-universe-bounded and the
-    * delta-fold adds full filter passes per round. */
-  private[graft] def trainFromWordCountsIncremental(wc: DataFrame,
-      numMerges: Int): (Seq[(String, String)], DataFrame) =
-    trainLoopIncremental(
-      wc.select(split(col("word"), "").as("symbols"), col("cnt")).persist(),
-      numMerges)
-
-  private def trainLoopIncremental(words0: DataFrame, numMerges: Int):
-      (Seq[(String, String)], DataFrame) = {
     val mergeUdf = udf((syms: Seq[String], a: String, b: String) =>
       mergeOnce(syms, a, b))
-    var words = words0
-    // round 0: the ONE full pair-count aggregation; every later round
-    // folds deltas into this table
-    var counts = pairCounts(words).persist()
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    // prior generation's cached frames, released only AFTER the argmax
-    // that materialized the generation built from them — an immediate
-    // unpersist would make every argmax recompute the evicted parents
-    // (shuffle-file reuse softens but does not remove that cost)
-    var release: List[DataFrame] = Nil
-    // UNAGGREGATED ±pair rows (one per adjacent occurrence, word-count
-    // weighted): the delta legs feed the ONE maintenance groupBy directly
-    // — pre-aggregating each leg would add two more exchanges per round
-    // for rows the outer aggregate re-sums anyway (map-side partial
-    // aggregation already bounds what the single exchange carries)
-    def pairRows(w: DataFrame, negate: Boolean): DataFrame = {
-      val n = size(col("symbols"))
-      val c = if (negate) -col("cnt") else col("cnt")
-      w.filter(n >= 2)
-        .select(c.as("cnt"),
-          explode(arrays_zip(
-            slice(col("symbols"), lit(1), n - 1).as("a"),
-            slice(col("symbols"), lit(2), n - 1).as("b"))).as("p"))
-        .select(col("p.a").as("sym_a"), col("p.b").as("sym_b"), col("cnt"))
-    }
-    var round = 0
-    var exhausted = false
-    while (round < numMerges && !exhausted) {
-      val top = counts
-        .orderBy(col("cnt").desc, col("sym_a"), col("sym_b"))
-        .limit(1).collect()
-      // this argmax materialized `counts` (and, through the delta legs,
-      // `words`) into their caches — the previous generation is now dead
-      release.foreach(_.unpersist(false)); release = Nil
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b) = (top(0).getString(0), top(0).getString(1))
-        merges += ((a, b))
-        val prevWords = words
-        val prevCounts = counts
-        // only words containing the (a, b) adjacency change under this
-        // merge — the delta-fold's input set (map-only filters over the
-        // cached word table; no shuffle before the maintenance groupBy)
-        val affected = words.filter(containsPair(col("symbols"), a, b))
-        val mergedAffected = affected.select(
-          mergeUdf(col("symbols"), lit(a), lit(b)).as("symbols"), col("cnt"))
-        counts = counts
-          .unionByName(pairRows(mergedAffected, negate = false))
-          .unionByName(pairRows(affected, negate = true))
-          .groupBy(col("sym_a"), col("sym_b"))
-          .agg(sum(col("cnt")).as("cnt"))
-          .filter(col("cnt") > 0)
-        words = words.select(
-          mergeUdf(col("symbols"), lit(a), lit(b)).as("symbols"), col("cnt"))
-        // truncate lineage before it compounds across rounds (CC pattern);
-        // localCheckpoint is lazy — materialized by the next round's argmax
-        val cut = (round + 1) % 4 == 0
-        words = (if (cut) words.localCheckpoint(false) else words).persist()
-        counts = (if (cut) counts.localCheckpoint(false) else counts).persist()
-        release = List(prevWords, prevCounts)
-      }
-      round += 1
-    }
-    release.foreach(_.unpersist(false))
-    (merges.toSeq, words)
-  }
-
-  /** The FULL-RECOUNT training loop — the gate-scale path (vocab below
-    * [[IncrementalMinWords]]) and the equivalence REFERENCE for the
-    * incremental delta-fold (BpeSpec pins bit-identical merge lists on
-    * adversarial fixtures — overlapping runs, re-created pairs, count
-    * resurgence, exact ties). */
-  private[graft] def trainFullRecount(df: DataFrame, textCol: String,
-      numMerges: Int): (Seq[(String, String)], DataFrame) = {
-    require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
-    trainLoopRecount(
-      wordCounts(df, textCol)
-        .select(split(col("word"), "").as("symbols"), col("cnt"))
-        .persist(),
-      numMerges)
-  }
-
-  /** Recount loop over a precomputed (word, cnt) table — the ScaleProbe
-    * comparison entry (same input as the incremental entry, no corpus
-    * re-scan inside the measured region). */
-  private[graft] def trainFromWordCountsRecount(wc: DataFrame,
-      numMerges: Int): (Seq[(String, String)], DataFrame) =
-    trainLoopRecount(
-      wc.select(split(col("word"), "").as("symbols"), col("cnt")).persist(),
-      numMerges)
-
-  private def trainLoopRecount(words0: DataFrame, numMerges: Int):
-      (Seq[(String, String)], DataFrame) = {
-    val mergeUdf = udf((syms: Seq[String], a: String, b: String) =>
-      mergeOnce(syms, a, b))
-    var words = words0
+    var words =
+      wc.select(split(col("word"), "").as("symbols"), col("cnt")).persist()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var round = 0
     var exhausted = false

@@ -624,8 +624,8 @@ object Corpus {
     * extra aggregate job).
     *
     * `baseOffset` shifts the whole layout by an already-packed token count
-    * — the cross-batch coupling of the STREAMING twin
-    * ([[graft.streaming.Streaming.packSequencesAvailableNow]]): each batch
+    * — the cross-batch coupling of the STREAMING sink
+    * ([[graft.streaming.Streaming.packSequencesToSink]]): each batch
     * packs distributed, batches concatenate through this one scalar. */
   def packSequences(docs: DataFrame, idCol: String, tokens: Column,
                     seqLen: Long, baseOffset: Long = 0L): DataFrame = {

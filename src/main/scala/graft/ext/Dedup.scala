@@ -855,7 +855,22 @@ object Dedup {
                                textCol: String, idCol: String,
                                threshold: Double, maxBucket: Int,
                                excludeSeg: String,
-                               excludeDocs: Option[DataFrame]): DataFrame = {
+                               excludeDocs: Option[DataFrame]): DataFrame =
+    probeIndex(h, newDocs, textCol, idCol, threshold, maxBucket, excludeSeg,
+      excludeDocs)._1
+
+  /** [[minhashDedupAgainstIndex]] returning, next to the pairs, the
+    * probe's lazily `localCheckpoint`ed intermediates (band keys,
+    * candidate pairs, candidate shingles). Their blocks stay pinned until
+    * the frames are garbage collected; a caller that owns the probe's
+    * lifetime (a streaming sink's micro-batch) releases them as soon as
+    * the pairs are consumed. */
+  private[graft] def probeIndex(h: MinhashIndexHandle, newDocs: DataFrame,
+                                textCol: String, idCol: String,
+                                threshold: Double, maxBucket: Int,
+                                excludeSeg: String,
+                                excludeDocs: Option[DataFrame]):
+      (DataFrame, Seq[DataFrame]) = {
     val spark = h.spark
     val m = h.meta
     val (sn, np, nb, nkb) =
@@ -973,7 +988,7 @@ object Dedup {
     // it embeds the N-segment shingle union; lazy like cands0 (the
     // caller's action computes it once, block-locked, into the cache)
     val sh = sh0.localCheckpoint(false)
-    verifyShingledPairs(sh, cands, threshold)
+    (verifyShingledPairs(sh, cands, threshold), Seq(newKeys, cands0, sh))
   }
 
   // ---------- SimHash ----------

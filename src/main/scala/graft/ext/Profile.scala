@@ -88,22 +88,15 @@ object Profile {
   def kmvAgg(hashed: Column, k: Int): Column =
     udaf(new KmvAggregator(k)).apply(coalesce(hashed, lit(-1L)))
 
-  /** Union of two sketches at size k — the SAME bounded merge the
-    * aggregator's partials use, exposed for cross-batch state (the
-    * streaming data-card twin merges each batch's sketch into its carried
-    * one; set semantics make the merged card exact under any slicing). */
+  /** Union of two sketches at size k — the bounded merge the
+    * aggregator's partials use (set semantics: exact under any
+    * partitioning). */
   def mergeKmv(a: Array[Long], b: Array[Long], k: Int): Array[Long] = {
     val (big, small) = if (a.length >= b.length) (a, b) else (b, a)
     var r = big; var i = 0
     while (i < small.length) { r = kmvInsert(r, small(i), k); i += 1 }
     r
   }
-
-  /** Driver-side twin of [[kmvEstimate]]: BigInt floor division —
-    * identical value to the decimal-arithmetic column for every sketch. */
-  def estimateKmv(sketch: Array[Long], k: Int): Long =
-    if (sketch.length < k) sketch.length.toLong
-    else (BigInt(k - 1) * BigInt(HashSpace) / BigInt(sketch(k - 1))).toLong
 
   /** Replayable value hash: 60-bit md5 prefix of the canonical string
     * image ([[Dsir.md5Bucket60]]). */

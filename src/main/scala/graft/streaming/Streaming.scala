@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Structured Streaming forms of the engine's continuous-ingest operators.
   *
@@ -23,6 +23,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *    mergeable state) — preferred over a hand-rolled
   *    flatMapGroupsWithState for gap sessions; custom state remains the
   *    escape hatch for semantics the built-in can't express.
+  *
+  * Operators that carry state across micro-batches or write a result are
+  * `*ToSink` functions, one implementation each: every batch's output lands
+  * in `sink/.../batch_id=B` and nothing is collected to the driver. Cross-
+  * batch state lives either in `sink/_state/batch_id=B` (folded from the
+  * newest committed state before B, so a replay is exact) or in a stored
+  * index that tags its appends. All of them run on
+  * [[Streaming.runMicroBatches]].
   */
 /** One event entering [[Streaming.sessionizeByCountOrGap]]. */
 final case class CountGapEvent(key: String, ts: java.sql.Timestamp, value: Double)
@@ -34,13 +42,6 @@ final case class CountGapState(startMs: Long, lastMs: Long, n: Long, sum: Double
 final case class CountGapSession(user_id: String,
     session_start: java.sql.Timestamp, session_end: java.sql.Timestamp,
     n_events: Long, session_value: Double, closed_by: String)
-
-/** One document entering [[Streaming.enforceSourceQuota]]. */
-final case class QuotaDoc(key: String, doc_id: Long)
-
-/** A kept document; `n_kept` is its 1-based admission rank within its
-  * source across the whole stream. */
-final case class QuotaKept(source: String, doc_id: Long, n_kept: Long)
 
 object Streaming {
 
@@ -228,78 +229,71 @@ object Streaming {
       .toDF(idCol, "width", "height", "format")
   }
 
-  /** Streaming twin of [[graft.ext.Corpus.packSequences]] — the
-    * incremental concat-and-chunk layout of an ARRIVING corpus. Within
-    * each micro-batch the batch engine's DISTRIBUTED two-phase packing
-    * runs unchanged (per-bucket prefix sums + broadcast bucket offsets,
-    * id order within the batch); across batches the only coupling is the
-    * running corpus token total, carried as ONE driver scalar and applied
-    * as the next batch's `baseOffset` — so an arriving 100 TB corpus
-    * packs with full per-batch parallelism and O(1) cross-batch state,
-    * and every document's `[token_offset, token_offset+n_tokens)`
-    * interval is globally contiguous in arrival order. Runs the query to
-    * completion under `Trigger.AvailableNow` and returns the collected
-    * layout — the gate/test form; a production pipeline would write each
-    * annotated batch to a sink from the same `foreachBatch` hook instead
-    * of collecting.
-    */
-  def packSequencesAvailableNow(docs: DataFrame, idCol: String,
-                                tokens: Column, seqLen: Long): DataFrame = {
+  /** Streaming form of [[graft.ext.Corpus.packSequences]]: the incremental
+    * concat-and-chunk layout of an arriving corpus, as an exactly-once
+    * sink. Within each micro-batch the batch engine's distributed two-phase
+    * packing runs unchanged (per-bucket prefix sums plus broadcast bucket
+    * offsets, id order within the batch). Across batches the only coupling
+    * is the running corpus token total, applied as the next batch's
+    * `baseOffset`. So every document's `[token_offset,
+    * token_offset + n_tokens)` interval is contiguous in arrival order, and
+    * for ids ordered across batches the layout equals the batch operator's.
+    *
+    * Per micro-batch B: the layout lands at `sink/data/batch_id=B`, and the
+    * running total after B (one row, `tokens`) at `sink/_state/batch_id=B`.
+    * B reads its offset from the newest committed state before B
+    * ([[newestStateBefore]]) and both writes overwrite B's own
+    * directories, so a replayed batch rewrites identical files (the
+    * [[shardedExportToSink]] discipline). */
+  def packSequencesToSink(docs: DataFrame, idCol: String, tokens: Column,
+                          seqLen: Long,
+                          sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    @volatile var offset = 0L
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val packed = graft.ext.Corpus.packSequences(
-          batch.toDF(), idCol, tokens, seqLen, baseOffset = offset)
-        val collected = packed.collect()
-        rows.synchronized { rows ++= collected }
-        schema = packed.schema
-        offset += collected.map(_.getAs[Long]("n_tokens")).sum
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // empty batch: nothing to lay out and the total is unchanged
+      if (!batch.isEmpty) {
+        val base = newestStateBefore(spark, sink, bid).map(p =>
+          spark.read.parquet(s"$sink/_state/batch_id=$p").head().getLong(0))
+        val data = s"$sink/data/batch_id=$bid"
+        graft.ext.Corpus.packSequences(batch, idCol, tokens, seqLen,
+            baseOffset = base.getOrElse(0L))
+          .write.mode("overwrite").parquet(data)
+        // the total AFTER this batch, summed from the just-written layout
+        // so the state is exactly what a reader of the data sees
+        spark.read.parquet(data)
+          .agg((lit(base.getOrElse(0L)) +
+            coalesce(sum(col("n_tokens")), lit(0L))).as("tokens"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$sink/_state/batch_id=$bid")
+        pruneStateHistory(spark, sink, bid)
       }
-      .start()
-    query.awaitTermination()
-    require(schema != null, "empty stream: no batch ever arrived to pack")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toList.asJava, schema)
+    }
   }
 
-  /** Streaming twin of [[graft.ext.LangModel.score]]: documents arrive as
-    * a stream, the fitted count model is STATIC (fit once — in production,
-    * content-addressed in the runner store). `foreachBatch` runs the batch
-    * scorer per micro-batch: stream-static equi-joins against the count
-    * tables plus a BATCH-LOCAL groupBy. A document is always scored whole
-    * inside its own batch (the file source never splits a row), so NO
-    * state crosses batches and the union of per-batch results equals the
-    * batch scorer's output on the same rows regardless of where the batch
-    * boundaries fall — the continuous-ingest quality-scoring shape (new
-    * crawl shards scored as they land, against a pinned reference model).
-    * Collecting is the gate/test form; production writes each scored batch
-    * to a sink from the same hook. */
-  def scoreLmAvailableNow(docs: DataFrame, idCol: String, textCol: String,
-                          lm: graft.ext.LangModel.BigramLm): DataFrame = {
-    val spark = docs.sparkSession
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val scored = graft.ext.LangModel.score(batch.toDF(), idCol, textCol, lm)
-        val collected = scored.collect()
-        rows.synchronized { rows ++= collected }
-        schema = scored.schema
-      }
-      .start()
-    query.awaitTermination()
-    require(schema != null, "empty stream: no batch ever arrived to score")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toList.asJava, schema)
-  }
+  /** Streaming form of [[graft.ext.LangModel.score]] against a PINNED
+    * model: documents arrive as a stream, the fitted count model is static
+    * (fit once; in production, content-addressed in the runner store). Each
+    * micro-batch runs the batch scorer (stream-static equi-joins against the
+    * count tables plus a batch-local groupBy) and writes the verdicts to
+    * `sink/data/batch_id=B`. A document is always scored whole inside its
+    * own batch (the file source never splits a row), so no state crosses
+    * batches: the union of the per-batch verdicts equals the batch scorer's
+    * output on the same rows wherever the batch boundaries fall. Exactly
+    * once by the per-directory overwrite alone (the [[kmeansAssignToSink]]
+    * discipline). [[lmScoreToSink]] is the online form, whose model grows
+    * with the stream. */
+  def pinnedLmScoreToSink(docs: DataFrame, idCol: String, textCol: String,
+                          lm: graft.ext.LangModel.BigramLm,
+                          sink: String, checkpoint: String): Unit =
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      if (!batch.isEmpty)
+        graft.ext.LangModel.score(batch, idCol, textCol, lm)
+          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+    }
 
-  /** The PRODUCTION form of [[scoreLmAvailableNow]] — the ONLINE
-    * perplexity filter as a durable exactly-once sink. Per micro-batch B:
+  /** The ONLINE perplexity filter as a durable exactly-once sink (the
+    * model grows with the stream; [[pinnedLmScoreToSink]] scores against a
+    * fixed one). Per micro-batch B:
     *
     *  1. score B's documents against the model accumulated over all PRIOR
     *     batches — the true online-curation semantics (incoming docs are
@@ -322,166 +316,90 @@ object Streaming {
   def lmScoreToSink(docs: DataFrame, idCol: String, textCol: String,
                     sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // round 22 (VERDICT r21 #2, the micro-batch job floor): LAZY
-        // checkpoints kill the two per-batch eager materialization jobs —
-        // the empty-guard take(1) now probes the checkpoint-marked frame
-        // (partition 1 computes into the cache; the rest cache lazily
-        // under the legs' own jobs, nothing computed twice). Guard
-        // semantics unchanged: idle batches write nothing. bp is lazy
-        // too: whichever concurrent leg touches it first
-        // computes-and-caches it (block-level locking makes the race
-        // safe).
-        val b = batch.toDF().localCheckpoint(false)
-        if (!b.isEmpty) {
-          val bp = graft.ext.LangModel.pairCounts(b, textCol)
-            .localCheckpoint(false)
-          val prior = newestStateBefore(spark, sink, bid)
-          val modelPairs = prior match {
-            case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-            case None => bp // bootstrap: the batch operator's self-fit
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // round 22 (VERDICT r21 #2, the micro-batch job floor): LAZY
+      // checkpoints kill the two per-batch eager materialization jobs —
+      // the empty-guard take(1) now probes the checkpoint-marked frame
+      // (partition 1 computes into the cache; the rest cache lazily
+      // under the legs' own jobs, nothing computed twice). Guard
+      // semantics unchanged: idle batches write nothing. bp is lazy
+      // too: whichever concurrent leg touches it first
+      // computes-and-caches it (block-level locking makes the race
+      // safe).
+      val b = batch.localCheckpoint(false)
+      if (!b.isEmpty) {
+        val bp = graft.ext.LangModel.pairCounts(b, textCol)
+          .localCheckpoint(false)
+        val prior = newestStateBefore(spark, sink, bid)
+        val modelPairs = prior match {
+          case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
+          case None => bp // bootstrap: the batch operator's self-fit
+        }
+        val scored = graft.ext.LangModel.score(b, idCol, textCol,
+          graft.ext.LangModel.fromPairCounts(modelPairs))
+        // the verdict write and the state fold are INDEPENDENT jobs
+        // (both read only localCheckpointed batch frames and PRIOR
+        // state dirs) and individually idempotent per-dir overwrites —
+        // run them concurrently; the batch wall is max(score, fold).
+        // The verdict table is batch-sized and keeps its natural
+        // partitioning; nothing reads file layout, the oracle reads
+        // content.
+        import scala.concurrent.{Await, Future, blocking}
+        import scala.concurrent.ExecutionContext.Implicits.global
+        // blocking{}: each leg parks a global-EC thread on a Spark job
+        // for seconds — mark it so the EC grows past #cores instead of
+        // serializing the legs on a low-core driver
+        val dataF = Future { blocking {
+          scored.write.mode("overwrite")
+            .parquet(s"$sink/data/batch_id=$bid")
+        } }
+        // UNLIKE the sketch sinks (whose state is KBs by construction),
+        // the pair-count table is vocabulary-sized — it keeps the fold's
+        // natural partitioning rather than funneling through one writer.
+        // Replay only requires the state's CONTENT to be deterministic
+        // (it is — an exact count table); nothing reads file layout.
+        val stateF = Future { blocking {
+          val folded = prior match {
+            case None => bp
+            case Some(p) =>
+              spark.read.parquet(s"$sink/_state/batch_id=$p")
+                .unionByName(bp)
+                .groupBy(col("v"), col("w"))
+                .agg(sum(col("cnt")).as("cnt"))
           }
-          val scored = graft.ext.LangModel.score(b, idCol, textCol,
-            graft.ext.LangModel.fromPairCounts(modelPairs))
-          // the verdict write and the state fold are INDEPENDENT jobs
-          // (both read only localCheckpointed batch frames and PRIOR
-          // state dirs) and individually idempotent per-dir overwrites —
-          // run them concurrently; the batch wall is max(score, fold).
-          // The verdict table is batch-sized and keeps its natural
-          // partitioning; nothing reads file layout, the oracle reads
-          // content.
-          import scala.concurrent.{Await, Future, blocking}
-          import scala.concurrent.ExecutionContext.Implicits.global
-          // blocking{}: each leg parks a global-EC thread on a Spark job
-          // for seconds — mark it so the EC grows past #cores instead of
-          // serializing the legs on a low-core driver
-          val dataF = Future { blocking {
-            scored.write.mode("overwrite")
-              .parquet(s"$sink/data/batch_id=$bid")
-          } }
-          // UNLIKE the sketch sinks (whose state is KBs by construction),
-          // the pair-count table is vocabulary-sized — it keeps the fold's
-          // natural partitioning rather than funneling through one writer.
-          // Replay only requires the state's CONTENT to be deterministic
-          // (it is — an exact count table); nothing reads file layout.
-          val stateF = Future { blocking {
-            val folded = prior match {
-              case None => bp
-              case Some(p) =>
-                spark.read.parquet(s"$sink/_state/batch_id=$p")
-                  .unionByName(bp)
-                  .groupBy(col("v"), col("w"))
-                  .agg(sum(col("cnt")).as("cnt"))
-            }
-            folded.write.mode("overwrite")
-              .parquet(s"$sink/_state/batch_id=$bid")
-            pruneStateHistory(spark, sink, bid)
-          } }
-          val inf = scala.concurrent.duration.Duration.Inf
-          // settle BOTH legs before leaving the batch even on failure —
-          // no detached writer may race a same-JVM restart's replay
-          try Seq(dataF, stateF).foreach(Await.result(_, inf))
-          finally Seq(dataF, stateF).foreach(f => Await.ready(f, inf))
+          folded.write.mode("overwrite")
+            .parquet(s"$sink/_state/batch_id=$bid")
+          pruneStateHistory(spark, sink, bid)
+        } }
+        val inf = scala.concurrent.duration.Duration.Inf
+        // settle BOTH legs before leaving the batch even on failure —
+        // no detached writer may race a same-JVM restart's replay
+        try Seq(dataF, stateF).foreach(Await.result(_, inf))
+        finally {
+          Seq(dataF, stateF).foreach(f => Await.ready(f, inf))
+          releaseCheckpoints(Seq(bp))
         }
-        ()
       }
-      .start()
-    query.awaitTermination()
+      releaseCheckpoints(Seq(b))
+    }
   }
 
-  /** Streaming twin of [[graft.ext.Dedup.semanticDedup]]: SemDeDup against
-    * PINNED centroids (fit once on a reference corpus — in production,
-    * content-addressed in the runner store like the stored-IVF index), run
-    * per micro-batch under `Trigger.AvailableNow`. Per batch:
-    * nearest-centroid assignment (stream-static against the broadcast
-    * centroid table, map-only), then a row is dropped when it has a
-    * neighbor at cosine ≥ `threshold` either (a) among SMALLER-id rows of
-    * the same cell in its own batch, or (b) among ALL carried rows of the
-    * same cell from earlier batches. Output one row per input:
-    * `(id, cell, keep)`.
+  /** Streaming form of [[graft.ext.Dedup.semanticDedup]]: SemDeDup against
+    * PINNED centroids (fit once on a reference corpus; in production,
+    * content-addressed in the runner store like the stored-IVF index) as a
+    * DURABLE, exactly-once sink. Per batch: nearest-centroid assignment
+    * (map-only against the centroid literals), then a row is dropped when
+    * it has a neighbor at cosine ≥ `threshold` either among SMALLER-id rows
+    * of the same cell in its own batch, or among ALL earlier batches' rows
+    * of the same cell (dropped or not: SemDeDup compares against every
+    * smaller-id row, so a kept-only seen-set would resurrect chains
+    * a→b→c where cos(a,c) < threshold). Output one row per input:
+    * `(id, cell, keep)`. No overflow splitting: cells are pinned (split
+    * decisions are corpus-global); route mode-collapsed corpora through
+    * the batch operator.
     *
-    * EQUALS the batch operator bit-for-bit whenever batches arrive in
-    * nondecreasing id order (the ingest norm — ids assigned on arrival;
-    * multi-batch == batch pinned in StreamingSpec). Out-of-order ids
-    * degrade gracefully to arrival-order-first-wins — the natural streaming
-    * dedup semantics.
-    *
-    * Cross-batch state is the cell-assigned corpus itself (ALL prior rows,
-    * not just survivors: SemDeDup's rule compares against every smaller-id
-    * row, dropped or not — a kept-only seen-set would resurrect chains
-    * a→b→c where cos(a,c) < threshold). That is inherent to exact SemDeDup,
-    * which is corpus-global; the state shards by cell (the same key the
-    * batch shuffle uses) and each batch joins against it once. A production
-    * deployment bounds the horizon the same way the exact-dedup twin does
-    * (drop state older than the watermark) or keeps per-cell
-    * representatives only — the sink form implements the first
-    * ([[semanticDedupToSink]] `horizonBatches`, gated by q_sem_horizon);
-    * both are documented approximations, not silent ones. The carried frame is eagerly `localCheckpoint`ed per batch so
-    * lineage stays O(1) deep regardless of batch count. No overflow
-    * splitting here: cells are pinned (split decisions are corpus-global);
-    * route mode-collapsed corpora through the batch operator.
-    *
-    * Collecting is the gate/test form; production writes each batch's
-    * verdicts to a sink from the same `foreachBatch` hook. */
-  def semanticDedupAvailableNow(docs: DataFrame, idCol: String, vecCol: String,
-                                centroids: Array[(Int, Seq[Float])],
-                                threshold: Double): DataFrame = {
-    val spark = docs.sparkSession
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    var carried: Option[DataFrame] = None
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val assigned = graft.ext.Similarity
-          .assignCells(batch.toDF(), idCol, vecCol, centroids)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val b = assigned.select(col("cell"), col("id").as("id_b"),
-          col("__v").as("__vb"))
-        val inBatch = assigned
-          .select(col("cell"), col("id").as("id_a"), col("__v").as("__va"))
-          .join(b, Seq("cell"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb")) >= threshold)
-          .select(col("id_b").as("__dup"))
-        val dropped = (carried match {
-          case Some(c) =>
-            inBatch.union(
-              c.select(col("cell"), col("__v").as("__va")).join(b, Seq("cell"))
-                .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
-                  >= threshold)
-                .select(col("id_b").as("__dup")))
-          case None => inBatch
-        }).distinct()
-        val out = assigned
-          .join(dropped, col("id") === col("__dup"), "left_outer")
-          .select(col("id"), col("cell"), col("__dup").isNull.as("keep"))
-        val collected = out.collect()
-        rows.synchronized { rows ++= collected }
-        schema = out.schema
-        val grown = carried match {
-          case Some(c) => c.union(assigned.select(col("id"), col("cell"), col("__v")))
-          case None => assigned.select(col("id"), col("cell"), col("__v"))
-        }
-        // eager checkpoint: truncates the union lineage AND materializes
-        // before the batch cache is released below
-        carried = Some(grown.localCheckpoint(true))
-        assigned.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    require(schema != null, "empty stream: no batch ever arrived to dedup")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toList.asJava, schema)
-  }
-
-  /** The PRODUCTION form of [[semanticDedupAvailableNow]] — SemDeDup as a
-    * DURABLE, exactly-once streaming sink. Per micro-batch: verdicts land
-    * at `sink/data/batch_id=B`, and the batch's CELL-ASSIGNED rows at
+    * Per micro-batch: verdicts land at `sink/data/batch_id=B`, and the
+    * batch's CELL-ASSIGNED rows at
     * `sink/_state/batch_id=B/cell=N/…` — the state is APPEND-SHAPED (each
     * batch persists only its own rows, the segmented-store discipline),
     * so durable state costs one batch-sized write per batch, never a
@@ -494,13 +412,13 @@ object Streaming {
     * Replay safety is structural: batch B joins only state dirs with
     * id < B — its own (possibly partially re-written) dir is excluded by
     * construction, and both writes are per-dir overwrites, so a
-    * crash-and-replay reproduces byte-identical verdicts. Same ordering
-    * contract as the in-memory twin: equals the batch operator when
-    * arrival respects nondecreasing ids; arbitrary arrival degrades to
-    * arrival-order-first-wins.
+    * crash-and-replay reproduces byte-identical verdicts. Ordering
+    * contract: equals the batch operator bit for bit when arrival
+    * respects nondecreasing ids (the ingest norm: ids assigned on
+    * arrival; pinned in StreamingSpec); arbitrary arrival degrades to
+    * arrival-order-first-wins, the natural streaming dedup semantics.
     *
-    * `horizonBatches` (round 20) BOUNDS the carried corpus — the
-    * production option the gate form only documented: batch B probes
+    * `horizonBatches` (round 20) BOUNDS the carried corpus: batch B probes
     * only the last `horizonBatches` batches' state and state older than
     * B − horizon is GC'd after each batch (best-effort deletes; replay
     * of B probes [B − horizon, B), all retained). Semantics: a row is
@@ -517,227 +435,109 @@ object Streaming {
                           sink: String, checkpoint: String,
                           horizonBatches: Int = 0): Unit = {
     val spark = docs.sparkSession
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        val assigned = graft.ext.Similarity
-          .assignCells(batch.toDF(), idCol, vecCol, centroids)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // touched cells double as the EMPTY-BATCH GUARD (round 22, VERDICT
-        // r21 #2): every row gets a cell, so touched is empty iff the
-        // batch is — the old separate `batch.isEmpty` take(1) job is
-        // folded into this collect, which also materializes the batch
-        // into the cache every later step reads. Idle batches still
-        // write nothing.
-        val touched = assigned.select(col("cell")).distinct()
-          .collect().map(_.getInt(0)).toSet
-        if (touched.nonEmpty) {
-        val b = assigned.select(col("cell"), col("id").as("id_b"),
-          col("__v").as("__vb"))
-        val inBatch = assigned
-          .select(col("cell"), col("id").as("id_a"), col("__v").as("__va"))
-          .join(b, Seq("cell"))
-          .filter(col("id_a") < col("id_b"))
-          .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
-            >= threshold)
-          .select(col("id_b").as("__dup"))
-        // prior rows: every committed state dir BEFORE this batch,
-        // restricted to the batch's touched cells at path construction
-        val hconf = spark.sparkContext.hadoopConfiguration
-        val statePaths = for {
-          p <- {
-            val root = new org.apache.hadoop.fs.Path(s"$sink/_state")
-            val fs = root.getFileSystem(hconf)
-            (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-              .filter(s => s.isDirectory &&
-                s.getPath.getName.startsWith("batch_id="))
-              .filter { s =>
-                val id = s.getPath.getName.stripPrefix("batch_id=").toLong
-                // bounded horizon: batch B probes only the last
-                // `horizonBatches` batches' state (0 = exact/unbounded)
-                id < bid && (horizonBatches <= 0 || id >= bid - horizonBatches)
-              }
-              .map(_.getPath)
-          }
-          st <- p.getFileSystem(hconf).listStatus(p).toSeq
-          n = st.getPath.getName
-          if n.startsWith("cell=") &&
-            touched.contains(n.substring("cell=".length).toInt)
-        } yield st.getPath.toString
-        val dropped = (if (statePaths.isEmpty) inBatch
-          else inBatch.union(
-            spark.read.parquet(statePaths: _*)
-              .select(col("cell_d").as("cell"), col("__v").as("__va"))
-              .join(b, Seq("cell"))
-              .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
-                >= threshold)
-              .select(col("id_b").as("__dup")))).distinct()
-        assigned
-          .join(dropped, col("id") === col("__dup"), "left_outer")
-          .select(col("id"), col("cell"), col("__dup").isNull.as("keep"))
-          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-        assigned
-          .select(col("id"), col("__v"), col("cell"),
-            col("cell").as("cell_d"))
-          .repartition(col("cell"))
-          .write.mode("overwrite").partitionBy("cell")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        // horizon GC: state older than the probe window of EVERY future
-        // batch — and of a crash-replay of THIS batch (which probes
-        // [bid - horizon, bid)) — is dead; best-effort deletes, the
-        // pruneStateHistory discipline. Caps durable state at
-        // horizon × batch size instead of the whole corpus.
-        if (horizonBatches > 0) {
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      val assigned = graft.ext.Similarity
+        .assignCells(batch, idCol, vecCol, centroids)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // touched cells double as the EMPTY-BATCH GUARD (round 22, VERDICT
+      // r21 #2): every row gets a cell, so touched is empty iff the
+      // batch is — the old separate `batch.isEmpty` take(1) job is
+      // folded into this collect, which also materializes the batch
+      // into the cache every later step reads. Idle batches still
+      // write nothing.
+      val touched = assigned.select(col("cell")).distinct()
+        .collect().map(_.getInt(0)).toSet
+      if (touched.nonEmpty) {
+      val b = assigned.select(col("cell"), col("id").as("id_b"),
+        col("__v").as("__vb"))
+      val inBatch = assigned
+        .select(col("cell"), col("id").as("id_a"), col("__v").as("__va"))
+        .join(b, Seq("cell"))
+        .filter(col("id_a") < col("id_b"))
+        .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
+          >= threshold)
+        .select(col("id_b").as("__dup"))
+      // prior rows: every committed state dir BEFORE this batch,
+      // restricted to the batch's touched cells at path construction
+      val hconf = spark.sparkContext.hadoopConfiguration
+      val statePaths = for {
+        p <- {
           val root = new org.apache.hadoop.fs.Path(s"$sink/_state")
           val fs = root.getFileSystem(hconf)
-          if (fs.exists(root)) fs.listStatus(root)
+          (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
             .filter(s => s.isDirectory &&
               s.getPath.getName.startsWith("batch_id="))
-            .filter(_.getPath.getName.stripPrefix("batch_id=").toLong <
-              bid - horizonBatches)
-            .foreach(s =>
-              try fs.delete(s.getPath, true)
-              catch { case _: java.io.IOException => () })
+            .filter { s =>
+              val id = s.getPath.getName.stripPrefix("batch_id=").toLong
+              // bounded horizon: batch B probes only the last
+              // `horizonBatches` batches' state (0 = exact/unbounded)
+              id < bid && (horizonBatches <= 0 || id >= bid - horizonBatches)
+            }
+            .map(_.getPath)
         }
-        }
-        assigned.unpersist()
-        ()
+        st <- p.getFileSystem(hconf).listStatus(p).toSeq
+        n = st.getPath.getName
+        if n.startsWith("cell=") &&
+          touched.contains(n.substring("cell=".length).toInt)
+      } yield st.getPath.toString
+      val dropped = (if (statePaths.isEmpty) inBatch
+        else inBatch.union(
+          spark.read.parquet(statePaths: _*)
+            .select(col("cell_d").as("cell"), col("__v").as("__va"))
+            .join(b, Seq("cell"))
+            .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
+              >= threshold)
+            .select(col("id_b").as("__dup")))).distinct()
+      assigned
+        .join(dropped, col("id") === col("__dup"), "left_outer")
+        .select(col("id"), col("cell"), col("__dup").isNull.as("keep"))
+        .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+      assigned
+        .select(col("id"), col("__v"), col("cell"),
+          col("cell").as("cell_d"))
+        .repartition(col("cell"))
+        .write.mode("overwrite").partitionBy("cell")
+        .parquet(s"$sink/_state/batch_id=$bid")
+      // horizon GC: state older than the probe window of EVERY future
+      // batch — and of a crash-replay of THIS batch (which probes
+      // [bid - horizon, bid)) — is dead; best-effort deletes, the
+      // pruneStateHistory discipline. Caps durable state at
+      // horizon × batch size instead of the whole corpus.
+      if (horizonBatches > 0) {
+        val root = new org.apache.hadoop.fs.Path(s"$sink/_state")
+        val fs = root.getFileSystem(hconf)
+        if (fs.exists(root)) fs.listStatus(root)
+          .filter(s => s.isDirectory &&
+            s.getPath.getName.startsWith("batch_id="))
+          .filter(_.getPath.getName.stripPrefix("batch_id=").toLong <
+            bid - horizonBatches)
+          .foreach(s =>
+            try fs.delete(s.getPath, true)
+            catch { case _: java.io.IOException => () })
       }
-      .start()
-    query.awaitTermination()
+      }
+      assigned.unpersist()
+    }
   }
 
-  /** Streaming twin of [[graft.ext.Corpus.tokenBudgetKeep]]: a LIVE
-    * per-group token-budget counter. Per micro-batch, rows are cumsummed in
-    * the batch-local (priority DESC, id) order on top of each group's
-    * CARRIED fill level, kept while the inclusive cumulative stays ≤
-    * `budget` — the "stop ingesting a language once its allowance is full"
-    * shape. State is one long per group (the fill level), metadata at any
-    * scale, applied as a broadcast map and advanced by a #groups-row
-    * collect per batch.
-    *
-    * EQUALS the batch operator bit-for-bit whenever arrival order respects
-    * the per-group priority order (each batch's rows rank below everything
-    * the group already ingested — the curated-backfill norm; pinned in
-    * StreamingSpec). Arbitrary arrival degrades to arrival-order-first-fill
-    * — the natural semantics of a live budget counter.
-    *
-    * Collecting is the gate/test form; production writes each batch's
-    * verdicts to a sink from the same `foreachBatch` hook. */
-  def tokenBudgetAvailableNow(docs: DataFrame, groupCol: String, idCol: String,
-                              priorityCol: String, tokensCol: String,
-                              budget: Long): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val spark = docs.sparkSession
-    val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-    @volatile var schema: StructType = null
-    // group (string image) -> tokens ingested so far, kept or not: the
-    // batch cumsum counts EVERY row toward the fill, so the carried level
-    // must too
-    val fill = scala.collection.mutable.Map.empty[String, Long]
-    val offSchema = StructType(Seq(StructField("__tb_g", StringType),
-      StructField("__tb_off", LongType)))
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(groupCol))
-          .orderBy(col(priorityCol).desc, col(idCol))
-          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val off = spark.createDataFrame(
-          fill.toSeq.map { case (g, t) => Row(g, t) }.asJava, offSchema)
-        // NULL-SAFE offset match: a null group is a real group with a real
-        // carried fill — `===` would reset its counter every batch
-        val out = b
-          .withColumn("__tb_inc", sum(col(tokensCol).cast("long")).over(w))
-          .join(broadcast(off),
-            col(groupCol).cast("string") <=> col("__tb_g"), "left")
-          .withColumn("cum_tokens",
-            col("__tb_inc") + coalesce(col("__tb_off"), lit(0L)))
-          .withColumn("keep", col("cum_tokens") <= budget)
-          .drop("__tb_g", "__tb_inc", "__tb_off")
-        val collected = out.collect()
-        rows.synchronized { rows ++= collected }
-        schema = out.schema
-        b.groupBy(col(groupCol).cast("string").as("g"))
-          .agg(sum(col(tokensCol).cast("long")).as("t"))
-          .collect()
-          .foreach(r => fill(r.getString(0)) =
-            fill.getOrElse(r.getString(0), 0L) + r.getLong(1))
-        b.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    require(schema != null, "empty stream: no batch ever arrived")
-    spark.createDataFrame(rows.toList.asJava, schema)
-  }
-
-  /** Streaming twin of [[graft.ext.Dedup.minhashDedupAgainstIndex]] — the
+  /** Streaming form of [[graft.ext.Dedup.minhashDedupAgainstIndex]], the
     * continuous-ingest dedup loop: each micro-batch PROBES the stored
     * MinHash index (near-dup pairs against everything indexed so far plus
-    * itself), then APPENDS its own keys/shingles so later batches dedup
-    * against it. Because near-dup pairs are symmetric and every pair's
-    * earlier side is indexed by the time its later side arrives, the
-    * accumulated pair set equals the single-shot
-    * `minhashDedupAgainstIndex(all batches)` EXACTLY regardless of how
-    * arrival slices the stream (pinned in StreamingSpec) — no ordering
-    * caveat, unlike the order-sensitive budget/SemDeDup twins. (Bucket-cap
-    * demotion is the one exception: an overflow bucket's representative
-    * set can differ by slicing — route mode-collapsed corpora through the
-    * batch operator.)
+    * itself), then APPENDS its own keys and shingles so later batches dedup
+    * against it. Near-dup pairs are symmetric and every pair's earlier side
+    * is indexed by the time its later side arrives, so the accumulated pair
+    * set equals the single-shot `minhashDedupAgainstIndex(all batches)`
+    * however arrival slices the stream (pinned in StreamingSpec). The one
+    * exception is bucket-cap demotion: an overflow bucket's representative
+    * set can differ by slicing, so route mode-collapsed corpora through the
+    * batch operator. MUTATES the index at `path`; that is the point.
     *
-    * MUTATES the index at `path` (that is the point); collecting the pairs
-    * is the gate/test form — production writes each batch's pairs to a
-    * sink from the same hook. */
-  def minhashDedupIngestAvailableNow(docs: DataFrame, path: String,
-                                     textCol: String, idCol: String,
-                                     threshold: Double = 0.8,
-                                     maxBucket: Int = 1000): DataFrame = {
-    val spark = docs.sparkSession
-    // ONE handle for the whole run: the manifest row is read once and
-    // kept current in memory as this loop's own appends commit, and each
-    // immutable segment's scan (file listing included) is cached for the
-    // run — per-batch store overhead tracks the BATCH, not the
-    // accumulated segment count (the r16 q_incr_stream regression)
-    val idx = graft.ext.Dedup.openMinhashIndex(spark, path)
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pairs = graft.ext.Dedup.minhashDedupAgainstIndex(
-          idx, b, textCol, idCol, threshold, maxBucket, excludeSeg = "")
-        val collected = pairs.collect()
-        rows.synchronized { rows ++= collected }
-        schema = pairs.schema
-        graft.ext.Dedup.appendToMinhashIndex(idx, b, textCol, idCol, tag = "")
-        b.unpersist()
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    require(schema != null, "empty stream: no batch ever arrived to dedup")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toList.asJava, schema)
-  }
-
-  /** The PRODUCTION form of [[minhashDedupIngestAvailableNow]] — per-batch
-    * near-dup verdicts to a durable SINK, EXACTLY-ONCE across restarts
+    * Per-batch verdicts go to a durable SINK, EXACTLY-ONCE across restarts
     * (the [[bm25IngestToSink]] discipline applied to the dedup loop).
-    * Per micro-batch: (1) the batch PROBES the index with its own
-    * would-be segment EXCLUDED from the view — on the first delivery the
-    * segment does not exist and the exclusion is vacuous; on a restart
-    * replay whose append already committed, excluding `seg_b&lt;id&gt;`
-    * reconstructs the exact pre-append index, so the replayed probe
+    * Per micro-batch: (1) the batch PROBES the index with its own doc ids
+    * EXCLUDED from the view: vacuous on the first delivery, and on a
+    * restart replay whose append already committed it reconstructs the
+    * exact pre-append index from any segment layout, so the replayed probe
     * reproduces the original verdicts bit for bit; (2) the pairs land at
     * `sink/batch_id=N` with per-directory overwrite (a replay overwrites
     * identical rows, never duplicates); (3) the batch APPENDS as a
@@ -755,58 +555,56 @@ object Streaming {
                                autoCompactAt: Int = 0,
                                autoCompactFiles: Long = 0L): Unit = {
     val spark = docs.sparkSession
-    // one handle per run (see minhashDedupIngestAvailableNow); a restart
-    // builds a fresh handle whose manifest read restores replay detection
+    // ONE handle for the whole run: the manifest row is read once and
+    // kept current in memory as this loop's own appends commit, and each
+    // immutable segment's scan (file listing included) is cached for the
+    // run, so per-batch store overhead tracks the BATCH, not the
+    // accumulated segment count. A restart builds a fresh handle whose
+    // manifest read restores replay detection.
     val idx = graft.ext.Dedup.openMinhashIndex(spark, path)
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // an idle trigger's empty batch has nothing to probe and nothing
-        // to append — skip the whole body rather than paying the probe's
-        // collect/checkpoint work and littering the sink with an empty
-        // batch_id=N partition (the appends already skip empty batches).
-        // The guard probes the PERSISTED batch (round 22): its take(1)
-        // caches what it computes, so unlike the old raw-source isEmpty
-        // nothing is ever scanned twice.
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!b.isEmpty) {
-        // ID-BASED replay exclusion (round 17): a replayed probe must see
-        // the pre-append index. Excluding the batch's own segment works
-        // only while that segment still EXISTS — auto-compaction can fold
-        // it away between the append and the checkpoint commit. Excluding
-        // the batch's doc IDS reconstructs the same view from any segment
-        // layout (store ids are unique; vacuous on first delivery).
-        graft.ext.Dedup.minhashDedupAgainstIndex(
-            idx, b, textCol, idCol, threshold, maxBucket,
-            excludeSeg = "", excludeDocs = Some(b.select(idCol)))
-          .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-        graft.ext.Dedup.appendToMinhashIndex(idx, b, textCol, idCol,
-          tag = s"b$bid")
-        // AUTO-COMPACTION policy: fold the accumulated micro-batch
-        // segments back to one sorted base whenever the live count
-        // crosses the threshold — bounds per-probe fragment costs over an
-        // unbounded ingest without a separate maintenance job. Runs AFTER
-        // the batch's own effects; content-preserving and committed by
-        // the atomic manifest flip, so a crash at any point leaves a
-        // readable store and the replay path above stays exact.
-        // Two trigger measures: live SEGMENTS (per-segment fixed costs)
-        // and live FILES (per-file open cost — the measure that actually
-        // drives the pre-compaction probe slope; a many-tiny-batch ingest
-        // under-fires a segment-count policy because each segment is a
-        // sliver, ADVICE r17). Segment counts come from the in-memory
-        // manifest; file counts from one cached tiny-dir listing per
-        // append.
-        if ((autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
-            || (autoCompactFiles > 0L && idx.liveFileCount > autoCompactFiles))
-          graft.ext.Dedup.compactMinhashIndex(idx)
-        }
-        b.unpersist()
-        ()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // an idle trigger's empty batch has nothing to probe and nothing
+      // to append — skip the whole body rather than paying the probe's
+      // collect/checkpoint work and littering the sink with an empty
+      // batch_id=N partition (the appends already skip empty batches).
+      // The guard probes the PERSISTED batch (round 22): its take(1)
+      // caches what it computes, so unlike the old raw-source isEmpty
+      // nothing is ever scanned twice.
+      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!b.isEmpty) {
+      // ID-BASED replay exclusion (round 17): a replayed probe must see
+      // the pre-append index. Excluding the batch's own segment works
+      // only while that segment still EXISTS — auto-compaction can fold
+      // it away between the append and the checkpoint commit. Excluding
+      // the batch's doc IDS reconstructs the same view from any segment
+      // layout (store ids are unique; vacuous on first delivery).
+      val (pairs, probeCheckpoints) = graft.ext.Dedup.probeIndex(
+        idx, b, textCol, idCol, threshold, maxBucket,
+        excludeSeg = "", excludeDocs = Some(b.select(idCol)))
+      pairs.write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
+      releaseCheckpoints(probeCheckpoints)
+      graft.ext.Dedup.appendToMinhashIndex(idx, b, textCol, idCol,
+        tag = s"b$bid")
+      // AUTO-COMPACTION policy: fold the accumulated micro-batch
+      // segments back to one sorted base whenever the live count
+      // crosses the threshold — bounds per-probe fragment costs over an
+      // unbounded ingest without a separate maintenance job. Runs AFTER
+      // the batch's own effects; content-preserving and committed by
+      // the atomic manifest flip, so a crash at any point leaves a
+      // readable store and the replay path above stays exact.
+      // Two trigger measures: live SEGMENTS (per-segment fixed costs)
+      // and live FILES (per-file open cost — the measure that actually
+      // drives the pre-compaction probe slope; a many-tiny-batch ingest
+      // under-fires a segment-count policy because each segment is a
+      // sliver, ADVICE r17). Segment counts come from the in-memory
+      // manifest; file counts from one cached tiny-dir listing per
+      // append.
+      if ((autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
+          || (autoCompactFiles > 0L && idx.liveFileCount > autoCompactFiles))
+        graft.ext.Dedup.compactMinhashIndex(idx)
       }
-      .start()
-    query.awaitTermination()
+      b.unpersist()
+    }
   }
 
   /** END-TO-END STREAMING CURATION — the whole admission pipeline a
@@ -843,200 +641,129 @@ object Streaming {
                          sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
     val idx = graft.ext.Dedup.openMinhashIndex(spark, indexPath)
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // empty-guard on the PERSISTED batch (round 22, VERDICT r21 #2):
-        // the take(1) caches what it computes, so nothing is scanned
-        // twice. Idle batches still skip every effect.
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!b.isEmpty) {
-        val withQ = b
-          .withColumn("__nt",
-            graft.ext.TextAnalysis.tokenCount(col(textCol)).cast("long"))
-          .withColumn("quality_ok", col("__nt") >= minTokens)
-        val qual = withQ.filter(col("quality_ok"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        // pinned LAZILY (round 22; was eager): the dup set feeds two of
-        // the three concurrent effect legs below — the checkpoint makes
-        // every leg read one materialization instead of re-probing the
-        // index. Lazy is safe AND still probe-before-append: bud.count()
-        // below materializes bud, whose broadcast join over notDup
-        // collects dupIds first — i.e. the probe still executes strictly
-        // BEFORE any leg (in particular before the append's manifest
-        // flip), just without a dedicated materialization job.
-        val dupIds = graft.ext.Dedup.minhashDedupAgainstIndex(idx, qual,
-            textCol, idCol, threshold, maxBucket = 1000, excludeSeg = "",
-            excludeDocs = Some(qual.select(idCol)))
-          .select(col("id_b").cast("long").as("__dup")).distinct()
-          .localCheckpoint(false)
-        val notDup = qual.join(broadcast(dupIds),
-          qual(idCol).cast("long") === col("__dup"), "left_anti")
-        val off = newestStateBefore(spark, sink, bid) match {
-          case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-          case None =>
-            import spark.implicits._
-            Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(langCol))
-          .orderBy(col(priorityCol).desc, col(idCol))
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        val bud = notDup
-          .withColumn("__inc", sum(col("__nt")).over(w))
-          .join(broadcast(off),
-            col(langCol).cast("string") <=> col("__tb_g"), "left")
-          .withColumn("cum_tokens",
-            (col("__inc") + coalesce(col("__tb_off"), lit(0L))).cast("long"))
-          .withColumn("admitted", col("cum_tokens") <= budget)
-          .select(col(idCol).cast("long").as("__bid"), col("cum_tokens"),
-            col("admitted"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        bud.count() // materialize once, before the concurrent legs
-        // the three per-batch effects — verdict write, state fold,
-        // index append — are INDEPENDENT and individually idempotent
-        // (per-dir overwrites; tag-skipped append), so their relative
-        // order carries no replay semantics: a crash leaves any subset
-        // committed and the replay re-derives the rest bit-identically.
-        // Run them as concurrent Spark jobs so the batch wall is
-        // max(...), not their sum (the Bm25.appendToIndex treatment).
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // blocking{} on every leg: each parks its EC thread on a Spark
-        // job — without the marker a low-core driver's global EC
-        // (parallelism = #cores) can serialize the legs and lose the
-        // max(...) wall the comment above promises
-        val dataF = Future { blocking {
-          withQ
-            .select(col(idCol).cast("long").as("doc_id"), col("quality_ok"))
-            .join(broadcast(dupIds), col("doc_id") === col("__dup"), "left")
-            .join(broadcast(bud), col("doc_id") === col("__bid"), "left")
-            .select(col("doc_id"), col("quality_ok"),
-              (col("quality_ok") && col("__dup").isNotNull).as("is_dup"),
-              col("cum_tokens"),
-              coalesce(col("admitted"), lit(false)).as("admitted"))
-            .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-        } }
-        // fill AFTER this batch: carried + ALL budget-stage rows' tokens
-        // (per-LANGUAGE fill — an ISO-bounded universe, so the one-file
-        // coalesce is metadata work, unlike the caller-shaped quota/
-        // token-budget sinks)
-        val stateF = Future { blocking {
-          off.unionByName(
-              notDup.groupBy(col(langCol).cast("string").as("__tb_g"))
-                .agg(sum(col("__nt")).as("__tb_off")))
-            .groupBy(col("__tb_g"))
-            .agg(sum(col("__tb_off")).as("__tb_off"))
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$sink/_state/batch_id=$bid")
-          pruneStateHistory(spark, sink, bid)
-        } }
-        // the curated corpus grows by exactly the admitted rows
-        val appendF = Future { blocking {
-          val survivors = b.join(broadcast(bud.filter(col("admitted"))),
-            b(idCol).cast("long") === col("__bid"), "left_semi")
-          graft.ext.Dedup.appendToMinhashIndex(idx, survivors, textCol,
-            idCol, tag = s"b$bid")
-        } }
-        val inf = scala.concurrent.duration.Duration.Inf
-        val legs = Seq(dataF, stateF, appendF)
-        try legs.foreach(Await.result(_, inf))
-        finally {
-          // a failed leg must not leave SIBLING legs running detached —
-          // a zombie append racing a same-JVM stream restart's replay
-          // would break the tag-skipped exactly-once invariant. Block
-          // until every leg has settled (secondary failures surface via
-          // the first Await's exception), then release the caches.
-          legs.foreach(f => Await.ready(f, inf))
-          bud.unpersist(); qual.unpersist()
-        }
-        }
-        b.unpersist()
-        ()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // empty-guard on the PERSISTED batch (round 22, VERDICT r21 #2):
+      // the take(1) caches what it computes, so nothing is scanned
+      // twice. Idle batches still skip every effect.
+      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!b.isEmpty) {
+      val withQ = b
+        .withColumn("__nt",
+          graft.ext.TextAnalysis.tokenCount(col(textCol)).cast("long"))
+        .withColumn("quality_ok", col("__nt") >= minTokens)
+      val qual = withQ.filter(col("quality_ok"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // pinned LAZILY (round 22; was eager): the dup set feeds two of
+      // the three concurrent effect legs below — the checkpoint makes
+      // every leg read one materialization instead of re-probing the
+      // index. Lazy is safe AND still probe-before-append: bud.count()
+      // below materializes bud, whose broadcast join over notDup
+      // collects dupIds first — i.e. the probe still executes strictly
+      // BEFORE any leg (in particular before the append's manifest
+      // flip), just without a dedicated materialization job.
+      val (pairs, probeCheckpoints) = graft.ext.Dedup.probeIndex(idx, qual,
+        textCol, idCol, threshold, maxBucket = 1000, excludeSeg = "",
+        excludeDocs = Some(qual.select(idCol)))
+      val dupIds = pairs
+        .select(col("id_b").cast("long").as("__dup")).distinct()
+        .localCheckpoint(false)
+      val notDup = qual.join(broadcast(dupIds),
+        qual(idCol).cast("long") === col("__dup"), "left_anti")
+      val off = newestStateBefore(spark, sink, bid) match {
+        case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
+        case None =>
+          import spark.implicits._
+          Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
       }
-      .start()
-    query.awaitTermination()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(langCol))
+        .orderBy(col(priorityCol).desc, col(idCol))
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      val bud = notDup
+        .withColumn("__inc", sum(col("__nt")).over(w))
+        .join(broadcast(off),
+          col(langCol).cast("string") <=> col("__tb_g"), "left")
+        .withColumn("cum_tokens",
+          (col("__inc") + coalesce(col("__tb_off"), lit(0L))).cast("long"))
+        .withColumn("admitted", col("cum_tokens") <= budget)
+        .select(col(idCol).cast("long").as("__bid"), col("cum_tokens"),
+          col("admitted"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      bud.count() // materialize once, before the concurrent legs
+      // the three per-batch effects — verdict write, state fold,
+      // index append — are INDEPENDENT and individually idempotent
+      // (per-dir overwrites; tag-skipped append), so their relative
+      // order carries no replay semantics: a crash leaves any subset
+      // committed and the replay re-derives the rest bit-identically.
+      // Run them as concurrent Spark jobs so the batch wall is
+      // max(...), not their sum (the Bm25.appendToIndex treatment).
+      import scala.concurrent.{Await, Future, blocking}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      // blocking{} on every leg: each parks its EC thread on a Spark
+      // job — without the marker a low-core driver's global EC
+      // (parallelism = #cores) can serialize the legs and lose the
+      // max(...) wall the comment above promises
+      val dataF = Future { blocking {
+        withQ
+          .select(col(idCol).cast("long").as("doc_id"), col("quality_ok"))
+          .join(broadcast(dupIds), col("doc_id") === col("__dup"), "left")
+          .join(broadcast(bud), col("doc_id") === col("__bid"), "left")
+          .select(col("doc_id"), col("quality_ok"),
+            (col("quality_ok") && col("__dup").isNotNull).as("is_dup"),
+            col("cum_tokens"),
+            coalesce(col("admitted"), lit(false)).as("admitted"))
+          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+      } }
+      // fill AFTER this batch: carried + ALL budget-stage rows' tokens
+      // (per-LANGUAGE fill — an ISO-bounded universe, so the one-file
+      // coalesce is metadata work, unlike the caller-shaped quota/
+      // token-budget sinks)
+      val stateF = Future { blocking {
+        off.unionByName(
+            notDup.groupBy(col(langCol).cast("string").as("__tb_g"))
+              .agg(sum(col("__nt")).as("__tb_off")))
+          .groupBy(col("__tb_g"))
+          .agg(sum(col("__tb_off")).as("__tb_off"))
+          .coalesce(1).write.mode("overwrite")
+          .parquet(s"$sink/_state/batch_id=$bid")
+        pruneStateHistory(spark, sink, bid)
+      } }
+      // the curated corpus grows by exactly the admitted rows
+      val appendF = Future { blocking {
+        val survivors = b.join(broadcast(bud.filter(col("admitted"))),
+          b(idCol).cast("long") === col("__bid"), "left_semi")
+        graft.ext.Dedup.appendToMinhashIndex(idx, survivors, textCol,
+          idCol, tag = s"b$bid")
+      } }
+      val inf = scala.concurrent.duration.Duration.Inf
+      val legs = Seq(dataF, stateF, appendF)
+      try legs.foreach(Await.result(_, inf))
+      finally {
+        // a failed leg must not leave SIBLING legs running detached —
+        // a zombie append racing a same-JVM stream restart's replay
+        // would break the tag-skipped exactly-once invariant. Block
+        // until every leg has settled (secondary failures surface via
+        // the first Await's exception), then release the caches.
+        legs.foreach(f => Await.ready(f, inf))
+        bud.unpersist(); qual.unpersist()
+        releaseCheckpoints(dupIds +: probeCheckpoints)
+      }
+      }
+      b.unpersist()
+    }
   }
 
-  /** Streaming per-source document QUOTA — the continuous-ingest form of
+  /** Streaming per-source document QUOTA, the continuous-ingest form of
     * `q_domain_cap`'s CommonCrawl-style per-host cap: admit at most
-    * `maxPerSource` documents per source over the WHOLE stream, in
-    * deterministic (micro-batch, doc_id) order (per-key arrival order
-    * within a batch is not guaranteed, so each batch's group sorts by
-    * id before admitting — the count-or-gap twin's discipline).
+    * `maxPerSource` documents per source over the WHOLE stream. The batch
+    * form keeps the top-N by quality because it sees the whole corpus; a
+    * stream cannot, so it admits the FIRST N in arrival order, the online
+    * quota any crawler frontier enforces. Both are gated, each against its
+    * own oracle.
     *
-    * Semantics note vs the batch operator: the batch form keeps the
-    * top-N by QUALITY (it sees the whole corpus); a stream cannot — it
-    * admits the FIRST N in arrival order, the online quota any crawler
-    * frontier enforces. Both are gated, each against its own oracle.
-    *
-    * State: ONE long per distinct source ever seen — bounded by the
-    * domain universe, not the corpus (the smallest state class of all
-    * the stateful twins; a production deployment with unbounded domain
-    * churn would add a processing-time TTL, which changes admission
-    * semantics and is deliberately not defaulted). One state shuffle on
-    * (source); output is append-mode safe. */
-  def enforceSourceQuota(docs: DataFrame, sourceCol: String, idCol: String,
-                         maxPerSource: Int): Dataset[QuotaKept] = {
-    require(maxPerSource >= 1, s"maxPerSource must be >= 1, got $maxPerSource")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val typed = docs.select(col(sourceCol).cast("string").as("key"),
-        col(idCol).cast("long").as("doc_id"))
-      .as[QuotaDoc]
-    typed.groupByKey(_.key)
-      .flatMapGroupsWithState[Long, QuotaKept](
-        OutputMode.Append, GroupStateTimeout.NoTimeout) {
-        (key: String, batch: Iterator[QuotaDoc], state: GroupState[Long]) =>
-          val admitted = state.getOption.getOrElse(0L)
-          val room = maxPerSource - admitted
-          if (room <= 0L) Iterator.empty
-          else {
-            // smallest `room` ids via a bounded max-heap — memory is
-            // O(room) however hot the source runs in this batch (a hot
-            // source in a big batch is exactly the skew this operator
-            // polices; materializing its whole per-key batch to sort it
-            // would make executor memory O(largest per-key batch)).
-            // Identical deterministic output to sorting the full batch.
-            val heap = scala.collection.mutable.PriorityQueue
-              .empty[Long](Ordering.Long) // max at head
-            batch.foreach { d =>
-              if (heap.size < room) heap.enqueue(d.doc_id)
-              else if (d.doc_id < heap.head) {
-                heap.dequeue(); heap.enqueue(d.doc_id)
-              }
-            }
-            val keep = heap.dequeueAll.reverse // ascending
-            if (keep.nonEmpty) state.update(admitted + keep.length)
-            keep.iterator.zipWithIndex.map { case (id, i) =>
-              QuotaKept(key, id, admitted + i + 1) }
-          }
-      }
-  }
-
-  /** Gate/test form of [[enforceSourceQuota]]: drain an AvailableNow
-    * stream into a memory sink and return the kept ledger as a batch
-    * frame (production writes the same append-mode output to a durable
-    * sink). */
-  def sourceQuotaAvailableNow(docs: DataFrame, sourceCol: String,
-                              idCol: String, maxPerSource: Int): DataFrame = {
-    val spark = docs.sparkSession
-    val name = s"quota_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val q = enforceSourceQuota(docs, sourceCol, idCol, maxPerSource)
-      .writeStream.format("memory").queryName(name)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(name)
-  }
-
-  /** The PRODUCTION form of [[enforceSourceQuota]] — the per-source
-    * first-N admission quota as a DURABLE exactly-once sink on the
+    * A DURABLE exactly-once sink on the
     * state-fold discipline (no state store: the carried per-source
     * admitted count is ordinary parquet — inspectable, replayable, and
     * shared with any other consumer of the admission ledger). Per
@@ -1046,9 +773,8 @@ object Streaming {
     * at `sink/data/batch_id=B`, the per-source counts after B at
     * `sink/_state/batch_id=B`.
     *
-    * Same admission semantics as the flatMapGroupsWithState twin:
-    * equals the stream-order quota exactly (each batch's group admits
-    * id-sorted on top of the carried count), and only ADMITTED rows
+    * Admission equals the stream-order quota exactly (each batch's group
+    * admits id-sorted on top of the carried count), and only ADMITTED rows
     * advance the count. Replay of B folds only state < B
     * ([[newestStateBefore]]) and overwrites its own two dirs —
     * byte-identical, forced-restart-tested; state GC keeps newest + one
@@ -1063,56 +789,49 @@ object Streaming {
                         sink: String, checkpoint: String): Unit = {
     require(maxPerSource >= 1, s"maxPerSource must be >= 1, got $maxPerSource")
     val spark = docs.sparkSession
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // empty batch: no verdicts, counts unchanged
-        if (!batch.isEmpty) {
-        val b = batch.toDF()
-        val off = newestStateBefore(spark, sink, bid) match {
-          case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-          case None =>
-            import spark.implicits._
-            Seq.empty[(String, Long)].toDF("__sq_key", "__sq_adm")
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(sourceCol)).orderBy(col(idCol))
-        val kept = b.select(col(sourceCol), col(idCol))
-          .withColumn("__sq_rk", row_number().over(w).cast("long"))
-          // NO forced broadcast: the per-source state is domain-universe-
-          // sized — metadata for most deployments, but a web-scale source
-          // set can reach GBs; the parquet-backed state has accurate size
-          // stats, so Catalyst/AQE broadcasts while small and shuffles
-          // when it isn't, instead of a forced hint OOMing the driver
-          .join(off,
-            col(sourceCol).cast("string") <=> col("__sq_key"), "left")
-          .withColumn("n_kept",
-            col("__sq_rk") + coalesce(col("__sq_adm"), lit(0L)))
-          .filter(col("n_kept") <= maxPerSource)
-          .select(col(sourceCol), col(idCol), col("n_kept"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        kept.write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-        // counts AFTER this batch: carried + the batch's ADMITTED rows
-        off.unionByName(
-            kept.groupBy(col(sourceCol).cast("string").as("__sq_key"))
-              .agg(count(lit(1)).as("__sq_adm")))
-          .groupBy(col("__sq_key"))
-          .agg(sum(col("__sq_adm")).as("__sq_adm"))
-          // natural partitioning, like the join above argues: the source
-          // universe is caller-shaped and can reach GBs at web scale — a
-          // coalesce(1) here would fold that table through ONE task every
-          // batch (the lmScoreToSink precedent: replay needs only content
-          // determinism, nothing reads file layout)
-          .write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-        kept.unpersist()
-        }
-        ()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // empty batch: no verdicts, counts unchanged
+      if (!batch.isEmpty) {
+      val off = newestStateBefore(spark, sink, bid) match {
+        case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
+        case None =>
+          import spark.implicits._
+          Seq.empty[(String, Long)].toDF("__sq_key", "__sq_adm")
       }
-      .start()
-    query.awaitTermination()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(sourceCol)).orderBy(col(idCol))
+      val kept = batch.select(col(sourceCol), col(idCol))
+        .withColumn("__sq_rk", row_number().over(w).cast("long"))
+        // NO forced broadcast: the per-source state is domain-universe-
+        // sized — metadata for most deployments, but a web-scale source
+        // set can reach GBs; the parquet-backed state has accurate size
+        // stats, so Catalyst/AQE broadcasts while small and shuffles
+        // when it isn't, instead of a forced hint OOMing the driver
+        .join(off,
+          col(sourceCol).cast("string") <=> col("__sq_key"), "left")
+        .withColumn("n_kept",
+          col("__sq_rk") + coalesce(col("__sq_adm"), lit(0L)))
+        .filter(col("n_kept") <= maxPerSource)
+        .select(col(sourceCol), col(idCol), col("n_kept"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      kept.write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+      // counts AFTER this batch: carried + the batch's ADMITTED rows
+      off.unionByName(
+          kept.groupBy(col(sourceCol).cast("string").as("__sq_key"))
+            .agg(count(lit(1)).as("__sq_adm")))
+        .groupBy(col("__sq_key"))
+        .agg(sum(col("__sq_adm")).as("__sq_adm"))
+        // natural partitioning, like the join above argues: the source
+        // universe is caller-shaped and can reach GBs at web scale — a
+        // coalesce(1) here would fold that table through ONE task every
+        // batch (the lmScoreToSink precedent: replay needs only content
+        // determinism, nothing reads file layout)
+        .write.mode("overwrite")
+        .parquet(s"$sink/_state/batch_id=$bid")
+      pruneStateHistory(spark, sink, bid)
+      kept.unpersist()
+      }
+    }
   }
 
   /** Streaming INGEST of a stored IVF ANN index — the third stored index
@@ -1149,28 +868,21 @@ object Streaming {
     // a later recentring compaction enforces the quiesce guard against
     // THIS checkpoint automatically (no opt-in parameter to forget)
     graft.ext.Similarity.recordIvfIngestCheckpoint(idx, checkpoint)
-    val query = vecs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // empty-batch guard: same rationale as minhashDedupIngestToSink;
-        // probed on the PERSISTED batch so nothing scans twice (round 22)
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!b.isEmpty) {
-        graft.ext.Similarity.ivfTopKIndexed(idx, b, idCol, vecCol,
-            k, nprobe, excludeIds = Some(b.select(idCol)))
-          .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-        graft.ext.Similarity.appendToIvfIndex(idx, b, idCol, vecCol,
-          tag = s"b$bid")
-        if (autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
-          graft.ext.Similarity.compactIvfIndex(idx)
-        }
-        b.unpersist()
-        ()
+    runMicroBatches(vecs, checkpoint) { (batch, bid) =>
+      // empty-batch guard: same rationale as minhashDedupIngestToSink;
+      // probed on the PERSISTED batch so nothing scans twice (round 22)
+      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!b.isEmpty) {
+      graft.ext.Similarity.ivfTopKIndexed(idx, b, idCol, vecCol,
+          k, nprobe, excludeIds = Some(b.select(idCol)))
+        .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
+      graft.ext.Similarity.appendToIvfIndex(idx, b, idCol, vecCol,
+        tag = s"b$bid")
+      if (autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
+        graft.ext.Similarity.compactIvfIndex(idx)
       }
-      .start()
-    query.awaitTermination()
+      b.unpersist()
+    }
   }
 
   /** Streaming INGEST of a stored IVF-PQ ANN index — the FOURTH stored
@@ -1192,64 +904,31 @@ object Streaming {
     // one handle per run — cached manifest/centroids/codebooks/segment
     // listings across micro-batches (see [[ivfIngestToSink]])
     val idx = graft.ext.Similarity.openIvfIndex(spark, path)
-    val query = vecs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // guard on the persisted batch, the ivfIngestToSink treatment
-        // (round 22)
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!b.isEmpty) {
-        graft.ext.Similarity.ivfPqTopKIndexed(idx, b, idCol, vecCol,
-            k, nprobe, excludeIds = Some(b.select(idCol)))
-          .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-        graft.ext.Similarity.appendToIvfPqIndex(idx, b, idCol,
-          vecCol, tag = s"b$bid")
-        if (autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
-          graft.ext.Similarity.compactIvfPqIndex(idx)
-        }
-        b.unpersist()
-        ()
+    runMicroBatches(vecs, checkpoint) { (batch, bid) =>
+      // guard on the persisted batch, the ivfIngestToSink treatment
+      // (round 22)
+      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!b.isEmpty) {
+      graft.ext.Similarity.ivfPqTopKIndexed(idx, b, idCol, vecCol,
+          k, nprobe, excludeIds = Some(b.select(idCol)))
+        .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
+      graft.ext.Similarity.appendToIvfPqIndex(idx, b, idCol,
+        vecCol, tag = s"b$bid")
+      if (autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
+        graft.ext.Similarity.compactIvfPqIndex(idx)
       }
-      .start()
-    query.awaitTermination()
+      b.unpersist()
+    }
   }
 
   /** Streaming INGEST of the inverted BM25 index
-    * ([[graft.ext.Bm25.buildIndex]]): each micro-batch appends its
-    * postings via [[graft.ext.Bm25.appendToIndex]] — bucket-keyed append,
-    * vocabulary-bounded df merge behind a staged rename, additive stats
-    * rewrite LAST, so the index is CONSISTENT (if momentarily stale)
-    * after every batch and a standing query can probe it at any time.
-    * Postings, df counts, and stats are all order-independent sums over
-    * the row multiset, so the accumulated index equals
-    * `buildIndex(all batches)` EXACTLY regardless of arrival slicing —
-    * the monoid-state twin class, like the data card. Returns the
-    * standing query's top-k against the final index; production probes
-    * from the same hook per batch (alerting over a growing corpus).
-    * MUTATES the index at `path` — that is the point. */
-  def bm25IngestAvailableNow(docs: DataFrame, path: String, idCol: String,
-                             textCol: String, terms: Seq[String],
-                             k: Int): DataFrame = {
-    val spark = docs.sparkSession
-    // one handle per run — cached stats row + per-dir bucket listings
-    // across micro-batches (see [[bm25IngestToSink]])
-    val idx = graft.ext.Bm25.openIndex(spark, path)
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        graft.ext.Bm25.appendToIndex(idx, batch.toDF(), idCol, textCol,
-          tag = "")
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    graft.ext.Bm25.topKIndexed(idx, terms, k, k1 = 1.2, b = 0.75)
-  }
-
-  /** The PRODUCTION form of [[bm25IngestAvailableNow]] — per-batch results
-    * to a durable SINK instead of a driver collect, EXACTLY-ONCE end to
+    * ([[graft.ext.Bm25.buildIndex]]) with a standing top-k query. Postings,
+    * df counts and stats are all order-independent sums over the row
+    * multiset, so the accumulated index equals `buildIndex(all batches)`
+    * EXACTLY regardless of arrival slicing, and the last batch's top-k is
+    * the batch query's. MUTATES the index at `path`; that is the point.
+    *
+    * Per-batch results go to a durable SINK, EXACTLY-ONCE end to
     * end across restarts. Per micro-batch: (1) the batch appends to the
     * index as a delta segment committed by the atomic stats flip, with
     * the micro-batch id as the idempotence tag — a restart that replays an
@@ -1276,27 +955,21 @@ object Streaming {
     // driver round-trips in the per-batch latency floor. A restart
     // builds a fresh handle whose stats read restores replay detection.
     val idx = graft.ext.Bm25.openIndex(spark, path)
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        graft.ext.Bm25.appendToIndex(idx, batch.toDF(), idCol, textCol,
-          tag = s"b$bid")
-        // AUTO-COMPACTION before the probe: fold the delta history to one
-        // bucket-sorted base when it crosses the threshold. Replay-safe
-        // without any exclusion machinery — compaction is
-        // content-preserving and the BM25 probe scores the index's
-        // CONTENT (a replayed batch's append is tag-skipped, so the
-        // replayed probe sees identical postings whatever the layout and
-        // overwrites its sink directory with identical rows).
-        if (autoCompactAt > 0 && idx.deltaSegments > autoCompactAt)
-          graft.ext.Bm25.compactIndex(idx)
-        graft.ext.Bm25.topKIndexed(idx, terms, k, k1 = 1.2, b = 0.75)
-          .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-        ()
-      }
-      .start()
-    query.awaitTermination()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      graft.ext.Bm25.appendToIndex(idx, batch, idCol, textCol,
+        tag = s"b$bid")
+      // AUTO-COMPACTION before the probe: fold the delta history to one
+      // bucket-sorted base when it crosses the threshold. Replay-safe
+      // without any exclusion machinery — compaction is
+      // content-preserving and the BM25 probe scores the index's
+      // CONTENT (a replayed batch's append is tag-skipped, so the
+      // replayed probe sees identical postings whatever the layout and
+      // overwrites its sink directory with identical rows).
+      if (autoCompactAt > 0 && idx.deltaSegments > autoCompactAt)
+        graft.ext.Bm25.compactIndex(idx)
+      graft.ext.Bm25.topKIndexed(idx, terms, k, k1 = 1.2, b = 0.75)
+        .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
+    }
   }
 
   /** End-to-end SHARDED TRAINING EXPORT, exactly-once across restarts:
@@ -1327,52 +1000,77 @@ object Streaming {
                           epoch: Long, numShards: Int, seqLen: Long,
                           sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // empty micro-batch: nothing to export and nothing to record — a
+      // _SUCCESS-only data dir would poison later schema inference (the
+      // Bm25.appendToIndex lesson), and base lookup skips absent ids
+      if (!batch.isEmpty) {
+      // bases = cumulative state of the newest COMMITTED batch before
+      // this one (replay-safe: batch B never reads its own state row)
+      val prev = newestStateBefore(spark, sink, bid)
+      val (baseRows, baseTokens) = prev match {
+        case None => (Map.empty[Long, Long], Map.empty[Long, Long])
+        case Some(p) =>
+          val st = spark.read.parquet(s"$sink/_state/batch_id=$p")
+            .select(col("shard"), col("rows"), col("tokens")).collect()
+          (st.map(r => r.getLong(0) -> r.getLong(1)).toMap,
+           st.map(r => r.getLong(0) -> r.getLong(2)).toMap)
+      }
+      val out = graft.ext.Corpus.epochShardPack(batch, idCol,
+        tokens, epoch, numShards, seqLen, baseRows, baseTokens)
+      out.write.mode("overwrite").partitionBy("shard")
+        .parquet(s"$sink/data/batch_id=$bid")
+      // cumulative per-shard state AFTER this batch: base + this batch's
+      // contribution (read back from the just-written files so the state
+      // reflects exactly what a reader will see)
+      val contrib = spark.read.parquet(s"$sink/data/batch_id=$bid")
+        .groupBy(col("shard").cast("long").as("shard"))
+        .agg(count(lit(1)).as("r"), sum(col("n_tokens")).as("t"))
+        .collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val allShards = (0L until numShards.toLong).map { sh =>
+        val (br, bt) = (baseRows.getOrElse(sh, 0L), baseTokens.getOrElse(sh, 0L))
+        val (cr, ct) = contrib.getOrElse(sh, (0L, 0L))
+        (sh, br + cr, bt + ct)
+      }
+      import spark.implicits._
+      allShards.toDF("shard", "rows", "tokens").coalesce(1)
+        .write.mode("overwrite").parquet(s"$sink/_state/batch_id=$bid")
+      pruneStateHistory(spark, sink, bid)
+      }
+    }
+  }
+
+  /** The one driver loop every `*ToSink` runs on, and the only place the
+    * trigger and checkpoint policy are set: `body(batch, B)` runs per
+    * micro-batch under `Trigger.AvailableNow` with `checkpoint` as the
+    * checkpoint location, and the call returns once the input available at
+    * start is drained. The checkpoint is what the sinks' exactly-once
+    * contract rests on: committed batches are never re-delivered, and the
+    * one uncommitted batch a restart can replay keeps its batch id. Pass
+    * the same `checkpoint` across restarts; one writer per sink. */
+  private def runMicroBatches(input: DataFrame, checkpoint: String)(
+      body: (DataFrame, Long) => Unit): Unit =
+    input.writeStream
+      .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // empty micro-batch: nothing to export and nothing to record — a
-        // _SUCCESS-only data dir would poison later schema inference (the
-        // Bm25.appendToIndex lesson), and base lookup skips absent ids
-        if (!batch.isEmpty) {
-        // bases = cumulative state of the newest COMMITTED batch before
-        // this one (replay-safe: batch B never reads its own state row)
-        val prev = newestStateBefore(spark, sink, bid)
-        val (baseRows, baseTokens) = prev match {
-          case None => (Map.empty[Long, Long], Map.empty[Long, Long])
-          case Some(p) =>
-            val st = spark.read.parquet(s"$sink/_state/batch_id=$p")
-              .select(col("shard"), col("rows"), col("tokens")).collect()
-            (st.map(r => r.getLong(0) -> r.getLong(1)).toMap,
-             st.map(r => r.getLong(0) -> r.getLong(2)).toMap)
-        }
-        val out = graft.ext.Corpus.epochShardPack(batch.toDF(), idCol,
-          tokens, epoch, numShards, seqLen, baseRows, baseTokens)
-        out.write.mode("overwrite").partitionBy("shard")
-          .parquet(s"$sink/data/batch_id=$bid")
-        // cumulative per-shard state AFTER this batch: base + this batch's
-        // contribution (read back from the just-written files so the state
-        // reflects exactly what a reader will see)
-        val contrib = spark.read.parquet(s"$sink/data/batch_id=$bid")
-          .groupBy(col("shard").cast("long").as("shard"))
-          .agg(count(lit(1)).as("r"), sum(col("n_tokens")).as("t"))
-          .collect()
-          .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
-        val allShards = (0L until numShards.toLong).map { sh =>
-          val (br, bt) = (baseRows.getOrElse(sh, 0L), baseTokens.getOrElse(sh, 0L))
-          val (cr, ct) = contrib.getOrElse(sh, (0L, 0L))
-          (sh, br + cr, bt + ct)
-        }
-        import spark.implicits._
-        allShards.toDF("shard", "rows", "tokens").coalesce(1)
-          .write.mode("overwrite").parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-        }
-        ()
+      .foreachBatch { (batch: Dataset[Row], bid: Long) =>
+        body(batch.toDF(), bid)
       }
       .start()
-    query.awaitTermination()
-  }
+      .awaitTermination()
+
+  /** Drops the blocks behind `localCheckpoint`ed frames once a batch is
+    * done with them. `unpersist` does not reach them: a local checkpoint
+    * lives on the plan's RDD leaf, not in the cache manager, and would
+    * otherwise stay pinned until the frame happens to be garbage
+    * collected. The frames must not be used afterwards. */
+  private def releaseCheckpoints(frames: Seq[DataFrame]): Unit =
+    frames.foreach(_.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    })
 
   /** Newest COMMITTED cumulative-state batch id strictly before `bid`
     * under `sink/_state/batch_id=N` — the shared replay-safety primitive
@@ -1426,8 +1124,12 @@ object Streaming {
     }
   }
 
-  /** The PRODUCTION form of [[corpusReportAvailableNow]] — the data card
-    * as a DURABLE streaming sink, exactly-once across restarts: after
+  /** Streaming form of [[graft.ext.Profile.corpusReport]]: the data card
+    * of a continuously-growing corpus as a DURABLE sink, exactly-once
+    * across restarts. Every piece of state is a commutative monoid over
+    * the row multiset (sums add, the KMV sketch merges as a bounded set
+    * union), so the running card equals the batch operator EXACTLY under
+    * ANY arrival slicing. State: #groups × (3 longs + k longs). After
     * every micro-batch the RUNNING card of everything ingested so far is
     * written to `sink/card/batch_id=B` (the card is valid after every
     * batch — monitoring reads the newest one), and the raw mergeable
@@ -1449,63 +1151,61 @@ object Streaming {
   def corpusReportToSink(docs: DataFrame, groupCol: String, textCol: String,
                          k: Int, sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // empty batch: the previous card already IS the running card.
-        // The batch's own per-group aggregate doubles as the guard
-        // (round 22, the cmsSketchToSink treatment): probing the
-        // persisted aggregate decides emptiness exactly (groupBy keeps
-        // every row, so agg empty ⟺ batch empty) and runs the expensive
-        // aggregation under the probe for the fold-write to reuse.
-        val agg = graft.ext.Profile
-          .corpusAggregates(batch.toDF(), groupCol, textCol, k)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!agg.isEmpty) {
-        val folded = newestStateBefore(spark, sink, bid) match {
-          case None => agg
-          case Some(p) =>
-            spark.read.parquet(s"$sink/_state/batch_id=$p")
-              .unionByName(agg)
-              .groupBy(col(groupCol))
-              .agg(sum(col("n_docs")).as("n_docs"),
-                sum(col("n_tokens")).as("n_tokens"),
-                sum(col("n_chars")).as("n_chars"),
-                slice(array_sort(array_distinct(flatten(
-                  collect_list(col("__kmv"))))), 1, k).as("__kmv"))
-        }
-        folded.coalesce(1).write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        // the card derives from the READ-BACK state, so it reflects
-        // exactly what the next batch will fold on
-        spark.read.parquet(s"$sink/_state/batch_id=$bid")
-          .withColumn("est_distinct_texts",
-            graft.ext.Profile.kmvEstimate(col("__kmv"), k))
-          .drop("__kmv")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$sink/card/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-        }
-        agg.unpersist()
-        ()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // empty batch: the previous card already IS the running card.
+      // The batch's own per-group aggregate doubles as the guard
+      // (round 22, the cmsSketchToSink treatment): probing the
+      // persisted aggregate decides emptiness exactly (groupBy keeps
+      // every row, so agg empty ⟺ batch empty) and runs the expensive
+      // aggregation under the probe for the fold-write to reuse.
+      val agg = graft.ext.Profile
+        .corpusAggregates(batch, groupCol, textCol, k)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!agg.isEmpty) {
+      val folded = newestStateBefore(spark, sink, bid) match {
+        case None => agg
+        case Some(p) =>
+          spark.read.parquet(s"$sink/_state/batch_id=$p")
+            .unionByName(agg)
+            .groupBy(col(groupCol))
+            .agg(sum(col("n_docs")).as("n_docs"),
+              sum(col("n_tokens")).as("n_tokens"),
+              sum(col("n_chars")).as("n_chars"),
+              slice(array_sort(array_distinct(flatten(
+                collect_list(col("__kmv"))))), 1, k).as("__kmv"))
       }
-      .start()
-    query.awaitTermination()
+      folded.coalesce(1).write.mode("overwrite")
+        .parquet(s"$sink/_state/batch_id=$bid")
+      // the card derives from the READ-BACK state, so it reflects
+      // exactly what the next batch will fold on
+      spark.read.parquet(s"$sink/_state/batch_id=$bid")
+        .withColumn("est_distinct_texts",
+          graft.ext.Profile.kmvEstimate(col("__kmv"), k))
+        .drop("__kmv")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$sink/card/batch_id=$bid")
+      pruneStateHistory(spark, sink, bid)
+      }
+      agg.unpersist()
+    }
   }
 
-  /** The PRODUCTION form of [[tokenBudgetAvailableNow]] — the per-group
-    * token-budget admission ledger as a DURABLE streaming sink,
+  /** Streaming form of [[graft.ext.Corpus.tokenBudgetKeep]]: a LIVE
+    * per-group token-budget counter (the "stop ingesting a language once
+    * its allowance is full" shape), as a DURABLE admission-ledger sink,
     * exactly-once across restarts: each micro-batch's verdict rows
     * (cum_tokens, keep) land in `sink/data/batch_id=B`, and the per-group
     * fill level AFTER the batch in `sink/_state/batch_id=B` (one long per
     * group — metadata at any scale).
     *
-    * Same semantics as the gate form: rows are cumsummed in the
+    * Semantics: rows are cumsummed in the
     * batch-local (priority DESC, id) order on top of the group's CARRIED
     * fill (every row counts toward the fill, kept or not), which equals
-    * the batch operator whenever arrival respects the per-group priority
-    * order and degrades to arrival-order-first-fill otherwise. Replay of
+    * the batch operator bit for bit whenever arrival respects the
+    * per-group priority order (each batch's rows rank below everything
+    * the group already ingested: the curated-backfill norm, pinned in
+    * StreamingSpec) and degrades to arrival-order-first-fill otherwise,
+    * the natural semantics of a live budget counter. Replay of
     * batch B folds only state < B ([[newestStateBefore]]) and overwrites
     * its own directories — byte-identical output, forced-restart-tested.
     * Null-group safety: the state stores the group's STRING image and the
@@ -1514,152 +1214,57 @@ object Streaming {
                         priorityCol: String, tokensCol: String, budget: Long,
                         sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // empty batch: no verdicts and the fill level is unchanged;
-        // guard probed on the PERSISTED batch (round 22, nothing scans
-        // twice)
-        val b = batch.toDF()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!b.isEmpty) {
-        val off = newestStateBefore(spark, sink, bid) match {
-          case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-          case None =>
-            import spark.implicits._
-            Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
-        }
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(groupCol))
-          .orderBy(col(priorityCol).desc, col(idCol))
-          .rowsBetween(
-            org.apache.spark.sql.expressions.Window.unboundedPreceding,
-            org.apache.spark.sql.expressions.Window.currentRow)
-        b.withColumn("__tb_inc", sum(col(tokensCol).cast("long")).over(w))
-          // no forced broadcast — the group universe is caller-chosen and
-          // can be domain-sized; parquet-backed state has accurate stats,
-          // so the optimizer picks broadcast vs shuffle (see the quota
-          // sink's identical argument)
-          .join(off,
-            col(groupCol).cast("string") <=> col("__tb_g"), "left")
-          .withColumn("cum_tokens",
-            col("__tb_inc") + coalesce(col("__tb_off"), lit(0L)))
-          .withColumn("keep", col("cum_tokens") <= budget)
-          .drop("__tb_g", "__tb_inc", "__tb_off")
-          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-        // fill AFTER this batch: carried + the batch's per-group totals
-        off.unionByName(
-            b.groupBy(col(groupCol).cast("string").as("__tb_g"))
-              .agg(sum(col(tokensCol).cast("long")).as("__tb_off")))
-          .groupBy(col("__tb_g"))
-          .agg(sum(col("__tb_off")).as("__tb_off"))
-          // natural partitioning (the quota sink's argument, verbatim):
-          // the group universe is domain-sized — no single-task funnel
-          .write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-        }
-        b.unpersist()
-        ()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      // empty batch: no verdicts and the fill level is unchanged;
+      // guard probed on the PERSISTED batch (round 22, nothing scans
+      // twice)
+      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!b.isEmpty) {
+      val off = newestStateBefore(spark, sink, bid) match {
+        case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
+        case None =>
+          import spark.implicits._
+          Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
       }
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Streaming twin of [[graft.ext.Profile.corpusReport]] — the data card
-    * of a continuously-growing corpus. Per micro-batch, one aggregation
-    * pass produces per-group (count, token, char) partials plus the KMV
-    * sketch; the carried per-group state folds them in — sums add, the
-    * sketch MERGES (a bounded set union). Because every piece of state is
-    * a commutative monoid over the row multiset, the final card equals
-    * the batch operator EXACTLY under ANY arrival slicing — no ordering
-    * caveat at all, the cleanest of the streaming twins. State: #groups ×
-    * (3 longs + k longs) — metadata at any scale.
-    *
-    * Collecting is the gate/test form; production emits the running card
-    * to a sink from the same hook (the card is valid after EVERY batch —
-    * it is the exact card of everything ingested so far). */
-  def corpusReportAvailableNow(docs: DataFrame, groupCol: String,
-                               textCol: String, k: Int = 64): DataFrame = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
-    import scala.jdk.CollectionConverters._
-    val spark = docs.sparkSession
-    val state = scala.collection.mutable.Map
-      .empty[Any, (Long, Long, Long, Array[Long])]
-    // the group column's ORIGINAL type, captured from the per-batch
-    // aggregate — the twin must return the batch operator's schema, not a
-    // stringified image
-    @volatile var groupType: DataType = null
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        val agg = graft.ext.Profile
-          .corpusAggregates(batch.toDF(), groupCol, textCol, k)
-        groupType = agg.schema.head.dataType
-        agg.collect().foreach { r =>
-          val g = r.get(0)
-          val add = (r.getLong(1), r.getLong(2), r.getLong(3),
-            r.getSeq[Long](4).toArray)
-          state(g) = state.get(g) match {
-            case Some((n, t, c, sk)) =>
-              (n + add._1, t + add._2, c + add._3,
-                graft.ext.Profile.mergeKmv(sk, add._4, k))
-            case None => add
-          }
-        }
-        ()
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(col(groupCol))
+        .orderBy(col(priorityCol).desc, col(idCol))
+        .rowsBetween(
+          org.apache.spark.sql.expressions.Window.unboundedPreceding,
+          org.apache.spark.sql.expressions.Window.currentRow)
+      b.withColumn("__tb_inc", sum(col(tokensCol).cast("long")).over(w))
+        // no forced broadcast — the group universe is caller-chosen and
+        // can be domain-sized; parquet-backed state has accurate stats,
+        // so the optimizer picks broadcast vs shuffle (see the quota
+        // sink's identical argument)
+        .join(off,
+          col(groupCol).cast("string") <=> col("__tb_g"), "left")
+        .withColumn("cum_tokens",
+          col("__tb_inc") + coalesce(col("__tb_off"), lit(0L)))
+        .withColumn("keep", col("cum_tokens") <= budget)
+        .drop("__tb_g", "__tb_inc", "__tb_off")
+        .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+      // fill AFTER this batch: carried + the batch's per-group totals
+      off.unionByName(
+          b.groupBy(col(groupCol).cast("string").as("__tb_g"))
+            .agg(sum(col(tokensCol).cast("long")).as("__tb_off")))
+        .groupBy(col("__tb_g"))
+        .agg(sum(col("__tb_off")).as("__tb_off"))
+        // natural partitioning (the quota sink's argument, verbatim):
+        // the group universe is domain-sized — no single-task funnel
+        .write.mode("overwrite")
+        .parquet(s"$sink/_state/batch_id=$bid")
+      pruneStateHistory(spark, sink, bid)
       }
-      .start()
-    query.awaitTermination()
-    require(state.nonEmpty, "empty stream: no batch ever arrived to profile")
-    val schema = StructType(Seq(
-      StructField("group", groupType),
-      StructField("n_docs", LongType), StructField("n_tokens", LongType),
-      StructField("n_chars", LongType),
-      StructField("est_distinct_texts", LongType)))
-    val rows = state.toSeq.map { case (g, (n, t, c, sk)) =>
-      Row(g, n, t, c, graft.ext.Profile.estimateKmv(sk, k))
+      b.unpersist()
     }
-    spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** Streaming Count-Min sketch: the counter matrix's sum monoid makes
-    * the running sketch EXACT under any micro-batch slicing — each batch
-    * collapses to its own ≤ depth·width (row, bucket, cnt) aggregate
-    * (map-side combined; the collect is bounded by the sketch shape, not
-    * the batch), which folds into the carried counters by plain addition.
-    * availableNow + the in-memory fold is the gate/test form; production
-    * keeps the counters in the state store (update-mode groupBy) or
-    * merges per-batch sketches sink-side — same monoid either way.
-    * Returns the sketch table [[graft.ext.Profile.cmsSketch]] would
-    * produce over the whole stream (StreamingSpec pins the equality). */
-  def cmsSketchAvailableNow(values: DataFrame, valueCol: String,
-                            depth: Int, width: Int): DataFrame = {
-    import org.apache.spark.sql.Row
-    val spark = values.sparkSession
-    val state = scala.collection.mutable.Map.empty[(Int, Long), Long]
-    val query = values.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.ext.Profile.cmsSketch(batch.toDF(), valueCol, depth, width)
-          .collect().foreach { r =>
-            val key = (r.getInt(0), r.getLong(1))
-            state(key) = state.getOrElse(key, 0L) + r.getLong(2)
-          }
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    import spark.implicits._
-    state.toSeq.map { case ((r, b), c) => (r, b, c) }
-      .toDF("row", "bucket", "cnt")
-  }
-
-  /** The PRODUCTION form of [[cmsSketchAvailableNow]] — the Count-Min
-    * counter matrix as a DURABLE streaming artifact, exactly-once across
-    * restarts: after every micro-batch the RUNNING sketch (≤ depth×width
+  /** Streaming Count-Min sketch ([[graft.ext.Profile.cmsSketch]]): the
+    * counter matrix's sum monoid makes the running sketch EXACT under any
+    * micro-batch slicing. The counter matrix is a DURABLE streaming
+    * artifact, exactly-once across restarts: after every micro-batch the
+    * RUNNING sketch (≤ depth×width
     * `(row, bucket, cnt)` rows — the state IS the queryable artifact)
     * lands at `sink/_state/batch_id=B`. The fold is the sketch's sum
     * monoid as a DataFrame aggregation; replay of batch B folds only the
@@ -1671,45 +1276,41 @@ object Streaming {
                       depth: Int, width: Int,
                       sink: String, checkpoint: String): Unit = {
     val spark = values.sparkSession
-    val query = values.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // the BATCH's own sketch doubles as the empty-guard (round 22):
-        // probing the persisted per-batch sketch decides emptiness and
-        // caches the expensive leg (the batch aggregation's shuffle runs
-        // under the probe; the fold-write job reuses it) — the old form
-        // paid a raw-source take(1) AND a full re-aggregation in the
-        // write. The `|| !batch.isEmpty` arm fires only when the sketch
-        // is empty (all values NULL — cmsSketch drops nulls): such a
-        // batch is NOT idle and must still land its (unchanged) running
-        // state at batch_id=B, exactly as before this round.
-        val bs = graft.ext.Profile.cmsSketch(batch.toDF(), valueCol,
-            depth, width)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        if (!bs.isEmpty || !batch.isEmpty) {
-        val folded = newestStateBefore(spark, sink, bid) match {
-          case None => bs
-          case Some(p) =>
-            spark.read.parquet(s"$sink/_state/batch_id=$p")
-              .unionByName(bs)
-              .groupBy(col("row"), col("bucket"))
-              .agg(sum(col("cnt")).as("cnt"))
-        }
-        folded.coalesce(1).write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-        }
-        bs.unpersist()
-        ()
+    runMicroBatches(values, checkpoint) { (batch, bid) =>
+      // the BATCH's own sketch doubles as the empty-guard (round 22):
+      // probing the persisted per-batch sketch decides emptiness and
+      // caches the expensive leg (the batch aggregation's shuffle runs
+      // under the probe; the fold-write job reuses it) — the old form
+      // paid a raw-source take(1) AND a full re-aggregation in the
+      // write. The `|| !batch.isEmpty` arm fires only when the sketch
+      // is empty (all values NULL — cmsSketch drops nulls): such a
+      // batch is NOT idle and must still land its (unchanged) running
+      // state at batch_id=B, exactly as before this round.
+      val bs = graft.ext.Profile.cmsSketch(batch, valueCol,
+          depth, width)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      if (!bs.isEmpty || !batch.isEmpty) {
+      val folded = newestStateBefore(spark, sink, bid) match {
+        case None => bs
+        case Some(p) =>
+          spark.read.parquet(s"$sink/_state/batch_id=$p")
+            .unionByName(bs)
+            .groupBy(col("row"), col("bucket"))
+            .agg(sum(col("cnt")).as("cnt"))
       }
-      .start()
-    query.awaitTermination()
+      folded.coalesce(1).write.mode("overwrite")
+        .parquet(s"$sink/_state/batch_id=$bid")
+      pruneStateHistory(spark, sink, bid)
+      }
+      bs.unpersist()
+    }
   }
 
-  /** The PRODUCTION form of [[bloomBitmapAvailableNow]] — the Bloom
-    * bitmap as a DURABLE streaming artifact, exactly-once across
-    * restarts: after every micro-batch the RUNNING bitmap (numBits/64
+  /** Streaming Bloom-filter build ([[graft.ext.Profile.bloomBitmap]]):
+    * bit-set union is an OR monoid, so the running bitmap over any
+    * micro-batch slicing equals the batch build exactly. The bitmap is a
+    * DURABLE streaming artifact, exactly-once across restarts: after every
+    * micro-batch the RUNNING bitmap (numBits/64
     * `(idx, word)` rows) lands at `sink/_state/batch_id=B`; the fold is
     * the OR monoid over the carried words (bitmap-sized — KBs — so the
     * driver-side OR is metadata work). Same replay discipline as every
@@ -1718,62 +1319,32 @@ object Streaming {
                         numHashes: Int, numBits: Int,
                         sink: String, checkpoint: String): Unit = {
     val spark = values.sparkSession
-    val query = values.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        // keeps the take(1) guard (round 22 audit): the batch feeds exactly
-        // one downstream action (the bitmap collect), so a count-as-guard
-        // would rescan rather than fold; and guarding on the bitmap being
-        // nonzero instead would silently skip an all-NULL-values batch,
-        // which the running-bitmap contract says must still land its
-        // (unchanged) state at batch_id=B
-        if (!batch.isEmpty) {
-        val bw = graft.ext.Profile.bloomBitmap(batch.toDF(), valueCol,
-          numHashes, numBits)
-        val prev = newestStateBefore(spark, sink, bid) match {
-          case None => new Array[Long](numBits / 64)
-          case Some(p) =>
-            spark.read.parquet(s"$sink/_state/batch_id=$p")
-              .select(col("idx"), col("word")).orderBy(col("idx"))
-              .collect().map(_.getLong(1))
-        }
-        import spark.implicits._
-        prev.zip(bw).map { case (a, b) => a | b }.zipWithIndex
-          .map { case (w, i) => (i.toLong, w) }.toSeq
-          .toDF("idx", "word")
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-        }
-        ()
+    runMicroBatches(values, checkpoint) { (batch, bid) =>
+      // keeps the take(1) guard (round 22 audit): the batch feeds exactly
+      // one downstream action (the bitmap collect), so a count-as-guard
+      // would rescan rather than fold; and guarding on the bitmap being
+      // nonzero instead would silently skip an all-NULL-values batch,
+      // which the running-bitmap contract says must still land its
+      // (unchanged) state at batch_id=B
+      if (!batch.isEmpty) {
+      val bw = graft.ext.Profile.bloomBitmap(batch, valueCol,
+        numHashes, numBits)
+      val prev = newestStateBefore(spark, sink, bid) match {
+        case None => new Array[Long](numBits / 64)
+        case Some(p) =>
+          spark.read.parquet(s"$sink/_state/batch_id=$p")
+            .select(col("idx"), col("word")).orderBy(col("idx"))
+            .collect().map(_.getLong(1))
       }
-      .start()
-    query.awaitTermination()
-  }
-
-  /** Streaming Bloom-filter build: bit-set union is an OR monoid, so the
-    * running bitmap over any micro-batch slicing equals the batch build
-    * exactly — each batch contributes its (bounded, distinct) bit
-    * positions and the carried word array ORs them in. availableNow +
-    * the in-memory fold is the gate/test form; production ORs per-batch
-    * bitmaps sink-side (a few KB each) or keeps the reference filter hot
-    * in the driver for the probe side of an ingest dedup stream. */
-  def bloomBitmapAvailableNow(values: DataFrame, valueCol: String,
-                              numHashes: Int, numBits: Int): Array[Long] = {
-    import org.apache.spark.sql.Row
-    val words = new Array[Long](numBits / 64)
-    val query = values.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[Row], _: Long) =>
-        graft.ext.Profile.bloomBitmap(batch.toDF(), valueCol,
-            numHashes, numBits)
-          .zipWithIndex.foreach { case (w, i) => words(i) |= w }
-        ()
+      import spark.implicits._
+      prev.zip(bw).map { case (a, b) => a | b }.zipWithIndex
+        .map { case (w, i) => (i.toLong, w) }.toSeq
+        .toDF("idx", "word")
+        .coalesce(1).write.mode("overwrite")
+        .parquet(s"$sink/_state/batch_id=$bid")
+      pruneStateHistory(spark, sink, bid)
       }
-      .start()
-    query.awaitTermination()
-    words
+    }
   }
 
   /** Streaming k-means assignment against a PINNED fitted model
@@ -1781,12 +1352,8 @@ object Streaming {
     * cluster a 100 TB backlog once, then classify the continuous ingest
     * into the same cells forever. The scorer is a STATELESS map over plan
     * literals (no join, no state store), so any micro-batching yields the
-    * batch assignment exactly (StreamingSpec pins multi-batch == batch);
-    * availableNow + collect is the gate/test form — production writes
-    * each batch's `(id, cell, score)` to a sink from the same hook. */
-  /** The PRODUCTION form of [[kmeansAssignAvailableNow]] — streaming
-    * k-means assignment as a DURABLE, exactly-once sink (round 20,
-    * graduating the collect-gated twin). Fit-batch / serve-stream: the
+    * batch assignment exactly (StreamingSpec pins multi-batch == batch).
+    * A DURABLE, exactly-once sink: the
     * exact model IS the pinned artifact — the quantized centroid rows
     * `(cell, dim, qm)` plus `max_abs_input` land at `sink/_model`
     * BEFORE the stream starts (k × dim rows, model metadata; the write
@@ -1812,41 +1379,13 @@ object Streaming {
       .withColumn("max_abs_input", lit(fit.maxAbsInput))
       .coalesce(1) // k x dim rows — model metadata by construction
       .write.mode("overwrite").parquet(s"$sink/_model")
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], bid: Long) =>
-        if (!batch.isEmpty) {
-          graft.ml.ExactKMeans
-            .assign(batch.toDF(), col(idCol), col(vecCol), fit)
-            .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-        }
-        ()
+    runMicroBatches(docs, checkpoint) { (batch, bid) =>
+      if (!batch.isEmpty) {
+        graft.ml.ExactKMeans
+          .assign(batch, col(idCol), col(vecCol), fit)
+          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
       }
-      .start()
-    query.awaitTermination()
-  }
-
-  def kmeansAssignAvailableNow(docs: DataFrame, idCol: String, vecCol: String,
-                               fit: graft.ml.ExactKMeans.Fit): DataFrame = {
-    val spark = docs.sparkSession
-    val rows = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-    @volatile var schema: org.apache.spark.sql.types.StructType = null
-    val query = docs.writeStream
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-        val out = graft.ml.ExactKMeans.assign(
-          batch.toDF(), col(idCol), col(vecCol), fit)
-        val collected = out.collect()
-        rows.synchronized { rows ++= collected }
-        schema = out.schema
-        ()
-      }
-      .start()
-    query.awaitTermination()
-    require(schema != null, "empty stream: no batch ever arrived to assign")
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(rows.toList.asJava, schema)
+    }
   }
 
   /** Permissive twin of [[annotateImageMeta]] — the streaming form of the

@@ -171,45 +171,4 @@ class BpeSpec extends SparkTestBase {
     assert(cold.head.contains("est")) // learned merge applied from the store
     r2.close()
   }
-
-  test("incremental delta-fold training == full recount on adversarial fixtures") {
-    // round 22: train maintains the pair-count table by delta-fold
-    // (counts + pairs(merged affected) - pairs(affected)) instead of the
-    // per-round full recount. This fixture plants every way the delta can
-    // diverge from a recount if mishandled:
-    //  - overlapping runs ("aaaaaa": merging (a,a) counts occurrences per
-    //    adjacent index, and the greedy pass consumes pairs left-to-right),
-    //  - merges that CREATE new adjacencies ("abab": (a,b) -> ab,ab creates
-    //    the (ab,ab) pair from nothing),
-    //  - counts dropping to zero (the merged-away pair must leave the
-    //    table, or a stale 0-count row could win a tie),
-    //  - exact count ties broken by pair ascending,
-    //  - words entirely untouched by any merge (must keep their counts).
-    val fixtures = Seq(
-      Seq.fill(4)("aaaaaa") ++ Seq.fill(3)("abab") ++ Seq.fill(3)("bcbc")
-        ++ Seq.fill(2)("xyzzy") ++ Seq.fill(5)("zz"),
-      Seq.fill(2)("aaa") ++ Seq.fill(2)("bbb") ++ Seq.fill(2)("ab")
-        ++ Seq.fill(1)("ba") ++ Seq.fill(3)("cdcdcd"),
-      Seq("lowlow", "lowest", "newest", "widest", "west", "estest"))
-    fixtures.zipWithIndex.foreach { case (ws, fi) =>
-      val df = ws.zipWithIndex.map { case (w, i) => (i.toLong, w) }
-        .toDF("doc_id", "text")
-      for (n <- Seq(3, 8, 16)) {
-        // call the incremental loop DIRECTLY: the public train picks the
-        // recount path below IncrementalMinWords, so these tiny fixtures
-        // would never exercise the delta-fold through it
-        val (inc, incWords) = Bpe.trainFromWordCountsIncremental(
-          Bpe.wordCounts(df, "text"), numMerges = n)
-        val (ref, refWords) = Bpe.trainFullRecount(df, "text", numMerges = n)
-        assert(inc == ref,
-          s"fixture $fi, numMerges=$n: incremental=$inc recount=$ref")
-        // the final symbol tables must agree as multisets too
-        def canon(d: org.apache.spark.sql.DataFrame) = d
-          .select(concat_ws("\u0001", col("symbols")).as("s"), col("cnt"))
-          .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-        assert(canon(incWords) == canon(refWords))
-        incWords.unpersist(false); refWords.unpersist(false)
-      }
-    }
-  }
 }

@@ -17,6 +17,50 @@ class StreamingSpec extends SparkTestBase {
   import spark.implicits._
   private implicit def sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
+  /** What a finished test left running or pinned beyond what was there
+    * when it started: active streaming queries, and persisted RDDs over
+    * the `rddsBefore` count. */
+  private def leftBehind(rddsBefore: Int): Seq[String] = {
+    val active = spark.streams.active.map(q => s"active query ${q.id}").toSeq
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    active ++ (if (rdds > rddsBefore)
+      Seq(s"persisted RDDs grew from $rddsBefore to $rdds") else Nil)
+  }
+
+  /** Leak check after every test: a passing test must stop every query it
+    * started and release every RDD it persisted or checkpointed. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome = {
+    val rddsBefore = spark.sparkContext.getPersistentRDDs.size
+    super.withFixture(test) match {
+      case org.scalatest.Succeeded =>
+        val leaks = leftBehind(rddsBefore)
+        if (leaks.isEmpty) org.scalatest.Succeeded
+        else org.scalatest.Failed(s"left behind: ${leaks.mkString("; ")}")
+      case other => other
+    }
+  }
+
+  /** Runs `body` and then unpersists every RDD it persisted: for tests
+    * that call a batch operator directly, whose lazily checkpointed
+    * result stays pinned until garbage collection. */
+  private def releasing[T](body: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    try body
+    finally spark.sparkContext.getPersistentRDDs
+      .filter { case (id, _) => !before(id) }
+      .foreach { case (_, rdd) => rdd.unpersist(blocking = false) }
+  }
+
+  /** The newest `batch_id=B` directory under `dir`: a running state or
+    * card, or the last batch's verdicts. */
+  private def newest(dir: String): org.apache.spark.sql.DataFrame =
+    spark.read.parquet(new java.io.File(dir).listFiles()
+      .filter(_.getName.startsWith("batch_id="))
+      .maxBy(_.getName.stripPrefix("batch_id=").toLong).toString)
+
+  private def tmp(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
+
   private def ts(minutes: Int): Timestamp =
     Timestamp.valueOf(java.time.LocalDateTime.of(2026, 1, 1, 0, 0).plusMinutes(minutes.toLong))
 
@@ -290,8 +334,10 @@ class StreamingSpec extends SparkTestBase {
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
     val tokens = size(graft.ext.Corpus.words(col("text")))
-    val streamed = Streaming.packSequencesAvailableNow(
-      stream, "doc_id", tokens, seqLen = 8L)
+    val sink = tmp("graft-packstream-out-")
+    Streaming.packSequencesToSink(stream, "doc_id", tokens, seqLen = 8L,
+      sink, tmp("graft-packstream-ck-"))
+    val streamed = spark.read.parquet(s"$sink/data").drop("batch_id")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     val batch = graft.ext.Corpus.packSequences(
       mkDocs(0 until 100), "doc_id", tokens, seqLen = 8L)
@@ -300,6 +346,48 @@ class StreamingSpec extends SparkTestBase {
     // genuine multi-batch: second half starts at the first half's total
     val firstHalfTokens = streamed.take(50).map(_(1).asInstanceOf[Long]).sum
     assert(streamed(50)(2) == firstHalfTokens)
+  }
+
+  test("packing sink: carried token offset, exactly-once restart, state GC") {
+    // three batches: each packs on top of the running total carried in
+    // _state; a forced replay of the last batch must read the same
+    // offset (state < B only) and rewrite identical layout and state
+    val src = java.nio.file.Files.createTempDirectory("graft-packsink-src-")
+    for (i <- 0 until 3) {
+      (i * 10 until i * 10 + 10).map(d =>
+          (d.toLong, Seq.fill(d % 5 + 1)("w").mkString(" ")))
+        .toDF("doc_id", "text").coalesce(1).write.parquet(s"$src/b$i")
+      Thread.sleep(1100)
+    }
+    val sink = tmp("graft-packsink-out-")
+    val ckpt = tmp("graft-packsink-ck-")
+    val schema = spark.read.parquet(s"$src/b0").schema
+    def run(): Unit = Streaming.packSequencesToSink(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$src/{b0,b1,b2}/*.parquet"),
+      "doc_id", size(graft.ext.Corpus.words(col("text"))), seqLen = 4L,
+      sink, ckpt)
+    run()
+    def layout() = spark.read.parquet(s"$sink/data")
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    def total() = newest(s"$sink/_state").as[Long].collect().toSeq
+    val before = layout()
+    val tokens = (0 until 30).map(d => (d % 5 + 1).toLong)
+    // contiguous across batches: each doc starts where the previous ended
+    assert(before.map(_(2)) == tokens.scanLeft(0L)(_ + _).take(30))
+    assert(before.map(_.last) == (0 until 30).map(_ / 10))
+    assert(total() == Seq(tokens.sum))
+    val stateDirs = new java.io.File(s"$sink/_state").listFiles()
+      .map(_.getName).filter(_.startsWith("batch_id=")).sorted
+    assert(stateDirs.sameElements(Array("batch_id=1", "batch_id=2")),
+      s"state history not GC'd: ${stateDirs.mkString(",")}")
+    // forced replay of batch 2
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "2"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(ckpt, "commits", ".2.crc"))
+    run()
+    assert(layout() == before, "replay altered the layout")
+    assert(total() == Seq(tokens.sum), "replay altered the carried total")
   }
 
   test("streaming semantic dedup: multi-batch equals batch, cross-batch dups drop") {
@@ -323,13 +411,15 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.semanticDedupAvailableNow(
-        stream, "vec_id", "embedding", cents, threshold = 0.8)
+    val sink = tmp("graft-semstream-out-")
+    Streaming.semanticDedupToSink(stream, "vec_id", "embedding", cents,
+      threshold = 0.8, sink, tmp("graft-semstream-ck-"), horizonBatches = 0)
+    val streamed = spark.read.parquet(s"$sink/data").drop("batch_id")
       .orderBy("id").collect().map(_.toSeq).toSeq
-    val batch = graft.ext.Dedup.semanticDedup(
+    val batch = releasing(graft.ext.Dedup.semanticDedup(
         all, "vec_id", "embedding", cents, threshold = 0.8)
       .select(col("id"), col("cell"), col("keep"))
-      .orderBy("id").collect().map(_.toSeq).toSeq
+      .orderBy("id").collect().map(_.toSeq).toSeq)
     assert(streamed == batch)
     // the planted copies really dropped, and against the carried state
     // (their originals live in the EARLIER batch)
@@ -360,8 +450,10 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.kmeansAssignAvailableNow(
-        stream, "vec_id", "embedding", fit)
+    val sink = tmp("graft-kmstream-out-")
+    Streaming.kmeansAssignToSink(stream, "vec_id", "embedding", fit,
+      sink, tmp("graft-kmstream-ck-"))
+    val streamed = spark.read.parquet(s"$sink/data").drop("batch_id")
       .orderBy("id").collect().map(_.toSeq).toSeq
     val batch = graft.ml.ExactKMeans.assign(all,
         col("vec_id").cast("long"), col("embedding"), fit)
@@ -373,7 +465,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("k-means sink: pinned model artifact, per-batch ledger, exactly-once restart") {
-    // round 20: the durable graduation of the collect-gated twin — the
+    // round 20: k-means assignment as a durable sink — the
     // centroid set lands at _model BEFORE the stream, per-batch verdicts
     // at data/batch_id=B, and a forced replay of the last batch (the
     // scorer is stateless) rewrites byte-identical verdicts.
@@ -430,7 +522,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("streaming token budget: priority-ordered batches equal batch, state carries the fill") {
     // two batches, priority-descending arrival per group (the curated-
-    // backfill norm the twin's equality contract names): batch0 carries
+    // backfill norm the sink's equality contract names): batch0 carries
     // each group's high-priority half, batch1 the rest — the carried fill
     // level must make batch1's verdicts match the global batch cumsum
     val dir = java.nio.file.Files.createTempDirectory("graft-tbstream-")
@@ -452,8 +544,10 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.tokenBudgetAvailableNow(
-        stream, "g", "id", "prio", "tok", budget = 300L)
+    val sink = tmp("graft-tbstream-out-")
+    Streaming.tokenBudgetToSink(stream, "g", "id", "prio", "tok",
+      budget = 300L, sink, tmp("graft-tbstream-ck-"))
+    val streamed = spark.read.parquet(s"$sink/data")
       .select("id", "cum_tokens", "keep")
       .orderBy("id").collect().map(_.toSeq).toSeq
     val batch = graft.ext.Corpus.tokenBudgetKeep(
@@ -491,19 +585,22 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.minhashDedupIngestAvailableNow(
-        stream, idx1, "text", "doc_id", threshold = 0.9)
+    val sink = tmp("graft-ingest-out-")
+    Streaming.minhashDedupIngestToSink(stream, idx1, "text", "doc_id",
+      sink, tmp("graft-ingest-ck-"), threshold = 0.9)
+    val streamed = spark.read.parquet(sink)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val single = graft.ext.Dedup.minhashDedupAgainstIndex(spark, idx2,
-        (b0 ++ b1).toDF("doc_id", "text"), "text", "doc_id", threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    val single = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(spark,
+        idx2, (b0 ++ b1).toDF("doc_id", "text"), "text", "doc_id",
+        threshold = 0.9)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(streamed == single)
     assert(streamed == Set((3L, 2000L), (7L, 3000L), (2001L, 3001L)))
     // the mutation is real: a later probe of idx1 sees the ingested docs
-    val late = graft.ext.Dedup.minhashDedupAgainstIndex(spark, idx1,
-        Seq((9000L, b1(2)._2)).toDF("doc_id", "text"),
+    val late = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(spark,
+        idx1, Seq((9000L, b1(2)._2)).toDF("doc_id", "text"),
         "text", "doc_id", threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(late == Set((3002L, 9000L)))
   }
 
@@ -523,7 +620,10 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.corpusReportAvailableNow(stream, "g", "text", k = 16)
+    val sink = tmp("graft-card-out-")
+    Streaming.corpusReportToSink(stream, "g", "text", k = 16, sink,
+      tmp("graft-card-ck-"))
+    val streamed = newest(s"$sink/card").withColumnRenamed("g", "group")
       .orderBy("group").collect().map(_.toSeq).toSeq
     val batch = graft.ext.Profile.corpusReport(all.toDF("g", "text"), "g", "text", k = 16)
       .select(col("g").as("group"), col("n_docs"), col("n_tokens"),
@@ -540,10 +640,13 @@ class StreamingSpec extends SparkTestBase {
     val intStream = spark.readStream
       .schema(spark.read.parquet(s"$intDir/b0").schema)
       .parquet(intDir.toString + "/b0")
-    val intCard = Streaming.corpusReportAvailableNow(intStream, "g", "text", k = 8)
-    assert(intCard.schema("group").dataType ==
+    val intSink = tmp("graft-card-int-out-")
+    Streaming.corpusReportToSink(intStream, "g", "text", k = 8, intSink,
+      tmp("graft-card-int-ck-"))
+    val intCard = newest(s"$intSink/card")
+    assert(intCard.schema("g").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    assert(intCard.orderBy("group").collect().map(_.getInt(0)).toSeq ==
+    assert(intCard.orderBy("g").collect().map(_.getInt(0)).toSeq ==
       Seq(0, 1, 2, 3))
   }
 
@@ -1010,10 +1113,10 @@ class StreamingSpec extends SparkTestBase {
     assert(sinkPairs() == before, "replay altered the sink")
     // a fresh probe over the final index still verifies exactly (shingle
     // store uncorrupted): a copy of head doc 3 matches only head doc 3
-    val post = graft.ext.Dedup.minhashDedupAgainstIndex(spark, idx,
-        Seq(doc(9999L, "h3")).toDF("doc_id", "text"), "text", "doc_id",
+    val post = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(spark,
+        idx, Seq(doc(9999L, "h3")).toDF("doc_id", "text"), "text", "doc_id",
         threshold = 0.9)
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(post == Set((3L, 9999L)))
   }
 
@@ -1116,68 +1219,63 @@ class StreamingSpec extends SparkTestBase {
       (12 + 6).toLong)
   }
 
+  /** Runs the per-source quota sink over `batches` (one file-stream
+    * micro-batch each, in order) and returns the kept ledger as
+    * (batch_id, source, doc_id, n_kept). */
+  private def quotaLedger(maxPerSource: Int,
+                          batches: Seq[(String, Long)]*): Set[(Long, String, Long, Long)] = {
+    val src = java.nio.file.Files.createTempDirectory("graft-quota-src-")
+    for ((b, i) <- batches.zipWithIndex) {
+      b.toDF("source", "doc_id").coalesce(1).write.parquet(s"$src/b$i")
+      Thread.sleep(1100) // distinct mtimes: deterministic batch order
+    }
+    val sink = tmp("graft-quota-out-")
+    Streaming.sourceQuotaToSink(
+      spark.readStream.schema(spark.read.parquet(s"$src/b0").schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(batches.indices.map(i => s"b$i").mkString(s"$src/{", ",", "}/*.parquet")),
+      "source", "doc_id", maxPerSource, sink, tmp("graft-quota-ck-"))
+    spark.read.parquet(s"$sink/data")
+      .select(col("batch_id").cast("long"), col("source"), col("doc_id"),
+        col("n_kept"))
+      .as[(Long, String, Long, Long)].collect().toSet
+  }
+
   test("source quota: first-N admission across batches, state caps every key") {
     // online per-source quota: within a batch admission is id-sorted
-    // (arrival order in a group iterator is not guaranteed); across
-    // batches the count state caps the key for the stream's whole life
-    val input = MemoryStream[(String, Long)]
-    val kept = Streaming.enforceSourceQuota(
-      input.toDF.toDF("source", "doc_id"), "source", "doc_id",
-      maxPerSource = 3)
-    val q = kept.writeStream.format("memory")
-      .queryName("quota").outputMode("append").start()
-    try {
-      input.addData(("A", 5L), ("A", 3L), ("A", 1L), ("A", 9L), ("B", 10L))
-      q.processAllAvailable()
-      val afterB1 = spark.table("quota")
-        .as[(String, Long, Long)].collect().toSet
-      // A admits its 3 smallest ids of the batch; 9 is over quota
-      assert(afterB1 == Set(("A", 1L, 1L), ("A", 3L, 2L), ("A", 5L, 3L),
-        ("B", 10L, 1L)), s"got $afterB1")
-      // A is full: nothing admitted; B admits 2 more (sorted), C opens
-      input.addData(("A", 2L), ("A", 4L), ("B", 12L), ("B", 11L), ("C", 7L))
-      q.processAllAvailable()
-      val afterB2 = spark.table("quota")
-        .as[(String, Long, Long)].collect().toSet
-      assert(afterB2 == afterB1 ++ Set(("B", 11L, 2L), ("B", 12L, 3L),
-        ("C", 7L, 1L)), s"got $afterB2")
-    } finally q.stop()
+    // (arrival order within a batch carries no meaning); across batches
+    // the carried count caps the key for the stream's whole life
+    val ledger = quotaLedger(3,
+      Seq(("A", 5L), ("A", 3L), ("A", 1L), ("A", 9L), ("B", 10L)),
+      Seq(("A", 2L), ("A", 4L), ("B", 12L), ("B", 11L), ("C", 7L)))
+    val afterB1 = ledger.filter(_._1 == 0L).map(r => (r._2, r._3, r._4))
+    // A admits its 3 smallest ids of the batch; 9 is over quota
+    assert(afterB1 == Set(("A", 1L, 1L), ("A", 3L, 2L), ("A", 5L, 3L),
+      ("B", 10L, 1L)), s"got $afterB1")
+    // A is full: nothing admitted; B admits 2 more (sorted), C opens
+    val afterB2 = ledger.map(r => (r._2, r._3, r._4))
+    assert(afterB2 == afterB1 ++ Set(("B", 11L, 2L), ("B", 12L, 3L),
+      ("C", 7L, 1L)), s"got $afterB2")
   }
 
   test("source quota: hot source with per-batch size >> room stays bounded") {
     // the skew case the operator exists to police: one source floods a
     // single micro-batch with far more documents than its remaining
-    // quota. Admission must keep exactly the smallest `room` ids (the
-    // bounded-heap path — memory O(room), not O(batch)) and the
-    // deterministic output must equal what full-batch sorting would give.
-    val input = MemoryStream[(String, Long)]
-    val kept = Streaming.enforceSourceQuota(
-      input.toDF.toDF("source", "doc_id"), "source", "doc_id",
-      maxPerSource = 4)
-    val q = kept.writeStream.format("memory")
-      .queryName("quota_hot").outputMode("append").start()
-    try {
-      // 5000 ids, shuffled arrival, batch >> room=4
-      val rng = new scala.util.Random(7)
-      val ids = rng.shuffle((1L to 5000L).toVector)
-      input.addData(ids.map(i => ("hot", i)): _*)
-      q.processAllAvailable()
-      val afterB1 = spark.table("quota_hot")
-        .as[(String, Long, Long)].collect().toSet
-      assert(afterB1 == Set(("hot", 1L, 1L), ("hot", 2L, 2L),
-        ("hot", 3L, 3L), ("hot", 4L, 4L)), s"got $afterB1")
-      // the source is now full: a second flood admits nothing
-      input.addData((5001L to 6000L).map(i => ("hot", i)): _*)
-      q.processAllAvailable()
-      assert(spark.table("quota_hot").count() == 4L)
-    } finally q.stop()
+    // quota. Admission must keep exactly the smallest `room` ids, and a
+    // second flood into the full source admits nothing.
+    val rng = new scala.util.Random(7)
+    val ids = rng.shuffle((1L to 5000L).toVector)
+    val ledger = quotaLedger(4, ids.map(i => ("hot", i)),
+      (5001L to 6000L).map(i => ("hot", i)))
+    assert(ledger == Set((0L, "hot", 1L, 1L), (0L, "hot", 2L, 2L),
+      (0L, "hot", 3L, 3L), (0L, "hot", 4L, 4L)), s"got $ledger")
   }
 
   test("source-quota sink: carried counts, exactly-once restart, state GC") {
     // the durable form of the quota: three micro-batches, at most 3 per
-    // source over the stream's life; the kept ledger must equal the
-    // state-store twin's admission law (per batch, id-sorted on top of
-    // the carried count, only admitted rows advance it); a forced replay
+    // source over the stream's life; the kept ledger must follow the
+    // first-N admission law (per batch, id-sorted on top of the carried
+    // count, only admitted rows advance it); a forced replay
     // of the last batch rewrites identical verdicts and state, and the
     // state history is GC'd to newest + one grace generation.
     val b0 = Seq(("A", 5L), ("A", 3L), ("A", 1L), ("A", 9L), ("B", 10L))
@@ -1609,12 +1707,62 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.scoreLmAvailableNow(stream, "doc_id", "text", lm)
+    val sink = tmp("graft-lmstream-out-")
+    Streaming.pinnedLmScoreToSink(stream, "doc_id", "text", lm, sink,
+      tmp("graft-lmstream-ck-"))
+    val streamed = spark.read.parquet(s"$sink/data").drop("batch_id")
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     val batch = graft.ext.LangModel.score(mkDocs(0 until 80),
       "doc_id", "text", lm).orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(streamed == batch)
     assert(streamed.length == 80)
+  }
+
+  test("pinned-model lm sink: stateless verdicts, exactly-once restart") {
+    // the pinned model scores each batch on its own: a forced replay of
+    // the last batch rewrites identical verdicts into its own directory
+    val src = java.nio.file.Files.createTempDirectory("graft-lmpin-src-")
+    def mkDocs(ids: Range): org.apache.spark.sql.DataFrame =
+      ids.map(i => (i.toLong,
+        if (i % 2 == 0) "the quick brown fox" else s"slow$i grey dog"))
+        .toDF("doc_id", "text")
+    mkDocs(0 until 20).coalesce(1).write.parquet(s"$src/b0")
+    Thread.sleep(1100)
+    mkDocs(20 until 40).coalesce(1).write.parquet(s"$src/b1")
+    val lm = graft.ext.LangModel.fit(mkDocs(0 until 10), "text")
+    val sink = tmp("graft-lmpin-out-")
+    val ckpt = tmp("graft-lmpin-ck-")
+    val schema = spark.read.parquet(s"$src/b0").schema
+    def run(): Unit = Streaming.pinnedLmScoreToSink(
+      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+        .parquet(s"$src/{b0,b1}/*.parquet"),
+      "doc_id", "text", lm, sink, ckpt)
+    run()
+    def verdicts() = spark.read.parquet(s"$sink/data")
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val before = verdicts()
+    assert(before.map(_.last) == (0 until 40).map(_ / 20))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
+    java.nio.file.Files.deleteIfExists(
+      java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
+    run()
+    assert(verdicts() == before, "replay altered the verdicts")
+  }
+
+  test("leak check: a left-behind query or persisted frame is reported") {
+    // the per-test check itself: a cached frame and a running query both
+    // show, and vanish once released
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    val cached = Seq(1, 2, 3).toDF("x").persist()
+    cached.count()
+    val input = MemoryStream[Int]
+    val q = input.toDF().writeStream.format("noop").start()
+    try {
+      val leaks = leftBehind(rdds)
+      assert(leaks.exists(_.startsWith("active query")), s"got $leaks")
+      assert(leaks.exists(_.startsWith("persisted RDDs grew")), s"got $leaks")
+    } finally { q.stop(); cached.unpersist(blocking = true) }
+    assert(leftBehind(rdds).isEmpty)
   }
 
   test("streaming count-min sketch: multi-batch fold equals the batch sketch") {
@@ -1628,7 +1776,10 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.cmsSketchAvailableNow(stream, "v", 4, 32)
+    val sink = tmp("graft-cmsstream-out-")
+    Streaming.cmsSketchToSink(stream, "v", 4, 32, sink,
+      tmp("graft-cmsstream-ck-"))
+    val streamed = newest(s"$sink/_state")
       .orderBy("row", "bucket").collect().map(_.toSeq).toSeq
     val batch = graft.ext.Profile.cmsSketch(mk(0 until 200), "v", 4, 32)
       .orderBy("row", "bucket").collect().map(_.toSeq).toSeq
@@ -1646,7 +1797,11 @@ class StreamingSpec extends SparkTestBase {
     val schema = spark.read.parquet(s"$dir/b0").schema
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", "1").parquet(s"$dir/{b0,b1}/*.parquet")
-    val streamed = Streaming.bloomBitmapAvailableNow(stream, "v", 3, 1024)
+    val sink = tmp("graft-bloomstream-out-")
+    Streaming.bloomBitmapToSink(stream, "v", 3, 1024, sink,
+      tmp("graft-bloomstream-ck-"))
+    val streamed = newest(s"$sink/_state").orderBy("idx")
+      .select("word").as[Long].collect()
     val batch = graft.ext.Profile.bloomBitmap(mk(0 until 300), "v", 3, 1024)
     assert(streamed.toSeq == batch.toSeq)
     // and the streamed filter answers probes like the batch one: every
