@@ -60,7 +60,7 @@ object Cli {
       delete: Boolean = false,
       json: Boolean = false,
       format: String = "code",
-      master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]") {
+      master: String = s"local[${GraftSession.cpus}]") {
     // flag > env > config file > default (reference config.py:18-31)
     lazy val config: GraphConfig = GraphConfig.load()
     def store: String = storeFlag.getOrElse(config.storeUri)
@@ -194,13 +194,7 @@ object Cli {
     SparkSession.getActiveSession match {
       case Some(existing) => (existing, false)
       case None =>
-        val s = GraftSession.tune(SparkSession.builder())
-          .master(a.master)
-          .appName("graft-cli")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
+        val s = GraftSession.builder(a.master).appName("graft-cli")
           .getOrCreate()
         s.sparkContext.setLogLevel("WARN")
         (s, true)

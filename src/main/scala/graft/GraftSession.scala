@@ -35,16 +35,25 @@ object GraftSession {
     "spark.sql.codegen.cache.maxEntries" -> "5000"
   )
 
+  /** Local worker threads: `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The builder every engine program and test session starts from: one
+    * shuffle partition per core, UTC session time, TIMESTAMP(NANOS)
+    * parquet read as longs (`events.ts`, see
+    * [[SparkEntry.normalizeEventsTs]]), no UI, plus [[tune]]. */
+  def builder(master: String = s"local[$cpus]",
+              cores: Int = cpus): SparkSession.Builder =
+    tune(SparkSession.builder())
+      .master(master)
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.ui.enabled", "false")
+
   /** Apply the tuning to a builder (the normal path). */
   def tune(b: SparkSession.Builder): SparkSession.Builder =
     (tuning ++ staticTuning).foldLeft(b) {
       case (bb, (k, v)) => bb.config(k, v)
     }
-
-  /** Apply to an existing session (test bases, borrowed sessions) —
-    * runtime confs only; statics can't change after creation. */
-  def tune(spark: SparkSession): SparkSession = {
-    tuning.foreach { case (k, v) => spark.conf.set(k, v) }
-    spark
-  }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Profiling utility: run one named query (repeatedly) against an sf dir
   * with the same forced-evaluation sink as Bench, print per-run seconds, and
   * optionally the formatted plan. A comma-separated name list runs the whole
@@ -15,15 +13,7 @@ object Prof {
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
     val explain = args.length > 3 && args(3) == "explain"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = GraftSession.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val names = name.split(',').toSeq
     if (explain) SparkEntry.queries(names.head)(spark, sfDir).explain("formatted")

@@ -384,7 +384,7 @@ object ScaleProbe {
       measure(s"tf preln forward ${factor}x",
         s"docs=${5000 * factor} L=2 H=2 hid=12") {
         val (prov, _) = graft.llm.ModelRegistry
-          .get(s"tf:${SparkEntry.TfFixture3.path}")
+          .get(s"tf:${catalog.ModelQueries.TfFixture3.path}")
         val tf = prov.asInstanceOf[graft.llm.TransformerProvider]
         val f = udf((t: String) => tf.pooled(t, 4, "mean")(0))
         d.select(f(col("text")).as("v")).filter(!isnan(col("v"))).count()
@@ -395,11 +395,12 @@ object ScaleProbe {
       // O(word len × merges applied), independent of corpus factor
       measure(s"tf bpe forward ${factor}x",
         s"docs=${5000 * factor} merges=6 fixed-tokenizer") {
-        val tokPath = graft.ext.Bpe.saveTokenizer(
-          graft.ext.Bpe.train(docs, "text", numMerges = 6)._1,
+        val (merges, words) = graft.ext.Bpe.train(docs, "text", numMerges = 6)
+        words.unpersist(false)
+        val tokPath = graft.ext.Bpe.saveTokenizer(merges,
           java.nio.file.Files.createTempDirectory("graft-swp-tok-").toString)
         val (prov, _) = graft.llm.ModelRegistry
-          .get(s"tf:${SparkEntry.TfFixtureBpe.path(tokPath)}")
+          .get(s"tf:${catalog.ModelQueries.TfFixtureBpe.path(tokPath)}")
         val tf = prov.asInstanceOf[graft.llm.TransformerProvider]
         val f = udf((t: String) => tf.pooled(t, 2, "mean")(0))
         d.select(f(col("text")).as("v")).filter(!isnan(col("v"))).count()
@@ -874,11 +875,7 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = GraftSession.tune(SparkSession.builder()).master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     def time[T](what: String)(f: => T): T = {
       val t0 = System.nanoTime(); val r = f

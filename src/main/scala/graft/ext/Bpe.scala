@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.ColumnOps
+
 /** Byte-pair-encoding vocabulary induction over a text corpus — the
   * tokenizer-training step of a pretraining pipeline (Sennrich et al. 2016).
   *
@@ -62,7 +64,9 @@ object Bpe {
 
   /** Learn `numMerges` merges. Returns (merges in order, final symbol
     * table). Each round: deterministic 1-row argmax over the recounted
-    * pair-count table → merge applied to the unique-word table. */
+    * pair-count table → merge applied to the unique-word table. The symbol
+    * table comes back persisted and the caller owns it: `unpersist` it once
+    * done, also when only the merges are wanted. */
   def train(df: DataFrame, textCol: String, numMerges: Int):
       (Seq[(String, String)], DataFrame) =
     trainFromWordCounts(wordCounts(df, textCol), numMerges)
@@ -90,12 +94,17 @@ object Bpe {
     var words =
       wc.select(split(col("word"), "").as("symbols"), col("cnt")).persist()
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+    var checkpoints = List.empty[DataFrame] // newest first
     var round = 0
     var exhausted = false
     while (round < numMerges && !exhausted) {
       val top = pairCounts(words)
         .orderBy(col("cnt").desc, col("sym_a"), col("sym_b"))
         .limit(1).collect()
+      // that job materialized the newest checkpoint, which cut the lineage
+      // to every older one
+      ColumnOps.releaseCheckpoints(checkpoints.drop(1))
+      checkpoints = checkpoints.take(1)
       if (top.isEmpty) exhausted = true
       else {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
@@ -103,11 +112,20 @@ object Bpe {
         val prev = words
         words = words.select(
           mergeUdf(col("symbols"), lit(a), lit(b)).as("symbols"), col("cnt"))
-        words = (if ((round + 1) % 4 == 0) words.localCheckpoint(false)
-                 else words).persist()
+        if ((round + 1) % 4 == 0) {
+          words = words.localCheckpoint(false)
+          checkpoints ::= words
+        }
+        words = words.persist()
         prev.unpersist(false)
       }
       round += 1
+    }
+    if (checkpoints.nonEmpty) {
+      // cache the returned table, then drop the checkpoints under it, so
+      // that the caller's `unpersist` releases everything
+      words.count()
+      ColumnOps.releaseCheckpoints(checkpoints)
     }
     (merges.toSeq, words)
   }

@@ -330,4 +330,15 @@ object ColumnOps {
     */
   def maskRows(df: DataFrame, mask: Column): DataFrame = df.filter(mask)
 
+  /** Drops the blocks behind `localCheckpoint`ed frames once nothing reads
+    * them. `unpersist` does not reach them: a local checkpoint lives on the
+    * plan's RDD leaf, not in the cache manager, and would otherwise stay
+    * pinned until the frame happens to be garbage collected. The frames
+    * must not be used afterwards. */
+  def releaseCheckpoints(frames: Seq[DataFrame]): Unit =
+    frames.foreach(_.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ => ()
+    })
 }

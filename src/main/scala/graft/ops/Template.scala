@@ -23,7 +23,8 @@ import scala.collection.mutable
   * executor (template is a closure constant), so the hot loop is just an AST
   * walk — codegen-adjacent cost, no reparse per row. Simple `{{var}}`-only
   * templates should instead be lowered to `concat`/`format_string` by the
-  * caller (see SparkEntry q_templatize) to stay fully in Tungsten.
+  * caller (see q_templatize in `catalog.RelationalQueries`) to stay fully
+  * in Tungsten.
   */
 object Template {
 

@@ -33,12 +33,8 @@ import graft.spec._
 class CachedSparkRunner(
     spark: SparkSession,
     val sharedUri: String,
-    cachePath: String,
-    validateLengths: Boolean = true,
-    cacheColumns: Boolean = true,
-    stampLoads: Boolean = true)
-  extends LocalSparkRunner(spark, cachePath, validateLengths, cacheColumns,
-    stampLoads) {
+    cachePath: String)
+  extends LocalSparkRunner(spark, cachePath) {
 
   private def sharedDir(op: OpSpec): Path = {
     val (cls, hash) = split(op.uuid)

@@ -42,12 +42,7 @@ final case class ModelResult(model: org.apache.spark.ml.Transformer) extends Mat
   * layout goes through the Hadoop FS API (s3a://, gs://) — only `fsPath`
   * changes.
   */
-class LocalSparkRunner(
-    val spark: SparkSession,
-    val storeUri: String,
-    val validateLengths: Boolean = true,
-    val cacheColumns: Boolean = true,
-    val stampLoads: Boolean = true) {
+class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
 
   import LocalSparkRunner._
 
@@ -452,10 +447,9 @@ class LocalSparkRunner(
         // block cache, the distributed analog of the reference's in-process
         // `_materialization_cache` (`local_arrow_runner.py:309-324`): lazy
         // until first action, spills to disk, column pruning already
-        // happened at the select so the cached width is minimal. Disable
-        // via cacheColumns=false for single-pass pipelines at corpus scale.
+        // happened at the select so the cached width is minimal.
         compute(op) match {
-          case FrameResult(df) if cacheColumns && op.isInstanceOf[SelectColumnOp] =>
+          case FrameResult(df) if op.isInstanceOf[SelectColumnOp] =>
             val persisted = df.persist(
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
             synchronized { cachedFrames += persisted }
@@ -688,11 +682,8 @@ class LocalSparkRunner(
     * op STAYS ephemeral at the spec level (readiness = the file exists,
     * reference `local_arrow_runner.py:230-248`); the stamped copy is a
     * runner-level cache written via the same crash/race-hardened
-    * staged-rename protocol as any result. `stampLoads=false` opts out for
-    * strictly one-shot scans where one full copy outweighs repeated index
-    * recomputation. */
+    * staged-rename protocol as any result. */
   private def stampedLoad(op: OpSpec, raw: => DataFrame): DataFrame = {
-    if (!stampLoads) return ColumnOps.withRowIdxByFileOrder(raw)
     if (!(isDone(op) && Files.exists(resultParquet(op)))) {
       persistStaged(op, resultParquet(op)) { tmp =>
         ColumnOps.withRowIdxByFileOrder(raw).write
@@ -747,7 +738,7 @@ class LocalSparkRunner(
     case MaskRowsOp(dataset, mask) =>
       val df = frame(dataset)
       val m = frame(mask)
-      if (validateLengths) checkSameLength(dataset, mask, "mask")
+      checkSameLength(dataset, mask, "mask")
       val kept = df.join(
           m.select(col(RowIdx), col(ValueCol).as("__mask")), RowIdx)
         .filter(col("__mask")).drop("__mask")
@@ -755,7 +746,7 @@ class LocalSparkRunner(
 
     case CategoryToBooleanOp(input, trueValues, falseValues) =>
       val in = frame(input)
-      if (validateLengths && trueValues.nonEmpty && falseValues.nonEmpty) {
+      if (trueValues.nonEmpty && falseValues.nonEmpty) {
         val universe = trueValues.get ++ falseValues.get
         ColumnOps.validateCategoryUniverse(in, col(ValueCol), universe.toSet)
       }
@@ -772,7 +763,7 @@ class LocalSparkRunner(
         FrameResult(l.select(col(RowIdx), (!col(ValueCol)).as(ValueCol)))
       } else {
         val r = frame(right)
-        if (validateLengths) checkSameLength(left, right, "boolean operand")
+        checkSameLength(left, right, "boolean operand")
         val joined = l.select(col(RowIdx), col(ValueCol).as("__l"))
           .join(r.select(col(RowIdx), col(ValueCol).as("__r")), RowIdx)
         FrameResult(joined.select(col(RowIdx),
@@ -788,14 +779,13 @@ class LocalSparkRunner(
 
     case VectorToScalarOp(input, colIndex) =>
       val in = frame(input)
-      if (validateLengths)
-        ColumnOps.validateVectorIndex(in, col(ValueCol), colIndex.toInt)
+      ColumnOps.validateVectorIndex(in, col(ValueCol), colIndex.toInt)
       FrameResult(in.select(col(RowIdx),
         ColumnOps.vectorToScalar(col(ValueCol), colIndex.toInt).as(ValueCol)))
 
     case PairwiseArithmeticOp(operation, left, right) =>
       val l = frame(left); val r = frame(right)
-      if (validateLengths) checkSameLength(left, right, "arithmetic operand")
+      checkSameLength(left, right, "arithmetic operand")
       val joined = l.select(col(RowIdx), col(ValueCol).as("__l"))
         .join(r.select(col(RowIdx), col(ValueCol).as("__r")), RowIdx)
       val opName = operation match {
@@ -825,7 +815,7 @@ class LocalSparkRunner(
         val frames = names.zipWithIndex.map { case (name, i) =>
           frame(context(name)).select(col(RowIdx), col(ValueCol).as(s"__v$i"))
         }
-        if (validateLengths && names.length > 1) {
+        if (names.length > 1) {
           val counts = names.map(n => lengthOf(context(n)))
           if (counts.distinct.length > 1) throw new IllegalArgumentException(
             s"All context columns must have the same length, got ${names.zip(counts).toMap}")
@@ -1012,7 +1002,7 @@ class LocalSparkRunner(
 
     case DropExactDuplicatesOp(dataset, text) =>
       val df = frame(dataset)
-      if (validateLengths) checkSameLength(dataset, text, "text")
+      checkSameLength(dataset, text, "text")
       // first occurrence per content digest = min row idx — and that min
       // IS the survivor set, no join-back needed; the dedup decision
       // shuffles 16-byte digests + longs, never documents
@@ -1045,7 +1035,7 @@ class LocalSparkRunner(
 
     case TemperatureSampleOp(dataset, stratum, alpha, frac, salt) =>
       val df = frame(dataset)
-      if (validateLengths) checkSameLength(dataset, stratum, "stratum")
+      checkSameLength(dataset, stratum, "stratum")
       val keepIdx = graft.ext.Corpus.temperatureSample(
           frame(stratum).select(col(RowIdx), col(ValueCol).as("__st")),
           "__st", RowIdx, alpha, frac, salt)
@@ -1361,7 +1351,7 @@ class LocalSparkRunner(
   private def sampleByStratum(dataset: DatasetType, stratum: OpSpec,
                               fracCol: Column, salt: String): DataFrame = {
     val df = frame(dataset)
-    if (validateLengths) checkSameLength(dataset, stratum, "stratum")
+    checkSameLength(dataset, stratum, "stratum")
     val rankKey = md5(concat_ws(":", lit(salt), col(RowIdx).cast("string")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__st")).orderBy(rankKey, col(RowIdx))

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
+import graft.ops.ColumnOps.releaseCheckpoints
+
 /** Structured Streaming forms of the engine's continuous-ingest operators.
   *
   * The reference is batch-only (SURVEY §2.9 — no streaming surface), so
@@ -1059,18 +1061,6 @@ object Streaming {
       }
       .start()
       .awaitTermination()
-
-  /** Drops the blocks behind `localCheckpoint`ed frames once a batch is
-    * done with them. `unpersist` does not reach them: a local checkpoint
-    * lives on the plan's RDD leaf, not in the cache manager, and would
-    * otherwise stay pinned until the frame happens to be garbage
-    * collected. The frames must not be used afterwards. */
-  private def releaseCheckpoints(frames: Seq[DataFrame]): Unit =
-    frames.foreach(_.queryExecution.logical.foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
-        r.rdd.unpersist(blocking = false)
-      case _ => ()
-    })
 
   /** Newest COMMITTED cumulative-state batch id strictly before `bid`
     * under `sink/_state/batch_id=N` — the shared replay-safety primitive

@@ -51,12 +51,15 @@ class DocCountSpec extends AnyFunSuite {
 
   test("README and COVERAGE query counts match SparkEntry.queries") {
     // same drift class as the test count, same cure: assert, don't maintain
+    // each catalog entry carries its own oracle, so the maps cannot drift
+    // apart; what can still go wrong is a name used twice, which would
+    // silently drop an entry from the maps
+    val all = catalog.Catalog.all
     val n = SparkEntry.queries.size
-    assert(SparkEntry.oracleSql.size == n,
-      s"every query needs an oracle: ${SparkEntry.queries.keySet
-        .diff(SparkEntry.oracleSql.keySet)} lack one, " +
-        s"${SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)} " +
-        "are orphaned oracles")
+    assert(n == all.size && SparkEntry.oracleSql.size == n)
+    val e = intercept[IllegalArgumentException](
+      catalog.Catalog.distinctNames(all :+ all.head))
+    assert(e.getMessage.contains(all.head.name))
     val root = repoRoot
     val readme = Files.readString(root.resolve("README.md"))
     val rq = raw"— (\d+) queries".r.findFirstMatchIn(readme)

@@ -19,18 +19,14 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = GraftSession.builder("local[4]", cores = 4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       // bucketed-table tests write through the session catalog; keep the
       // warehouse out of the repo working tree
       .config("spark.sql.warehouse.dir", java.nio.file.Files
         .createTempDirectory("graft-warehouse-").toString)
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
-    GraftSession.tune(s)
+    s
   }
 }

@@ -171,4 +171,13 @@ class BpeSpec extends SparkTestBase {
     assert(cold.head.contains("est")) // learned merge applied from the store
     r2.close()
   }
+
+  test("the BPE queries release train's persisted symbol table") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (q <- Seq("q_bpe_train", "q_bpe_encode", "q_tok_compare"))
+      graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
+    val leaked = sc.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
+  }
 }

@@ -1005,7 +1005,7 @@ class ExtSpec extends SparkTestBase {
 
   test("word hash iterates UTF-16 units — oracle surrogate-expansion formula pinned") {
     // the DuckDB oracles see CODE POINTS (unicode(substr(...))) and expand
-    // cp >= 0x10000 into surrogate pairs (SparkEntry.utf16UnitsSql); this
+    // cp >= 0x10000 into surrogate pairs (DedupQueries.utf16UnitsSql); this
     // pins that expansion + FNV fold + avalanche against the engine's
     // hash64 (which iterates s.charAt — UTF-16 units natively), on BMP AND
     // astral input

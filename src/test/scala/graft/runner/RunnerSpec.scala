@@ -50,12 +50,10 @@ class RunnerSpec extends SparkTestBase {
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange") && !plan.toLowerCase.contains("join"))
     // index values are identical to the unstamped construction
-    val unstamped = new LocalSparkRunner(spark, newStoreDir(), stampLoads = false)
     def byIdx(d: org.apache.spark.sql.DataFrame) =
       d.orderBy("__row_idx").select("id").collect().map(_.getLong(0)).toSeq
-    assert(byIdx(df) == byIdx(unstamped.toFrame(op)))
-    // ...and the unstamped runner left nothing in its store
-    assert(!unstamped.isDone(op))
+    assert(byIdx(df) == byIdx(graft.ops.ColumnOps.withRowIdxByFileOrder(
+      spark.read.parquet(s"$dir/t"))))
     // a fresh runner over the same store serves the stamp without rewriting
     val mtime = Files.getLastModifiedTime(r.opDir(op).resolve("done"))
     val r2 = new LocalSparkRunner(spark, store)
@@ -659,8 +657,9 @@ class RunnerSpec extends SparkTestBase {
     assert(a eq b) // same config → same instance (shared memo)
     val c = Runner(spark, newStoreDir())
     assert(!(a eq c))
-    val d = Runner(spark, store, validateLengths = false)
-    assert(!(a eq d))
+    val d = Runner(spark, store, cachePath = newStoreDir())
+    assert(!(a eq d)) // a cache tier is another configuration
+    assert(d.isInstanceOf[CachedSparkRunner])
     Runner.reset()
     assert(!(Runner(spark, store) eq a))
   }
