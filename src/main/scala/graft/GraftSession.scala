@@ -38,15 +38,14 @@ object GraftSession {
   /** Local worker threads: `SPARK_GRAFT_CPUS`, default 4. */
   def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
 
-  /** The builder every engine program and test session starts from: one
-    * shuffle partition per core, UTC session time, TIMESTAMP(NANOS)
-    * parquet read as longs (`events.ts`, see
+  /** The builder every engine program and test session starts from:
+    * [[cpus]] shuffle partitions (whatever the master), UTC session time,
+    * TIMESTAMP(NANOS) parquet read as longs (`events.ts`, see
     * [[SparkEntry.normalizeEventsTs]]), no UI, plus [[tune]]. */
-  def builder(master: String = s"local[$cpus]",
-              cores: Int = cpus): SparkSession.Builder =
+  def builder(master: String = s"local[$cpus]"): SparkSession.Builder =
     tune(SparkSession.builder())
       .master(master)
-      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")

@@ -395,8 +395,7 @@ object ScaleProbe {
       // O(word len × merges applied), independent of corpus factor
       measure(s"tf bpe forward ${factor}x",
         s"docs=${5000 * factor} merges=6 fixed-tokenizer") {
-        val (merges, words) = graft.ext.Bpe.train(docs, "text", numMerges = 6)
-        words.unpersist(false)
+        val merges = graft.ext.Bpe.trainMerges(docs, "text", numMerges = 6)
         val tokPath = graft.ext.Bpe.saveTokenizer(merges,
           java.nio.file.Files.createTempDirectory("graft-swp-tok-").toString)
         val (prov, _) = graft.llm.ModelRegistry

@@ -314,9 +314,8 @@ object ModelQueries {
     * the q_tf_bpe provider loads. */
   private def bpeTokenizerFor(s: SparkSession, dir: String): String =
     fixture("bpe-tokenizer", dir) { d =>
-      val (merges, words) =
-        graft.ext.Bpe.train(t(s, d, "documents"), "text", BpeMerges)
-      words.unpersist(false)
+      val merges =
+        graft.ext.Bpe.trainMerges(t(s, d, "documents"), "text", BpeMerges)
       graft.ext.Bpe.saveTokenizer(merges,
         java.nio.file.Files.createTempDirectory("graft-bpe-tok-").toString)
     }

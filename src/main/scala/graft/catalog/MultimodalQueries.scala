@@ -794,8 +794,7 @@ object MultimodalQueries {
       // functions of this table, so results are unchanged by construction
       val wc = Bpe.wordCounts(docs, "text")
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val (merges, words) = Bpe.trainFromWordCounts(wc, BpeMerges)
-      words.unpersist(false)
+      val merges = Bpe.trainMergesFromWordCounts(wc, BpeMerges)
       val fit = graft.ext.Unigram.trainFromWordCounts(wc,
         seedMulti = UniSeedMulti, rounds = UniRounds, pieceLen = UniPieceLen)
       wc.unpersist(false) // both fits are collected driver values by now
@@ -840,8 +839,7 @@ object MultimodalQueries {
       // bpeOracleCtes for why leftmost-until-fixpoint == the engine's
       // greedy left-to-right mergeOnce pass.
       import s.implicits._
-      val (merges, words) = Bpe.train(t(s, dir, "documents"), "text", BpeMerges)
-      words.unpersist(false)
+      val merges = Bpe.trainMerges(t(s, dir, "documents"), "text", BpeMerges)
       merges.zipWithIndex
         .map { case ((a, b), i) => (i.toLong, a, b) }
         .toDF("rank", "sym_a", "sym_b")
@@ -859,8 +857,7 @@ object MultimodalQueries {
       // exploded and weighted by word counts (identical by construction:
       // tokenizeColumn replays the same merges per word).
       val docs = t(s, dir, "documents")
-      val (merges, words) = Bpe.train(docs, "text", BpeMerges)
-      words.unpersist(false)
+      val merges = Bpe.trainMerges(docs, "text", BpeMerges)
       docs.select(explode(Bpe.tokenizeColumn(col("text"), merges)).as("token"))
         .groupBy("token").agg(count(lit(1)).as("cnt"))
         .orderBy(col("cnt").desc, col("token")).limit(30)

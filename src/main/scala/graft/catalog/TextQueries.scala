@@ -720,8 +720,7 @@ object TextQueries {
       // The oracle replays the merge loop, every word's learned
       // tokenization length, and the pack prefix-sum.
       val docs = t(s, dir, "documents")
-      val (merges, words) = Bpe.train(docs, "text", BpeMerges)
-      words.unpersist(false)
+      val merges = Bpe.trainMerges(docs, "text", BpeMerges)
       Corpus.packSequences(docs, "doc_id",
           size(Bpe.tokenizeColumn(col("text"), merges)), seqLen = 256L)
         .orderBy(col("doc_id"))
@@ -863,8 +862,7 @@ object TextQueries {
       // Integer micro-unit ratio keeps the hash exact; one map pass +
       // one tiny per-lang aggregate at any corpus size.
       val docs = t(s, dir, "documents")
-      val (merges, words) = Bpe.train(docs, "text", BpeMerges)
-      words.unpersist(false)
+      val merges = Bpe.trainMerges(docs, "text", BpeMerges)
       docs.select(col("lang"),
           size(Bpe.tokenizeColumn(col("text"), merges)).cast("long").as("t"),
           size(Corpus.words(col("text"))).cast("long").as("w"))
@@ -914,8 +912,7 @@ object TextQueries {
       // lengths, the epoch-salted shard hash, and both per-shard prefix
       // sums. Restart exactly-once is pinned in StreamingSpec.
       val docs = t(s, dir, "documents")
-      val (merges, words) = Bpe.train(docs, "text", BpeMerges)
-      words.unpersist(false)
+      val merges = Bpe.trainMerges(docs, "text", BpeMerges)
       val sink = java.nio.file.Files
         .createTempDirectory("graft-shard-export-").toString
       val ckpt = java.nio.file.Files

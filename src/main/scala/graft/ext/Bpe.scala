@@ -66,14 +66,41 @@ object Bpe {
     * table). Each round: deterministic 1-row argmax over the recounted
     * pair-count table → merge applied to the unique-word table. The symbol
     * table comes back persisted and the caller owns it: `unpersist` it once
-    * done, also when only the merges are wanted. */
+    * done. A caller that wants only the merges calls [[trainMerges]]. */
   def train(df: DataFrame, textCol: String, numMerges: Int):
-      (Seq[(String, String)], DataFrame) =
-    trainFromWordCounts(wordCounts(df, textCol), numMerges)
+      (Seq[(String, String)], DataFrame) = {
+    val (merges, words, checkpoints) =
+      trainLoop(wordCounts(df, textCol), numMerges)
+    if (checkpoints.nonEmpty) {
+      // cache the returned table, then drop the checkpoints under it, so
+      // that the caller's `unpersist` releases everything
+      words.count()
+      ColumnOps.releaseCheckpoints(checkpoints)
+    }
+    (merges, words)
+  }
 
-  /** [[train]] over a precomputed (word, cnt) table — callers that already
-    * hold the unique-word table (or train several tokenizers on the same
-    * corpus, q_tok_compare) skip the corpus scan + shuffle entirely.
+  /** The merges of [[train]] alone: the symbol table and its checkpoints
+    * are released before returning, and no job runs beyond the merge
+    * rounds. */
+  def trainMerges(df: DataFrame, textCol: String, numMerges: Int):
+      Seq[(String, String)] =
+    trainMergesFromWordCounts(wordCounts(df, textCol), numMerges)
+
+  /** [[trainMerges]] over a precomputed (word, cnt) table — callers that
+    * already hold the unique-word table (or train several tokenizers on
+    * the same corpus, q_tok_compare) skip the corpus scan + shuffle
+    * entirely. */
+  def trainMergesFromWordCounts(wc: DataFrame, numMerges: Int):
+      Seq[(String, String)] = {
+    val (merges, words, checkpoints) = trainLoop(wc, numMerges)
+    words.unpersist(false)
+    ColumnOps.releaseCheckpoints(checkpoints)
+    merges
+  }
+
+  /** The merge loop: (merges, persisted final symbol table, local
+    * checkpoints the table may still read from).
     *
     * Stays on the FULL-RECOUNT loop at every scale (round 22, measured):
     * the per-round pair aggregation's SHUFFLE is bounded by the
@@ -86,8 +113,8 @@ object Bpe {
     * delta-fold was built, measured 2.3× slower at every decade (it pays
     * EXTRA full passes to find affected words while "saving" shuffle that
     * was never being paid) and deleted — SCALING.md keeps the table. */
-  def trainFromWordCounts(wc: DataFrame, numMerges: Int):
-      (Seq[(String, String)], DataFrame) = {
+  private def trainLoop(wc: DataFrame, numMerges: Int):
+      (Seq[(String, String)], DataFrame, List[DataFrame]) = {
     require(numMerges >= 0, s"numMerges must be >= 0, got $numMerges")
     val mergeUdf = udf((syms: Seq[String], a: String, b: String) =>
       mergeOnce(syms, a, b))
@@ -121,13 +148,7 @@ object Bpe {
       }
       round += 1
     }
-    if (checkpoints.nonEmpty) {
-      // cache the returned table, then drop the checkpoints under it, so
-      // that the caller's `unpersist` releases everything
-      words.count()
-      ColumnOps.releaseCheckpoints(checkpoints)
-    }
-    (merges.toSeq, words)
+    (merges.toSeq, words, checkpoints)
   }
 
   /** Sequential merge-list replay of one word — the DEFINITIONAL encode

@@ -1213,8 +1213,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       // the tokenizer ARTIFACT is the result: a content-addressed merge
       // list, trained once per (corpus hash, numMerges) and shared like
       // any other store entry
-      val (merges, trainedWords) = graft.ext.Bpe.train(frame(text), ValueCol, numMerges.toInt)
-      trainedWords.unpersist(false) // train() hands back its persisted table; only the merges matter here
+      val merges = graft.ext.Bpe.trainMerges(frame(text), ValueCol, numMerges.toInt)
       JsonResult(JObj(scala.collection.immutable.ListMap(
         "merges" -> JArr(merges.map { case (a, b) =>
           JArr(Vector(JString(a), JString(b)))

@@ -19,8 +19,9 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkTestBase {
   lazy val session: SparkSession = {
-    val s = GraftSession.builder("local[4]", cores = 4)
+    val s = GraftSession.builder("local[4]")
       .appName("graft-test")
+      .config("spark.sql.shuffle.partitions", "4")
       // bucketed-table tests write through the session catalog; keep the
       // warehouse out of the repo working tree
       .config("spark.sql.warehouse.dir", java.nio.file.Files

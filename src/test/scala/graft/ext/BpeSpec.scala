@@ -75,6 +75,7 @@ class BpeSpec extends SparkTestBase {
     val (m1, _) = Bpe.train(corpus, "text", numMerges = 8)
     val (m2, _) = Bpe.train(corpus, "text", numMerges = 8)
     assert(m1 == m2)
+    assert(Bpe.trainMerges(corpus, "text", numMerges = 8) == m1)
     // a single-word corpus runs out of pairs before numMerges
     val tiny = Seq((0L, "ab")).toDF("doc_id", "text")
     val (m3, words) = Bpe.train(tiny, "text", numMerges = 10)
