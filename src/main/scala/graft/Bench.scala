@@ -17,13 +17,26 @@ object Bench {
     // execute, never `done`-marker cache hits) but keeps the stamped ingest
     // copies — steady-state means warm JVM + post-ingest store + cold
     // results, the regime a long-lived deployment actually runs in.
-    // which query is currently executing — the attribution label for the
-    // runner's materialize probe (queries run strictly sequentially here)
-    @volatile var currentQuery: String = null
-    def runPass(order: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)])
-        : Map[String, Double] =
+    // Twin-group DERIVATION (round 21, VERDICT r20 #5): store-paired
+    // queries share a content-addressed runner op (same uuid) — whichever
+    // runs first in a shuffled pass computes it and the others read the
+    // store, so per-QUERY medians are structurally bimodal and only the
+    // group SUM is stable. The pairing is a runner property, so it is
+    // RECORDED from the meter's op events instead of hand-listed (the
+    // r18/r19 blemish archaeology). Recording happens during the FIRST
+    // STEADY pass, not the cold pass: steady is the regime the noise
+    // gate scores — there the stamped Load* ops are cheap store hits
+    // (under cold they are expensive first-time stamps shared by EVERY
+    // runner query, which derived one giant group and blinded the
+    // per-query check), and warm costs are the bimodality magnitudes the
+    // gate actually sees.
+    val meter = Meter(spark)
+    val touchedUuids =
+      scala.collection.mutable.Map.empty[String, Set[String]]
+    val uuidCost = scala.collection.mutable.Map.empty[String, Double]
+    def runPass(order: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
+        record: Boolean = false): Map[String, Double] =
       order.map { case (name, fn) =>
-        currentQuery = name
         val t0 = System.nanoTime()
         // noop sink: forces full evaluation of every output column (a bare
         // count() lets Catalyst prune all projections, which under-measured
@@ -35,7 +48,16 @@ object Bench {
         }
         // -1 sentinel keeps failures visible in the JSON (a broken query
         // must not read as a round-over-round speedup)
-        name -> (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
+        val secs = if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        // the op events this query posted, read after the timed region
+        // (queries run strictly sequentially here)
+        val ops = meter.ops()
+        if (record) ops.foreach { e =>
+          touchedUuids(name) = touchedUuids.getOrElse(name, Set.empty) + e.uuid
+          if (e.resolved)
+            uuidCost(e.uuid) = math.max(uuidCost.getOrElse(e.uuid, 0.0), e.seconds)
+        }
+        name -> secs
       }.toMap
 
     // dev loop: SPARK_GRAFT_BENCH_ONLY=q_a,q_b restricts the run to the
@@ -44,31 +66,6 @@ object Bench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val queryList = SparkEntry.queries.toSeq
       .filter { case (n, _) => only.forall(_.contains(n)) }
-    // Twin-group DERIVATION (round 21, VERDICT r20 #5): store-paired
-    // queries share a content-addressed runner op (same uuid) — whichever
-    // runs first in a shuffled pass computes it and the others read the
-    // store, so per-QUERY medians are structurally bimodal and only the
-    // group SUM is stable. The pairing is a runner property, so it is
-    // RECORDED via the materialize probe instead of hand-listed (the
-    // r18/r19 blemish archaeology). Recording happens during the FIRST
-    // STEADY pass, not the cold pass: steady is the regime the noise
-    // gate scores — there the stamped Load* ops are cheap store hits
-    // (under cold they are expensive first-time stamps shared by EVERY
-    // runner query, which derived one giant group and blinded the
-    // per-query check), and warm costs are the bimodality magnitudes the
-    // gate actually sees.
-    val touchedUuids =
-      scala.collection.mutable.Map.empty[String, Set[String]]
-    val uuidCost = scala.collection.mutable.Map.empty[String, Double]
-    val recordProbe: (String, String, Double, Boolean) => Unit =
-      (_, uuid, secs, resolvedHere) => {
-        val q = currentQuery
-        if (q != null) touchedUuids.synchronized {
-          touchedUuids(q) = touchedUuids.getOrElse(q, Set.empty) + uuid
-          if (resolvedHere)
-            uuidCost(uuid) = math.max(uuidCost.getOrElse(uuid, 0.0), secs)
-        }
-      }
     val cold = runPass(queryList)
     // Round 12: THREE steady passes, per-query MEDIAN. Min-of-two (round
     // 11) let one query into the official record at +140% when BOTH its
@@ -93,11 +90,7 @@ object Bench {
       // twin-group recording rides the FIRST steady pass only (see the
       // derivation note above): post-reset, shared non-Load ops recompute
       // once at their true warm cost and every sharer's touch is recorded
-      if (pass == 1)
-        graft.runner.LocalSparkRunner.materializeProbe = recordProbe
-      val out = runPass(new scala.util.Random(pass).shuffle(queryList))
-      graft.runner.LocalSparkRunner.materializeProbe = null
-      out
+      runPass(new scala.util.Random(pass).shuffle(queryList), record = pass == 1)
     }
     val steady = steadyPasses.head.keys.map { name =>
       // failure sentinels (-1) never enter the statistic; a query is
@@ -128,7 +121,7 @@ object Bench {
       r.bigDecimal.stripTrailingZeros.toPlainString
     }
     // 0.1s per query: 88 quoted names already dominate the line; finer
-    // precision is what Profile is for
+    // precision is what Prof is for
     def renderQs(m: Map[String, Double]): String =
       m.map { case (k, v) => s"\"" + k + "\":" + fmt(v, 1) }
         .mkString("{", ",", "}")
@@ -176,8 +169,9 @@ object Bench {
     val sfName = sfDir.split('/').last
     // Round 20: the full-protocol run lands in BENCH_run.json ALWAYS, and
     // is PROMOTED to the committed record path (BENCH_full.json) only when
-    // it passes the record-quality protocol — no query's median may exceed
-    // 1.5x its own min over the 3 steady passes, and no query failed. A
+    // it passes the record-quality protocol — no query failed, and none is
+    // noisy: a median over the 3 steady passes above 1.5x its own min AND
+    // more than 0.5 s above it (twin groups on their per-pass sums). A
     // contended box (concurrent sbt, driver co-scheduling) produces runs
     // with exactly that signature, and twice now such a run clobbered the
     // committed quiet record; gating the promotion makes that structurally
@@ -186,7 +180,7 @@ object Bench {
       if (sys.env.contains("SPARK_GRAFT_BENCH_ONLY")) "BENCH_partial.json"
       else if (sfName != "sf0.1") s"BENCH_smoke_$sfName.json"
       else "BENCH_run.json")
-    // Store-paired twins, DERIVED from the first steady pass's materialize probe
+    // Store-paired twins, DERIVED from the first steady pass's op events
     // (round 21 — the hand list needed archaeology every time it drifted):
     // queries sharing an op uuid whose resolve cost crossed the 0.5 s
     // absolute noise bound score as a GROUP (sum the members per pass) —
@@ -283,11 +277,13 @@ object Bench {
           java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_full.json"),
             record.getBytes(java.nio.charset.StandardCharsets.UTF_8))
           System.err.println(
-            "[bench] run is protocol-clean (every median <= 1.5x its min) " +
-              "- promoted to BENCH_full.json")
+            "[bench] run is protocol-clean (no failures; no median above " +
+              "1.5x its min AND more than 0.5 s above it, twin groups " +
+              "scored on per-pass sums) - promoted to BENCH_full.json")
         } else System.err.println(
           s"[bench] NOT promoted to BENCH_full.json - ${noisy.size} " +
-            s"queries above the median<=1.5x-min noise bound: " +
+            "queries or twin groups (per-pass sums) failed or have a " +
+            "median above 1.5x their min AND more than 0.5 s above it: " +
             noisy.mkString("; "))
       }
     } catch { case e: Throwable => // the summary line must still go out

@@ -1,10 +1,14 @@
 package graft
 
 /** Profiling utility: run one named query (repeatedly) against an sf dir
-  * with the same forced-evaluation sink as Bench, print per-run seconds, and
-  * optionally the formatted plan. A comma-separated name list runs the whole
-  * sequence in order within one JVM (for measuring cross-query interaction:
-  * does query A degrade a later query B's steady-state?). Usage:
+  * with the same forced-evaluation sink as Bench, and print per run its
+  * wall seconds, its Spark job count and, longest first, the runner ops it
+  * resolved (each op's seconds include the inputs it resolved first). The
+  * job count is the direct evidence for fixed-overhead work that a
+  * wall-clock number hides under box noise. Optionally prints the formatted
+  * plan. A comma-separated name list runs the whole sequence in order
+  * within one JVM (for measuring cross-query interaction: does query A
+  * degrade a later query B's steady-state?). Usage:
   *   runMain graft.Prof <name>[,<name>...] [sfDir] [reps] [explain]
   */
 object Prof {
@@ -17,26 +21,18 @@ object Prof {
     spark.sparkContext.setLogLevel("WARN")
     val names = name.split(',').toSeq
     if (explain) SparkEntry.queries(names.head)(spark, sfDir).explain("formatted")
-    // per-run Spark JOB count (round 21): the stored-index/streaming
-    // queries are latency-bound by driver round-trips (tiny meta reads,
-    // collects, commit writes), so the job count is the direct evidence
-    // for fixed-overhead optimizations that a wall-clock number hides
-    // under box noise
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-      })
+    val meter = Meter(spark)
     (1 to reps).foreach { i =>
       names.foreach { n =>
-        val j0 = jobs.get()
+        val before = meter.read()
+        meter.ops() // drop op events posted before this run (the explain)
         val t0 = System.nanoTime()
         SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
-        Thread.sleep(300) // let the listener bus drain (coarse; dev tool)
-        println(f"[prof] $n run $i: $secs%.2f s jobs=${jobs.get() - j0}")
+        println(f"[prof] $n run $i: $secs%.2f s jobs=${(meter.read() - before).jobs}")
+        meter.ops().filter(_.resolved).sortBy(-_.seconds).foreach { e =>
+          println(f"[prof]   ${e.seconds}%7.2f s ${e.opClass} ${e.uuid}")
+        }
       }
     }
     spark.stop()

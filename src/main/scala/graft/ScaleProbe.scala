@@ -8,25 +8,31 @@ import org.apache.spark.sql.functions._
   * ~10× volumes and runs the scale-sensitive operators.
   *
   * `runMain graft.ScaleProbe [sfDir] sweep` — 1×/10×/100× sweep of the two
-  * heaviest families (minhash LSH chain, connected components), measuring
-  * wall time, total SHUFFLE WRITE BYTES (SparkListener stage metrics), and
-  * post-GC driver heap — the linearity/flatness evidence the SCALING.md
-  * table cites. */
+  * heaviest families (minhash LSH chain, connected components) — the
+  * linearity/flatness evidence the SCALING.md table cites.
+  *
+  * Every row prints wall time, Spark jobs and total SHUFFLE WRITE BYTES
+  * (read from the session's [[Meter]]), and post-GC driver heap. */
 object ScaleProbe {
 
-  /** Sum of shuffle-write bytes across completed stages since the last
-    * [[reset]]. Listener events are async: [[read]] sleeps briefly to let
-    * the bus drain (dev probe; coarse is fine). */
-  private final class ShuffleMeter(spark: SparkSession) {
-    private val bytes = new java.util.concurrent.atomic.AtomicLong(0)
-    spark.sparkContext.addSparkListener(
-      new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
-          bytes.addAndGet(sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-      })
-    def reset(): Unit = { Thread.sleep(1500); bytes.set(0) }
-    def read(): Long = { Thread.sleep(1500); bytes.get() }
+  /** The measured rows of one run: `measure(what, detail)(f)` runs `f`
+    * and prints its result with the row's readings. Name filters
+    * (substring match on `what`) re-run a subset of rows without paying
+    * for the rest. */
+  private final class Rows(spark: SparkSession, tag: String,
+                           val filters: Seq[String]) {
+    private val meter = Meter(spark)
+    def apply(what: String, detail: String)(f: => Long): Unit = {
+      if (filters.nonEmpty && !filters.exists(what.contains)) return
+      val before = meter.read()
+      val t0 = System.nanoTime()
+      val out = f
+      val secs = (System.nanoTime() - t0) / 1e9
+      val d = meter.read() - before
+      println(f"[$tag] $what: $detail out=$out wall=$secs%.1f s " +
+        f"jobs=${d.jobs} shuffleWrite=${d.shuffleBytes / 1e6}%.1f MB " +
+        f"driverHeap=${driverHeapMb()} MB")
+    }
   }
 
   /** Whole-JVM used heap after a settle. In local mode driver AND
@@ -42,22 +48,9 @@ object ScaleProbe {
     (rt.totalMemory() - rt.freeMemory()) >> 20
   }
 
-  private def sweep(spark: SparkSession, dir: String,
-                    filters: Seq[String]): Unit = {
-    val meter = new ShuffleMeter(spark)
+  private def sweep(spark: SparkSession, dir: String, measure: Rows): Unit = {
+    val filters = measure.filters
     val docs = spark.read.parquet(s"$dir/documents.parquet")
-    def measure(what: String, detail: String)(f: => Long): Unit = {
-      // optional name filters (substring match) re-run a subset of rows
-      // without paying for the whole sweep
-      if (filters.nonEmpty && !filters.exists(what.contains)) return
-      meter.reset()
-      val t0 = System.nanoTime()
-      val out = f
-      val secs = (System.nanoTime() - t0) / 1e9
-      val mb = meter.read() / 1e6
-      println(f"[sweep] $what: $detail out=$out wall=$secs%.1f s " +
-        f"shuffleWrite=$mb%.1f MB driverHeap=${driverHeapMb()} MB")
-    }
     // the factor decades pay a replica MATERIALIZATION before any measure
     // runs — skip the whole loop when the filter set only names the
     // maintenance family (which is factor-independent)
@@ -876,14 +869,13 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    def time[T](what: String)(f: => T): T = {
-      val t0 = System.nanoTime(); val r = f
-      println(f"[scale] $what: ${(System.nanoTime() - t0) / 1e9}%.1f s"); r
-    }
     val dir = args.headOption.filterNot(_ == "sweep")
       .getOrElse("/root/testdata/sf0.1")
-    if (args.contains("sweep")) {
-      sweep(spark, dir, args.toSeq.filterNot(a => a == "sweep" || a == dir))
+    val sweeping = args.contains("sweep")
+    val measure = new Rows(spark, if (sweeping) "sweep" else "scale",
+      args.toSeq.filterNot(a => a == "sweep" || a == dir))
+    if (sweeping) {
+      sweep(spark, dir, measure)
       spark.stop(); return
     }
     // 6M-row two-phase row index + slice
@@ -891,32 +883,32 @@ object ScaleProbe {
     val li10 = (0 until 10).map(i =>
       li.withColumn("l_orderkey", col("l_orderkey") + lit(i * 10000000L)))
       .reduce(_ union _)
-    time("row-idx + slice over 6M rows") {
+    measure("row-idx + slice over 6M rows", "kept rows") {
       val idx = graft.ops.ColumnOps.withRowIdxByKey(li10, col("l_orderkey"), col("l_linenumber"))
-      println("  kept=" + graft.ops.ColumnOps.takeRows(idx, skip = 1000, offset = 7).count())
+      graft.ops.ColumnOps.takeRows(idx, skip = 1000, offset = 7).count()
     }
     // 50k-doc minhash LSH + verify
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val docs10 = (0 until 10).map(i =>
       docs.withColumn("doc_id", col("doc_id") + lit(i * 1000000L)))
       .reduce(_ union _)
-    time("minhash near-dup over 50k docs") {
-      println("  pairs=" + graft.ext.Dedup.minhashNearDuplicates(
-        docs10, "text", "doc_id", shingleN = 3, threshold = 0.5).count())
+    measure("minhash near-dup over 50k docs", "pairs") {
+      graft.ext.Dedup.minhashNearDuplicates(
+        docs10, "text", "doc_id", shingleN = 3, threshold = 0.5).count()
     }
-    time("simhash near-dup over 50k docs") {
-      println("  pairs=" + graft.ext.Dedup.simhashNearDuplicates(
-        docs10, "text", "doc_id", maxHamming = 8).count())
+    measure("simhash near-dup over 50k docs", "pairs") {
+      graft.ext.Dedup.simhashNearDuplicates(
+        docs10, "text", "doc_id", maxHamming = 8).count()
     }
     // 50k-vector cosine LSH
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val emb10 = (0 until 10).map(i =>
       emb.withColumn("vec_id", col("vec_id") + lit(i * 1000000L)))
       .reduce(_ union _)
-    time("cosine LSH over 50k vectors") {
-      println("  pairs=" + graft.ext.Dedup.cosineNearDuplicates(
+    measure("cosine LSH over 50k vectors", "pairs") {
+      graft.ext.Dedup.cosineNearDuplicates(
         emb10.select(col("vec_id"), col("embedding")), "embedding", "vec_id",
-        dim = 64, threshold = 0.8).count())
+        dim = 64, threshold = 0.8).count()
     }
     // ~1M-event temporal joins (10x replicated events, shifted user ids so
     // key cardinality scales with volume — bucket population stays flat)
@@ -928,28 +920,28 @@ object ScaleProbe {
       ev.withColumn("user_id", col("user_id") + lit(i * 1000000L))
         .withColumn("event_id", col("event_id") + lit(i * 100000000L)))
       .reduce(_ union _)
-    time("as-of join over ~1M events") {
+    measure("as-of join over ~1M events", "rows") {
       val clicks = ev10.filter(col("event_type") === "click")
         .select(col("event_id"), col("user_id"), col("ts"))
       val purchases = ev10.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("ts"), col("event_id").as("purchase_id"))
-      println("  rows=" + graft.ext.Joins.asofJoin(clicks, purchases,
-        Seq("user_id"), "ts", "ts", Seq("purchase_id")).count())
+      graft.ext.Joins.asofJoin(clicks, purchases,
+        Seq("user_id"), "ts", "ts", Seq("purchase_id")).count()
     }
-    time("range join over ~1M events") {
+    measure("range join over ~1M events", "pairs") {
       val clicks = ev10.filter(col("event_type") === "click")
         .select(col("user_id"), unix_micros(col("ts")).as("click_us"))
       val purchases = ev10.filter(col("event_type") === "purchase")
         .select(col("user_id"), col("event_id").as("purchase_id"),
           unix_micros(col("ts")).as("start_us"),
           (unix_micros(col("ts")) + 3600000000L).as("end_us"))
-      println("  pairs=" + graft.ext.Joins.rangeJoinBinned(clicks, "click_us",
-        purchases, "start_us", "end_us", Seq("user_id"), 3600000000L).count())
+      graft.ext.Joins.rangeJoinBinned(clicks, "click_us",
+        purchases, "start_us", "end_us", Seq("user_id"), 3600000000L).count()
     }
     // 320k-vector single-pass probe training aggregation
-    time("difference-of-means weights over 320k vectors") {
-      println("  dims=" + graft.ml.DiffOfMeans.weightsExact(
-        emb10, col("embedding"), col("label") <= 4).count())
+    measure("difference-of-means weights over 320k vectors", "dims") {
+      graft.ml.DiffOfMeans.weightsExact(
+        emb10, col("embedding"), col("label") <= 4).count()
     }
     // 50k real codec round trips: encode + decode + resize + embed, all
     // narrow — scaling is pure CPU spread (the fixture id shuffle is 8-byte
@@ -957,14 +949,14 @@ object ScaleProbe {
     val ids10 = (0 until 10).map(i =>
       docs.select((col("doc_id") + lit(i * 1000000L)).as("doc_id")))
       .reduce(_ union _)
-    time("image decode+resize+embed over 50k real payloads") {
+    measure("image decode+resize+embed over 50k real payloads", "rows") {
       val imgs = graft.ext.Multimodal.synthImages(ids10, "doc_id", pngOnly = true)
-      println("  rows=" + graft.ext.Multimodal.withResizedImage(
-        imgs, "doc_id", "img", maxSide = 64).count())
+      graft.ext.Multimodal.withResizedImage(
+        imgs, "doc_id", "img", maxSide = 64).count()
     }
-    time("WAV parse over 50k real payloads") {
-      println("  rows=" + graft.ext.Multimodal.withAudioMeta(
-        graft.ext.Multimodal.synthWavs(ids10, "doc_id"), "doc_id", "audio").count())
+    measure("WAV parse over 50k real payloads", "rows") {
+      graft.ext.Multimodal.withAudioMeta(
+        graft.ext.Multimodal.synthWavs(ids10, "doc_id"), "doc_id", "audio").count()
     }
     spark.stop()
   }

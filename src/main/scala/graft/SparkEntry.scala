@@ -20,8 +20,9 @@ object SparkEntry {
 
   /** events.ts arrives in whatever shape the driver's generator last wrote:
     * TIMESTAMP(NANOS) parquet reads as Long (`spark.sql.legacy.parquet
-    * .nanosAsLong`, set in Verify/Bench), TIMESTAMP(MICROS) without the
-    * UTC-adjusted flag reads as TIMESTAMP_NTZ (which `unix_micros` rejects).
+    * .nanosAsLong`, which `GraftSession.builder` sets for every session),
+    * TIMESTAMP(MICROS) without the UTC-adjusted flag reads as TIMESTAMP_NTZ
+    * (which `unix_micros` rejects).
     * Normalize both to microsecond TimestampType under the UTC session tz —
     * the same instants DuckDB sees on read, invariant to the writer.
     */

@@ -328,26 +328,21 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     * driver (a server handling several users, or [[materializeAll]]) can
     * overlap independent subgraphs on one cluster. */
   def materialize(op: OpSpec): MatResult = {
-    val probe = LocalSparkRunner.materializeProbe
     val existing = memo.get(op.uuid)
     if (existing != null) {
-      if (probe != null)
-        probe(op.getClass.getSimpleName, op.uuid, 0.0, false)
+      postOpEvent(op, 0.0, resolved = false)
       return awaitResult(existing)
     }
     val fresh = new java.util.concurrent.CompletableFuture[MatResult]()
     val prior = memo.putIfAbsent(op.uuid, fresh)
     if (prior != null) {
-      if (probe != null)
-        probe(op.getClass.getSimpleName, op.uuid, 0.0, false)
+      postOpEvent(op, 0.0, resolved = false)
       return awaitResult(prior)
     }
     try {
-      val t0 = if (probe != null) System.nanoTime() else 0L
+      val t0 = System.nanoTime()
       val r = materializeAny(op)
-      if (probe != null)
-        probe(op.getClass.getSimpleName, op.uuid,
-          (System.nanoTime() - t0) / 1e9, true)
+      postOpEvent(op, (System.nanoTime() - t0) / 1e9, resolved = true)
       fresh.complete(r)
       r
     } catch {
@@ -357,6 +352,12 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         throw e
     }
   }
+
+  /** One [[graft.Meter.OpEvent]] per call on the session's listener bus
+    * (asynchronous; read by the measuring programs' [[graft.Meter]]). */
+  private def postOpEvent(op: OpSpec, seconds: Double, resolved: Boolean): Unit =
+    org.apache.spark.GraftBus.post(spark.sparkContext, graft.Meter.OpEvent(
+      op.getClass.getSimpleName, op.uuid, seconds, resolved))
 
   private def awaitResult(
       f: java.util.concurrent.CompletableFuture[MatResult]): MatResult =
@@ -1466,18 +1467,6 @@ object LocalSparkRunner {
 
   /** Implementation function for a custom op: (runner, op) → result. */
   type OpImpl = (LocalSparkRunner, OpSpec) => MatResult
-
-  /** Dev/bench MEASUREMENT hook (round 21, Bench twin-group derivation):
-    * when non-null, every [[LocalSparkRunner.materialize]] call reports
-    * `(opClass, uuid, resolveSeconds, resolvedHere)` — `resolvedHere`
-    * false for memo hits (another call already resolved it in this JVM).
-    * Content-addressed sharing is a RUNNER property (two queries building
-    * the same op share one store entry), so the bench derives its
-    * store-paired twin groups from these reports instead of a hand list
-    * that drifts as query families grow (VERDICT r20 #5). Never set on a
-    * production path; calls must be cheap and thread-safe. */
-  @volatile var materializeProbe: (String, String, Double, Boolean) => Unit =
-    null
 
   /** See [[LocalSparkRunner.deleteRecursively]] — tolerant of concurrent
     * writers renaming into the tree mid-delete. */

@@ -677,6 +677,26 @@ class RunnerSpec extends SparkTestBase {
     assert(st.state == OpState.Failed)
     assert(st.error.nonEmpty)
   }
+
+  test("materialize posts one op event per call: resolved, then memo hit; none on failure") {
+    val meter = graft.Meter(spark)
+    try {
+      val r = newRunner()
+      val ds = AssignRowIDOp(inline(5))
+      assert(!ds.isEphemeral)
+      r.materialize(ds)
+      r.materialize(ds)
+      val mine = meter.ops().filter(_.uuid == ds.uuid)
+      assert(mine.map(e => (e.opClass, e.resolved)) ==
+        Seq("AssignRowIDOp" -> true, "AssignRowIDOp" -> false))
+      assert(mine.head.seconds > 0 && mine(1).seconds == 0.0)
+
+      val bad = AssignRowIDOp(MaskRowsOp(inline(3), CategoryToBooleanOp(
+        SelectVectorColumnOp(inline(3), "text"), Some(Seq("x")))))
+      intercept[Exception](r.materialize(bad))
+      assert(!meter.ops().exists(_.uuid == bad.uuid))
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
 }
 
 /** Custom-op fixtures for the extensibility test: a user-defined op with a
