@@ -155,7 +155,8 @@ object ScaleProbe {
           graft.ext.Bm25.indexStatsDf(spark, bidx.toString).count()
         }
         measure(s"bm25 index probe ${factor}x", s"terms=3 k=10") {
-          graft.ext.Bm25.topKIndexed(spark, bidx.toString,
+          graft.ext.Bm25.topKIndexed(
+            graft.ext.Bm25.openIndex(spark, bidx.toString),
               Seq("sparkx0", "mergex0", "windowx0"), k = 10)
             .agg(coalesce(sum(col("score_u6")), lit(0L)))
             .collect()(0).getLong(0)
@@ -248,36 +249,43 @@ object ScaleProbe {
         measure(s"mh index build ${factor}x", s"docs=${5000 * factor}") {
           graft.ext.Dedup.buildMinhashIndex(spark, idx.toString, d,
             "text", "doc_id")
-          graft.ext.Dedup.minhashIndexKeys(spark, idx.toString).count()
+          graft.ext.Dedup.minhashIndexKeys(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString)).count()
         }
         val batch = d.filter(col("doc_id") < 500)
           .select((col("doc_id") + 50000000L).as("doc_id"), col("text"))
         measure(s"mh index probe ${factor}x",
           s"batch=500 vs idx=${5000 * factor}") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, idx.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString),
             batch, "text", "doc_id", threshold = 0.9).count()
         }
         // segment accumulation: 16 micro-batch appends (the streaming
         // ingest shape), then the SAME probe — the per-segment scan
         // fan-out compaction exists to undo — then compact and re-probe
         (0 until 16).foreach { i =>
-          graft.ext.Dedup.appendToMinhashIndex(spark, idx.toString,
+          graft.ext.Dedup.appendToMinhashIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString),
             d.filter(col("doc_id") >= i * 100 && col("doc_id") < (i + 1) * 100)
               .select((col("doc_id") + 90000000L).as("doc_id"), col("text")),
             "text", "doc_id", tag = s"sw$i")
         }
         measure(s"mh probe 17-segment ${factor}x",
           s"batch=500 vs idx=${5000 * factor}+1600 in 17 segs") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, idx.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString),
             batch, "text", "doc_id", threshold = 0.9).count()
         }
         measure(s"mh compact ${factor}x", "17 segments -> 1") {
-          graft.ext.Dedup.compactMinhashIndex(spark, idx.toString)
-          graft.ext.Dedup.minhashIndexKeys(spark, idx.toString).count()
+          graft.ext.Dedup.compactMinhashIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString))
+          graft.ext.Dedup.minhashIndexKeys(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString)).count()
         }
         measure(s"mh probe compacted ${factor}x",
           s"batch=500 vs idx=${5000 * factor}+1600 compacted") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, idx.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, idx.toString),
             batch, "text", "doc_id", threshold = 0.9).count()
         }
         val st = java.nio.file.Files.walk(idx)
@@ -528,7 +536,8 @@ object ScaleProbe {
       // shuffle for the probe should NOT grow with the decade
       val queries = baseEmb.filter(col("vec_id") < 10)
       measure(s"ivf pruned probe ${factor}x", s"nprobe=4/$nlist") {
-        graft.ext.Similarity.ivfTopKIndexed(spark, idx.toString,
+        graft.ext.Similarity.ivfTopKIndexed(
+          graft.ext.Similarity.openIvfIndex(spark, idx.toString),
           queries, "vec_id", "embedding", k = 10, nprobe = 4).count()
       }
       // IVF-PQ: same cells, corpus stored as m-int codes (m=8 over 64-d →
@@ -544,7 +553,8 @@ object ScaleProbe {
         nlist.toLong
       }
       measure(s"ivf-pq pruned probe ${factor}x", s"nprobe=4/$nlist") {
-        graft.ext.Similarity.ivfPqTopKIndexed(spark, idxPq.toString,
+        graft.ext.Similarity.ivfPqTopKIndexed(
+          graft.ext.Similarity.openIvfIndex(spark, idxPq.toString),
           queries, "vec_id", "embedding", k = 10, nprobe = 4).count()
       }
       // exact k-means: iters+1 one-pass scans; per-pass shuffle carries
@@ -669,24 +679,28 @@ object ScaleProbe {
             s"appends=$nAppends rows=$batchRows live=1000") {
           (0 until nAppends).foreach { i =>
             graft.ext.Bm25.appendToIndex(
+              graft.ext.Bm25.openIndex(spark, bi.toString),
               docs.filter(col("doc_id") >= i * batchRows &&
                   col("doc_id") < (i + 1) * batchRows)
                 .select((col("doc_id") + 70000000L).as("doc_id"), col("text")),
-              "doc_id", "text", bi.toString, tag = s"m$i")
+              "doc_id", "text", tag = s"m$i")
           }
           parquetCount(bi, "postings_")
         }
         measure(s"bm25 maint probe-pre $lbl", s"segments=$nAppends+base") {
-          graft.ext.Bm25.topKIndexed(spark, bi.toString,
+          graft.ext.Bm25.topKIndexed(
+            graft.ext.Bm25.openIndex(spark, bi.toString),
             Seq("spark", "merge", "window"), k = 10).count()
         }
         measure(s"bm25 maint compact $lbl",
             s"live=1000 docs, history=$nAppends appends") {
-          graft.ext.Bm25.compactIndex(spark, bi.toString)
+          graft.ext.Bm25.compactIndex(
+            graft.ext.Bm25.openIndex(spark, bi.toString))
           parquetCount(bi, "postings_v")
         }
         measure(s"bm25 maint probe-post $lbl", "1 segment") {
-          graft.ext.Bm25.topKIndexed(spark, bi.toString,
+          graft.ext.Bm25.topKIndexed(
+            graft.ext.Bm25.openIndex(spark, bi.toString),
             Seq("spark", "merge", "window"), k = 10).count()
         }
         rmTree(bi)
@@ -699,7 +713,8 @@ object ScaleProbe {
         measure(s"mh maint append $lbl",
             s"appends=$nAppends rows=$batchRows live=1000") {
           (0 until nAppends).foreach { i =>
-            graft.ext.Dedup.appendToMinhashIndex(spark, mi.toString,
+            graft.ext.Dedup.appendToMinhashIndex(
+              graft.ext.Dedup.openMinhashIndex(spark, mi.toString),
               docs.filter(col("doc_id") >= i * batchRows &&
                   col("doc_id") < (i + 1) * batchRows)
                 .select((col("doc_id") + 70000000L).as("doc_id"), col("text")),
@@ -708,16 +723,19 @@ object ScaleProbe {
           parquetCount(mi, "keys")
         }
         measure(s"mh maint probe-pre $lbl", s"segments=$nAppends+base") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, mi.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, mi.toString),
             probeBatch, "text", "doc_id", threshold = 0.9).count()
         }
         measure(s"mh maint compact $lbl",
             s"live=1000 docs, history=$nAppends appends") {
-          graft.ext.Dedup.compactMinhashIndex(spark, mi.toString)
+          graft.ext.Dedup.compactMinhashIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, mi.toString))
           parquetCount(mi, "keys")
         }
         measure(s"mh maint probe-post $lbl", "1 segment") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, mi.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, mi.toString),
             probeBatch, "text", "doc_id", threshold = 0.9).count()
         }
         rmTree(mi)
@@ -754,15 +772,18 @@ object ScaleProbe {
         }
         measure("mh maint probe policy a100",
             s"history=100 tiny appends, liveFiles bounded by $cap+batch") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, mi.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, mi.toString),
             probeBatch, "text", "doc_id", threshold = 0.9).count()
         }
         measure("mh maint compact policy a100", "fold the policied store") {
-          graft.ext.Dedup.compactMinhashIndex(spark, mi.toString)
+          graft.ext.Dedup.compactMinhashIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, mi.toString))
           parquetCount(mi, "keys")
         }
         measure("mh maint probe-post policy a100", "1 segment") {
-          graft.ext.Dedup.minhashDedupAgainstIndex(spark, mi.toString,
+          graft.ext.Dedup.minhashDedupAgainstIndex(
+            graft.ext.Dedup.openMinhashIndex(spark, mi.toString),
             probeBatch, "text", "doc_id", threshold = 0.9).count()
         }
         rmTree(mi)
@@ -775,13 +796,15 @@ object ScaleProbe {
           "doc_id", "text", bi.toString)
         (0 until 10).foreach { i =>
           graft.ext.Bm25.appendToIndex(
+            graft.ext.Bm25.openIndex(spark, bi.toString),
             docs.filter(col("doc_id") >= i * (half / 10) &&
                 col("doc_id") < (i + 1) * (half / 10))
               .select((col("doc_id") + 70000000L).as("doc_id"), col("text")),
-            "doc_id", "text", bi.toString, tag = s"l$i")
+            "doc_id", "text", tag = s"l$i")
         }
         measure(s"bm25 maint compact live=$live", "history=10 appends") {
-          graft.ext.Bm25.compactIndex(spark, bi.toString)
+          graft.ext.Bm25.compactIndex(
+            graft.ext.Bm25.openIndex(spark, bi.toString))
           parquetCount(bi, "postings_v")
         }
         rmTree(bi)
@@ -807,7 +830,8 @@ object ScaleProbe {
         measure(s"ivf maint append $lbl",
             s"appends=$nAppends rows=$batchRows live=1000") {
           (0 until nAppends).foreach { i =>
-            graft.ext.Similarity.appendToIvfIndex(spark, vi.toString,
+            graft.ext.Similarity.appendToIvfIndex(
+              graft.ext.Similarity.openIvfIndex(spark, vi.toString),
               emb.filter(col("vec_id") >= 500 + i * batchRows &&
                   col("vec_id") < 500 + (i + 1) * batchRows),
               "vec_id", "embedding", tag = s"m$i")
@@ -815,16 +839,19 @@ object ScaleProbe {
           parquetCount(vi, "cell=")
         }
         measure(s"ivf maint probe-pre $lbl", s"segments=$nAppends+base") {
-          graft.ext.Similarity.ivfTopKIndexed(spark, vi.toString,
+          graft.ext.Similarity.ivfTopKIndexed(
+            graft.ext.Similarity.openIvfIndex(spark, vi.toString),
             probeBatch, "vec_id", "embedding", k = 10, nprobe = 2).count()
         }
         measure(s"ivf maint compact $lbl",
             s"live=1000 vecs, history=$nAppends appends") {
-          graft.ext.Similarity.compactIvfIndex(spark, vi.toString)
+          graft.ext.Similarity.compactIvfIndex(
+            graft.ext.Similarity.openIvfIndex(spark, vi.toString))
           parquetCount(vi, "cell=")
         }
         measure(s"ivf maint probe-post $lbl", "1 segment") {
-          graft.ext.Similarity.ivfTopKIndexed(spark, vi.toString,
+          graft.ext.Similarity.ivfTopKIndexed(
+            graft.ext.Similarity.openIvfIndex(spark, vi.toString),
             probeBatch, "vec_id", "embedding", k = 10, nprobe = 2).count()
         }
         rmTree(vi)
@@ -841,7 +868,8 @@ object ScaleProbe {
         measure(s"pqmaint append $lbl",
             s"appends=$nAppends rows=$batchRows live=1000") {
           (0 until nAppends).foreach { i =>
-            graft.ext.Similarity.appendToIvfPqIndex(spark, pi.toString,
+            graft.ext.Similarity.appendToIvfPqIndex(
+              graft.ext.Similarity.openIvfIndex(spark, pi.toString),
               emb.filter(col("vec_id") >= 500 + i * batchRows &&
                   col("vec_id") < 500 + (i + 1) * batchRows),
               "vec_id", "embedding", tag = s"m$i")
@@ -849,16 +877,19 @@ object ScaleProbe {
           parquetCount(pi, "cell=")
         }
         measure(s"pqmaint probe-pre $lbl", s"segments=$nAppends+base") {
-          graft.ext.Similarity.ivfPqTopKIndexed(spark, pi.toString,
+          graft.ext.Similarity.ivfPqTopKIndexed(
+            graft.ext.Similarity.openIvfIndex(spark, pi.toString),
             probeBatch, "vec_id", "embedding", k = 10, nprobe = 2).count()
         }
         measure(s"pqmaint compact $lbl",
             s"live=1000 vecs, history=$nAppends appends") {
-          graft.ext.Similarity.compactIvfPqIndex(spark, pi.toString)
+          graft.ext.Similarity.compactIvfPqIndex(
+            graft.ext.Similarity.openIvfIndex(spark, pi.toString))
           parquetCount(pi, "cell=")
         }
         measure(s"pqmaint probe-post $lbl", "1 segment") {
-          graft.ext.Similarity.ivfPqTopKIndexed(spark, pi.toString,
+          graft.ext.Similarity.ivfPqTopKIndexed(
+            graft.ext.Similarity.openIvfIndex(spark, pi.toString),
             probeBatch, "vec_id", "embedding", k = 10, nprobe = 2).count()
         }
         rmTree(pi)

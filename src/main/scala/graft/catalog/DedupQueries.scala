@@ -604,7 +604,8 @@ object DedupQueries {
         .select((col("doc_id") + 100000L).as("doc_id"), col("text"))
         .union(docs.filter(col("doc_id") < 50)
           .select((col("doc_id") + 200000L).as("doc_id"), col("text")))
-      Dedup.minhashDedupAgainstIndex(s, minhashIndexFor(s, dir), batch,
+      Dedup.minhashDedupAgainstIndex(
+        Dedup.openMinhashIndex(s, minhashIndexFor(s, dir)), batch,
           "text", "doc_id", threshold = 0.9)
         .orderBy(col("id_a"), col("id_b"))
     }, incrDedupOracleSql),
@@ -630,7 +631,8 @@ object DedupQueries {
         .join(Corpus.snapshotDiff(old, nw, "doc_id", "text")
           .filter(col("status").isin("added", "changed")), "doc_id")
         .select((col("doc_id") + 2000000L).as("doc_id"), col("text"))
-      Dedup.minhashDedupAgainstIndex(s, minhashIndexFor(s, dir), delta,
+      Dedup.minhashDedupAgainstIndex(
+        Dedup.openMinhashIndex(s, minhashIndexFor(s, dir)), delta,
           "text", "doc_id", threshold = 0.9)
         .orderBy(col("id_a"), col("id_b"))
     },
@@ -708,8 +710,8 @@ object DedupQueries {
       // modulo splits: non-empty at every sf (sf0.001 has only 500 docs)
       Dedup.buildMinhashIndex(s, idx, docs.filter(col("doc_id") % 3 === 0),
         "text", "doc_id")
-      // one handle across append/append/compact/probe (round 21): the
-      // path forms re-read the manifest per call — 4 extra driver
+      // one handle across append/append/compact/probe (round 21): a
+      // handle per call re-reads the manifest per call — 4 extra driver
       // round-trips for identical results
       val h = Dedup.openMinhashIndex(s, idx)
       Dedup.appendToMinhashIndex(h, docs.filter(col("doc_id") % 3 === 1),

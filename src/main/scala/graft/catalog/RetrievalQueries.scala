@@ -436,11 +436,12 @@ object RetrievalQueries {
       // dense leg = the stored cell-partitioned IVF probe at nprobe=2
       // (REAL pruning) querying doc 0's embedding — neither leg scans the
       // corpus at query time; fusion over the shared 0-based row-id space
-      val sparse = Bm25.topKIndexed(s, bm25IndexFor(s, dir), RrfTerms,
-          k = RrfPoolK)
+      val sparse = Bm25.topKIndexed(Bm25.openIndex(s, bm25IndexFor(s, dir)),
+          RrfTerms, k = RrfPoolK)
         .select(col("doc_id"), col("rank"))
       val emb = t(s, dir, "embeddings")
-      val dense = Similarity.ivfTopKIndexed(s, ivfIndexFor(s, dir),
+      val dense = Similarity.ivfTopKIndexed(
+        Similarity.openIvfIndex(s, ivfIndexFor(s, dir)),
           emb.filter(col("vec_id") === 0), "vec_id", "embedding",
           k = RrfPoolK, nprobe = 2)
         .select(col("corpus_id").as("doc_id"), col("rank"))
@@ -589,7 +590,8 @@ object RetrievalQueries {
       // stored postings answers the same contiguous-window query by
       // meeting the phrase terms' position lists per document — no corpus
       // scan, no re-tokenization; shares q_phrase's oracle verbatim
-      Bm25.phraseCountIndexed(s, bm25IndexFor(s, dir), PhraseTerms)
+      Bm25.phraseCountIndexed(Bm25.openIndex(s, bm25IndexFor(s, dir)),
+        PhraseTerms)
         .orderBy(col("doc_id"))
     },
       // the positional-index probe must equal the scan-based phrase count
@@ -605,7 +607,8 @@ object RetrievalQueries {
       // contamination phrases priced as ONE read of the union of their
       // buckets — per phrase it must equal the scan-form count, which is
       // how the oracle replays it (one UNION ALL branch per phrase)
-      Bm25.phraseCountManyIndexed(s, bm25IndexFor(s, dir), MultiPhrases)
+      Bm25.phraseCountManyIndexed(Bm25.openIndex(s, bm25IndexFor(s, dir)),
+        MultiPhrases)
         .orderBy(col("phrase_id"), col("doc_id"))
     }, {
       // batch phrase probe: one UNION ALL branch per phrase, each replaying
@@ -629,7 +632,8 @@ object RetrievalQueries {
       // directories with the term equality pushed into the scan. k=10 is
       // far under the matched-doc count at every sf, so the result is
       // bit-identical to the q_bm25 corpus scan — the oracle IS q_bm25's.
-      Bm25.topKIndexed(s, bm25IndexFor(s, dir), RrfTerms, k = 10)
+      Bm25.topKIndexed(Bm25.openIndex(s, bm25IndexFor(s, dir)),
+        RrfTerms, k = 10)
         .orderBy(col("rank"))
     },
       // the stored-index probe must equal the corpus scan bit for bit
@@ -667,9 +671,9 @@ object RetrievalQueries {
       // maintenance path: thousands of micro-batch segments fold back to
       // one-file-per-bucket min/max-skippable row groups.
       val idx = copyDir(bm25HeadIndexFor(s, dir))
-      // one handle across append/append/compact/probe (round 21): the
-      // path forms re-read the stats pointer per call — 4 extra driver
-      // round-trips for identical results
+      // one handle across append/append/compact/probe (round 21): a
+      // handle per call re-reads the stats pointer per call — 4 extra
+      // driver round-trips for identical results
       val h = Bm25.openIndex(s, idx)
       val tailDocs = s.read.parquet(bm25TailFixtureFor(s, dir))
       Bm25.appendToIndex(h, tailDocs.filter(col("doc_id") % 2 === 0),
@@ -970,7 +974,8 @@ object RetrievalQueries {
       val emb = chunkEmb(s, dir)
       val queries = emb.filter(
         col("chunk_id").isin(100000L, 110000L, 120000L))
-      val hits = Similarity.ivfTopKIndexed(s, chunkIvfIndexFor(s, dir),
+      val hits = Similarity.ivfTopKIndexed(
+        Similarity.openIvfIndex(s, chunkIvfIndexFor(s, dir)),
         queries, "chunk_id", "emb", k = 40, nprobe = 2)
       hits.select(col("query_id"),
           expr("corpus_id div 10000").as("doc_id"), col("cosine"))

@@ -160,7 +160,7 @@ object SimilarityQueries {
       // oracle replays the ENTIRE pipeline — assignment, probe, scoring —
       // from the base table; nprobe=2 < nlist=8 means this oracle checks
       // true IVF semantics, not brute force.
-      Similarity.ivfTopKIndexed(s, ivfIndexFor(s, dir),
+      Similarity.ivfTopKIndexed(Similarity.openIvfIndex(s, ivfIndexFor(s, dir)),
           t(s, dir, "embeddings").filter(col("vec_id") < 3),
           "vec_id", "embedding", k = 5, nprobe = 2)
         .orderBy(col("query_id"), col("rank"))
@@ -217,7 +217,8 @@ object SimilarityQueries {
       val exact = Similarity.bruteForceTopK(emb, "vec_id", "embedding",
           queries, "vec_id", "embedding", k = 5)
         .select(col("query_id"), col("corpus_id"))
-      val approx = Similarity.ivfTopKIndexed(s, ivfIndexFor(s, dir),
+      val approx = Similarity.ivfTopKIndexed(
+        Similarity.openIvfIndex(s, ivfIndexFor(s, dir)),
           queries, "vec_id", "embedding", k = 5, nprobe = 2)
         .select(col("query_id"), col("corpus_id"))
       exact.join(approx.withColumn("__hit", lit(1L)),

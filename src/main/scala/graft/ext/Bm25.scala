@@ -276,12 +276,6 @@ object Bm25 {
                    path: String): DataFrame =
     StoreMeta.read(spark, path, "stats")
 
-  /** Number of LIVE delta segments accumulated since the last compaction
-    * — the quantity an auto-compaction policy thresholds on. */
-  def deltaSegmentCount(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Int =
-    readStats(spark, path).deltaDirs.length
-
   private def readStats(spark: org.apache.spark.sql.SparkSession,
                         path: String): IndexStats = {
     val st = indexStatsDf(spark, path).head
@@ -306,7 +300,8 @@ object Bm25 {
     *
     * Single writer; all mutations of this store must go through the SAME
     * handle — after an out-of-band write, call [[Bm25IndexHandle.refresh]].
-    * Driver-only object, never ships to executors. */
+    * Driver-only object, never ships to executors. Every operation on the
+    * store past its build takes this handle. */
   final class Bm25IndexHandle private[ext] (
       private[ext] val spark: org.apache.spark.sql.SparkSession,
       val path: String) {
@@ -408,21 +403,16 @@ object Bm25 {
     * recomputed from the term (bit-identical — that is how it was
     * derived at write time). `pred` carries the row-level predicates
     * (term isin → parquet min/max skipping over term-sorted row groups). */
-  private def readPostings(spark: org.apache.spark.sql.SparkSession,
-                           path: String, st: IndexStats,
-                           pred: Column,
-                           buckets: Option[Seq[Int]] = None,
-                           bucketsOfDir: String => Array[Int] = null)
-      : DataFrame = {
-    val lister: String => Array[Int] =
-      if (bucketsOfDir != null) bucketsOfDir
-      else d => bucketDirsOf(spark, path, d)
+  private def readPostings(h: Bm25IndexHandle, pred: Column,
+                           buckets: Option[Seq[Int]]): DataFrame = {
+    val spark = h.spark
+    val st = h.stats
     val cols = Seq("term", "doc_id", "tf", "dl", "pos", "bucket")
     val sel = buckets.map(_.toSet)
     val paths = for {
       d <- st.postingsDir :: st.deltaDirs
-      b <- lister(d) if sel.forall(_.contains(b))
-    } yield s"$path/$d/bucket=$b"
+      b <- h.bucketsOf(d) if sel.forall(_.contains(b))
+    } yield s"${h.path}/$d/bucket=$b"
     val nb = st.nBuckets
     val bUdf = udf { t: String => math.floorMod(
       graft.ext.Dedup.hash64(BucketSeed, t).toInt, nb) }
@@ -447,18 +437,9 @@ object Bm25 {
     * (single-writer; probes are bounded by one writer cycle). */
   private def pruneVersions(spark: org.apache.spark.sql.SparkSession,
                             path: String, prefix: String,
-                            current: Int): Unit = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    if (fs.exists(root)) fs.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith(s"${prefix}_v") &&
-          scala.util.Try(versionOf(n)).toOption.exists(_ < current - 1)) {
-        try fs.delete(s.getPath, true) catch { case _: Exception => () }
-      }
-    }
-  }
+                            current: Int): Unit =
+    StoreMeta.sweep(spark, path, n => n.startsWith(s"${prefix}_v") &&
+      scala.util.Try(versionOf(n)).toOption.exists(_ < current - 1))
 
   /** Postings rows `(term, doc_id, tf, dl, pos, bucket)` for a tokenized
     * corpus — `pos` the sorted 0-based token positions of the term in the
@@ -496,17 +477,10 @@ object Bm25 {
     * a RE-DELIVERED batch (streaming restart replaying an uncommitted
     * micro-batch whose effects DID land) is detected by `tag ==
     * last_tag` and skipped whole. Single writer; appends and compactions
-    * must not overlap each other. */
-  def appendToIndex(docs: DataFrame, idCol: String, textCol: String,
-                    path: String, tag: String = ""): Unit =
-    appendToIndex(new Bm25IndexHandle(docs.sparkSession, path), docs,
-      idCol, textCol, tag)
-
-  /** Handle form of [[appendToIndex]] — the streaming-loop shape: the
-    * handle's cached stats row replaces the per-batch pointer re-read
-    * (see [[Bm25IndexHandle]]). */
+    * must not overlap each other. The handle's cached stats row replaces
+    * the per-batch pointer re-read (see [[Bm25IndexHandle]]). */
   def appendToIndex(h: Bm25IndexHandle, docs: DataFrame, idCol: String,
-                    textCol: String, tag: String): Unit = {
+                    textCol: String, tag: String = ""): Unit = {
     val spark = h.spark
     val path = h.path
     val st = h.stats
@@ -605,30 +579,17 @@ object Bm25 {
     * crashed-append leftovers and segments retired by a previous
     * compaction, all ≥ one writer cycle old — are swept first. Cost: one
     * bucket-keyed shuffle of the postings, no corpus access. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession,
-                   path: String): Unit =
-    compactIndex(new Bm25IndexHandle(spark, path))
-
-  /** Handle form of [[compactIndex]] (see [[Bm25IndexHandle]]). */
   def compactIndex(h: Bm25IndexHandle): Unit = {
     val spark = h.spark
     val path = h.path
     val st = h.stats
     // sweep orphans (not referenced by the stats a concurrent probe could
     // currently hold): anything postings_d* outside st.deltaDirs
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
     val live = st.deltaDirs.toSet
-    fs.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("postings_d") && !live.contains(n)) {
-        try fs.delete(s.getPath, true) catch { case _: Exception => () }
-      }
-    }
+    StoreMeta.sweep(spark, path,
+      n => n.startsWith("postings_d") && !live.contains(n))
     val newDir = s"postings_v${versionOf(st.postingsDir) + 1}"
-    readPostings(spark, path, st, lit(true), buckets = None,
-        bucketsOfDir = h.bucketsOf)
+    readPostings(h, lit(true), buckets = None)
       .repartition(st.nBuckets, col("bucket"))
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.mode("overwrite").partitionBy("bucket")
@@ -653,10 +614,10 @@ object Bm25 {
     * aggregation, and an occurrence is a first-term position `p` with
     * term `j` present at `p + j` — set-membership over tf-sized arrays,
     * no corpus scan, no token re-tokenization. */
-  def phraseCountIndexed(spark: org.apache.spark.sql.SparkSession,
-                         path: String, phrase: Seq[String]): DataFrame = {
+  def phraseCountIndexed(h: Bm25IndexHandle,
+                         phrase: Seq[String]): DataFrame = {
     require(phrase.nonEmpty, "phrase must be non-empty")
-    phraseCountManyIndexed(spark, path, Seq(0L -> phrase))
+    phraseCountManyIndexed(h, Seq(0L -> phrase))
       .select(col("doc_id"), col("n_hits"))
   }
 
@@ -677,19 +638,17 @@ object Bm25 {
     * exploded to narrow `(phrase_id, doc_id, n_hits)` rows. Phrases are
     * plan literals — the batch must be driver-bounded (like [[rankMany]]'s
     * queries). */
-  def phraseCountManyIndexed(spark: org.apache.spark.sql.SparkSession,
-                             path: String,
+  def phraseCountManyIndexed(h: Bm25IndexHandle,
                              phrases: Seq[(Long, Seq[String])]): DataFrame = {
     require(phrases.nonEmpty, "phrases must be non-empty")
     require(phrases.map(_._1).distinct.length == phrases.length,
       s"duplicate phrase ids: ${phrases.map(_._1)}")
     phrases.foreach { case (pid, ts) =>
       require(ts.nonEmpty, s"phrase $pid is empty") }
-    val st = readStats(spark, path)
     val distinctTerms = phrases.flatMap(_._2).distinct
-    val qBuckets = distinctTerms.map(bucketOf(_, st.nBuckets)).distinct
-    val post = readPostings(spark, path, st,
-      col("term").isin(distinctTerms: _*), Some(qBuckets))
+    val qBuckets = distinctTerms.map(bucketOf(_, h.stats.nBuckets)).distinct
+    val post = readPostings(h, col("term").isin(distinctTerms: _*),
+      Some(qBuckets))
     def posCol(t: String): String = s"__p${distinctTerms.indexOf(t)}"
     // each per-term max touches at most one (doc, term) posting row
     val perTerm = distinctTerms.map(t =>
@@ -726,17 +685,10 @@ object Bm25 {
     * corpus scan [[rank]] pays is gone. The per-term contribution columns
     * aggregate in a fixed fold order (each per-term sum touches at most
     * one posting row per document), so the IEEE arithmetic replays
-    * [[rank]] term for term. */
-  def topKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                  terms: Seq[String], k: Int,
-                  k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    topKIndexed(new Bm25IndexHandle(spark, path), terms, k, k1, b)
-
-  /** Handle form of [[topKIndexed]] — cached stats row and per-dir bucket
-    * listings (see [[Bm25IndexHandle]]); scores identical by
-    * construction (same stats values, same scan, same fold). */
+    * [[rank]] term for term. The handle's cached stats row and per-dir
+    * bucket listings are reused across calls (see [[Bm25IndexHandle]]). */
   def topKIndexed(h: Bm25IndexHandle, terms: Seq[String], k: Int,
-                  k1: Double, b: Double): DataFrame = {
+                  k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     val spark = h.spark
     val path = h.path
     require(terms.nonEmpty, "terms must be non-empty")
@@ -758,9 +710,8 @@ object Bm25 {
     val n = lit(nDocs.toDouble)
     val avgdl = lit(totalDl.toDouble) / n // same IEEE division as rank's
     val dl = col("dl").cast("double")
-    val post = readPostings(spark, path, st,
-      col("term").isin(distinctTerms: _*), Some(qBuckets),
-      bucketsOfDir = h.bucketsOf)
+    val post = readPostings(h, col("term").isin(distinctTerms: _*),
+      Some(qBuckets))
     val perTerm = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t,
         termContribution(col("tf"), lit(dfMap.getOrElse(t, 0L)).cast("long"),

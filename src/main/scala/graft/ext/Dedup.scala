@@ -47,6 +47,11 @@ object Dedup {
 
   // ---------- shingling ----------
 
+  /** The dedup tokenizer: lower-cased letter/digit runs, empties dropped —
+    * the one word split every shingle, signature and sketch here reads. */
+  private def wordsOf(text: Column): Column =
+    filter(split(lower(text), "[^\\p{L}\\p{N}]+"), w => length(w) > 0)
+
   /** Word n-gram shingles as a deduped array — pure built-ins, row-local:
     * split → slide via sequence+transform → distinct.
     */
@@ -54,8 +59,7 @@ object Dedup {
     // let-bind the split through Corpus.bindArray: a lambda body inlines
     // outer EXPRESSIONS, so referencing the split directly would re-tokenize
     // the document once per shingle position (O(words²) per doc)
-    array_distinct(Corpus.bindArray(
-      filter(split(lower(text), "[^\\p{L}\\p{N}]+"), w => length(w) > 0)) { words =>
+    array_distinct(Corpus.bindArray(wordsOf(text)) { words =>
       val count = size(words)
       when(count >= n,
         transform(sequence(lit(0), count - n),
@@ -170,11 +174,10 @@ object Dedup {
                       shingleN: Int = 3, numPerms: Int = 64,
                       numBands: Int = 16): DataFrame = {
     val rowsPerBand = numPerms / numBands
-    val words = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
     df.select(
         col(idCol).as("doc_id"),
-        minhashSignatureUdf(numPerms, shingleN)(words).as("sig"))
+        minhashSignatureUdf(numPerms, shingleN)(wordsOf(col(textCol)))
+          .as("sig"))
       .withColumn("band_key", explode(bandKeysUdf(numBands, rowsPerBand)(col("sig"))))
       .select(col("doc_id"), col("band_key"))
   }
@@ -301,13 +304,11 @@ object Dedup {
   def jaccardVerify(df: DataFrame, textCol: String, idCol: String,
                     candidates: DataFrame, shingleN: Int = 3,
                     threshold: Double = 0.8): DataFrame = {
-    val words = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
     val candIds = candidates.select(col("id_a").as("jid"))
       .union(candidates.select(col("id_b").as("jid"))).distinct()
     val sh = df.join(broadcast(candIds), col(idCol) === col("jid"), "left_semi")
       .select(col(idCol).as("jid"),
-        hashedShinglesUdf(shingleN)(words).as("sh"))
+        hashedShinglesUdf(shingleN)(wordsOf(col(textCol))).as("sh"))
     verifyShingledPairs(sh, candidates, threshold)
   }
 
@@ -365,8 +366,8 @@ object Dedup {
       s"numKeyBuckets must be >= 1, got $numKeyBuckets")
     writeMinhashRows(df, textCol, idCol, shingleN, numPerms, numBands,
       numKeyBuckets, s"$path/seg_base")
-    writeMinhashMeta(spark, path, shingleN, numPerms, numBands,
-      numKeyBuckets, List("seg_base"), "", nextSeg = 0L)
+    writeMinhashMeta(spark, path, MinhashMeta(shingleN, numPerms, numBands,
+      numKeyBuckets, StoreMeta.Segments.Base))
   }
 
   /** Append a new batch to an existing [[buildMinhashIndex]] store as a
@@ -380,38 +381,22 @@ object Dedup {
     * non-empty `tag` the append is EXACTLY-ONCE: a replayed batch whose
     * effects landed (streaming restart) is detected by `tag == last_tag`
     * and skipped whole; a crashed attempt's segment dir is invisible
-    * (unreferenced) and the retry overwrites it. Duplicate segment rows
+    * (unreferenced) and the retry overwrites it (the segment protocol,
+    * [[StoreMeta.appendSegment]]). Duplicate segment rows
     * would CORRUPT exact-Jaccard verification (shingle multisets joined
     * twice), which is why ingest idempotence is structural here, not
     * best-effort. Single writer. Typically called after
-    * [[minhashDedupAgainstIndex]] has emitted the batch's verdicts. */
-  def appendToMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                           path: String, newDocs: DataFrame,
-                           textCol: String, idCol: String,
-                           tag: String = ""): Unit =
-    appendToMinhashIndex(new MinhashIndexHandle(spark, path), newDocs,
-      textCol, idCol, tag)
-
-  /** Handle form of [[appendToMinhashIndex]] — the streaming-loop shape:
-    * the handle's in-memory manifest IS the post-commit state (this
-    * writer just wrote it), so the next probe through the same handle
-    * pays zero meta jobs. */
+    * [[minhashDedupAgainstIndex]] has emitted the batch's verdicts. The
+    * handle's in-memory manifest is then the post-commit state, so the
+    * next probe through the same handle pays zero meta jobs. */
   def appendToMinhashIndex(h: MinhashIndexHandle, newDocs: DataFrame,
                            textCol: String, idCol: String,
-                           tag: String): Unit = {
+                           tag: String = ""): Unit = {
     val m = h.meta
-    if (tag.nonEmpty && m.lastTag == tag) return // replayed, already applied
-    if (newDocs.isEmpty) return // idle micro-batch: no junk segment
-    // monotone counter, not list position (see MinhashMeta.nextSeg)
-    val seg = if (tag.nonEmpty) s"seg_$tag" else s"seg_${m.nextSeg}"
-    writeMinhashRows(newDocs, textCol, idCol, m.shingleN, m.numPerms,
-      m.numBands, m.numKeyBuckets, s"${h.path}/$seg")
-    val committed = m.copy(segments = m.segments :+ seg, lastTag = tag,
-      nextSeg = m.nextSeg + 1L)
-    writeMinhashMeta(h.spark, h.path, committed.shingleN, committed.numPerms,
-      committed.numBands, committed.numKeyBuckets, committed.segments,
-      committed.lastTag, committed.nextSeg)
-    h.meta = committed
+    StoreMeta.appendSegment(h.path, m.segs, tag, newDocs) { segDir =>
+      writeMinhashRows(newDocs, textCol, idCol, m.shingleN, m.numPerms,
+        m.numBands, m.numKeyBuckets, segDir)
+    }.foreach(segs => h.commit(m.copy(segs = segs)))
   }
 
   /** COMPACT a segmented [[buildMinhashIndex]] store back to one segment —
@@ -430,33 +415,10 @@ object Dedup {
     * writer; quiesce streaming ingest around it (a probe holding the old
     * manifest keeps reading the old segments, which survive until the
     * NEXT compaction's sweep). */
-  def compactMinhashIndex(spark: org.apache.spark.sql.SparkSession,
-                          path: String): Unit =
-    compactMinhashIndex(new MinhashIndexHandle(spark, path))
-
-  /** Handle form of [[compactMinhashIndex]] (see
-    * [[appendToMinhashIndex(h:graft\.ext\.Dedup\.MinhashIndexHandle*]]). */
   def compactMinhashIndex(h: MinhashIndexHandle): Unit = {
-    val spark = h.spark
     val path = h.path
     val m = h.meta
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    // sweep orphans: seg dirs the live manifest does not reference
-    val live = m.segments.toSet
-    fs.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("seg_") && !live.contains(n)) {
-        try fs.delete(s.getPath, true) catch { case _: Exception => () }
-      }
-    }
-    // fresh generation name: max existing seg_c<N> + 1
-    val gen = m.segments.collect {
-      case s if s.startsWith("seg_c") =>
-        scala.util.Try(s.drop(5).toInt).getOrElse(-1)
-    } match { case Nil => 0; case gs => gs.max + 1 }
-    val newSeg = s"seg_c$gen"
+    val (newSeg, _) = StoreMeta.compactionSegment(h.spark, path, m.segs)
     // independent folds into the same uncommitted dir — concurrent jobs
     // (the writeMinhashRows treatment): compaction wall is
     // max(keys, shingles), not their sum
@@ -464,40 +426,34 @@ object Dedup {
       import scala.concurrent.{Await, Future}
       import scala.concurrent.ExecutionContext.Implicits.global
       val keysF = Future {
-        minhashIndexKeys(h, lit(true), excludeSeg = "", buckets = None)
+        minhashIndexKeys(h)
           .repartition(m.numKeyBuckets, col("bucket"))
           .sortWithinPartitions(col("band_key"), col("doc_id"))
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$path/$newSeg/keys")
       }
       val shinglesF = Future {
-        minhashIndexShingles(h, excludeSeg = "")
+        minhashIndexShingles(h)
           .write.mode("overwrite").parquet(s"$path/$newSeg/shingles")
       }
       Await.result(keysF, scala.concurrent.duration.Duration.Inf)
       Await.result(shinglesF, scala.concurrent.duration.Duration.Inf)
     }
-    writeMinhashMeta(spark, path, m.shingleN, m.numPerms, m.numBands,
-      m.numKeyBuckets, List(newSeg), m.lastTag, m.nextSeg) // counter survives
-    h.meta = m.copy(segments = List(newSeg))
+    // last_tag and the segment counter survive compaction
+    h.commit(m.copy(segs = m.segs.copy(live = List(newSeg))))
   }
 
-  /** `nextSeg` names untagged append segments monotonically — never
-    * recycled, even after a compaction resets the manifest (a
-    * list-position name would reuse `seg_0` and overwrite a retired dir a
-    * grace-window reader still holds; ADVICE r16). */
+  /** The store's hashing parameters and its segment manifest. */
   private[ext] final case class MinhashMeta(shingleN: Int, numPerms: Int,
                                        numBands: Int, numKeyBuckets: Int,
-                                       segments: List[String],
-                                       lastTag: String, nextSeg: Long)
+                                       segs: StoreMeta.Segments)
 
   private def readMinhashMeta(spark: org.apache.spark.sql.SparkSession,
                               path: String): MinhashMeta = {
     val m = StoreMeta.read(spark, path, "meta").head()
     MinhashMeta(m.getAs[Int]("shingle_n"), m.getAs[Int]("num_perms"),
       m.getAs[Int]("num_bands"), m.getAs[Int]("num_key_buckets"),
-      m.getAs[scala.collection.Seq[String]]("segments").toList,
-      m.getAs[String]("last_tag"), m.getAs[Long]("next_seg"))
+      StoreMeta.Segments.of(m))
   }
 
   /** Driver-side HANDLE over a [[buildMinhashIndex]] store for repeated
@@ -523,7 +479,12 @@ object Dedup {
       scala.collection.mutable.HashMap.empty[Seq[String], DataFrame]
     /** The manifest's live segment list — what probes read and an
       * auto-compaction policy thresholds on. */
-    def liveSegments: List[String] = meta.segments
+    def liveSegments: List[String] = meta.segs.live
+    /** Commit `m` as the store's meta row and keep it as this handle's
+      * manifest. */
+    private[ext] def commit(m: MinhashMeta): Unit = {
+      writeMinhashMeta(spark, path, m); meta = m
+    }
     /** Re-read the manifest and drop cached segment scans — required only
       * after a DIFFERENT writer mutated the store. */
     def refresh(): Unit = {
@@ -556,7 +517,7 @@ object Dedup {
       * segment listed ONCE per handle life (immutable once committed),
       * so an ingest loop pays one tiny-dir listing per append, not a
       * store re-walk per batch. */
-    def liveFileCount: Long = meta.segments.map(filesOf).sum
+    def liveFileCount: Long = liveSegments.map(filesOf).sum
     // cached per-segment bucket-directory listings: a committed segment
     // is immutable, so its set of bucket= dirs is listed ONCE per handle
     // life — the bucket-pruned multi-path reads below select directories
@@ -614,26 +575,16 @@ object Dedup {
   // rewriting, so a racing probe could see a MISSING manifest and a crash
   // mid-write would orphan every committed segment (ADVICE r16 medium)
   private def writeMinhashMeta(spark: org.apache.spark.sql.SparkSession,
-                               path: String, shingleN: Int, numPerms: Int,
-                               numBands: Int, numKeyBuckets: Int,
-                               segments: List[String],
-                               lastTag: String, nextSeg: Long): Unit = {
+                               path: String, m: MinhashMeta): Unit = {
     import spark.implicits._
     StoreMeta.write(
-      Seq((shingleN, numPerms, numBands, numKeyBuckets, segments, lastTag,
-          nextSeg))
+      Seq((m.shingleN, m.numPerms, m.numBands, m.numKeyBuckets, m.segs.live,
+          m.segs.lastTag, m.segs.nextSeg))
         .toDF("shingle_n", "num_perms", "num_bands", "num_key_buckets",
           "segments", "last_tag", "next_seg"),
       path, "meta")
   }
 
-  /** The index's stored band keys as ONE DataFrame
-    * `(doc_id, band_key, bucket)` — every committed segment, `pred`
-    * applied per segment scan so bucket partition pruning and key
-    * pushdown happen at each source. `excludeSeg` drops one segment from
-    * the view — the restart-replay mechanism: a probe that excludes its
-    * OWN batch's already-committed segment sees exactly the pre-append
-    * index and reproduces the original verdicts bit for bit. */
   // explicit segment schemas: an EMPTY append's partitionBy write leaves
   // only _SUCCESS behind, and schema inference on that directory throws —
   // an empty micro-batch must not make the whole index unreadable
@@ -656,23 +607,27 @@ object Dedup {
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.LongType))))
 
-  def minhashIndexKeys(spark: org.apache.spark.sql.SparkSession,
-                       path: String,
-                       pred: Column = lit(true),
+  /** The index's stored band keys as ONE DataFrame
+    * `(doc_id, band_key, bucket)` — every committed segment, `pred`
+    * applied per segment scan so bucket partition pruning and key
+    * pushdown happen at each source. `excludeSeg` drops one segment from
+    * the view — the restart-replay mechanism: a probe that excludes its
+    * OWN batch's already-committed segment sees exactly the pre-append
+    * index and reproduces the original verdicts bit for bit. */
+  def minhashIndexKeys(h: MinhashIndexHandle, pred: Column = lit(true),
                        excludeSeg: String = ""): DataFrame =
-    minhashIndexKeys(new MinhashIndexHandle(spark, path), pred, excludeSeg,
-      buckets = None)
+    segmentKeys(h, pred, excludeSeg, buckets = None)
 
-  // handle-threaded form: a probe reads the (tiny) meta parquet ONCE per
-  // handle and each segment's bucket listing is cached for the segment's
-  // immutable life — three separate meta jobs plus a re-listing of every
-  // segment per probe is measurable overhead in the micro-batch
-  // streaming regime. `buckets` prunes whole bucket DIRECTORIES at path
-  // construction (see [[MinhashIndexHandle.prunedKeys]]).
-  private def minhashIndexKeys(h: MinhashIndexHandle, pred: Column,
-                               excludeSeg: String,
-                               buckets: Option[Seq[Int]]): DataFrame = {
-    val segs = h.meta.segments.filterNot(_ == excludeSeg)
+  // the handle reads the (tiny) meta parquet ONCE and caches each
+  // segment's bucket listing for the segment's immutable life — three
+  // separate meta jobs plus a re-listing of every segment per probe is
+  // measurable overhead in the micro-batch streaming regime. `buckets`
+  // prunes whole bucket DIRECTORIES at path construction (see
+  // [[MinhashIndexHandle.prunedKeys]]).
+  private def segmentKeys(h: MinhashIndexHandle, pred: Column,
+                          excludeSeg: String,
+                          buckets: Option[Seq[Int]]): DataFrame = {
+    val segs = h.liveSegments.filterNot(_ == excludeSeg)
     require(segs.nonEmpty,
       s"minhashIndexKeys: no segments at ${h.path} (excluding '$excludeSeg')")
     h.prunedKeys(segs, buckets).filter(pred)
@@ -681,14 +636,9 @@ object Dedup {
 
   /** The index's stored shingle sets `(jid, sh)` across all committed
     * segments (minus `excludeSeg` — see [[minhashIndexKeys]]). */
-  def minhashIndexShingles(spark: org.apache.spark.sql.SparkSession,
-                           path: String,
-                           excludeSeg: String = ""): DataFrame =
-    minhashIndexShingles(new MinhashIndexHandle(spark, path), excludeSeg)
-
-  private def minhashIndexShingles(h: MinhashIndexHandle,
-                                   excludeSeg: String): DataFrame = {
-    val segs = h.meta.segments.filterNot(_ == excludeSeg)
+  def minhashIndexShingles(h: MinhashIndexHandle,
+                           excludeSeg: String = ""): DataFrame = {
+    val segs = h.liveSegments.filterNot(_ == excludeSeg)
     require(segs.nonEmpty,
       s"minhashIndexShingles: no segments at ${h.path} " +
         s"(excluding '$excludeSeg')")
@@ -707,8 +657,6 @@ object Dedup {
     // directory (overwrite semantics — a crashed attempt's debris is
     // simply rewritten); it becomes visible only when the caller commits
     // the manifest, so probes can never see half a batch.
-    val words = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
     // the two tables are independent writes into the SAME uncommitted
     // segment dir — run them as CONCURRENT Spark jobs (scheduler threads):
     // each is small in the micro-batch regime, so the wall cost of the
@@ -722,7 +670,7 @@ object Dedup {
     // same treatment the keys table gets on band_key below)
     val shinglesF = Future {
       df.select(col(idCol).cast("long").as("jid"),
-          hashedShinglesUdf(shingleN)(words).as("sh"))
+          hashedShinglesUdf(shingleN)(wordsOf(col(textCol))).as("sh"))
         .sortWithinPartitions(col("jid"))
         .write.mode("overwrite").parquet(s"$segDir/shingles")
     }
@@ -762,15 +710,28 @@ object Dedup {
     * seen thousands of times) contributes its min-id representative
     * against the batch instead of |bucket|×|batch-bucket| pairs; the
     * within-batch side is [[bucketSelfJoinPairs]] unchanged. Only buckets
-    * TOUCHED by the batch's keys are ever counted or joined. */
-  def minhashDedupAgainstIndex(spark: org.apache.spark.sql.SparkSession,
-                               path: String, newDocs: DataFrame,
+    * TOUCHED by the batch's keys are ever counted or joined.
+    *
+    * ID-BASED exclusion: rows whose stored `doc_id` is in `excludeDocs`
+    * (one id column, batch-bounded, broadcast) are dropped from the
+    * stored-keys AND stored-shingles views before any candidate or
+    * bucket-count math. This reconstructs the pre-append index for a
+    * restart replay WITHOUT depending on the batch's segment still
+    * existing — unlike `excludeSeg`, it stays exact after a compaction
+    * has folded the segment away (store ids are unique, so excluding the
+    * batch's ids removes exactly its own appended copies; on first
+    * delivery nothing matches and the exclusion is vacuous). The handle's
+    * cached manifest and segment scans are reused across micro-batches
+    * (see [[MinhashIndexHandle]]). */
+  def minhashDedupAgainstIndex(h: MinhashIndexHandle, newDocs: DataFrame,
                                textCol: String, idCol: String,
                                threshold: Double = 0.8,
                                maxBucket: Int = 1000,
-                               excludeSeg: String = ""): DataFrame =
-    minhashDedupAgainstIndex(new MinhashIndexHandle(spark, path), newDocs,
-      textCol, idCol, threshold, maxBucket, excludeSeg)
+                               excludeSeg: String = "",
+                               excludeDocs: Option[DataFrame] = None)
+      : DataFrame =
+    probeIndex(h, newDocs, textCol, idCol, threshold, maxBucket, excludeSeg,
+      excludeDocs)._1
 
   /** The pruned stored-keys frame a probe plans for `newKeys`, plus the
     * collected probe keys (empty sentinel array semantics: length >
@@ -813,7 +774,7 @@ object Dedup {
         col("band_key").isin(probeKeys.sorted: _*)
       else lit(true)
     val storedKeys =
-      minhashIndexKeys(h, srcPred, excludeSeg, Some(touchedBuckets))
+      segmentKeys(h, srcPred, excludeSeg, Some(touchedBuckets))
         .select(col("doc_id"), col("band_key"))
     (storedKeys, probeKeys)
   }
@@ -821,43 +782,15 @@ object Dedup {
   /** Test hook: the stored-keys frame [[minhashDedupAgainstIndex]] would
     * plan for this batch — same code path (shared helper), exposed lazily
     * so its plan can be inspected. */
-  private[ext] def probeStoredKeysFor(spark: org.apache.spark.sql.SparkSession,
-                                      path: String, newDocs: DataFrame,
-                                      textCol: String, idCol: String): DataFrame = {
-    val h = new MinhashIndexHandle(spark, path)
+  private[ext] def probeStoredKeysFor(h: MinhashIndexHandle,
+                                      newDocs: DataFrame, textCol: String,
+                                      idCol: String): DataFrame = {
     val m = h.meta
     probeStoredKeys(h,
       minhashBandKeys(newDocs, textCol, idCol, m.shingleN, m.numPerms,
         m.numBands),
       excludeSeg = "")._1
   }
-
-  /** Handle form of [[minhashDedupAgainstIndex]] — reuses the handle's
-    * cached manifest and segment scans across micro-batches (see
-    * [[MinhashIndexHandle]]). */
-  def minhashDedupAgainstIndex(h: MinhashIndexHandle, newDocs: DataFrame,
-                               textCol: String, idCol: String,
-                               threshold: Double, maxBucket: Int,
-                               excludeSeg: String): DataFrame =
-    minhashDedupAgainstIndex(h, newDocs, textCol, idCol, threshold,
-      maxBucket, excludeSeg, excludeDocs = None)
-
-  /** Handle form with ID-BASED exclusion: rows whose stored `doc_id` is in
-    * `excludeDocs` (one id column, batch-bounded, broadcast) are dropped
-    * from the stored-keys AND stored-shingles views before any candidate
-    * or bucket-count math. This reconstructs the pre-append index for a
-    * restart replay WITHOUT depending on the batch's segment still
-    * existing — unlike `excludeSeg`, it stays exact after a compaction
-    * has folded the segment away (store ids are unique, so excluding the
-    * batch's ids removes exactly its own appended copies; on first
-    * delivery nothing matches and the exclusion is vacuous). */
-  def minhashDedupAgainstIndex(h: MinhashIndexHandle, newDocs: DataFrame,
-                               textCol: String, idCol: String,
-                               threshold: Double, maxBucket: Int,
-                               excludeSeg: String,
-                               excludeDocs: Option[DataFrame]): DataFrame =
-    probeIndex(h, newDocs, textCol, idCol, threshold, maxBucket, excludeSeg,
-      excludeDocs)._1
 
   /** [[minhashDedupAgainstIndex]] returning, next to the pairs, the
     * probe's lazily `localCheckpoint`ed intermediates (band keys,
@@ -955,8 +888,6 @@ object Dedup {
       .distinct()
       .localCheckpoint(false)
     val cands = if (pointLookup) broadcast(cands0) else cands0
-    val words = filter(split(lower(col(textCol)), "[^\\p{L}\\p{N}]+"),
-      w => length(w) > 0)
     val candIds = cands0.select(col("id_a").as("jid"))
       .union(cands0.select(col("id_b").as("jid"))).distinct()
     // point-lookup regime: the candidate id set is driver-tiny (it came
@@ -971,7 +902,7 @@ object Dedup {
       else Array.empty[Long]
     val newShingled = newDocs
       .select(col(idCol).cast("long").as("jid"),
-        hashedShinglesUdf(sn)(words).as("sh"))
+        hashedShinglesUdf(sn)(wordsOf(col(textCol))).as("sh"))
     val storedShingles =
       dropExcluded(minhashIndexShingles(h, excludeSeg), "jid")
     val sh0 =
@@ -1010,7 +941,7 @@ object Dedup {
   }
 
   def simhash(text: Column): Column =
-    simhashUdf(filter(split(lower(text), "[^\\p{L}\\p{N}]+"), w => length(w) > 0))
+    simhashUdf(wordsOf(text))
 
   /** SimHash near-dup candidates. Band count is DERIVED from `maxHamming`
     * by pigeonhole: with `maxHamming + 1` bands, any pair within hamming

@@ -293,29 +293,42 @@ object Similarity {
     val spark = corpus.sparkSession
     writeIvfSegment(corpus, corpusId, corpusVec,
       new CentArrays(centroids), s"$path/seg_base")
-    StoreMeta.write(
-      { import spark.implicits._
-        Seq((List("seg_base"), "", 0L))
-          .toDF("segments", "last_tag", "next_seg") },
-      path, "meta")
+    writeCentroids(spark, s"$path/centroids", centroids)
+    // the manifest commits LAST: a reader never sees a store without its
+    // centroid table
+    writeIvfMeta(spark, path, IvfMeta(StoreMeta.Segments.Base))
+  }
+
+  private def writeCentroids(spark: org.apache.spark.sql.SparkSession,
+                             dir: String,
+                             centroids: Array[(Int, Seq[Float])]): Unit = {
     import spark.implicits._
     centroids.toSeq.map { case (cid, v) => (cid, v) }
       .toDF("cent_id", "centroid")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
+      .coalesce(1).write.mode("overwrite").parquet(dir)
   }
 
-  // one IVF segment: cell-partitioned corpus rows under `segDir`, the
-  // cell id duplicated as the data column `cell_d` (see buildIvfIndex)
+  // one IVF segment: cell-partitioned corpus rows under `segDir` (see
+  // buildIvfIndex)
   private def writeIvfSegment(rows: DataFrame, corpusId: String,
                               corpusVec: String, cents: CentArrays,
                               segDir: String): Unit = {
     val bc = rows.sparkSession.sparkContext.broadcast(cents)
     val assignUdf = udf { v: scala.collection.Seq[Float] => bc.value.bestCell(v) }
-    rows.select(col(corpusId).as("corpus_id"), col(corpusVec).as("vec"))
-      .withColumn("vnorm", norm(col("vec")))
-      .withColumn("cell", assignUdf(col("vec")))
-      .withColumn("cell_d", col("cell"))
+    writeCells(
+      rows.select(col(corpusId).as("corpus_id"), col(corpusVec).as("vec"))
+        .withColumn("vnorm", norm(col("vec")))
+        .withColumn("cell", assignUdf(col("vec"))),
+      segDir)
+  }
+
+  /** Write `rows` (with a `cell` column) as one cell-partitioned segment
+    * under `segDir`, the cell id duplicated as the data column `cell_d`
+    * (partitionBy strips the partition column, and the multi-segment
+    * probe reads explicitly selected cell dirs as one unpartitioned
+    * multi-path scan — see [[storedCells]]). */
+  private def writeCells(rows: DataFrame, segDir: String): Unit =
+    rows.withColumn("cell_d", col("cell"))
       // co-locate each cell before the partitioned write: without this,
       // partitionBy emits (writing tasks × cells) files — at nlist in the
       // tens of thousands that is millions of KB-sized parquet files, a
@@ -324,18 +337,17 @@ object Similarity {
       .repartition(col("cell"))
       .write.mode("overwrite").partitionBy("cell")
       .parquet(segDir)
-  }
 
-  private[ext] final case class IvfMeta(segments: List[String], lastTag: String,
-                                   nextSeg: Long,
+  /** The segment manifest plus the current centroid dir and the
+    * streaming-ingest checkpoint (see [[recordIvfIngestCheckpoint]]). */
+  private[ext] final case class IvfMeta(segs: StoreMeta.Segments,
                                    centDir: String = "centroids",
                                    ingestCkpt: String = "")
 
   private def readIvfMeta(spark: org.apache.spark.sql.SparkSession,
                           path: String): IvfMeta = {
     val m = StoreMeta.read(spark, path, "meta").head()
-    IvfMeta(m.getAs[scala.collection.Seq[String]]("segments").toList,
-      m.getAs[String]("last_tag"), m.getAs[Long]("next_seg"),
+    IvfMeta(StoreMeta.Segments.of(m),
       // pre-recentre stores have no cent_dir column — their centroid
       // table lives at the build-time default
       if (m.schema.fieldNames.contains("cent_dir"))
@@ -352,7 +364,8 @@ object Similarity {
                            path: String, m: IvfMeta): Unit = {
     import spark.implicits._
     StoreMeta.write(
-      Seq((m.segments, m.lastTag, m.nextSeg, m.centDir, m.ingestCkpt))
+      Seq((m.segs.live, m.segs.lastTag, m.segs.nextSeg, m.centDir,
+          m.ingestCkpt))
         .toDF("segments", "last_tag", "next_seg", "cent_dir", "ingest_ckpt"),
       path, "meta")
   }
@@ -381,7 +394,8 @@ object Similarity {
     *
     * Single writer (the store's standing contract); all mutations of this
     * store must go through the SAME handle — after an out-of-band write,
-    * call [[refresh]]. Driver-only object, never ships to executors. */
+    * call [[refresh]]. Driver-only object, never ships to executors.
+    * Every operation on the store past its build takes this handle. */
   final class IvfIndexHandle private[ext] (
       private[ext] val spark: org.apache.spark.sql.SparkSession,
       val path: String) {
@@ -393,7 +407,7 @@ object Similarity {
       scala.collection.mutable.HashMap.empty[String, Seq[(Int, String)]]
     /** The manifest's live segment list (probe view; an auto-compaction
       * policy thresholds on its length). */
-    def liveSegments: List[String] = meta.segments
+    def liveSegments: List[String] = meta.segs.live
     private[ext] def centroids(dir: String): Array[(Int, Seq[Float])] =
       centCache.getOrElseUpdate(dir, readCentroids(spark, path, dir))
     private[ext] def codebooks: PqCodebooks = cbCache.getOrElse {
@@ -403,8 +417,13 @@ object Similarity {
       * segment's immutable life. */
     private[ext] def cellDirs(seg: String): Seq[(Int, String)] =
       segCells.getOrElseUpdate(seg, listCellDirs(spark, s"$path/$seg"))
-    private[ext] def retireSegments(retired: Seq[String]): Unit =
-      retired.foreach(segCells.remove)
+    /** Commit `m` as the store's meta row and keep it as this handle's
+      * manifest; the listings of segments it retires are dropped. */
+    private[ext] def commit(m: IvfMeta): Unit = {
+      writeIvfMeta(spark, path, m)
+      liveSegments.diff(m.segs.live).foreach(segCells.remove)
+      meta = m
+    }
     /** Re-read the manifest and drop every cache — required only after a
       * DIFFERENT writer mutated the store. */
     def refresh(): Unit = {
@@ -424,25 +443,10 @@ object Similarity {
     * guard WITHOUT the caller remembering to pass `quiesceCheckpoint`
     * (ADVICE r19: the opt-in guard left the crash-replay hazard
     * reachable by default on stream-fed stores). */
-  def recordIvfIngestCheckpoint(spark: org.apache.spark.sql.SparkSession,
-                                path: String, checkpoint: String): Unit =
-    recordIvfIngestCheckpoint(new IvfIndexHandle(spark, path), checkpoint)
-
-  /** Handle form of [[recordIvfIngestCheckpoint]]. */
   def recordIvfIngestCheckpoint(h: IvfIndexHandle,
-                                checkpoint: String): Unit = {
-    if (h.meta.ingestCkpt != checkpoint) {
-      val committed = h.meta.copy(ingestCkpt = checkpoint)
-      writeIvfMeta(h.spark, h.path, committed)
-      h.meta = committed
-    }
-  }
-
-  /** The manifest's live segment list (probe view; an auto-compaction
-    * policy thresholds on its length). */
-  def ivfLiveSegments(spark: org.apache.spark.sql.SparkSession,
-                      path: String): List[String] =
-    readIvfMeta(spark, path).segments
+                                checkpoint: String): Unit =
+    if (h.meta.ingestCkpt != checkpoint)
+      h.commit(h.meta.copy(ingestCkpt = checkpoint))
 
   /** Append new corpus rows to an existing [[buildIvfIndex]] store: rows
     * assign against the STORED centroid table (cell structure unchanged)
@@ -451,34 +455,21 @@ object Similarity {
     * half-visible append. A non-empty `tag` makes the append EXACTLY-ONCE
     * (a replay whose tag equals the manifest's `last_tag` is skipped
     * whole — the streaming micro-batch contract shared with
-    * [[graft.ext.Bm25.appendToIndex]] / the MinHash store). The 100 TB
+    * [[graft.ext.Bm25.appendToIndex]] / the MinHash store; see
+    * [[StoreMeta.appendSegment]]). The 100 TB
     * maintenance story: a daily ingest appends its fraction of the corpus
     * in one cell-keyed shuffle — the index is never rebuilt until
     * centroid drift warrants it (probe recall under drift is measurable:
-    * run the recall gate against a brute-force sample). */
-  def appendToIvfIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                       newRows: DataFrame, corpusId: String,
-                       corpusVec: String, tag: String = ""): Unit =
-    appendToIvfIndex(new IvfIndexHandle(spark, path), newRows, corpusId,
-      corpusVec, tag)
-
-  /** Handle form of [[appendToIvfIndex]] — the streaming-loop shape: the
-    * handle's cached manifest and centroid arrays replace the per-batch
-    * meta/centroid re-reads (see [[IvfIndexHandle]]). */
+    * run the recall gate against a brute-force sample). The handle's
+    * cached manifest and centroid arrays replace per-batch re-reads. */
   def appendToIvfIndex(h: IvfIndexHandle, newRows: DataFrame,
                        corpusId: String, corpusVec: String,
-                       tag: String): Unit = {
+                       tag: String = ""): Unit = {
     val m = h.meta
-    if (tag.nonEmpty && m.lastTag == tag) return // replayed, already applied
-    if (newRows.isEmpty) return // idle micro-batch: no junk segment
-    val cents = h.centroids(m.centDir)
-    val seg = if (tag.nonEmpty) s"seg_$tag" else s"seg_${m.nextSeg}"
-    writeIvfSegment(newRows, corpusId, corpusVec, new CentArrays(cents),
-      s"${h.path}/$seg")
-    val committed = m.copy(segments = m.segments :+ seg, lastTag = tag,
-      nextSeg = m.nextSeg + 1L)
-    writeIvfMeta(h.spark, h.path, committed)
-    h.meta = committed
+    StoreMeta.appendSegment(h.path, m.segs, tag, newRows) { segDir =>
+      writeIvfSegment(newRows, corpusId, corpusVec,
+        new CentArrays(h.centroids(m.centDir)), segDir)
+    }.foreach(segs => h.commit(m.copy(segs = segs)))
   }
 
   /** COMPACT a segmented IVF store back to one generation: every live
@@ -486,12 +477,10 @@ object Similarity {
     * `seg_c<gen>` dir committed by the manifest flip (content-preserving —
     * the corpus is a row multiset). Retired dirs are swept on the NEXT
     * compaction (one-generation grace window for in-flight readers), the
-    * [[graft.ext.Dedup.compactMinhashIndex]] discipline. */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Unit =
-    compactIvfIndex(spark, path, recentre = false)
-
-  /** [[compactIvfIndex]] with optional RECENTRING: when `recentre` is
+    * [[graft.ext.Dedup.compactMinhashIndex]] discipline
+    * ([[StoreMeta.compactionSegment]]).
+    *
+    * Optional RECENTRING: when `recentre` is
     * true, compaction refits the centroid table on the LIVE corpus
     * (seeded distributed k-means, [[kmeansCentroids]]) and reassigns
     * every row to the refit cells while it rewrites them — closing the
@@ -518,25 +507,10 @@ object Similarity {
     * recentring compaction REFUSES to run while the checkpoint's commit
     * log trails its offsets log (a started-but-uncommitted batch —
     * exactly the crash-replay window the caveat describes). */
-  def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
-                      path: String, recentre: Boolean,
+  def compactIvfIndex(h: IvfIndexHandle, recentre: Boolean = false,
                       recentreIters: Int = 5,
                       recentreSeed: Long = 42L,
-                      quiesceCheckpoint: Option[String] = None): Unit =
-    compactIvfIndex(new IvfIndexHandle(spark, path), recentre,
-      recentreIters, recentreSeed, quiesceCheckpoint)
-
-  /** Handle form of [[compactIvfIndex]] (see [[IvfIndexHandle]]). */
-  def compactIvfIndex(h: IvfIndexHandle): Unit =
-    compactIvfIndex(h, recentre = false, recentreIters = 5,
-      recentreSeed = 42L, quiesceCheckpoint = None)
-
-  /** Handle form of [[compactIvfIndex]] with recentring (no default
-    * arguments — Scala forbids defaults on two overloads of one name). */
-  def compactIvfIndex(h: IvfIndexHandle, recentre: Boolean,
-                      recentreIters: Int,
-                      recentreSeed: Long,
-                      quiesceCheckpoint: Option[String]): Unit = {
+                      quiesceCheckpoint: Option[String] = None): Unit = {
     val spark = h.spark
     val path = h.path
     val m = h.meta
@@ -555,46 +529,24 @@ object Similarity {
           "than its first attempt. Let the ingest quiesce (commit log " +
           "catch up) and retry.")
     }
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(hconf)
-    val live = m.segments.toSet
-    fs.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      if ((n.startsWith("seg_") && !live.contains(n)) ||
-          (n.startsWith("centroids_g") && n != m.centDir)) {
-        try fs.delete(s.getPath, true) catch { case _: Exception => () }
-      }
-    }
-    val gen = m.segments.collect {
-      case s if s.startsWith("seg_c") =>
-        scala.util.Try(s.drop(5).toInt).getOrElse(-1)
-    } match { case Nil => 0; case gs => gs.max + 1 }
-    val newSeg = s"seg_c$gen"
-    val liveRows = ivfCorpus(h, m.segments, cells = None)
-    val committed = if (recentre) {
+    // stale centroid dirs share the segments' grace window
+    val (newSeg, gen) = StoreMeta.compactionSegment(spark, path, m.segs,
+      alsoSweep = n => n.startsWith("centroids_g") && n != m.centDir)
+    val segs = m.segs.copy(live = List(newSeg))
+    val liveRows = storedCells(h, None, "corpus_id", "vec", "vnorm")
+    if (recentre) {
       val nlist = h.centroids(m.centDir).length
       val cents = kmeansCentroids(liveRows.select(col("vec")), "vec",
         nlist, recentreIters, recentreSeed)
       val centDir = s"centroids_g$gen"
-      import spark.implicits._
-      cents.toSeq.map { case (cid, v) => (cid, v) }
-        .toDF("cent_id", "centroid")
-        .coalesce(1).write.mode("overwrite").parquet(s"$path/$centDir")
+      writeCentroids(spark, s"$path/$centDir", cents)
       writeIvfSegment(liveRows.select(col("corpus_id"), col("vec")),
         "corpus_id", "vec", new CentArrays(cents), s"$path/$newSeg")
-      m.copy(segments = List(newSeg), centDir = centDir)
+      h.commit(m.copy(segs = segs, centDir = centDir))
     } else {
-      liveRows
-        .withColumn("cell_d", col("cell"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$path/$newSeg")
-      m.copy(segments = List(newSeg))
+      writeCells(liveRows, s"$path/$newSeg")
+      h.commit(m.copy(segs = segs))
     }
-    writeIvfMeta(spark, path, committed)
-    h.retireSegments(m.segments)
-    h.meta = committed
   }
 
   /** Newest batch id recorded in a Structured Streaming checkpoint log
@@ -610,23 +562,28 @@ object Similarity {
       .sorted.lastOption
   }
 
-  /** The live corpus rows `(cell, corpus_id, vec, vnorm)` across `segs`,
-    * optionally restricted to `cells` — ONE unpartitioned multi-path scan
-    * over explicitly selected `cell=N` directories (unmatched dirs are
-    * never listed; the cell id is read from the in-file `cell_d` copy). */
-  private def ivfCorpus(spark: org.apache.spark.sql.SparkSession,
-                        path: String, segs: Seq[String],
-                        cells: Option[Seq[Int]]): DataFrame =
-    ivfCorpusFromDirs(spark, path, segs,
-      segs.flatMap(s => listCellDirs(spark, s"$path/$s")), cells)
-
-  /** Handle form: each committed segment's cell listing comes from the
-    * handle's cache (segments are immutable — one listing per segment
-    * life instead of one per probe; see [[IvfIndexHandle]]). */
-  private def ivfCorpus(h: IvfIndexHandle, segs: Seq[String],
-                        cells: Option[Seq[Int]]): DataFrame =
-    ivfCorpusFromDirs(h.spark, h.path, segs,
-      segs.flatMap(s => h.cellDirs(s)), cells)
+  /** The live rows `(cell, cols…)` across the manifest's segments of an
+    * IVF or IVF-PQ store, optionally restricted to `cells` — ONE
+    * unpartitioned multi-path scan over explicitly selected `cell=N`
+    * directories (unmatched dirs are never listed; the cell id is read
+    * from the in-file `cell_d` copy). Each committed segment's cell
+    * listing comes from the handle's cache (segments are immutable — one
+    * listing per segment life instead of one per probe). */
+  private def storedCells(h: IvfIndexHandle, cells: Option[Seq[Int]],
+                          cols: String*): DataFrame = {
+    val segs = h.liveSegments
+    val sel = cells.map(_.toSet)
+    val paths = segs.flatMap(h.cellDirs).collect {
+      case (cell, p) if sel.forall(_.contains(cell)) => p }
+    if (paths.isEmpty)
+      // rare (a probe whose cells match nothing stored): an all-false
+      // filter over the first segment keeps the schema without reading rows
+      h.spark.read.parquet(s"${h.path}/${segs.head}").filter(lit(false))
+        .select(("cell" +: cols).map(col): _*)
+    else
+      h.spark.read.parquet(paths: _*)
+        .select(col("cell_d").as("cell") +: cols.map(col): _*)
+  }
 
   private[ext] def listCellDirs(spark: org.apache.spark.sql.SparkSession,
                                 segDir: String): Seq[(Int, String)] = {
@@ -641,73 +598,20 @@ object Similarity {
       }
   }
 
-  private def ivfCorpusFromDirs(spark: org.apache.spark.sql.SparkSession,
-                                path: String, segs: Seq[String],
-                                dirs: Seq[(Int, String)],
-                                cells: Option[Seq[Int]]): DataFrame = {
-    val sel = cells.map(_.toSet)
-    val paths = dirs.collect {
-      case (cell, p) if sel.forall(_.contains(cell)) => p }
-    if (paths.isEmpty)
-      // rare (a probe whose cells match nothing stored): an all-false
-      // filter over the base segment keeps the schema without reading rows
-      spark.read.parquet(s"$path/${segs.head}").filter(lit(false))
-        .select(col("cell"), col("corpus_id"), col("vec"), col("vnorm"))
-    else
-      spark.read.parquet(paths: _*)
-        .select(col("cell_d").as("cell"), col("corpus_id"), col("vec"),
-          col("vnorm"))
-  }
-
-  // one IVF-PQ segment: codes-only cell-partitioned rows, the cell id
-  // duplicated as `cell_d` (the writeIvfSegment treatment — partitionBy
-  // strips the partition column, and the multi-segment probe reads
-  // explicitly selected cell dirs as one unpartitioned multi-path scan)
+  // one IVF-PQ segment: codes-only cell-partitioned rows (the
+  // writeIvfSegment treatment, see writeCells)
   private def writePqSegment(rows: DataFrame, corpusId: String,
                              corpusVec: String, cents: CentArrays,
                              cb: PqCodebooks, segDir: String): Unit = {
     val bcCents = rows.sparkSession.sparkContext.broadcast(cents)
     val assignUdf = udf { v: scala.collection.Seq[Float] =>
       bcCents.value.bestCell(v) }
-    pqEncode(rows, corpusId, corpusVec, cb)
-      .withColumn("cell", assignUdf(col("__v")))
-      .select(col("id").as("corpus_id"), col("codes"),
-        col("__r2").as("r2"), col("cell"))
-      .withColumn("cell_d", col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(segDir)
-  }
-
-  /** The live codes rows `(cell, corpus_id, codes, r2)` across `segs`,
-    * optionally restricted to `cells` — the [[ivfCorpus]] explicit-path
-    * multi-scan applied to the PQ store. */
-  private def pqCorpus(spark: org.apache.spark.sql.SparkSession,
-                       path: String, segs: Seq[String],
-                       cells: Option[Seq[Int]]): DataFrame =
-    pqCorpusFromDirs(spark, path, segs,
-      segs.flatMap(s => listCellDirs(spark, s"$path/$s")), cells)
-
-  /** Handle form: cached per-segment cell listings (see [[ivfCorpus]]). */
-  private def pqCorpus(h: IvfIndexHandle, segs: Seq[String],
-                       cells: Option[Seq[Int]]): DataFrame =
-    pqCorpusFromDirs(h.spark, h.path, segs,
-      segs.flatMap(s => h.cellDirs(s)), cells)
-
-  private def pqCorpusFromDirs(spark: org.apache.spark.sql.SparkSession,
-                               path: String, segs: Seq[String],
-                               dirs: Seq[(Int, String)],
-                               cells: Option[Seq[Int]]): DataFrame = {
-    val sel = cells.map(_.toSet)
-    val paths = dirs.collect {
-      case (cell, p) if sel.forall(_.contains(cell)) => p }
-    if (paths.isEmpty)
-      spark.read.parquet(s"$path/${segs.head}").filter(lit(false))
-        .select(col("cell"), col("corpus_id"), col("codes"), col("r2"))
-    else
-      spark.read.parquet(paths: _*)
-        .select(col("cell_d").as("cell"), col("corpus_id"), col("codes"),
-          col("r2"))
+    writeCells(
+      pqEncode(rows, corpusId, corpusVec, cb)
+        .withColumn("cell", assignUdf(col("__v")))
+        .select(col("id").as("corpus_id"), col("codes"),
+          col("__r2").as("r2"), col("cell")),
+      segDir)
   }
 
   /** Append new corpus rows to an existing [[buildIvfPqIndex]] store:
@@ -719,28 +623,14 @@ object Similarity {
     * by the atomic [[StoreMeta]] flip (a crash mid-write leaves an
     * unreferenced dir, never a half-visible append), and a non-empty
     * `tag` makes the append EXACTLY-ONCE under streaming replay. */
-  def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path: String,
-                         newRows: DataFrame, corpusId: String,
-                         corpusVec: String, tag: String = ""): Unit =
-    appendToIvfPqIndex(new IvfIndexHandle(spark, path), newRows, corpusId,
-      corpusVec, tag)
-
-  /** Handle form of [[appendToIvfPqIndex]] (see [[IvfIndexHandle]]). */
   def appendToIvfPqIndex(h: IvfIndexHandle, newRows: DataFrame,
                          corpusId: String, corpusVec: String,
-                         tag: String): Unit = {
+                         tag: String = ""): Unit = {
     val m = h.meta
-    if (tag.nonEmpty && m.lastTag == tag) return // replayed, already applied
-    if (newRows.isEmpty) return // idle micro-batch: no junk segment
-    val cents = h.centroids(m.centDir)
-    val cb = h.codebooks
-    val seg = if (tag.nonEmpty) s"seg_$tag" else s"seg_${m.nextSeg}"
-    writePqSegment(newRows, corpusId, corpusVec, new CentArrays(cents), cb,
-      s"${h.path}/$seg")
-    val committed = m.copy(segments = m.segments :+ seg, lastTag = tag,
-      nextSeg = m.nextSeg + 1L)
-    writeIvfMeta(h.spark, h.path, committed)
-    h.meta = committed
+    StoreMeta.appendSegment(h.path, m.segs, tag, newRows) { segDir =>
+      writePqSegment(newRows, corpusId, corpusVec,
+        new CentArrays(h.centroids(m.centDir)), h.codebooks, segDir)
+    }.foreach(segs => h.commit(m.copy(segs = segs)))
   }
 
   /** COMPACT a segmented [[buildIvfPqIndex]] store back to one
@@ -748,38 +638,12 @@ object Similarity {
     * (content-preserving; codes never re-derived, so compaction cannot
     * drift the quantization). Orphans swept with the one-generation
     * grace window. */
-  def compactIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Unit =
-    compactIvfPqIndex(new IvfIndexHandle(spark, path))
-
-  /** Handle form of [[compactIvfPqIndex]] (see [[IvfIndexHandle]]). */
   def compactIvfPqIndex(h: IvfIndexHandle): Unit = {
-    val spark = h.spark
-    val path = h.path
     val m = h.meta
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val live = m.segments.toSet
-    fs.listStatus(root).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("seg_") && !live.contains(n)) {
-        try fs.delete(s.getPath, true) catch { case _: Exception => () }
-      }
-    }
-    val gen = m.segments.collect {
-      case s if s.startsWith("seg_c") =>
-        scala.util.Try(s.drop(5).toInt).getOrElse(-1)
-    } match { case Nil => 0; case gs => gs.max + 1 }
-    val newSeg = s"seg_c$gen"
-    pqCorpus(h, m.segments, cells = None)
-      .withColumn("cell_d", col("cell"))
-      .repartition(col("cell"))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/$newSeg")
-    val committed = m.copy(segments = List(newSeg))
-    writeIvfMeta(spark, path, committed)
-    h.retireSegments(m.segments)
-    h.meta = committed
+    val (newSeg, _) = StoreMeta.compactionSegment(h.spark, h.path, m.segs)
+    writeCells(storedCells(h, None, "corpus_id", "codes", "r2"),
+      s"${h.path}/$newSeg")
+    h.commit(m.copy(segs = m.segs.copy(live = List(newSeg))))
   }
 
   private def readCentroids(spark: org.apache.spark.sql.SparkSession,
@@ -811,34 +675,21 @@ object Similarity {
     * time — unprobed cells are never listed, opened, or read. `queries`
     * must be small (its probe set is collected on the driver and the query
     * side of the join is broadcast — same contract as [[bruteForceTopK]]).
+    * The handle's cached manifest, centroid arrays, and per-segment cell
+    * listings are reused across calls (see [[IvfIndexHandle]]).
+    *
+    * ID-BASED exclusion: stored rows whose `corpus_id` is in `excludeIds`
+    * (one id column, batch-bounded, broadcast anti-join) are dropped
+    * before scoring — the replay reconstruction a streaming ingest's
+    * probe needs (a replayed batch whose append already committed must
+    * not retrieve ITSELF; store ids are unique, so excluding the batch's
+    * ids restores the pre-append view from any segment layout). Vacuous
+    * on a first delivery.
     */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, queryId: String, queryVec: String,
-                     k: Int, nprobe: Int): DataFrame =
-    ivfTopKIndexed(spark, path, queries, queryId, queryVec, k, nprobe,
-      excludeIds = None)
-
-  /** [[ivfTopKIndexed]] with ID-BASED exclusion: stored rows whose
-    * `corpus_id` is in `excludeIds` (one id column, batch-bounded,
-    * broadcast anti-join) are dropped before scoring — the replay
-    * reconstruction a streaming ingest's probe needs (a replayed batch
-    * whose append already committed must not retrieve ITSELF; store ids
-    * are unique, so excluding the batch's ids restores the pre-append
-    * view from any segment layout). Vacuous on a first delivery. */
-  def ivfTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                     queries: DataFrame, queryId: String, queryVec: String,
-                     k: Int, nprobe: Int,
-                     excludeIds: Option[DataFrame]): DataFrame =
-    ivfTopKIndexed(new IvfIndexHandle(spark, path), queries, queryId,
-      queryVec, k, nprobe, excludeIds)
-
-  /** Handle form of [[ivfTopKIndexed]] — reuses the handle's cached
-    * manifest, centroid arrays, and per-segment cell listings across
-    * micro-batches (see [[IvfIndexHandle]]). */
   def ivfTopKIndexed(h: IvfIndexHandle,
                      queries: DataFrame, queryId: String, queryVec: String,
                      k: Int, nprobe: Int,
-                     excludeIds: Option[DataFrame]): DataFrame = {
+                     excludeIds: Option[DataFrame] = None): DataFrame = {
     val spark = h.spark
     val cents = h.centroids(h.meta.centDir)
     val bc = spark.sparkContext.broadcast(new CentArrays(cents))
@@ -852,19 +703,7 @@ object Similarity {
     // pruning; bounded by nlist (tiny) regardless of query count
     val cells = q.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val c0 = ivfCorpus(h, h.meta.segments, Some(cells.toSeq))
-      .select(col("cell"), col("corpus_id"), col("vec").as("__cv"),
-        col("vnorm").as("__cn"))
-    val c = excludeIds.map { d =>
-      // normalize BOTH sides to long (the stored-index family's id
-      // contract, same as minhashDedupAgainstIndex's excludeDocs): a
-      // caller whose id column is typed differently from the build-time
-      // corpus id (int vs long) must not silently exclude nothing —
-      // that would break replay reconstruction in the streaming ingest
-      val ex = broadcast(
-        d.select(col(d.columns.head).cast("long").as("__exid")).distinct())
-      c0.join(ex, c0("corpus_id").cast("long") === ex("__exid"), "left_anti")
-    }.getOrElse(c0)
+    val c = excludingIds(prunedCorpusScan(h, cells.toSeq), excludeIds)
     topK(c.join(broadcast(q), Seq("cell")), k)
   }
 
@@ -872,11 +711,24 @@ object Similarity {
     * tests) can inspect the plan: the probed cells select whole `cell=N`
     * directories at PATH construction across every live segment, so
     * unmatched cells are never listed, opened, or read. */
-  def prunedCorpusScan(spark: org.apache.spark.sql.SparkSession, path: String,
-                       cells: Seq[Int]): DataFrame =
-    ivfCorpus(spark, path, readIvfMeta(spark, path).segments, Some(cells))
+  def prunedCorpusScan(h: IvfIndexHandle, cells: Seq[Int]): DataFrame =
+    storedCells(h, Some(cells), "corpus_id", "vec", "vnorm")
       .select(col("cell"), col("corpus_id"), col("vec").as("__cv"),
         col("vnorm").as("__cn"))
+
+  /** Stored rows minus those whose `corpus_id` is in `excludeIds`' one
+    * column. BOTH sides are normalized to long (the stored-index family's
+    * id contract, same as minhashDedupAgainstIndex's excludeDocs): a
+    * caller whose id column is typed differently from the build-time
+    * corpus id (int vs long) must not silently exclude nothing — that
+    * would break replay reconstruction in the streaming ingest. */
+  private def excludingIds(c0: DataFrame,
+                           excludeIds: Option[DataFrame]): DataFrame =
+    excludeIds.map { d =>
+      val ex = broadcast(
+        d.select(col(d.columns.head).cast("long").as("__exid")).distinct())
+      c0.join(ex, c0("corpus_id").cast("long") === ex("__exid"), "left_anti")
+    }.getOrElse(c0)
 
   // ---------------- product quantization (IVF-PQ) ----------------
 
@@ -1216,48 +1068,25 @@ object Similarity {
     val spark = corpus.sparkSession
     writePqSegment(corpus, corpusId, corpusVec, new CentArrays(centroids),
       cb, s"$path/seg_base")
+    writeCentroids(spark, s"$path/centroids", centroids)
     import spark.implicits._
-    centroids.toSeq.map { case (cid, v) => (cid, v) }
-      .toDF("cent_id", "centroid")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/centroids")
     (for (s <- 0 until cb.m; j <- 0 until cb.ksub)
       yield (s, j, cb.words(s)(j).toSeq))
       .toDF("sub", "code", "word")
       .coalesce(1).write.mode("overwrite").parquet(s"$path/codebooks")
     // the manifest commits LAST — same build discipline as buildIvfIndex
-    StoreMeta.write(
-      Seq((List("seg_base"), "", 0L, "centroids"))
-        .toDF("segments", "last_tag", "next_seg", "cent_dir"),
-      path, "meta")
+    writeIvfMeta(spark, path, IvfMeta(StoreMeta.Segments.Base))
   }
 
   /** Probe a [[buildIvfPqIndex]] index: partition-pruned codes-only scan +
-    * ADC scoring. Same driver-side literal-cell contract as
+    * ADC scoring. Same driver-side literal-cell contract, handle caches
+    * (plus the codebooks) and ID-BASED `excludeIds` replay exclusion as
     * [[ivfTopKIndexed]]; the scan reads (corpus_id, codes, r2) from the
     * probed `cell=N` directories only. */
-  def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                       queries: DataFrame, queryId: String, queryVec: String,
-                       k: Int, nprobe: Int): DataFrame =
-    ivfPqTopKIndexed(spark, path, queries, queryId, queryVec, k, nprobe,
-      excludeIds = None)
-
-  /** [[ivfPqTopKIndexed]] with ID-BASED exclusion — the replay
-    * reconstruction a streaming ingest's probe needs (the
-    * [[ivfTopKIndexed]] contract: both sides cast to long so a
-    * differently-typed caller id can never silently exclude nothing). */
-  def ivfPqTopKIndexed(spark: org.apache.spark.sql.SparkSession, path: String,
-                       queries: DataFrame, queryId: String, queryVec: String,
-                       k: Int, nprobe: Int,
-                       excludeIds: Option[DataFrame]): DataFrame =
-    ivfPqTopKIndexed(new IvfIndexHandle(spark, path), queries, queryId,
-      queryVec, k, nprobe, excludeIds)
-
-  /** Handle form of [[ivfPqTopKIndexed]] — cached manifest, centroids,
-    * codebooks, and segment listings (see [[IvfIndexHandle]]). */
   def ivfPqTopKIndexed(h: IvfIndexHandle,
                        queries: DataFrame, queryId: String, queryVec: String,
                        k: Int, nprobe: Int,
-                       excludeIds: Option[DataFrame]): DataFrame = {
+                       excludeIds: Option[DataFrame] = None): DataFrame = {
     val spark = h.spark
     val m = h.meta
     val cents = h.centroids(m.centDir)
@@ -1273,12 +1102,9 @@ object Similarity {
       .withColumn("cell", explode(probeUdf(col("__qv"))))
     val cells = q.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).sorted
-    val c0 = pqCorpus(h, m.segments, Some(cells.toSeq))
-    val c = excludeIds.map { d =>
-      val ex = broadcast(
-        d.select(col(d.columns.head).cast("long").as("__exid")).distinct())
-      c0.join(ex, c0("corpus_id").cast("long") === ex("__exid"), "left_anti")
-    }.getOrElse(c0)
+    val c = excludingIds(
+      storedCells(h, Some(cells.toSeq), "corpus_id", "codes", "r2"),
+      excludeIds)
     val den = col("__qn") * sqrt(col("r2"))
     val scored = c.join(broadcast(q.drop("__qv")), Seq("cell"))
       .withColumn("__adc",

@@ -1,9 +1,11 @@
 package graft.ext
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
 /** Atomic single-row metadata commits for the stored-index family
-  * ([[Bm25]] stats, [[Dedup]] MinHash meta).
+  * ([[Bm25]] stats, [[Dedup]] MinHash meta, [[Similarity]] IVF / IVF-PQ
+  * meta), and the segment protocol the MinHash, IVF and IVF-PQ stores
+  * share ([[Segments]], [[appendSegment]], [[compactionSegment]]).
   *
   * The one-row pointer table IS each store's commit point, so it must
   * never be half-written or transiently missing. A plain
@@ -103,5 +105,80 @@ object StoreMeta {
         catch { case _: Exception => () }
       }
     }
+  }
+
+  /** Best-effort removal of every directory entry directly under `root`
+    * whose name satisfies `orphan` — the stores' orphan sweeps. */
+  private[ext] def sweep(spark: SparkSession, root: String,
+                         orphan: String => Boolean): Unit = {
+    val (fs, p) = fsOf(spark, root)
+    if (fs.exists(p)) fs.listStatus(p).foreach { s =>
+      if (orphan(s.getPath.getName)) {
+        try fs.delete(s.getPath, true) catch { case _: Exception => () }
+      }
+    }
+  }
+
+  // ---------------- segment protocol ----------------
+
+  /** The segment manifest of a MinHash, IVF or IVF-PQ store, stored in its
+    * `meta` row as `segments`, `last_tag`, `next_seg`: the live segment
+    * dirs in append order, the most recent append's idempotence tag, and
+    * the monotone counter that names untagged segments. The counter is
+    * never recycled, even after a compaction resets the list: a
+    * list-position name would reuse `seg_0` and overwrite a retired dir a
+    * grace-window reader still holds. */
+  private[ext] final case class Segments(live: List[String],
+                                         lastTag: String, nextSeg: Long)
+
+  private[ext] object Segments {
+    /** The freshly built store: one `seg_base` segment. */
+    val Base: Segments = Segments(List("seg_base"), "", 0L)
+
+    def of(meta: Row): Segments =
+      Segments(meta.getAs[scala.collection.Seq[String]]("segments").toList,
+        meta.getAs[String]("last_tag"), meta.getAs[Long]("next_seg"))
+  }
+
+  /** Append `batch` as one immutable segment: `write` receives the
+    * segment's directory under `root` and must write the whole batch
+    * there; the caller commits the returned manifest with its meta row
+    * (the commit point — until then the segment is an unreferenced dir
+    * that a retry overwrites). A tagged append lands in `seg_<tag>`, an
+    * untagged one in `seg_<nextSeg>`. Returns None, writing nothing, for
+    * a replay (`tag` equals the manifest's last tag: its effects already
+    * landed — EXACTLY-ONCE under streaming replay) and for an idle
+    * (empty) batch, which would otherwise commit a junk segment. */
+  private[ext] def appendSegment(root: String, m: Segments, tag: String,
+                                 batch: DataFrame)(write: String => Unit)
+      : Option[Segments] =
+    if (tag.nonEmpty && m.lastTag == tag) None
+    else if (batch.isEmpty) None
+    else {
+      val seg = if (tag.nonEmpty) s"seg_$tag" else s"seg_${m.nextSeg}"
+      write(s"$root/$seg")
+      Some(Segments(m.live :+ seg, tag, m.nextSeg + 1L))
+    }
+
+  /** Start a compaction of the store at `root`: sweep the orphans — every
+    * `seg_*` dir the manifest `m` does not list (crashed-append debris and
+    * the previous compaction's inputs, kept one generation for in-flight
+    * readers), plus any name `alsoSweep` picks — and name the fresh
+    * generation `seg_c<gen>`, `gen` one past the newest live generation.
+    * Returns the segment name and `gen`. The caller writes the folded rows
+    * there and commits `m.copy(live = List(name))`: `last_tag` and the
+    * counter survive compaction. */
+  private[ext] def compactionSegment(spark: SparkSession, root: String,
+                                     m: Segments,
+                                     alsoSweep: String => Boolean = _ => false)
+      : (String, Int) = {
+    val live = m.live.toSet
+    sweep(spark, root,
+      n => (n.startsWith("seg_") && !live.contains(n)) || alsoSweep(n))
+    val gen = m.live.collect {
+      case s if s.startsWith("seg_c") =>
+        scala.util.Try(s.drop(5).toInt).getOrElse(-1)
+    } match { case Nil => 0; case gs => gs.max + 1 }
+    (s"seg_c$gen", gen)
   }
 }

@@ -107,7 +107,8 @@ class Bm25Spec extends SparkTestBase {
     // every doc draws from the vocab, so >> 10 docs match: scan == index
     val scan = Bm25.rank(docs, "doc_id", "text", terms, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val probe = Bm25.topKIndexed(spark, idx, terms, k = 10).collect()
+    val probe = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      terms, k = 10).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(probe === scan)
   }
@@ -120,7 +121,8 @@ class Bm25Spec extends SparkTestBase {
     val buckets = new java.io.File(s"$idx/postings_v0").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(buckets > 2, s"fixture too small to show pruning ($buckets dirs)")
-    val probe = Bm25.topKIndexed(spark, idx, Seq("shared"), k = 5)
+    val probe = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      Seq("shared"), k = 5)
     val scans = probe.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -137,7 +139,8 @@ class Bm25Spec extends SparkTestBase {
     Bm25.buildIndex(docs, "doc_id", "text", idx, numBuckets = 4)
     val scan = Bm25.rank(docs, "doc_id", "text", Seq("apple", "missing"), 2)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
-    val probe = Bm25.topKIndexed(spark, idx, Seq("apple", "missing"), 2)
+    val probe = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      Seq("apple", "missing"), 2)
       .collect().map(r => (r.getLong(1), r.getLong(2))).toSeq
     // doc 2 matches no positive term in the probe (pear unqueried): the
     // scan ranks it at score 0, the index returns matched docs only
@@ -161,7 +164,8 @@ class Bm25Spec extends SparkTestBase {
       .filter(col("n") > 0L).orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     def probe(phrase: Seq[String]) = Bm25
-      .phraseCountIndexed(spark, idx, phrase).orderBy(col("doc_id"))
+      .phraseCountIndexed(Bm25.openIndex(spark, idx), phrase)
+      .orderBy(col("doc_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     for (p <- Seq(Seq("a", "b"), Seq("a", "a"), Seq("a", "b", "c"),
         Seq("a"), Seq("missing", "b")))
@@ -184,10 +188,13 @@ class Bm25Spec extends SparkTestBase {
     Bm25.buildIndex(full, "doc_id", "text", idxFull, numBuckets = 8)
     Bm25.buildIndex(head, "doc_id", "text", idxIncr, numBuckets = 8)
     // two appends: the df merge must compose, not just apply once
-    Bm25.appendToIndex(tail.filter($"doc_id" <= 35), "doc_id", "text", idxIncr)
-    Bm25.appendToIndex(tail.filter($"doc_id" > 35), "doc_id", "text", idxIncr)
+    Bm25.appendToIndex(Bm25.openIndex(spark, idxIncr),
+      tail.filter($"doc_id" <= 35), "doc_id", "text")
+    Bm25.appendToIndex(Bm25.openIndex(spark, idxIncr),
+      tail.filter($"doc_id" > 35), "doc_id", "text")
     val terms = Seq("ein", "drei")
-    def probe(p: String) = Bm25.topKIndexed(spark, p, terms, k = 12)
+    def probe(p: String) = Bm25.topKIndexed(Bm25.openIndex(spark, p),
+      terms, k = 12)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(probe(idxIncr) === probe(idxFull))
     // …and both equal the corpus scan on the matched prefix
@@ -208,9 +215,9 @@ class Bm25Spec extends SparkTestBase {
       "doc_id", "text", idx, numBuckets = 4)
     // many micro-appends: each leaves one more file per touched bucket
     for (lo <- Seq(13L, 22L, 31L, 40L))
-      Bm25.appendToIndex(
+      Bm25.appendToIndex(Bm25.openIndex(spark, idx),
         all.filter(t => t._1 >= lo && t._1 < lo + 9).toDF("doc_id", "text"),
-        "doc_id", "text", idx)
+        "doc_id", "text")
     def parquetFiles(dir: String): Int = {
       import scala.jdk.CollectionConverters._
       val s = java.nio.file.Files.walk(java.nio.file.Paths.get(idx))
@@ -219,9 +226,10 @@ class Bm25Spec extends SparkTestBase {
       finally s.close()
     }
     def probes() = (
-      Bm25.topKIndexed(spark, idx, Seq("uno", "tres"), k = 15).collect()
+      Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+        Seq("uno", "tres"), k = 15).collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq,
-      Bm25.phraseCountIndexed(spark, idx, Seq("dos", "dos"))
+      Bm25.phraseCountIndexed(Bm25.openIndex(spark, idx), Seq("dos", "dos"))
         .orderBy(col("doc_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq)
     val before = probes()
@@ -230,7 +238,7 @@ class Bm25Spec extends SparkTestBase {
       .count(_.getName.startsWith("postings_d"))
     assert(deltasBefore === 4, s"expected 4 delta segments, $deltasBefore")
     val filesBefore = parquetFiles("postings_")
-    Bm25.compactIndex(spark, idx)
+    Bm25.compactIndex(Bm25.openIndex(spark, idx))
     val filesAfter = parquetFiles("postings_v1")
     assert(filesAfter < filesBefore,
       s"compaction did not shrink: $filesBefore -> $filesAfter files")
@@ -240,11 +248,11 @@ class Bm25Spec extends SparkTestBase {
     assert(dirs.contains("postings_v1") && dirs.contains("postings_v0"))
     // the folded-in segments are retired from stats; the orphan sweep of
     // the NEXT compaction removes them from disk (one writer cycle later)
-    Bm25.appendToIndex(all.filter(_._1 == 1L)
+    Bm25.appendToIndex(Bm25.openIndex(spark, idx), all.filter(_._1 == 1L)
       .map { case (i, t) => (i + 1000L, t) }.toDF("doc_id", "text"),
-      "doc_id", "text", idx)
+      "doc_id", "text")
     val afterAppend = probes()
-    Bm25.compactIndex(spark, idx) // -> v2
+    Bm25.compactIndex(Bm25.openIndex(spark, idx)) // -> v2
     val remaining = new java.io.File(idx).listFiles().map(_.getName)
       .filter(_.startsWith("postings_d")).toSet
     // only the segment retired by THIS compaction may linger; the four
@@ -253,7 +261,7 @@ class Bm25Spec extends SparkTestBase {
     assert(remaining.subsetOf(Set("postings_d4")),
       s"stale delta segments not swept: $remaining")
     // base versions prune down to current + previous
-    Bm25.compactIndex(spark, idx) // -> v3, prunes v0 and v1
+    Bm25.compactIndex(Bm25.openIndex(spark, idx)) // -> v3, prunes v0 and v1
     val dirs2 = new java.io.File(idx).listFiles().map(_.getName).toSet
     assert(dirs2.contains("postings_v3") && dirs2.contains("postings_v2")
       && !dirs2.contains("postings_v1") && !dirs2.contains("postings_v0"))
@@ -272,8 +280,9 @@ class Bm25Spec extends SparkTestBase {
     Bm25.buildIndex(docs.filter($"doc_id" < 8), "doc_id", "text", idx,
       numBuckets = 4)
     (0 until 20).foreach { i =>
-      Bm25.appendToIndex(docs.filter($"doc_id" >= 8 + i * 2 &&
-        $"doc_id" < 8 + (i + 1) * 2), "doc_id", "text", idx, tag = s"h$i")
+      Bm25.appendToIndex(Bm25.openIndex(spark, idx),
+        docs.filter($"doc_id" >= 8 + i * 2 &&
+        $"doc_id" < 8 + (i + 1) * 2), "doc_id", "text", tag = s"h$i")
     }
     def files(substr: String): Long = {
       import scala.jdk.CollectionConverters._
@@ -282,12 +291,13 @@ class Bm25Spec extends SparkTestBase {
         p.toString.contains(substr) && p.toString.endsWith(".parquet"))
       finally s.close()
     }
-    def probe() = Bm25.topKIndexed(spark, idx, Seq("alpha", "w3"), k = 20)
+    def probe() = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      Seq("alpha", "w3"), k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     assert(files("postings_") >= 21L,
       s"expected >= 21 fragmented files, got ${files("postings_")}")
     val before = probe()
-    Bm25.compactIndex(spark, idx)
+    Bm25.compactIndex(Bm25.openIndex(spark, idx))
     // current version after the first compaction of a v0 base is v1
     assert(files("postings_v1") <= 4L,
       s"compacted version carries ${files("postings_v1")} files, want <= 4")
@@ -302,23 +312,25 @@ class Bm25Spec extends SparkTestBase {
     Bm25.buildIndex(docs, "doc_id", "text", idx, numBuckets = 4)
     val phrases = Seq(0L -> Seq("a", "b"), 1L -> Seq("a", "a"),
       2L -> Seq("a", "b", "c"), 3L -> Seq("a"), 4L -> Seq("missing", "b"))
-    val batch = Bm25.phraseCountManyIndexed(spark, idx, phrases)
+    val batch = Bm25.phraseCountManyIndexed(Bm25.openIndex(spark, idx), phrases)
       .orderBy(col("phrase_id"), col("doc_id")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val solo = phrases.flatMap { case (pid, p) =>
-      Bm25.phraseCountIndexed(spark, idx, p).orderBy(col("doc_id"))
+      Bm25.phraseCountIndexed(Bm25.openIndex(spark, idx),
+        p).orderBy(col("doc_id"))
         .collect().map(r => (pid, r.getLong(0), r.getLong(1))).toSeq
     }
     assert(batch === solo)
     intercept[IllegalArgumentException] {
-      Bm25.phraseCountManyIndexed(spark, idx, Seq.empty)
+      Bm25.phraseCountManyIndexed(Bm25.openIndex(spark, idx), Seq.empty)
     }
     intercept[IllegalArgumentException] {
-      Bm25.phraseCountManyIndexed(spark, idx,
+      Bm25.phraseCountManyIndexed(Bm25.openIndex(spark, idx),
         Seq(0L -> Seq("a"), 0L -> Seq("b")))
     }
     intercept[IllegalArgumentException] {
-      Bm25.phraseCountManyIndexed(spark, idx, Seq(0L -> Seq.empty))
+      Bm25.phraseCountManyIndexed(Bm25.openIndex(spark, idx),
+        Seq(0L -> Seq.empty))
     }
   }
 
@@ -341,7 +353,7 @@ class Bm25Spec extends SparkTestBase {
     // round 21: the ingest sink threads ONE handle through the per-batch
     // append/compact/probe loop (cached stats row + per-dir bucket
     // listings — the per-batch pointer re-reads removed); this pins the
-    // handle path's results against the per-call path forms on identical
+    // handle path's results against a fresh handle per call on identical
     // stores, including cache currency across the handle's own mutations.
     val rng = new scala.util.Random(41)
     val vocab = Seq("alfa", "beta", "gamma", "delta")
@@ -357,10 +369,13 @@ class Bm25Spec extends SparkTestBase {
 
     val pIdx = java.nio.file.Files.createTempDirectory("bm25-h-p-").toString
     Bm25.buildIndex(head, "doc_id", "text", pIdx, numBuckets = 4)
-    Bm25.appendToIndex(b0, "doc_id", "text", pIdx, tag = "b0")
-    Bm25.compactIndex(spark, pIdx)
-    Bm25.appendToIndex(b1, "doc_id", "text", pIdx, tag = "b1")
-    val pGot = probe(Bm25.topKIndexed(spark, pIdx, terms, k = 10))
+    Bm25.appendToIndex(Bm25.openIndex(spark, pIdx),
+      b0, "doc_id", "text", tag = "b0")
+    Bm25.compactIndex(Bm25.openIndex(spark, pIdx))
+    Bm25.appendToIndex(Bm25.openIndex(spark, pIdx),
+      b1, "doc_id", "text", tag = "b1")
+    val pGot = probe(Bm25.topKIndexed(Bm25.openIndex(spark, pIdx),
+      terms, k = 10))
 
     val hIdx = java.nio.file.Files.createTempDirectory("bm25-h-h-").toString
     Bm25.buildIndex(head, "doc_id", "text", hIdx, numBuckets = 4)
@@ -375,7 +390,7 @@ class Bm25Spec extends SparkTestBase {
     assert(hGot === pGot, "BM25 handle probe diverged from path form")
     // replay detection still works through the cached stats row
     Bm25.appendToIndex(h, b1, "doc_id", "text", tag = "b1")
-    assert(h.deltaSegments === Bm25.deltaSegmentCount(spark, hIdx),
+    assert(h.deltaSegments === Bm25.openIndex(spark, hIdx).deltaSegments,
       "cached stats drifted from the committed pointer")
   }
 }

@@ -68,7 +68,7 @@ class ExtSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-mhidx-").toString
     Dedup.buildMinhashIndex(spark, dir, a.toDF("doc_id", "text"),
       "text", "doc_id")
-    val inc = Dedup.minhashDedupAgainstIndex(spark, dir,
+    val inc = Dedup.minhashDedupAgainstIndex(Dedup.openMinhashIndex(spark, dir),
         b.toDF("doc_id", "text"), "text", "doc_id", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val full = Dedup.minhashNearDuplicates(
@@ -87,17 +87,21 @@ class ExtSpec extends SparkTestBase {
     val d1 = java.nio.file.Files.createTempDirectory("graft-mhidx-app-").toString
     val d2 = java.nio.file.Files.createTempDirectory("graft-mhidx-full-").toString
     Dedup.buildMinhashIndex(spark, d1, a.toDF("doc_id", "text"), "text", "doc_id")
-    Dedup.appendToMinhashIndex(spark, d1, b.toDF("doc_id", "text"), "text", "doc_id")
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, d1),
+      b.toDF("doc_id", "text"), "text", "doc_id")
     Dedup.buildMinhashIndex(spark, d2, (a ++ b).toDF("doc_id", "text"),
       "text", "doc_id")
-    def keySet(p: String) = Dedup.minhashIndexKeys(spark, p)
+    def keySet(p: String) = Dedup.minhashIndexKeys(
+      Dedup.openMinhashIndex(spark, p))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
-    def shSet(p: String) = Dedup.minhashIndexShingles(spark, p)
+    def shSet(p: String) = Dedup.minhashIndexShingles(
+      Dedup.openMinhashIndex(spark, p))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet)).toSet
     assert(keySet(d1) == keySet(d2))
     assert(shSet(d1) == shSet(d2))
     // a probe over the appended store sees the appended docs as duplicates
-    val probe = Dedup.minhashDedupAgainstIndex(spark, d1,
+    val probe = Dedup.minhashDedupAgainstIndex(
+      Dedup.openMinhashIndex(spark, d1),
         Seq((5000L, b.head._2)).toDF("doc_id", "text"),
         "text", "doc_id", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -114,24 +118,30 @@ class ExtSpec extends SparkTestBase {
       "text", "doc_id")
     // batch b contains a copy of an indexed doc — its probe has a verdict
     val batch = (b :+ (7777L, a(3)._2)).toDF("doc_id", "text")
-    val verdictBefore = Dedup.minhashDedupAgainstIndex(spark, dir, batch,
+    val verdictBefore = Dedup.minhashDedupAgainstIndex(
+      Dedup.openMinhashIndex(spark, dir), batch,
         "text", "doc_id", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(verdictBefore.contains((3L, 7777L)))
-    Dedup.appendToMinhashIndex(spark, dir, batch, "text", "doc_id", tag = "b7")
-    val keysAfter = Dedup.minhashIndexKeys(spark, dir)
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
+      batch, "text", "doc_id", tag = "b7")
+    val keysAfter = Dedup.minhashIndexKeys(Dedup.openMinhashIndex(spark, dir))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
-    val shCountAfter = Dedup.minhashIndexShingles(spark, dir).count()
+    val shCountAfter = Dedup.minhashIndexShingles(
+      Dedup.openMinhashIndex(spark, dir)).count()
     // REPLAY: the same tag must be detected and skipped WHOLE — duplicate
     // shingle rows would corrupt exact-Jaccard verification downstream
-    Dedup.appendToMinhashIndex(spark, dir, batch, "text", "doc_id", tag = "b7")
-    assert(Dedup.minhashIndexKeys(spark, dir)
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
+      batch, "text", "doc_id", tag = "b7")
+    assert(Dedup.minhashIndexKeys(Dedup.openMinhashIndex(spark, dir))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
       == keysAfter)
-    assert(Dedup.minhashIndexShingles(spark, dir).count() == shCountAfter)
+    assert(Dedup.minhashIndexShingles(
+      Dedup.openMinhashIndex(spark, dir)).count() == shCountAfter)
     // excludeSeg = the committed segment reconstructs the PRE-append index:
     // the replayed probe reproduces the original verdicts bit for bit
-    val verdictReplay = Dedup.minhashDedupAgainstIndex(spark, dir, batch,
+    val verdictReplay = Dedup.minhashDedupAgainstIndex(
+      Dedup.openMinhashIndex(spark, dir), batch,
         "text", "doc_id", threshold = 0.9, excludeSeg = "seg_b7")
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(verdictReplay == verdictBefore)
@@ -142,12 +152,12 @@ class ExtSpec extends SparkTestBase {
     // segment, index stays fully readable
     val segsBefore = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("seg_")).length
-    Dedup.appendToMinhashIndex(spark, dir,
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
       a.toDF("doc_id", "text").filter(col("doc_id") < 0), "text", "doc_id")
     assert(new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("seg_")).length
       == segsBefore)
-    assert(Dedup.minhashIndexKeys(spark, dir)
+    assert(Dedup.minhashIndexKeys(Dedup.openMinhashIndex(spark, dir))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
       == keysAfter)
   }
@@ -162,24 +172,27 @@ class ExtSpec extends SparkTestBase {
     val dir = java.nio.file.Files.createTempDirectory("graft-mhidx-cmp-").toString
     Dedup.buildMinhashIndex(spark, dir, a.toDF("doc_id", "text"),
       "text", "doc_id")
-    Dedup.appendToMinhashIndex(spark, dir, b.toDF("doc_id", "text"),
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
+      b.toDF("doc_id", "text"),
       "text", "doc_id", tag = "t1")
-    Dedup.appendToMinhashIndex(spark, dir, c.toDF("doc_id", "text"),
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
+      c.toDF("doc_id", "text"),
       "text", "doc_id", tag = "t2")
-    val keysBefore = Dedup.minhashIndexKeys(spark, dir)
+    val keysBefore = Dedup.minhashIndexKeys(Dedup.openMinhashIndex(spark, dir))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
-    val shBefore = Dedup.minhashIndexShingles(spark, dir)
+    val shBefore = Dedup.minhashIndexShingles(
+      Dedup.openMinhashIndex(spark, dir))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet)).toSet
     // plant crashed-append debris: an unreferenced segment dir
     val debris = java.nio.file.Paths.get(dir, "seg_zz")
     java.nio.file.Files.createDirectories(debris)
     java.nio.file.Files.writeString(debris.resolve("junk"), "x")
-    Dedup.compactMinhashIndex(spark, dir)
+    Dedup.compactMinhashIndex(Dedup.openMinhashIndex(spark, dir))
     // pure layout: the folded tables are the same row multisets
-    assert(Dedup.minhashIndexKeys(spark, dir)
+    assert(Dedup.minhashIndexKeys(Dedup.openMinhashIndex(spark, dir))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
       == keysBefore)
-    assert(Dedup.minhashIndexShingles(spark, dir)
+    assert(Dedup.minhashIndexShingles(Dedup.openMinhashIndex(spark, dir))
       .collect().map(r => (r.getLong(0), r.getSeq[Long](1).toSet)).toSet
       == shBefore)
     assert(!java.nio.file.Files.exists(debris), "orphan debris not swept")
@@ -192,9 +205,10 @@ class ExtSpec extends SparkTestBase {
     assert(segDirs().contains("seg_base"), "grace window violated")
     // the exactly-once tag survives compaction: replaying the last batch
     // is still a no-op
-    Dedup.appendToMinhashIndex(spark, dir, c.toDF("doc_id", "text"),
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
+      c.toDF("doc_id", "text"),
       "text", "doc_id", tag = "t2")
-    assert(Dedup.minhashIndexKeys(spark, dir)
+    assert(Dedup.minhashIndexKeys(Dedup.openMinhashIndex(spark, dir))
       .select("doc_id", "band_key").as[(Long, Long)].collect().toSet
       == keysBefore)
     // a probe over the compacted index equals the rebuild-over-everything
@@ -202,12 +216,13 @@ class ExtSpec extends SparkTestBase {
     Dedup.buildMinhashIndex(spark, full, (a ++ b ++ c).toDF("doc_id", "text"),
       "text", "doc_id")
     val probeBatch = Seq((6000L, b.head._2)).toDF("doc_id", "text")
-    def probe(p: String) = Dedup.minhashDedupAgainstIndex(spark, p,
+    def probe(p: String) = Dedup.minhashDedupAgainstIndex(
+      Dedup.openMinhashIndex(spark, p),
         probeBatch, "text", "doc_id", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(probe(dir) == probe(full) && probe(dir) == Set((12L, 6000L)))
     // a SECOND compaction sweeps the previous generation's inputs
-    Dedup.compactMinhashIndex(spark, dir)
+    Dedup.compactMinhashIndex(Dedup.openMinhashIndex(spark, dir))
     assert(segDirs() == Set("seg_c0", "seg_c1"),
       s"expected the grace sweep, got ${segDirs()}")
   }
@@ -223,7 +238,7 @@ class ExtSpec extends SparkTestBase {
     Dedup.buildMinhashIndex(spark, dir, head.toDF("doc_id", "text"),
       "text", "doc_id", numKeyBuckets = 8)
     (0 until 20).foreach { i =>
-      Dedup.appendToMinhashIndex(spark, dir,
+      Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
         Seq(doc(100L + i, s"a$i")).toDF("doc_id", "text"),
         "text", "doc_id", tag = s"h$i")
     }
@@ -240,12 +255,13 @@ class ExtSpec extends SparkTestBase {
     assert(segCount() == 21, s"expected 21 segments, got ${segCount()}")
     assert(keyFiles("seg_") >= 21L)
     val probeBatch = Seq(doc(9999L, "a7")).toDF("doc_id", "text")
-    def probe() = Dedup.minhashDedupAgainstIndex(spark, dir, probeBatch,
+    def probe() = Dedup.minhashDedupAgainstIndex(
+      Dedup.openMinhashIndex(spark, dir), probeBatch,
         "text", "doc_id", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     val before = probe()
     assert(before == Set((107L, 9999L)), s"unexpected probe result $before")
-    Dedup.compactMinhashIndex(spark, dir)
+    Dedup.compactMinhashIndex(Dedup.openMinhashIndex(spark, dir))
     assert(keyFiles("seg_c0") <= 8L,
       s"compacted keys carry ${keyFiles("seg_c0")} files, want <= 8")
     assert(probe() == before, "compaction changed the probe answer")
@@ -270,11 +286,12 @@ class ExtSpec extends SparkTestBase {
         (0 until 5).map(i => doc(i.toLong, s"b$i")).toDF("doc_id", "text"),
         "text", "doc_id", numKeyBuckets = 8)
       (0 until nAppends).foreach { i =>
-        Dedup.appendToMinhashIndex(spark, dir,
+        Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, dir),
           Seq(doc(100L + i, s"a$i")).toDF("doc_id", "text"),
           "text", "doc_id", tag = s"h$i")
       }
-      val probe = Dedup.minhashDedupAgainstIndex(spark, dir,
+      val probe = Dedup.minhashDedupAgainstIndex(
+        Dedup.openMinhashIndex(spark, dir),
         Seq(doc(9999L, "a0")).toDF("doc_id", "text"), "text", "doc_id",
         threshold = 0.9)
       var n = 0
@@ -303,7 +320,7 @@ class ExtSpec extends SparkTestBase {
     // the probe itself eagerly checkpoints its candidate stage (plan-size
     // truncation), so inspect the stored-keys frame via the shared helper
     // the probe executes — same pruning, same pushdown, lazy plan
-    val probe = Dedup.probeStoredKeysFor(spark, dir,
+    val probe = Dedup.probeStoredKeysFor(Dedup.openMinhashIndex(spark, dir),
       Seq((9000L, a.head._2)).toDF("doc_id", "text"), "text", "doc_id")
     val keysScans = probe.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec
@@ -592,7 +609,8 @@ class ExtSpec extends SparkTestBase {
     val idx = java.nio.file.Files.createTempDirectory("ivf-drift-").toString
     Similarity.buildIvfIndex(head, "vec_id", "embedding",
       Similarity.kmeansCentroids(head, "embedding", nlist = 4), idx)
-    Similarity.appendToIvfIndex(spark, idx, drift, "vec_id", "embedding")
+    Similarity.appendToIvfIndex(Similarity.openIvfIndex(spark, idx),
+      drift, "vec_id", "embedding")
     val queries = drift.filter($"vec_id".isin(100L, 120L, 141L, 160L))
     def topk(df: DataFrame): Map[Long, Set[Long]] =
       df.select("query_id", "corpus_id").as[(Long, Long)].collect()
@@ -600,17 +618,19 @@ class ExtSpec extends SparkTestBase {
     val brute = topk(Similarity.bruteForceTopK(head.unionByName(drift),
       "vec_id", "embedding", queries, "vec_id", "embedding", k = 10))
     def recall(): Double = {
-      val got = topk(Similarity.ivfTopKIndexed(spark, idx, queries,
+      val got = topk(Similarity.ivfTopKIndexed(
+        Similarity.openIvfIndex(spark, idx), queries,
         "vec_id", "embedding", k = 10, nprobe = 1))
       val rs = brute.map { case (q, exp) =>
         got.getOrElse(q, Set.empty).intersect(exp).size.toDouble / exp.size }
       rs.sum / rs.size
     }
     // stale-centroid control: plain compaction keeps build-time cells
-    Similarity.compactIvfIndex(spark, idx)
+    Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, idx))
     val stale = recall()
     // the refit: same live content, centroids follow the drifted corpus
-    Similarity.compactIvfIndex(spark, idx, recentre = true)
+    Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, idx),
+      recentre = true)
     val refit = recall()
     assert(refit > stale,
       s"recentring must beat stale centroids: $refit vs $stale")
@@ -619,14 +639,17 @@ class ExtSpec extends SparkTestBase {
       s"control lost its teeth — drift no longer hurts stale cells ($stale)")
     // the refit store stays a faithful row multiset: exhaustive probing
     // over the recentred cells equals brute force on (query, neighbor)
-    val exhaustive = topk(Similarity.ivfTopKIndexed(spark, idx, queries,
+    val exhaustive = topk(Similarity.ivfTopKIndexed(
+      Similarity.openIvfIndex(spark, idx), queries,
       "vec_id", "embedding", k = 10, nprobe = 4))
     assert(exhaustive == brute, "exhaustive probe diverged post-recentre")
     // and the append path keeps working against the RECENTRED table via
     // the manifest's cent_dir pointer
     val more = Seq((200L, around(2))).toDF("vec_id", "embedding")
-    Similarity.appendToIvfIndex(spark, idx, more, "vec_id", "embedding")
-    val got = topk(Similarity.ivfTopKIndexed(spark, idx,
+    Similarity.appendToIvfIndex(Similarity.openIvfIndex(spark, idx),
+      more, "vec_id", "embedding")
+    val got = topk(Similarity.ivfTopKIndexed(
+      Similarity.openIvfIndex(spark, idx),
       more, "vec_id", "embedding", k = 1, nprobe = 1))
     assert(got(200L) == Set(200L), "fresh append not retrievable post-refit")
   }
@@ -662,7 +685,8 @@ class ExtSpec extends SparkTestBase {
     // path construction (round-17 layout: explicit multi-path scan)
     val nprobe = 2
     val queries = corpus.filter($"vec_id" === 42L)
-    val pruned = Similarity.prunedCorpusScan(spark, idx, Seq(3, 5))
+    val pruned = Similarity.prunedCorpusScan(
+      Similarity.openIvfIndex(spark, idx), Seq(3, 5))
     val scans = pruned.queryExecution.sparkPlan.collect {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }
@@ -676,7 +700,8 @@ class ExtSpec extends SparkTestBase {
       s"scan reads ${scannedCells(pruned)}, want exactly cells 3 and 5")
     // …and its files are strictly fewer than the full index's
     val prunedFiles = scans.flatMap(_.relation.location.inputFiles).length
-    val allFiles = Similarity.prunedCorpusScan(spark, idx, 0 until 8)
+    val allFiles = Similarity.prunedCorpusScan(
+      Similarity.openIvfIndex(spark, idx), 0 until 8)
       .queryExecution.sparkPlan.collect {
         case f: org.apache.spark.sql.execution.FileSourceScanExec => f
       }.flatMap(_.relation.location.inputFiles).length
@@ -685,7 +710,8 @@ class ExtSpec extends SparkTestBase {
     // end-to-end: indexed probe ≡ a driver-side replay of the same IVF
     // semantics (assign to max-cosine centroid, probe top-nprobe cells,
     // brute-force within probed cells) over the collected fixture
-    val viaIndex = Similarity.ivfTopKIndexed(spark, idx, queries,
+    val viaIndex = Similarity.ivfTopKIndexed(
+      Similarity.openIvfIndex(spark, idx), queries,
         "vec_id", "embedding", k = 5, nprobe = nprobe)
       .orderBy("query_id", "rank").collect()
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("corpus_id"),
@@ -788,10 +814,12 @@ class ExtSpec extends SparkTestBase {
 
     val incIdx = java.nio.file.Files.createTempDirectory("ivf-inc-").toString
     Similarity.buildIvfIndex(first, "vec_id", "embedding", cents, incIdx)
-    Similarity.appendToIvfIndex(spark, incIdx, rest, "vec_id", "embedding")
+    Similarity.appendToIvfIndex(Similarity.openIvfIndex(spark, incIdx),
+      rest, "vec_id", "embedding")
     val fullIdx = java.nio.file.Files.createTempDirectory("ivf-full-").toString
     Similarity.buildIvfIndex(corpus, "vec_id", "embedding", cents, fullIdx)
-    def probe(p: String) = Similarity.ivfTopKIndexed(spark, p, queries,
+    def probe(p: String) = Similarity.ivfTopKIndexed(
+      Similarity.openIvfIndex(spark, p), queries,
       "vec_id", "embedding", k = 5, nprobe = 3)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(probe(incIdx) == probe(fullIdx))
@@ -802,10 +830,12 @@ class ExtSpec extends SparkTestBase {
       m = 4, 0L until 8L)
     val incPq = java.nio.file.Files.createTempDirectory("ivfpq-inc-").toString
     Similarity.buildIvfPqIndex(first, "vec_id", "embedding", cents, cb, incPq)
-    Similarity.appendToIvfPqIndex(spark, incPq, rest, "vec_id", "embedding")
+    Similarity.appendToIvfPqIndex(Similarity.openIvfIndex(spark, incPq),
+      rest, "vec_id", "embedding")
     val fullPq = java.nio.file.Files.createTempDirectory("ivfpq-full-").toString
     Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", cents, cb, fullPq)
-    def probePq(p: String) = Similarity.ivfPqTopKIndexed(spark, p, queries,
+    def probePq(p: String) = Similarity.ivfPqTopKIndexed(
+      Similarity.openIvfIndex(spark, p), queries,
       "vec_id", "embedding", k = 5, nprobe = 3)
       .orderBy("query_id", "rank").collect().map(_.toSeq).toSeq
     assert(probePq(incPq) == probePq(fullPq))
@@ -814,13 +844,15 @@ class ExtSpec extends SparkTestBase {
     // compaction folds the history probe-identically
     val extra = corpus.filter($"vec_id" >= 190)
       .select(($"vec_id" + 10000L).as("vec_id"), $"embedding")
-    Similarity.appendToIvfPqIndex(spark, incPq, extra, "vec_id", "embedding",
+    Similarity.appendToIvfPqIndex(Similarity.openIvfIndex(spark, incPq),
+      extra, "vec_id", "embedding",
       tag = "t1")
     val afterTag = probePq(incPq)
-    Similarity.appendToIvfPqIndex(spark, incPq, extra, "vec_id", "embedding",
+    Similarity.appendToIvfPqIndex(Similarity.openIvfIndex(spark, incPq),
+      extra, "vec_id", "embedding",
       tag = "t1") // replay: must be a no-op
     assert(probePq(incPq) == afterTag, "replayed tagged append double-stored")
-    Similarity.compactIvfPqIndex(spark, incPq)
+    Similarity.compactIvfPqIndex(Similarity.openIvfIndex(spark, incPq))
     assert(probePq(incPq) == afterTag, "PQ compaction changed probe results")
     val segs = new java.io.File(incPq).listFiles()
       .map(_.getName).filter(_.startsWith("seg_")).toSeq
@@ -919,7 +951,8 @@ class ExtSpec extends SparkTestBase {
       s"index schema ${stored.columns.toSeq}")
 
     val queries = corpus.filter($"vec_id" === 42L)
-    val viaIndex = Similarity.ivfPqTopKIndexed(spark, idx, queries,
+    val viaIndex = Similarity.ivfPqTopKIndexed(
+      Similarity.openIvfIndex(spark, idx), queries,
       "vec_id", "embedding", k = 5, nprobe = 2)
     // cell pruning: the probe's explicit multi-path scan reads only the
     // probed cell DIRECTORIES (2 of 8)
@@ -1047,7 +1080,7 @@ class ExtSpec extends SparkTestBase {
     Similarity.buildIvfIndex(emb, "chunk_id", "emb",
       Similarity.centroidsByIds(emb, "chunk_id", "emb",
         (0L until 8L).map(_ * 10000L)), idx)
-    val hits = Similarity.ivfTopKIndexed(spark, idx,
+    val hits = Similarity.ivfTopKIndexed(Similarity.openIvfIndex(spark, idx),
       emb.filter($"chunk_id" === 20000L), "chunk_id", "emb",
       k = 10, nprobe = 2)
     val byDoc = hits.select(expr("corpus_id div 10000").as("doc_id"),
@@ -1087,7 +1120,7 @@ class ExtSpec extends SparkTestBase {
     // round 21: the streaming sinks thread ONE handle through the
     // probe/append/compact loop (cached manifest + centroids + codebooks
     // + segment listings — driver round-trips removed); this pins the
-    // handle path's RESULTS against the per-call path forms on identical
+    // handle path's RESULTS against a fresh handle per call on identical
     // stores, including cache currency across the handle's own mutations
     // (append flips the manifest, compact retires segments).
     val rng = new scala.util.Random(23)
@@ -1099,14 +1132,17 @@ class ExtSpec extends SparkTestBase {
     val queries = head.filter($"vec_id" < 4)
     def run(df: DataFrame) = df.orderBy("query_id", "rank").collect().toSeq
 
-    // IVF: path-form store (control) vs handle-threaded store
+    // IVF: handle-per-call store (control) vs handle-threaded store
     val cents = Similarity.kmeansCentroids(head, "embedding", nlist = 4)
     val pIdx = java.nio.file.Files.createTempDirectory("ivf-h-p-").toString
     Similarity.buildIvfIndex(head, "vec_id", "embedding", cents, pIdx)
-    Similarity.appendToIvfIndex(spark, pIdx, b0, "vec_id", "embedding", "b0")
-    Similarity.compactIvfIndex(spark, pIdx)
-    Similarity.appendToIvfIndex(spark, pIdx, b1, "vec_id", "embedding", "b1")
-    val pGot = run(Similarity.ivfTopKIndexed(spark, pIdx, queries,
+    Similarity.appendToIvfIndex(Similarity.openIvfIndex(spark, pIdx),
+      b0, "vec_id", "embedding", "b0")
+    Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, pIdx))
+    Similarity.appendToIvfIndex(Similarity.openIvfIndex(spark, pIdx),
+      b1, "vec_id", "embedding", "b1")
+    val pGot = run(Similarity.ivfTopKIndexed(
+      Similarity.openIvfIndex(spark, pIdx), queries,
       "vec_id", "embedding", k = 5, nprobe = 2))
     val hIdx = java.nio.file.Files.createTempDirectory("ivf-h-h-").toString
     Similarity.buildIvfIndex(head, "vec_id", "embedding", cents, hIdx)
@@ -1123,7 +1159,7 @@ class ExtSpec extends SparkTestBase {
     assert(hGot === pGot, "IVF handle probe diverged from path form")
     // replay detection still works through the cached manifest
     Similarity.appendToIvfIndex(h, b1, "vec_id", "embedding", "b1")
-    assert(h.liveSegments === Similarity.ivfLiveSegments(spark, hIdx),
+    assert(h.liveSegments === Similarity.openIvfIndex(spark, hIdx).liveSegments,
       "cached manifest drifted from the committed one")
 
     // IVF-PQ: same discipline over the codes store
@@ -1131,10 +1167,13 @@ class ExtSpec extends SparkTestBase {
       m = 4, 0L until 8L)
     val pPq = java.nio.file.Files.createTempDirectory("pq-h-p-").toString
     Similarity.buildIvfPqIndex(head, "vec_id", "embedding", cents, cb, pPq)
-    Similarity.appendToIvfPqIndex(spark, pPq, b0, "vec_id", "embedding", "b0")
-    Similarity.compactIvfPqIndex(spark, pPq)
-    Similarity.appendToIvfPqIndex(spark, pPq, b1, "vec_id", "embedding", "b1")
-    val pPqGot = run(Similarity.ivfPqTopKIndexed(spark, pPq, queries,
+    Similarity.appendToIvfPqIndex(Similarity.openIvfIndex(spark, pPq),
+      b0, "vec_id", "embedding", "b0")
+    Similarity.compactIvfPqIndex(Similarity.openIvfIndex(spark, pPq))
+    Similarity.appendToIvfPqIndex(Similarity.openIvfIndex(spark, pPq),
+      b1, "vec_id", "embedding", "b1")
+    val pPqGot = run(Similarity.ivfPqTopKIndexed(
+      Similarity.openIvfIndex(spark, pPq), queries,
       "vec_id", "embedding", k = 5, nprobe = 2))
     val hPq = java.nio.file.Files.createTempDirectory("pq-h-h-").toString
     Similarity.buildIvfPqIndex(head, "vec_id", "embedding", cents, cb, hPq)

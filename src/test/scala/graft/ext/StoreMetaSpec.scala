@@ -94,12 +94,15 @@ class StoreMetaSpec extends SparkTestBase {
   test("Bm25: empty append is a no-op; index stays readable") {
     val idx = tmp("graft-bm25-empty-")
     Bm25.buildIndex(docs(0 until 8, "alpha beta"), "doc_id", "text", idx)
-    val before = Bm25.topKIndexed(spark, idx, Seq("alpha"), k = 8)
+    val before = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      Seq("alpha"), k = 8)
       .collect().map(_.toSeq).toSeq
-    Bm25.appendToIndex(docs(0 until 0, ""), "doc_id", "text", idx)
+    Bm25.appendToIndex(Bm25.openIndex(spark, idx),
+      docs(0 until 0, ""), "doc_id", "text")
     // no junk delta segment, no df churn, identical probe output
     assert(Bm25.indexStatsDf(spark, idx).head.getAs[Long]("n_docs") == 8L)
-    val after = Bm25.topKIndexed(spark, idx, Seq("alpha"), k = 8)
+    val after = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      Seq("alpha"), k = 8)
       .collect().map(_.toSeq).toSeq
     assert(after == before)
   }
@@ -107,28 +110,33 @@ class StoreMetaSpec extends SparkTestBase {
   test("Bm25: untagged segment names never recycle across compaction") {
     val idx = tmp("graft-bm25-seg-")
     Bm25.buildIndex(docs(0 until 4, "alpha"), "doc_id", "text", idx)
-    Bm25.appendToIndex(docs(4 until 6, "beta"), "doc_id", "text", idx)
-    Bm25.appendToIndex(docs(6 until 8, "gamma"), "doc_id", "text", idx)
+    Bm25.appendToIndex(Bm25.openIndex(spark, idx),
+      docs(4 until 6, "beta"), "doc_id", "text")
+    Bm25.appendToIndex(Bm25.openIndex(spark, idx),
+      docs(6 until 8, "gamma"), "doc_id", "text")
     def deltaDirs() = new java.io.File(idx).listFiles()
       .map(_.getName).filter(_.startsWith("postings_d")).sorted.toSeq
     assert(deltaDirs() == Seq("postings_d0", "postings_d1"))
-    Bm25.compactIndex(spark, idx)
+    Bm25.compactIndex(Bm25.openIndex(spark, idx))
     // post-compaction, the next append must NOT reuse postings_d0 (the
     // retired dir survives the grace window on disk)
-    Bm25.appendToIndex(docs(8 until 10, "delta"), "doc_id", "text", idx)
+    Bm25.appendToIndex(Bm25.openIndex(spark, idx),
+      docs(8 until 10, "delta"), "doc_id", "text")
     val st = Bm25.indexStatsDf(spark, idx).head
     assert(st.getAs[scala.collection.Seq[String]]("delta_dirs").toSeq ==
       Seq("postings_d2"))
     assert(st.getAs[Long]("n_docs") == 10L)
     // append == rebuild still bit-for-bit after the compact+append cycle
-    val viaIndex = Bm25.topKIndexed(spark, idx, Seq("alpha", "delta"), k = 10)
+    val viaIndex = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
+      Seq("alpha", "delta"), k = 10)
       .collect().map(_.toSeq).toSeq
     val idx2 = tmp("graft-bm25-seg2-")
     Bm25.buildIndex(docs(0 until 4, "alpha")
         .union(docs(4 until 6, "beta")).union(docs(6 until 8, "gamma"))
         .union(docs(8 until 10, "delta")),
       "doc_id", "text", idx2)
-    val rebuilt = Bm25.topKIndexed(spark, idx2, Seq("alpha", "delta"), k = 10)
+    val rebuilt = Bm25.topKIndexed(Bm25.openIndex(spark, idx2),
+      Seq("alpha", "delta"), k = 10)
       .collect().map(_.toSeq).toSeq
     assert(viaIndex == rebuilt)
   }
@@ -142,16 +150,20 @@ class StoreMetaSpec extends SparkTestBase {
     def seg(n: Long) = (100 * n until 100 * n + 3).map(i =>
       (i, s"totally new content batch $n row $i unique words here"))
       .toDF("doc_id", "text")
-    Dedup.appendToMinhashIndex(spark, idx, seg(1), "text", "doc_id")
-    Dedup.appendToMinhashIndex(spark, idx, seg(2), "text", "doc_id")
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, idx),
+      seg(1), "text", "doc_id")
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, idx),
+      seg(2), "text", "doc_id")
     def segDirs() = new java.io.File(idx).listFiles()
       .map(_.getName).filter(_.startsWith("seg_")).sorted.toSeq
     assert(segDirs() == Seq("seg_0", "seg_1", "seg_base"))
-    Dedup.compactMinhashIndex(spark, idx)
-    Dedup.appendToMinhashIndex(spark, idx, seg(3), "text", "doc_id")
+    Dedup.compactMinhashIndex(Dedup.openMinhashIndex(spark, idx))
+    Dedup.appendToMinhashIndex(Dedup.openMinhashIndex(spark, idx),
+      seg(3), "text", "doc_id")
     // seg_2 (counter), never seg_0/seg_1 again
     assert(segDirs().contains("seg_2"))
-    assert(Dedup.minhashIndexKeys(spark, idx).select("doc_id").distinct()
+    assert(Dedup.minhashIndexKeys(
+      Dedup.openMinhashIndex(spark, idx)).select("doc_id").distinct()
       .count() == (6 + 9).toLong)
   }
 }

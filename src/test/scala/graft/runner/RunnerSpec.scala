@@ -664,6 +664,18 @@ class RunnerSpec extends SparkTestBase {
     assert(!(Runner(spark, store) eq a))
   }
 
+  test("Runner factory defaults to the configured store URI") {
+    Runner.reset()
+    val store = newStoreDir()
+    // the environment injection GraphConfig.load reads (as in CliSpec)
+    sys.props("graft.env.GRAFT_STORE_URI") = store
+    try assert(Runner(spark).storeUri == store)
+    finally {
+      sys.props.remove("graft.env.GRAFT_STORE_URI")
+      Runner.reset()
+    }
+  }
+
   // ---------------- failed-status bookkeeping ----------------
 
   test("failures are recorded in status.json") {

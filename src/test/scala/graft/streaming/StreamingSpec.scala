@@ -590,15 +590,17 @@ class StreamingSpec extends SparkTestBase {
       sink, tmp("graft-ingest-ck-"), threshold = 0.9)
     val streamed = spark.read.parquet(sink)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    val single = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(spark,
-        idx2, (b0 ++ b1).toDF("doc_id", "text"), "text", "doc_id",
+    val single = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(
+        graft.ext.Dedup.openMinhashIndex(spark, idx2),
+        (b0 ++ b1).toDF("doc_id", "text"), "text", "doc_id",
         threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(streamed == single)
     assert(streamed == Set((3L, 2000L), (7L, 3000L), (2001L, 3001L)))
     // the mutation is real: a later probe of idx1 sees the ingested docs
-    val late = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(spark,
-        idx1, Seq((9000L, b1(2)._2)).toDF("doc_id", "text"),
+    val late = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(
+        graft.ext.Dedup.openMinhashIndex(spark, idx1),
+        Seq((9000L, b1(2)._2)).toDF("doc_id", "text"),
         "text", "doc_id", threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(late == Set((3002L, 9000L)))
@@ -713,8 +715,10 @@ class StreamingSpec extends SparkTestBase {
     // and the final standing query equals the batch build over everything
     def canon(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(canon(graft.ext.Bm25.topKIndexed(spark, idx, terms, k = 12)) ==
-      canon(graft.ext.Bm25.topKIndexed(spark, idxFull, terms, k = 12)))
+    assert(canon(graft.ext.Bm25.topKIndexed(
+        graft.ext.Bm25.openIndex(spark, idx), terms, k = 12)) ==
+      canon(graft.ext.Bm25.topKIndexed(graft.ext.Bm25.openIndex(spark, idxFull),
+        terms, k = 12)))
   }
 
   test("sharded export sink: contiguous per-shard layout, exactly-once restart") {
@@ -1091,7 +1095,8 @@ class StreamingSpec extends SparkTestBase {
     def sinkPairs() = spark.read.parquet(sink)
       .select(col("batch_id").cast("long"), col("id_a"), col("id_b"))
       .as[(Long, Long, Long)].collect().toSet
-    def shingleCount() = graft.ext.Dedup.minhashIndexShingles(spark, idx).count()
+    def shingleCount() = graft.ext.Dedup.minhashIndexShingles(
+      graft.ext.Dedup.openMinhashIndex(spark, idx)).count()
     val before = sinkPairs()
     // disjoint vocabularies → exactly the planted copies, including the
     // CROSS-BATCH pair (101, 201) that only an accumulated index can see
@@ -1113,8 +1118,9 @@ class StreamingSpec extends SparkTestBase {
     assert(sinkPairs() == before, "replay altered the sink")
     // a fresh probe over the final index still verifies exactly (shingle
     // store uncorrupted): a copy of head doc 3 matches only head doc 3
-    val post = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(spark,
-        idx, Seq(doc(9999L, "h3")).toDF("doc_id", "text"), "text", "doc_id",
+    val post = releasing(graft.ext.Dedup.minhashDedupAgainstIndex(
+        graft.ext.Dedup.openMinhashIndex(spark, idx),
+        Seq(doc(9999L, "h3")).toDF("doc_id", "text"), "text", "doc_id",
         threshold = 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet)
     assert(post == Set((3L, 9999L)))
@@ -1154,7 +1160,8 @@ class StreamingSpec extends SparkTestBase {
     def sinkPairs() = spark.read.parquet(sink)
       .select(col("batch_id").cast("long"), col("id_a"), col("id_b"))
       .as[(Long, Long, Long)].collect().toSet
-    def shingleCount() = graft.ext.Dedup.minhashIndexShingles(spark, idx).count()
+    def shingleCount() = graft.ext.Dedup.minhashIndexShingles(
+      graft.ext.Dedup.openMinhashIndex(spark, idx)).count()
     val expected = Set((0L, 0L, 100L), (1L, 1L, 200L), (1L, 101L, 201L),
       (2L, 2L, 300L))
     assert(sinkPairs() == expected,
@@ -1215,8 +1222,8 @@ class StreamingSpec extends SparkTestBase {
       .as[(Long, Long, Long)].collect().toSet
     assert(pairs == Set((0L, 0L, 100L), (1L, 1L, 200L), (1L, 101L, 201L)),
       "file-count policy changed the dedup ledger")
-    assert(graft.ext.Dedup.minhashIndexShingles(spark, idx).count() ==
-      (12 + 6).toLong)
+    assert(graft.ext.Dedup.minhashIndexShingles(
+      graft.ext.Dedup.openMinhashIndex(spark, idx)).count() == (12 + 6).toLong)
   }
 
   /** Runs the per-source quota sink over `batches` (one file-stream
@@ -1368,9 +1375,10 @@ class StreamingSpec extends SparkTestBase {
       (0L, 101L, 1L, 1L), (0L, 101L, 5L, 2L),
       (1L, 200L, 0L, 1L), (1L, 200L, 4L, 2L), (1L, 200L, 100L, 3L)),
       s"unexpected ledger $before")
-    assert(Similarity.ivfLiveSegments(spark, idx) == List("seg_c1"),
+    assert(Similarity.openIvfIndex(spark, idx).liveSegments == List("seg_c1"),
       "expected one folded generation after per-batch auto-compaction")
-    def storeCount() = Similarity.prunedCorpusScan(spark, idx, 0 until 4)
+    def storeCount() = Similarity.prunedCorpusScan(
+      Similarity.openIvfIndex(spark, idx), 0 until 4)
       .count()
     assert(storeCount() == 11L)
     // forced replay of batch 1 — its segment is already folded away
@@ -1390,13 +1398,15 @@ class StreamingSpec extends SparkTestBase {
     // replayed probe against recentred cells could emit different
     // verdicts than its first attempt. Plain compaction stays allowed
     // either way — it preserves assignments and is replay-exact.
-    Similarity.compactIvfIndex(spark, idx, recentre = true,
+    Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, idx),
+      recentre = true,
       quiesceCheckpoint = Some(ckpt))
     java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
     val e = intercept[IllegalArgumentException] {
-      Similarity.compactIvfIndex(spark, idx, recentre = true,
+      Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, idx),
+        recentre = true,
         quiesceCheckpoint = Some(ckpt))
     }
     assert(e.getMessage.contains("recentre refused"))
@@ -1405,10 +1415,12 @@ class StreamingSpec extends SparkTestBase {
     // quiesceCheckpoint must refuse too (the r19 guard was opt-in and
     // the default path kept the hazard reachable)
     val e2 = intercept[IllegalArgumentException] {
-      Similarity.compactIvfIndex(spark, idx, recentre = true)
+      Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, idx),
+        recentre = true)
     }
     assert(e2.getMessage.contains("recentre refused"))
-    Similarity.compactIvfIndex(spark, idx, recentre = false,
+    Similarity.compactIvfIndex(Similarity.openIvfIndex(spark, idx),
+      recentre = false,
       quiesceCheckpoint = Some(ckpt)) // assignment-preserving: always ok
   }
 
@@ -1467,7 +1479,8 @@ class StreamingSpec extends SparkTestBase {
       (1L, 202L, true, false, 40L, true)), // de budget independent
       s"unexpected verdicts $before")
     // the curated index = head + admitted only (100 and 202)
-    val shingles = graft.ext.Dedup.minhashIndexShingles(spark, idx).count()
+    val shingles = graft.ext.Dedup.minhashIndexShingles(
+      graft.ext.Dedup.openMinhashIndex(spark, idx)).count()
     assert(shingles == 4L, s"index must hold head(2) + admitted(2), got $shingles")
     // forced replay of batch 1
     java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "commits", "1"))
@@ -1475,7 +1488,8 @@ class StreamingSpec extends SparkTestBase {
       java.nio.file.Paths.get(ckpt, "commits", ".1.crc"))
     run()
     assert(verdicts() == before, "replay altered the curation verdicts")
-    assert(graft.ext.Dedup.minhashIndexShingles(spark, idx).count() == 4L,
+    assert(graft.ext.Dedup.minhashIndexShingles(
+      graft.ext.Dedup.openMinhashIndex(spark, idx)).count() == 4L,
       "replay double-appended the curated corpus")
   }
 
@@ -1638,7 +1652,7 @@ class StreamingSpec extends SparkTestBase {
       (0L, 101L, 1L, 1L), (0L, 101L, 5L, 2L),
       (1L, 200L, 0L, 1L), (1L, 200L, 4L, 2L), (1L, 200L, 100L, 3L)),
       s"unexpected PQ ledger $before")
-    assert(Similarity.ivfLiveSegments(spark, idx) == List("seg_c1"),
+    assert(Similarity.openIvfIndex(spark, idx).liveSegments == List("seg_c1"),
       "expected one folded generation after per-batch auto-compaction")
     def storeCount() = spark.read.parquet(s"$idx/seg_c1").count()
     assert(storeCount() == 11L)
@@ -1681,7 +1695,7 @@ class StreamingSpec extends SparkTestBase {
         .select(col("batch_id").cast("long"), col("rank"), col("doc_id"),
           col("score_u6"))
         .as[(Long, Long, Long, Long)].collect().toSet
-      (pairs, graft.ext.Bm25.deltaSegmentCount(spark, store))
+      (pairs, graft.ext.Bm25.openIndex(spark, store).deltaSegments)
     }
     val (base, baseDeltas) = run(ac = 0)
     val (compacted, compactedDeltas) = run(ac = 1)
