@@ -475,21 +475,27 @@ object Dedup {
       private[ext] val spark: org.apache.spark.sql.SparkSession,
       val path: String) {
     private[ext] var meta: MinhashMeta = readMinhashMeta(spark, path)
-    private val shingleDfs =
+    // keyed by a live-segment list, which every commit replaces
+    private[ext] val shingleDfs =
       scala.collection.mutable.HashMap.empty[Seq[String], DataFrame]
     /** The manifest's live segment list — what probes read and an
       * auto-compaction policy thresholds on. */
     def liveSegments: List[String] = meta.segs.live
     /** Commit `m` as the store's meta row and keep it as this handle's
-      * manifest. */
+      * manifest; the caches of segments it retires are dropped. */
     private[ext] def commit(m: MinhashMeta): Unit = {
-      writeMinhashMeta(spark, path, m); meta = m
+      writeMinhashMeta(spark, path, m)
+      liveSegments.diff(m.segs.live).foreach { s =>
+        segBuckets.remove(s); segFileCounts.remove(s)
+      }
+      shingleDfs.clear()
+      meta = m
     }
     /** Re-read the manifest and drop cached segment scans — required only
       * after a DIFFERENT writer mutated the store. */
     def refresh(): Unit = {
       meta = readMinhashMeta(spark, path)
-      segBuckets.clear(); shingleDfs.clear()
+      segBuckets.clear(); segFileCounts.clear(); shingleDfs.clear()
     }
     // cached per-segment parquet FILE counts (same immutability argument
     // as the bucket listings): what a file-count auto-compaction policy
@@ -497,7 +503,7 @@ object Dedup {
     // than segment COUNT — 100 one-row appends are 100 segments but
     // ~hundreds of tiny files, and per-file open cost is what makes the
     // pre-compaction probe slope (the r17 maint decades measured it).
-    private val segFileCounts =
+    private[ext] val segFileCounts =
       scala.collection.mutable.HashMap.empty[String, Long]
     private[ext] def filesOf(seg: String): Long =
       segFileCounts.getOrElseUpdate(seg, {
@@ -522,7 +528,7 @@ object Dedup {
     // is immutable, so its set of bucket= dirs is listed ONCE per handle
     // life — the bucket-pruned multi-path reads below select directories
     // from this map instead of re-listing the store per probe
-    private val segBuckets =
+    private[ext] val segBuckets =
       scala.collection.mutable.HashMap.empty[String, Array[Int]]
     private[ext] def bucketsOf(seg: String): Array[Int] =
       segBuckets.getOrElseUpdate(seg, {

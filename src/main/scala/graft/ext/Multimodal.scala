@@ -420,28 +420,6 @@ object Multimodal {
     df.sparkSession.createDataFrame(out, schema)
   }
 
-  /** PERMISSIVE WAV parse — audio twin of [[withImageMetaPermissive]]:
-    * unparseable payloads emit null metadata + the parse error instead of
-    * failing the task. */
-  def withAudioMetaPermissive(df: DataFrame, idCol: String, binCol: String,
-                              batchSize: Int = 64): DataFrame = {
-    val schema = StructType(Seq(
-      StructField(idCol, LongType, nullable = false),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("channels", IntegerType, nullable = true),
-      StructField("n_samples", LongType, nullable = true),
-      StructField("rms", DoubleType, nullable = true),
-      StructField("error", StringType, nullable = true)))
-    mapBatched(df, idCol, binCol, schema, batchSize)(_.map { bytes =>
-      try Right(MediaCodecs.decodeWav(bytes))
-      catch { case e: Exception => Left(String.valueOf(e.getMessage)) }
-    }) {
-      case (id, Right(m)) =>
-        Row(id, m.sampleRate, m.channels, m.nSamples, m.rms, null)
-      case (id, Left(err)) => Row(id, null, null, null, null, err)
-    }
-  }
-
   /** REAL frame sampling over a concatenated-PNG stream: frame count by
     * signature scan, first-frame dims by decoding it. */
   def withFrameStats(df: DataFrame, idCol: String, binCol: String,

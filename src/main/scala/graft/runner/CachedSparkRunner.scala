@@ -75,7 +75,7 @@ class CachedSparkRunner(
     if (local.exists(_.state == OpState.Completed)) return local.get
     val remote = sharedDir(op).resolve("status.json")
     if (Files.exists(remote)) {
-      val st = OpStatus.fromJson(Json.parse(Files.readString(remote)))
+      val st = OpStatus.read(op.uuid, remote)
       if (st.state == OpState.Completed) {
         Files.createDirectories(localPath.getParent)
         replaceAtomic(remote, localPath)
@@ -89,7 +89,7 @@ class CachedSparkRunner(
     val local = Paths.get(storeUri, cls, hash, "status.json")
     val remote = Paths.get(sharedUri, cls, hash, "status.json")
     if (!Files.exists(local) && Files.exists(remote)) {
-      val st = OpStatus.fromJson(Json.parse(Files.readString(remote)))
+      val st = OpStatus.read(uuid, remote)
       if (st.state == OpState.Completed) {
         Files.createDirectories(local.getParent)
         replaceAtomic(remote, local)
@@ -98,11 +98,7 @@ class CachedSparkRunner(
         // `running`/`failed` would shadow the remote's later completion
         // (status() prefers local only once it's completed, but uuidToOp
         // must not plant transient local state either).
-        val graph = st.graph.getOrElse(throw new IllegalStateException(
-          s"status for $uuid has no graph"))
-        return Graph.deserialize(graph).find(_.uuid == uuid)
-          .getOrElse(throw new IllegalStateException(
-            s"graph in status for $uuid does not contain it"))
+        return st.op(uuid)
       }
     }
     super.uuidToOp(uuid)

@@ -78,59 +78,20 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     lengthMemo.clear()
   }
 
-  /** Row count of an op's result, structurally: column ops are positional
-    * value maps, so their length IS their input's length — resolved by
-    * recursion down to the owning dataset with NO Spark job; only genuinely
-    * length-defining ops (loads, TakeRows, MaskRows) ever count, once,
-    * memoized. Collapses the reference's per-op length validations
+  /** Row count of an op's result, structurally: a [[RowAligned]] op keeps
+    * one row per row of its first dataset or column dependency, so its
+    * length IS that input's length — resolved by recursion down to the
+    * owning dataset with NO Spark job; only genuinely length-defining ops
+    * (loads, TakeRows, MaskRows, ...) ever count, once, memoized.
+    * Collapses the reference's per-op length validations
     * (`local_arrow_runner.py:818-836`) from one full lineage scan per check
     * to at most one count per distinct dataset — and same-dataset checks
     * (the common case) become free structural equalities.
     */
   def lengthOf(op: OpSpec): Long = op match {
-    case sel: SelectColumnOp => lengthOf(sel.dataset)
-    case CategoryToBooleanOp(in, _, _) => lengthOf(in)
-    case BooleanLogicOp(_, l, _) => lengthOf(l)
-    case ParseJSONColumnOp(t) => lengthOf(t)
-    case VectorToScalarOp(in, _) => lengthOf(in)
-    case PairwiseArithmeticOp(_, l, _) => lengthOf(l)
-    case t: JinjaTemplatizeOp if t.context.nonEmpty =>
-      lengthOf(t.context(t.context.keys.min))
-    case _: JinjaTemplatizeOp => 1L
-    case AssignTrainTestSplitOp(ds, _, _, _) => lengthOf(ds)
-    case AssignRowIDOp(ds) => lengthOf(ds)
-    case p: ClassifierPredictOp => lengthOf(p.x)
-    case p: MulticlassPredictOp => lengthOf(p.x)
-    case h: HashedTfEmbeddingOp => lengthOf(h.text)
-    case a: LLMLayerActivationsOp => lengthOf(a.text)
-    case l: LLMLogitScoresOp => lengthOf(l.text)
-    case g: LLMGenerateTextOp => lengthOf(g.prompt)
-    case v: UMAPVizOp => lengthOf(v.inputEmbedding)
-    case v: SpectralVizOp => lengthOf(v.inputEmbedding)
-    case v: UmapLayoutOp => lengthOf(v.inputEmbedding)
-    case v: KMeansClusterOp => lengthOf(v.vectors)
-    case p: PrototypeDropOp => lengthOf(p.vectors)
-    case t: TokenBudgetKeepOp => lengthOf(t.group)
-    case k: KeepBestPerClusterOp => lengthOf(k.priority)
-    case b: BloomMembershipOp => lengthOf(b.value)
-    case e: EpochShardOp => lengthOf(e.dataset)
     case g: GroupedOp => lengthOf(g.ops.last)
-    case RedactPIIColumnOp(t) => lengthOf(t)
-    case t: TokenCountOp => lengthOf(t.text)
-    case q: QualityScoreOp => lengthOf(q.text)
-    case l: LanguageIdOp => lengthOf(l.text)
-    case f: FingerprintOp => lengthOf(f.text)
-    case g: GopherKeepOp => lengthOf(g.text)
-    case c: ContaminationFlagOp => lengthOf(c.text)
-    case l: LmPerplexityOp => lengthOf(l.text)
-    case c: CcnetBucketsOp => lengthOf(c.text)
-    case p: PackSequencesOp => lengthOf(p.tokens)
-    case b: BpeTokenizeOp => lengthOf(b.text)
-    case u: UnigramTokenizeOp => lengthOf(u.text)
-    case m: ImageMetaOp => lengthOf(m.image)
-    case rz: ImageResizeOp => lengthOf(rz.image)
-    case e: ImageEmbedOp => lengthOf(e.image)
-    case a: AudioMetaOp => lengthOf(a.audio)
+    case t: JinjaTemplatizeOp if t.context.isEmpty => 1L
+    case r: RowAligned => lengthOf(r.rowSource)
     case _ =>
       // get-then-putIfAbsent (NOT computeIfAbsent: the count materializes
       // dependencies, which may re-enter this memo on other keys); a racing
@@ -183,7 +144,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
 
   def status(op: OpSpec): OpStatus = {
     val p = statusPath(op)
-    if (Files.exists(p)) OpStatus.fromJson(Json.parse(Files.readString(p)))
+    if (Files.exists(p)) OpStatus.read(op.uuid, p)
     else OpStatus(op.uuid,
       if (op.isEphemeral) OpState.Ephemeral else OpState.New)
   }
@@ -250,13 +211,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     val p = Paths.get(storeUri, cls, hash, "status.json")
     if (!Files.exists(p))
       throw new NoSuchElementException(s"no status for $uuid in store $storeUri")
-    val st = OpStatus.fromJson(Json.parse(Files.readString(p)))
-    val graph = st.graph.getOrElse(
-      throw new IllegalStateException(s"status for $uuid has no graph"))
-    Graph.deserialize(graph)
-      .find(_.uuid == uuid)
-      .getOrElse(throw new IllegalStateException(
-        s"graph in status for $uuid does not contain it"))
+    OpStatus.read(uuid, p).op(uuid)
   }
 
   /** All op UUIDs present in the store (for CLI status/summary). */
@@ -1497,15 +1452,18 @@ object LocalSparkRunner {
 
   // dispatch by exact op class, checked before erroring — the Scala
   // rendering of the reference's annotation-dispatched `@implementation`
-  // decorator (`base_runner.py:261-300`). Built-in ops keep their match
-  // cases; registration cannot shadow them.
+  // decorator (`base_runner.py:261-300`)
   private val customImpls =
     scala.collection.concurrent.TrieMap.empty[Class[_], OpImpl]
 
-  /** Register an implementation for a CUSTOM OpSpec class (pair it with
-    * `OpRegistry.register` so graphs containing the op also deserialize). */
-  def registerImplementation(cls: Class[_ <: OpSpec])(f: OpImpl): Unit =
+  /** Register a CUSTOM op class: its implementation here and its class with
+    * the graph decoder, so graphs containing the op also deserialize. A
+    * class named like a built-in op is rejected (the store keys results by
+    * simple class name). */
+  def registerImplementation(cls: Class[_ <: OpSpec])(f: OpImpl): Unit = {
+    OpRegistry.register(cls)
     customImpls(cls) = f
+  }
 
   private[runner] def implementationFor(cls: Class[_]): Option[OpImpl] =
     customImpls.get(cls)

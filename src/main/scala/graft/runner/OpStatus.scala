@@ -35,9 +35,26 @@ final case class OpStatus(
     "error" -> error.map(JString(_): JValue).getOrElse(JNull),
     "result_format" -> resultFormat.map(JString(_): JValue).getOrElse(JNull),
     "graph" -> graph.getOrElse(JNull))
+
+  /** Op `uuid` rebuilt from the graph this status embeds. */
+  def op(uuid: String): OpSpec = {
+    val g = graph.getOrElse(
+      throw new IllegalStateException(s"status for $uuid has no graph"))
+    Graph.deserialize(g).find(_.uuid == uuid).getOrElse(
+      throw new IllegalStateException(s"graph in status for $uuid does not contain it"))
+  }
 }
 
 object OpStatus {
+  /** Read op `uuid`'s status file `p`; a truncated or corrupt file is an
+    * error naming both. */
+  def read(uuid: String, p: java.nio.file.Path): OpStatus =
+    try fromJson(Json.parse(java.nio.file.Files.readString(p)))
+    catch {
+      case scala.util.control.NonFatal(e) => throw new IllegalStateException(
+        s"corrupt status for $uuid at $p: ${e.getMessage}", e)
+    }
+
   def fromJson(v: JValue): OpStatus = v match {
     case o: JObj =>
       def opt(n: String): Option[String] = o.get(n) match {

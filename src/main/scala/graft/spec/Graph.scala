@@ -1,5 +1,6 @@
 package graft.spec
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.immutable.ListMap
 
 final class UUIDMismatchException(val expected: String, val actual: OpSpec)
@@ -70,14 +71,7 @@ object Graph {
       inProgress += uuid
       val node = nodesData.getOrElse(uuid,
         throw new IllegalArgumentException(s"Node with UUID $uuid not found in graph data"))
-      val tpe = node("type") match {
-        case JString(s) => s
-        case other => throw new IllegalArgumentException(s"bad type field $other")
-      }
-      val dec = OpRegistry.decoderFor(tpe).getOrElse(
-        throw new IllegalArgumentException(
-          s"Class with name $tpe not found in OpSpec registry"))
-      val op = dec(node, construct)
+      val op = OpRegistry.decode(node, construct)
       if (op.uuid != uuid) throw new UUIDMismatchException(uuid, op)
       inProgress -= uuid
       built(uuid) = op
@@ -172,416 +166,146 @@ object Graph {
   }
 }
 
-/** Per-op JSON decoders: the deserialization half of the spec layer. Explicit
-  * registration doubles as the extension point for user-defined ops (the
-  * reference finds classes by a subclass-tree name search,
-  * `op_spec.py:738-766`; a registry is the idiomatic JVM equivalent).
+/** Graph decoding: the deserialization half of the spec layer. An op's
+  * primary-constructor fields are its whole definition (the encoder walks
+  * them, [[OpSpec.fieldPairs]]), so one decoder serves every op class: it
+  * reads each field from the snake_case key the encoder wrote, checks its
+  * JSON kind against the constructor parameter's type, and rebuilds the op
+  * through [[OpSpec.construct]] (reference `op_spec.py:738-766` finds the
+  * class by name and validates the same fields). A type name resolves to a
+  * concrete op case class in `graft.spec`, or to a custom op class
+  * registered through `LocalSparkRunner.registerImplementation`.
   */
 object OpRegistry {
 
-  type Resolve = String => OpSpec
-  type Decoder = (JObj, Resolve) => OpSpec
+  import scala.reflect.runtime.{universe => ru}
 
-  // ---------- field decode helpers ----------
+  // (field path, JSON value, uuid resolver) => field value
+  private type Read = (String, JValue, String => OpSpec) => Any
+  private final case class Field(name: String, optional: Boolean, read: Read)
 
-  private def bad(n: String, v: JValue, want: String): Nothing =
-    throw new IllegalArgumentException(s"field '$n': expected $want, got $v")
+  private val custom = TrieMap.empty[String, Class[_ <: OpSpec]]
+  private val fieldCache = TrieMap.empty[Class[_], Seq[Field]]
 
-  def str(o: JObj, n: String): String =
-    o(n) match { case JString(s) => s; case v => bad(n, v, "string") }
-  def lng(o: JObj, n: String): Long = o(n) match {
-    case JLong(l) => l
-    case JDouble(d) if d.isWhole => d.toLong
-    case v => bad(n, v, "integer")
+  /** The built-in op class named `typeName`, if `graft.spec.<typeName>` is
+    * a concrete op case class. */
+  private def builtIn(typeName: String): Option[Class[_ <: OpSpec]] = {
+    val loaded =
+      if (typeName.isEmpty || !typeName.forall(Character.isJavaIdentifierPart)) None
+      else try Some(Class.forName(s"graft.spec.$typeName", false, getClass.getClassLoader))
+      catch { case _: ClassNotFoundException | _: LinkageError => None }
+    loaded.filter(isOpCaseClass).map(_.asSubclass(classOf[OpSpec]))
   }
-  def dbl(o: JObj, n: String): Double = o(n) match {
-    case JDouble(d) => d; case JLong(l) => l.toDouble; case v => bad(n, v, "number")
-  }
-  def bool(o: JObj, n: String): Boolean =
-    o(n) match { case JBool(b) => b; case v => bad(n, v, "boolean") }
-  def optStr(o: JObj, n: String): Option[String] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JString(s)) => Some(s)
-    case Some(v) => bad(n, v, "string or null")
-  }
-  def optLng(o: JObj, n: String): Option[Long] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JLong(l)) => Some(l)
-    case Some(v) => bad(n, v, "integer or null")
-  }
-  def optDbl(o: JObj, n: String): Option[Double] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JDouble(d)) => Some(d)
-    case Some(JLong(l)) => Some(l.toDouble)
-    case Some(v) => bad(n, v, "number or null")
-  }
-  def optAnyNum(o: JObj, n: String): Option[Any] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JLong(l)) => Some(l)
-    case Some(JDouble(d)) => Some(d)
-    case Some(v) => bad(n, v, "number or null")
-  }
-  def optStrSeq(o: JObj, n: String): Option[Seq[String]] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JArr(items)) => Some(items.map {
-      case JString(s) => s; case v => bad(n, v, "string")
-    })
-    case Some(v) => bad(n, v, "array or null")
-  }
-  def anySeq(o: JObj, n: String): Seq[Any] = o(n) match {
-    case JArr(items) => items.map(Json.toScala)
-    case v => bad(n, v, "array")
-  }
-  def strSeq(o: JObj, n: String): Seq[String] = o(n) match {
-    case JArr(items) => items.map {
-      case JString(s) => s
-      case v => bad(n, v, "string")
+
+  /** Register a custom op class for decoding. The store keys results by
+    * simple class name, so a name a built-in op or another registered class
+    * already holds is rejected. */
+  private[graft] def register(cls: Class[_ <: OpSpec]): Unit = {
+    val name = cls.getSimpleName
+    if (builtIn(name).isDefined) throw new IllegalArgumentException(
+      s"custom op ${cls.getName} has the name of the built-in op $name")
+    fields(cls)
+    custom.putIfAbsent(name, cls).filter(_ != cls).foreach { prior =>
+      throw new IllegalArgumentException(
+        s"custom op ${cls.getName} has the name of the registered op ${prior.getName}")
     }
-    case v => bad(n, v, "array")
   }
-  def strSeqSeq(o: JObj, n: String): Seq[Seq[String]] = o(n) match {
-    case JArr(items) => items.map {
-      case JArr(inner) => inner.map {
-        case JString(s) => s
-        case v => bad(n, v, "string")
-      }: Seq[String]
-      case v => bad(n, v, "array")
+
+  /** Rebuild one serialized node; `resolve` maps a dependency uuid to its
+    * already-decoded op. */
+  def decode(node: JObj, resolve: String => OpSpec): OpSpec = {
+    val typeName = node.get("type") match {
+      case Some(JString(s)) => s
+      case other => throw new IllegalArgumentException(s"bad type field $other")
     }
-    case v => bad(n, v, "array")
-  }
-  def lngSeq(o: JObj, n: String): Seq[Long] = o(n) match {
-    case JArr(items) => items.map {
-      case JLong(l) => l
-      case JDouble(d) if d.isWhole => d.toLong
-      case v => bad(n, v, "integer")
+    val cls = custom.get(typeName).orElse(builtIn(typeName)).getOrElse(
+      throw new IllegalArgumentException(
+        s"Class with name $typeName not found in OpSpec registry"))
+    val args = fields(cls).map { f =>
+      node.get(f.name) match {
+        case Some(v) => f.read(s"$typeName.${f.name}", v, resolve)
+        case None if f.optional => None
+        case None => throw new IllegalArgumentException(
+          s"field '$typeName.${f.name}' is missing")
+      }
     }
-    case v => bad(n, v, "array")
-  }
-  def anyMap(o: JObj, n: String): Map[String, Any] = o(n) match {
-    case JObj(fields) => fields.map { case (k, v) => (k, Json.toScala(v)) }.toMap
-    case v => bad(n, v, "object")
-  }
-  def optAnyMap(o: JObj, n: String): Option[Map[String, Any]] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JObj(fields)) =>
-      Some(fields.map { case (k, v) => (k, Json.toScala(v)) }.toMap)
-    case Some(v) => bad(n, v, "object or null")
-  }
-  def dblMap(o: JObj, n: String): Map[String, Double] = o(n) match {
-    case JObj(fields) => fields.map {
-      case (k, JDouble(d)) => (k, d)
-      case (k, JLong(l)) => (k, l.toDouble)
-      case (k, v) => bad(s"$n.$k", v, "number")
-    }.toMap
-    case v => bad(n, v, "object")
-  }
-  def colSeqMap(o: JObj, n: String): Map[String, Seq[Any]] = o(n) match {
-    case JObj(fields) => fields.map {
-      case (k, JArr(items)) => (k, items.map(Json.toScala): Seq[Any])
-      case (k, v) => bad(s"$n.$k", v, "array")
-    }.toMap
-    case v => bad(n, v, "object")
-  }
-  def op[T <: OpSpec](o: JObj, n: String, r: Resolve): T =
-    (o(n) match {
-      case JString(u) => r(u)
-      case v => bad(n, v, "uuid string")
-    }).asInstanceOf[T]
-  def optOp[T <: OpSpec](o: JObj, n: String, r: Resolve): Option[T] = o.get(n) match {
-    case None | Some(JNull) => None
-    case Some(JString(u)) => Some(r(u).asInstanceOf[T])
-    case Some(v) => bad(n, v, "uuid string or null")
-  }
-  def opSeq(o: JObj, n: String, r: Resolve): Seq[OpSpec] = o(n) match {
-    case JArr(items) => items.map {
-      case JString(u) => r(u); case v => bad(n, v, "uuid string")
-    }
-    case v => bad(n, v, "array")
-  }
-  def opMap[T <: OpSpec](o: JObj, n: String, r: Resolve): Map[String, T] = o(n) match {
-    case JObj(fields) => fields.map {
-      case (k, JString(u)) => (k, r(u).asInstanceOf[T])
-      case (k, v) => bad(s"$n.$k", v, "uuid string")
-    }.toMap
-    case v => bad(n, v, "object")
+    OpSpec.construct(cls, args.toArray)
   }
 
-  // ---------- the registry ----------
+  private def isOpCaseClass(cls: Class[_]): Boolean =
+    classOf[OpSpec].isAssignableFrom(cls) &&
+      !java.lang.reflect.Modifier.isAbstract(cls.getModifiers) &&
+      synchronized(ru.runtimeMirror(cls.getClassLoader).classSymbol(cls).isCaseClass)
 
-  // user-registered decoders for CUSTOM op types (the deserialization half
-  // of the reference's extension story — a custom op needs this plus a
-  // runner implementation, LocalSparkRunner.registerImplementation)
-  private val custom =
-    scala.collection.concurrent.TrieMap.empty[String, Decoder]
+  // runtime reflection runs under the object lock; decoding afterwards
+  // touches only the cached readers
+  private def fields(cls: Class[_]): Seq[Field] =
+    fieldCache.getOrElse(cls, synchronized(fieldCache.getOrElseUpdate(cls, {
+      if (!isOpCaseClass(cls)) throw new IllegalArgumentException(
+        s"${cls.getName} is not a concrete op case class")
+      val mirror = ru.runtimeMirror(cls.getClassLoader)
+      mirror.classSymbol(cls).primaryConstructor.asMethod.paramLists.head.map { p =>
+        val t = p.typeSignature
+        Field(OpSpec.camelToSnake(p.name.decodedName.toString),
+          t <:< ru.typeOf[Option[Any]], reader(mirror, t))
+      }
+    })))
 
-  /** Register a decoder for a custom op type. Registrations shadow
-    * built-ins of the same name (latest wins). */
-  def register(typeName: String)(d: Decoder): Unit = custom(typeName) = d
+  private def bad(path: String, v: JValue, want: String): Nothing =
+    throw new IllegalArgumentException(s"field '$path': expected $want, got $v")
 
-  def decoderFor(typeName: String): Option[Decoder] =
-    custom.get(typeName).orElse(decoders.get(typeName))
-
-  val decoders: Map[String, Decoder] = Map(
-    "LoadLocalParquetDatasetOp" -> ((o, _) =>
-      LoadLocalParquetDatasetOp(str(o, "content_hash"), str(o, "file_path"))),
-    "LoadInlineJsonDatasetOp" -> ((o, _) =>
-      LoadInlineJsonDatasetOp(colSeqMap(o, "data"))),
-    "LoadLocalJsonlDatasetOp" -> ((o, _) =>
-      LoadLocalJsonlDatasetOp(str(o, "content_hash"), str(o, "file_path"))),
-    "LoadLocalCsvDatasetOp" -> ((o, _) =>
-      LoadLocalCsvDatasetOp(str(o, "content_hash"), str(o, "file_path"),
-        bool(o, "header"))),
-    "SelectTextColumnOp" -> ((o, r) =>
-      SelectTextColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectVectorColumnOp" -> ((o, r) =>
-      SelectVectorColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectCategoricalColumnOp" -> ((o, r) =>
-      SelectCategoricalColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectBooleanColumnOp" -> ((o, r) =>
-      SelectBooleanColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectScoreColumnOp" -> ((o, r) =>
-      SelectScoreColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectTrainTestSplitColumnOp" -> ((o, r) =>
-      SelectTrainTestSplitColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectJSONColumnOp" -> ((o, r) =>
-      SelectJSONColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "SelectConversationColumnOp" -> ((o, r) =>
-      SelectConversationColumnOp(op[DatasetType](o, "dataset", r), str(o, "column_name"))),
-    "TakeRowsOp" -> ((o, r) =>
-      TakeRowsOp(op[DatasetType](o, "dataset", r), lng(o, "skip"), lng(o, "offset"),
-        optLng(o, "num_rows"))),
-    "MaskRowsOp" -> ((o, r) =>
-      MaskRowsOp(op[DatasetType](o, "dataset", r), op[BooleanColumnType](o, "mask", r))),
-    "CategoryToBooleanOp" -> ((o, r) =>
-      CategoryToBooleanOp(op[ColumnType](o, "input_category", r),
-        optStrSeq(o, "true_values"), optStrSeq(o, "false_values"))),
-    "BooleanLogicOp" -> ((o, r) =>
-      BooleanLogicOp(str(o, "operation"), op[BooleanColumnType](o, "left", r),
-        op[BooleanColumnType](o, "right", r))),
-    "ParseJSONColumnOp" -> ((o, r) =>
-      ParseJSONColumnOp(op[TextColumnType](o, "text", r))),
-    "VectorToScalarOp" -> ((o, r) =>
-      VectorToScalarOp(op[VectorColumnType](o, "input", r), lng(o, "col_index"))),
-    "PairwiseArithmeticOp" -> ((o, r) =>
-      PairwiseArithmeticOp(str(o, "operation"), op[ScoreColumnType](o, "left", r),
-        op[ScoreColumnType](o, "right", r))),
-    "JinjaTemplatizeOp" -> ((o, r) =>
-      JinjaTemplatizeOp(str(o, "template"), opMap[ColumnType](o, "context", r),
-        anyMap(o, "constants"), optLng(o, "max_length"))),
-    "AssignTrainTestSplitOp" -> ((o, r) =>
-      AssignTrainTestSplitOp(op[DatasetType](o, "dataset", r),
-        optAnyNum(o, "test_size"), optAnyNum(o, "train_size"), lng(o, "random_state"))),
-    "AssignRowIDOp" -> ((o, r) =>
-      AssignRowIDOp(op[DatasetType](o, "dataset", r))),
-    "TrainClassifierOp" -> ((o, r) =>
-      TrainClassifierOp(str(o, "model_type"), op[VectorColumnType](o, "x", r),
-        op[BooleanColumnType](o, "positives", r),
-        op[BooleanColumnType](o, "negatives", r),
-        optOp[BooleanColumnType](o, "train_domain", r),
-        str(o, "preprocessing"), anyMap(o, "params"))),
-    "ClassifierPredictOp" -> ((o, r) =>
-      ClassifierPredictOp(op[ClassifierType](o, "model", r),
-        op[VectorColumnType](o, "x", r))),
-    "ClassifierEvaluationOp" -> ((o, r) =>
-      ClassifierEvaluationOp(op[ScoreColumnType](o, "score", r),
-        op[BooleanColumnType](o, "gt_positives", r),
-        op[BooleanColumnType](o, "gt_negatives", r),
-        optOp[ColumnType](o, "split", r),
-        optOp[BooleanColumnType](o, "predict_domain", r),
-        optDbl(o, "score_threshold"))),
-    "TrainMulticlassClassifierOp" -> ((o, r) =>
-      TrainMulticlassClassifierOp(str(o, "model_type"),
-        op[VectorColumnType](o, "x", r),
-        op[CategoricalColumnType](o, "labels", r),
-        optOp[BooleanColumnType](o, "train_domain", r),
-        str(o, "preprocessing"), anyMap(o, "params"))),
-    "MulticlassPredictOp" -> ((o, r) =>
-      MulticlassPredictOp(op[ClassifierType](o, "model", r),
-        op[VectorColumnType](o, "x", r))),
-    "MulticlassEvaluationOp" -> ((o, r) =>
-      MulticlassEvaluationOp(op[CategoricalColumnType](o, "predicted", r),
-        op[CategoricalColumnType](o, "gt_labels", r),
-        optOp[ColumnType](o, "split", r),
-        optOp[BooleanColumnType](o, "predict_domain", r))),
-    "HashedTfEmbeddingOp" -> ((o, r) =>
-      HashedTfEmbeddingOp(op[TextColumnType](o, "text", r),
-        lng(o, "dim"), lng(o, "scale_bits"))),
-    "LLMLayerActivationsOp" -> ((o, r) =>
-      LLMLayerActivationsOp(str(o, "model_name"), op[ColumnType](o, "text", r),
-        lng(o, "layer_num"), str(o, "token_mode"), lng(o, "batch_size"),
-        optLng(o, "max_length"), optStr(o, "dtype"), str(o, "device"),
-        bool(o, "torch_compile"), bool(o, "apply_chat_template"))),
-    "LLMLogitScoresOp" -> ((o, r) =>
-      LLMLogitScoresOp(str(o, "model_name"), op[TextColumnType](o, "text", r),
-        anySeq(o, "logit_token_ids"), lng(o, "batch_size"),
-        bool(o, "apply_chat_template"), optStr(o, "dtype"), str(o, "device"),
-        optLng(o, "max_length"), bool(o, "torch_compile"),
-        optStr(o, "append_to_chat_template"))),
-    "LLMGenerateTextOp" -> ((o, r) =>
-      LLMGenerateTextOp(str(o, "model_name"), op[TextColumnType](o, "prompt", r),
-        lng(o, "max_tokens"))),
-    "UMAPVizOp" -> ((o, r) =>
-      UMAPVizOp(op[VectorColumnType](o, "input_embedding", r),
-        lng(o, "n_neighbors"), lng(o, "n_epochs"), lng(o, "random_state"),
-        str(o, "metric"), optAnyMap(o, "metric_kwds"),
-        str(o, "output_metric"), optAnyMap(o, "output_metric_kwds"),
-        dbl(o, "learning_rate"), dbl(o, "min_dist"), dbl(o, "spread"),
-        dbl(o, "set_op_mix_ratio"), dbl(o, "local_connectivity"),
-        dbl(o, "repulsion_strength"), lng(o, "negative_sample_rate"),
-        dbl(o, "transform_queue_size"), bool(o, "angular_rp_forest"),
-        lng(o, "target_n_neighbors"), str(o, "target_metric"),
-        optAnyMap(o, "target_metric_kwds"), dbl(o, "target_weight"),
-        lng(o, "transform_seed"), str(o, "transform_mode"),
-        bool(o, "force_approximation_algorithm"), bool(o, "unique"),
-        bool(o, "densmap"), dbl(o, "dens_lambda"), dbl(o, "dens_frac"),
-        dbl(o, "dens_var_shift"), bool(o, "output_dens"),
-        optDbl(o, "disconnection_distance"))),
-    "SpectralVizOp" -> ((o, r) =>
-      SpectralVizOp(op[VectorColumnType](o, "input_embedding", r),
-        lng(o, "k"), lng(o, "iters"))),
-    "UmapLayoutOp" -> ((o, r) =>
-      UmapLayoutOp(op[VectorColumnType](o, "input_embedding", r),
-        lng(o, "k"), lng(o, "iters"), lng(o, "negatives"), str(o, "init"))),
-    "KMeansClusterOp" -> ((o, r) =>
-      KMeansClusterOp(op[VectorColumnType](o, "vectors", r),
-        lngSeq(o, "centroid_ids"), lng(o, "iters"))),
-    "PrototypeDropOp" -> ((o, r) =>
-      PrototypeDropOp(op[VectorColumnType](o, "vectors", r),
-        lngSeq(o, "centroid_ids"), lng(o, "iters"),
-        lng(o, "drop_num"), lng(o, "drop_den"))),
-    "CorpusStatsOp" -> ((o, r) =>
-      CorpusStatsOp(op[CategoricalColumnType](o, "group", r),
-        op[TextColumnType](o, "text", r), lng(o, "k"))),
-    "CmsWordCountsOp" -> ((o, r) =>
-      CmsWordCountsOp(op[TextColumnType](o, "text", r),
-        lng(o, "depth"), lng(o, "width"), lng(o, "top_n"))),
-    "BloomMembershipOp" -> ((o, r) =>
-      BloomMembershipOp(op[TextColumnType](o, "value", r),
-        op[TextColumnType](o, "reference", r),
-        lng(o, "num_hashes"), lng(o, "num_bits"))),
-    "EpochShardOp" -> ((o, r) =>
-      EpochShardOp(op[DatasetType](o, "dataset", r),
-        lng(o, "epoch"), lng(o, "num_shards"))),
-    "ChunkTextOp" -> ((o, r) =>
-      ChunkTextOp(op[TextColumnType](o, "text", r),
-        lng(o, "size"), lng(o, "overlap"))),
-    "KeepBestPerClusterOp" -> ((o, r) =>
-      KeepBestPerClusterOp(op[ScoreColumnType](o, "priority", r),
-        op[DatasetType](o, "pairs", r))),
-    "TokenBudgetKeepOp" -> ((o, r) =>
-      TokenBudgetKeepOp(op[CategoricalColumnType](o, "group", r),
-        op[ScoreColumnType](o, "priority", r),
-        op[ScoreColumnType](o, "tokens", r), lng(o, "budget"))),
-    "GroupedOp" -> ((o, r) => GroupedOp(opSeq(o, "ops", r))),
-    "RedactPIIColumnOp" -> ((o, r) =>
-      RedactPIIColumnOp(op[TextColumnType](o, "text", r))),
-    "DropExactDuplicatesOp" -> ((o, r) =>
-      DropExactDuplicatesOp(op[DatasetType](o, "dataset", r),
-        op[TextColumnType](o, "text", r))),
-    "ContaminationFlagOp" -> ((o, r) =>
-      ContaminationFlagOp(op[TextColumnType](o, "text", r),
-        op[TextColumnType](o, "benchmark", r), lng(o, "n"),
-        lng(o, "min_overlap"))),
-    "StratifiedSampleOp" -> ((o, r) =>
-      StratifiedSampleOp(op[DatasetType](o, "dataset", r),
-        op[CategoricalColumnType](o, "stratum", r), dbl(o, "frac"),
-        str(o, "salt"))),
-    "MixtureSampleOp" -> ((o, r) =>
-      MixtureSampleOp(op[DatasetType](o, "dataset", r),
-        op[CategoricalColumnType](o, "stratum", r), dblMap(o, "fracs"),
-        dbl(o, "default_frac"), str(o, "salt"))),
-    "PackSequencesOp" -> ((o, r) =>
-      PackSequencesOp(op[ColumnType](o, "tokens", r), lng(o, "seq_len"))),
-    "TokenCountOp" -> ((o, r) =>
-      TokenCountOp(op[TextColumnType](o, "text", r))),
-    "QualityScoreOp" -> ((o, r) =>
-      QualityScoreOp(op[TextColumnType](o, "text", r))),
-    "LanguageIdOp" -> ((o, r) =>
-      LanguageIdOp(op[TextColumnType](o, "text", r))),
-    "FingerprintOp" -> ((o, r) =>
-      FingerprintOp(op[TextColumnType](o, "text", r))),
-    "GopherKeepOp" -> ((o, r) =>
-      GopherKeepOp(op[TextColumnType](o, "text", r),
-        lng(o, "min_words"), lng(o, "max_words"), dbl(o, "min_mean_word_len"),
-        dbl(o, "max_mean_word_len"), dbl(o, "min_unique_frac"))),
-    "LmPerplexityOp" -> ((o, r) =>
-      LmPerplexityOp(op[TextColumnType](o, "text", r),
-        op[TextColumnType](o, "fit_text", r))),
-    "DsirSelectOp" -> ((o, r) =>
-      DsirSelectOp(op[TextColumnType](o, "text", r),
-        op[TextColumnType](o, "target_text", r),
-        lng(o, "m"), lng(o, "k"), dbl(o, "alpha"))),
-    "TemperatureSampleOp" -> ((o, r) =>
-      TemperatureSampleOp(op[DatasetType](o, "dataset", r),
-        op[CategoricalColumnType](o, "stratum", r),
-        dbl(o, "alpha"), dbl(o, "frac"), str(o, "salt"))),
-    "CcnetBucketsOp" -> ((o, r) =>
-      CcnetBucketsOp(op[TextColumnType](o, "text", r),
-        op[CategoricalColumnType](o, "lang", r),
-        op[TextColumnType](o, "fit_text", r))),
-    "DedupSpansOp" -> ((o, r) =>
-      DedupSpansOp(op[TextColumnType](o, "text", r), lng(o, "k"))),
-    "Bm25RankOp" -> ((o, r) =>
-      Bm25RankOp(op[TextColumnType](o, "text", r), strSeq(o, "terms"),
-        lng(o, "k"), dbl(o, "k1"), dbl(o, "b"))),
-    "Bm25RankManyOp" -> ((o, r) =>
-      Bm25RankManyOp(op[TextColumnType](o, "text", r),
-        strSeqSeq(o, "queries"), lng(o, "k"), dbl(o, "k1"), dbl(o, "b"))),
-    "RrfFuseOp" -> ((o, r) =>
-      RrfFuseOp(op[DatasetType](o, "sparse", r),
-        op[DatasetType](o, "dense", r),
-        str(o, "sparse_id"), str(o, "dense_id"),
-        lng(o, "rrf_k"), lng(o, "n"))),
-    "MinHashNearDupPairsOp" -> ((o, r) =>
-      MinHashNearDupPairsOp(op[TextColumnType](o, "text", r),
-        lng(o, "shingle_n"), lng(o, "num_perms"), lng(o, "num_bands"),
-        dbl(o, "threshold"))),
-    "SimHashNearDupPairsOp" -> ((o, r) =>
-      SimHashNearDupPairsOp(op[TextColumnType](o, "text", r),
-        lng(o, "max_hamming"), lng(o, "max_bucket"))),
-    "CosineNearDupPairsOp" -> ((o, r) =>
-      CosineNearDupPairsOp(op[VectorColumnType](o, "vectors", r),
-        lng(o, "dim"), lng(o, "n_bands"), lng(o, "planes_per_band"),
-        dbl(o, "threshold"), lng(o, "max_bucket"))),
-    "SemanticDedupOp" -> ((o, r) =>
-      SemanticDedupOp(op[VectorColumnType](o, "vectors", r),
-        lngSeq(o, "centroid_ids"), dbl(o, "threshold"), lng(o, "max_cell"),
-        lng(o, "split_fanout"), lng(o, "max_split_depth"))),
-    "DropNearDuplicatesOp" -> ((o, r) =>
-      DropNearDuplicatesOp(op[DatasetType](o, "dataset", r),
-        op[DatasetType](o, "pairs", r))),
-    "AnnBruteTopKOp" -> ((o, r) =>
-      AnnBruteTopKOp(op[VectorColumnType](o, "corpus", r),
-        op[VectorColumnType](o, "queries", r), lng(o, "k"))),
-    "IvfPqTopKOp" -> ((o, r) =>
-      IvfPqTopKOp(op[VectorColumnType](o, "corpus", r),
-        op[VectorColumnType](o, "queries", r),
-        lngSeq(o, "centroid_ids"), lngSeq(o, "codebook_ids"),
-        lng(o, "k"), lng(o, "m"), lng(o, "nprobe"), lng(o, "rerank"))),
-    "SelectBinaryColumnOp" -> ((o, r) =>
-      SelectBinaryColumnOp(op[DatasetType](o, "dataset", r),
-        str(o, "column_name"))),
-    "ImageMetaOp" -> ((o, r) =>
-      ImageMetaOp(op[BinaryColumnType](o, "image", r))),
-    "ImageResizeOp" -> ((o, r) =>
-      ImageResizeOp(op[BinaryColumnType](o, "image", r), lng(o, "max_side"))),
-    "ImageEmbedOp" -> ((o, r) =>
-      ImageEmbedOp(op[BinaryColumnType](o, "image", r), lng(o, "grid"))),
-    "AudioMetaOp" -> ((o, r) =>
-      AudioMetaOp(op[BinaryColumnType](o, "audio", r))),
-    "ExplodeFramesOp" -> ((o, r) =>
-      ExplodeFramesOp(op[BinaryColumnType](o, "video", r))),
-    "TrainBpeTokenizerOp" -> ((o, r) =>
-      TrainBpeTokenizerOp(op[TextColumnType](o, "text", r),
-        lng(o, "num_merges"))),
-    "BpeTokenizeOp" -> ((o, r) =>
-      BpeTokenizeOp(op[TokenizerType](o, "tokenizer", r),
-        op[TextColumnType](o, "text", r))),
-    "TrainUnigramTokenizerOp" -> ((o, r) =>
-      TrainUnigramTokenizerOp(op[TextColumnType](o, "text", r),
-        lng(o, "seed_multi"), lng(o, "rounds"), lng(o, "piece_len"))),
-    "UnigramTokenizeOp" -> ((o, r) =>
-      UnigramTokenizeOp(op[TokenizerType](o, "tokenizer", r),
-        op[TextColumnType](o, "text", r)))
-  )
+  private def reader(mirror: ru.Mirror, t: ru.Type): Read = {
+    import ru.typeOf
+    val d = t.dealias
+    if (d =:= typeOf[String]) {
+      case (_, JString(s), _) => s
+      case (n, v, _) => bad(n, v, "string")
+    } else if (d =:= typeOf[Long]) {
+      case (_, JLong(l), _) => l
+      case (_, JDouble(x), _) if x.isWhole => x.toLong
+      case (n, v, _) => bad(n, v, "integer")
+    } else if (d =:= typeOf[Double]) {
+      case (_, JDouble(x), _) => x
+      case (_, JLong(l), _) => l.toDouble
+      case (n, v, _) => bad(n, v, "number")
+    } else if (d =:= typeOf[Boolean]) {
+      case (_, JBool(b), _) => b
+      case (n, v, _) => bad(n, v, "boolean")
+    } else if (d =:= typeOf[Any]) {
+      (_, v, _) => Json.toScala(v)
+    } else if (d <:< typeOf[OpSpec]) {
+      val kind = mirror.runtimeClass(d)
+      val read: Read = {
+        case (n, JString(uuid), resolve) =>
+          val op = resolve(uuid)
+          if (!kind.isInstance(op)) throw new IllegalArgumentException(
+            s"field '$n': expected ${kind.getSimpleName}, got $uuid")
+          op
+        case (n, v, _) => bad(n, v, "uuid string")
+      }
+      read
+    } else if (d <:< typeOf[Option[Any]]) {
+      val inner = reader(mirror, d.typeArgs.head)
+      val read: Read = {
+        case (_, JNull, _) => None
+        case (n, v, resolve) => Some(inner(n, v, resolve))
+      }
+      read
+    } else if (d <:< typeOf[Map[String, Any]]) {
+      val inner = reader(mirror, d.typeArgs(1))
+      val read: Read = {
+        case (n, JObj(fs), resolve) =>
+          fs.map { case (k, v) => (k, inner(s"$n.$k", v, resolve)) }.toMap
+        case (n, v, _) => bad(n, v, "object")
+      }
+      read
+    } else if (d <:< typeOf[Seq[Any]]) {
+      val inner = reader(mirror, d.typeArgs.head)
+      val read: Read = {
+        case (n, JArr(items), resolve) => items.map(inner(n, _, resolve))
+        case (n, v, _) => bad(n, v, "array")
+      }
+      read
+    } else throw new IllegalArgumentException(s"op field type $t cannot be decoded")
+  }
 }

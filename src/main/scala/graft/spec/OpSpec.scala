@@ -240,13 +240,15 @@ object OpSpec {
   }
 
   /** Instantiate a case class from positional args via its (single primary)
-    * constructor. Boxing handled by the JVM reflection API. */
+    * constructor. Boxing handled by the JVM reflection API; a failed
+    * `require` in the constructor surfaces as itself. */
   def construct(cls: Class[_], args: Array[Any]): OpSpec = {
     val ctor = cls.getConstructors
       .find(_.getParameterCount == args.length)
       .getOrElse(throw new IllegalStateException(
         s"no ${args.length}-arg constructor on ${cls.getName}"))
-    ctor.newInstance(args.map(_.asInstanceOf[AnyRef]): _*).asInstanceOf[OpSpec]
+    try ctor.newInstance(args.map(_.asInstanceOf[AnyRef]): _*).asInstanceOf[OpSpec]
+    catch { case e: java.lang.reflect.InvocationTargetException => throw e.getCause }
   }
 
   /** Minimal LCS-based unified-ish diff over lines. */

@@ -25,6 +25,18 @@ trait VizEmbeddingColumnType extends ColumnType
 trait ClassifierType extends OpSpec
 trait EvaluationReportType extends OpSpec
 
+/** One output row per row of the op's first dataset or column dependency,
+  * in field order (a map's values by key): the op's length is that
+  * dependency's, so a runner resolves it without a Spark job. */
+trait RowAligned { self: OpSpec =>
+  final def rowSource: OpSpec =
+    productIterator.flatMap(OpSpec.collectOps).collectFirst {
+      case d: DatasetType => d
+      case c: ColumnType => c
+    }.getOrElse(throw new IllegalStateException(
+      s"$typeName has no dataset or column dependency"))
+}
+
 // ---------- scans / sources (reference dataset_ops.py:55-96) ----------
 
 /** Load one parquet file. The path is excluded from the UUID — identity is
@@ -80,7 +92,7 @@ final case class LoadLocalCsvDatasetOp(
 
 // ---------- typed column selects (reference dataset_ops.py:99-153) ----------
 
-sealed trait SelectColumnOp extends ColumnType with EphemeralOp {
+sealed trait SelectColumnOp extends ColumnType with EphemeralOp with RowAligned {
   def dataset: DatasetType
   def columnName: String
 }
@@ -138,7 +150,7 @@ final case class CategoryToBooleanOp(
     inputCategory: ColumnType,
     trueValues: Option[Seq[String]] = None,
     falseValues: Option[Seq[String]] = None)
-  extends BooleanColumnType with EphemeralOp {
+  extends BooleanColumnType with EphemeralOp with RowAligned {
   require(trueValues.nonEmpty || falseValues.nonEmpty,
     "one of true_values/false_values required")
 }
@@ -158,24 +170,24 @@ object CategoryToBooleanOp {
 final case class BooleanLogicOp(
     operation: String,
     left: BooleanColumnType,
-    right: BooleanColumnType) extends BooleanColumnType with EphemeralOp {
+    right: BooleanColumnType) extends BooleanColumnType with EphemeralOp with RowAligned {
   require(Set("and", "or", "xor", "not")(operation), s"bad operation $operation")
 }
 
 // ---------- scalar / column transforms (reference dataset_ops.py:156-379) ----------
 
 final case class ParseJSONColumnOp(text: TextColumnType)
-  extends JSONColumnType with EphemeralOp
+  extends JSONColumnType with EphemeralOp with RowAligned
 
 final case class VectorToScalarOp(input: VectorColumnType, colIndex: Long = 0L)
-  extends ScoreColumnType with EphemeralOp
+  extends ScoreColumnType with EphemeralOp with RowAligned
 
 /** `+ - * /` elementwise, numpy div semantics (reference
   * `dataset_ops.py:353-379`). */
 final case class PairwiseArithmeticOp(
     operation: String,
     left: ScoreColumnType,
-    right: ScoreColumnType) extends ScoreColumnType with EphemeralOp {
+    right: ScoreColumnType) extends ScoreColumnType with EphemeralOp with RowAligned {
   require(Set("+", "-", "*", "/")(operation), s"bad operation $operation")
 }
 
@@ -186,7 +198,7 @@ final case class JinjaTemplatizeOp(
     template: String,
     context: Map[String, ColumnType],
     constants: Map[String, Any] = Map.empty,
-    maxLength: Option[Long] = None) extends TextColumnType {
+    maxLength: Option[Long] = None) extends TextColumnType with RowAligned {
   private val collisions = context.keySet & constants.keySet
   require(collisions.isEmpty,
     s"Key collision detected between context and constants: ${collisions.toSeq.sorted.mkString(", ")}")
@@ -200,7 +212,7 @@ final case class AssignTrainTestSplitOp(
     dataset: DatasetType,
     testSize: Option[Any] = None,
     trainSize: Option[Any] = None,
-    randomState: Long = 19190115L) extends TrainTestSplitColumnType {
+    randomState: Long = 19190115L) extends TrainTestSplitColumnType with RowAligned {
   Seq(testSize, trainSize).flatten.foreach {
     case d: Double => require(d >= 0 && d <= 1, s"proportion $d out of [0,1]")
     case _: Long | _: Int =>
@@ -209,7 +221,7 @@ final case class AssignTrainTestSplitOp(
   }
 }
 
-final case class AssignRowIDOp(dataset: DatasetType) extends RowIDColumnType
+final case class AssignRowIDOp(dataset: DatasetType) extends RowIDColumnType with RowAligned
 
 // ---------- ML (reference classifier_ops.py:22-63) ----------
 
@@ -227,7 +239,7 @@ final case class TrainClassifierOp(
 
 final case class ClassifierPredictOp(
     model: ClassifierType,
-    x: VectorColumnType) extends ScoreColumnType
+    x: VectorColumnType) extends ScoreColumnType with RowAligned
 
 final case class ClassifierEvaluationOp(
     score: ScoreColumnType,
@@ -263,7 +275,7 @@ final case class TrainMulticlassClassifierOp(
   * another train's label input). */
 final case class MulticlassPredictOp(
     model: ClassifierType,
-    x: VectorColumnType) extends CategoricalColumnType
+    x: VectorColumnType) extends CategoricalColumnType with RowAligned
 
 /** Multiclass evaluation report: per split — accuracy, per-class
   * precision/recall/F1/support, macro-F1, full confusion matrix. All
@@ -284,7 +296,7 @@ final case class MulticlassEvaluationOp(
 final case class HashedTfEmbeddingOp(
     text: TextColumnType,
     dim: Long = 64L,
-    scaleBits: Long = 0L) extends VectorColumnType with EphemeralOp {
+    scaleBits: Long = 0L) extends VectorColumnType with EphemeralOp with RowAligned {
   require(dim >= 1L && dim <= Int.MaxValue, s"dim must be in [1, 2^31), got $dim")
   require(scaleBits >= 0L && scaleBits <= 30L,
     s"scaleBits must be in [0, 30], got $scaleBits")
@@ -307,7 +319,7 @@ final case class LLMLayerActivationsOp(
     dtype: Option[String] = None,
     device: String = "auto",
     torchCompile: Boolean = false,
-    applyChatTemplate: Boolean = true) extends VectorColumnType {
+    applyChatTemplate: Boolean = true) extends VectorColumnType with RowAligned {
   require(Set("last", "mean", "all")(tokenMode), s"bad token_mode $tokenMode")
   override def excludeFromUuid: Set[String] =
     Set("batch_size", "device", "torch_compile")
@@ -325,7 +337,7 @@ final case class LLMLogitScoresOp(
     device: String = "auto",
     maxLength: Option[Long] = None,
     torchCompile: Boolean = false,
-    appendToChatTemplate: Option[String] = None) extends VectorColumnType {
+    appendToChatTemplate: Option[String] = None) extends VectorColumnType with RowAligned {
   override def excludeFromUuid: Set[String] =
     Set("batch_size", "device", "torch_compile")
 }
@@ -334,7 +346,7 @@ final case class LLMLogitScoresOp(
 final case class LLMGenerateTextOp(
     modelName: String,
     prompt: TextColumnType,
-    maxTokens: Long = 100L) extends TextColumnType
+    maxTokens: Long = 100L) extends TextColumnType with RowAligned
 
 // ---------- viz (reference viz_ops.py:10-52) ----------
 
@@ -378,7 +390,7 @@ final case class UMAPVizOp(
     densFrac: Double = 0.3,
     densVarShift: Double = 0.1,
     outputDens: Boolean = false,
-    disconnectionDistance: Option[Double] = None) extends VizEmbeddingColumnType
+    disconnectionDistance: Option[Double] = None) extends VizEmbeddingColumnType with RowAligned
 
 /** Laplacian-eigenmaps 2-D spectral embedding of a vector column
   * ([[graft.ml.Spectral]], Belkin & Niyogi 2003): cosine kNN graph +
@@ -390,7 +402,7 @@ final case class UMAPVizOp(
 final case class SpectralVizOp(
     inputEmbedding: VectorColumnType,
     k: Long = 8L,
-    iters: Long = 8L) extends VizEmbeddingColumnType {
+    iters: Long = 8L) extends VizEmbeddingColumnType with RowAligned {
   require(k >= 1L, s"k must be >= 1, got $k")
   require(iters >= 1L, s"iters must be >= 1, got $iters")
 }
@@ -409,7 +421,7 @@ final case class UmapLayoutOp(
     k: Long = 8L,
     iters: Long = 30L,
     negatives: Long = 4L,
-    init: String = "spectral") extends VizEmbeddingColumnType {
+    init: String = "spectral") extends VizEmbeddingColumnType with RowAligned {
   require(k >= 1L, s"k must be >= 1, got $k")
   require(iters >= 1L, s"iters must be >= 1, got $iters")
   require(negatives >= 0L, s"negatives must be >= 0, got $negatives")
@@ -429,7 +441,7 @@ final case class UmapLayoutOp(
 final case class KMeansClusterOp(
     vectors: VectorColumnType,
     centroidIds: Seq[Long],
-    iters: Long = 4L) extends CategoricalColumnType {
+    iters: Long = 4L) extends CategoricalColumnType with RowAligned {
   require(centroidIds.nonEmpty, "centroidIds must be non-empty")
   require(iters >= 0L, s"iters must be >= 0, got $iters")
 }
@@ -449,7 +461,7 @@ final case class PrototypeDropOp(
     centroidIds: Seq[Long],
     iters: Long = 4L,
     dropNum: Long = 1L,
-    dropDen: Long = 4L) extends BooleanColumnType {
+    dropDen: Long = 4L) extends BooleanColumnType with RowAligned {
   require(centroidIds.nonEmpty, "centroidIds must be non-empty")
   require(iters >= 0L, s"iters must be >= 0, got $iters")
   require(dropDen >= 1L, s"dropDen must be >= 1, got $dropDen")
@@ -469,7 +481,7 @@ final case class TokenBudgetKeepOp(
     group: CategoricalColumnType,
     priority: ScoreColumnType,
     tokens: ScoreColumnType,
-    budget: Long) extends BooleanColumnType {
+    budget: Long) extends BooleanColumnType with RowAligned {
   require(budget >= 0L, s"budget must be >= 0, got $budget")
 }
 
@@ -486,7 +498,7 @@ final case class GroupedOp(ops: Seq[OpSpec]) extends OpSpec
 /** Redact emails/IPv4s/phones from a text column ([[graft.ext.Corpus.redactPII]]).
   * Ephemeral: a pure narrow map that fuses into its consumer's plan. */
 final case class RedactPIIColumnOp(text: TextColumnType)
-  extends TextColumnType with EphemeralOp
+  extends TextColumnType with EphemeralOp with RowAligned
 
 /** Drop exact duplicates of `text` corpus-wide, keeping each content's FIRST
   * occurrence (minimum row index — deterministic); survivors re-indexed
@@ -503,7 +515,7 @@ final case class ContaminationFlagOp(
     text: TextColumnType,
     benchmark: TextColumnType,
     n: Long = 5L,
-    minOverlap: Long = 1L) extends BooleanColumnType {
+    minOverlap: Long = 1L) extends BooleanColumnType with RowAligned {
   require(n >= 1L, s"n must be >= 1, got $n")
   require(minOverlap >= 1L, s"minOverlap must be >= 1, got $minOverlap")
 }
@@ -559,29 +571,29 @@ final case class TemperatureSampleOp(
   * prefix-sum, no single-partition window. */
 final case class PackSequencesOp(
     tokens: ColumnType,
-    seqLen: Long) extends DatasetType {
+    seqLen: Long) extends DatasetType with RowAligned {
   require(seqLen >= 1L, s"seqLen must be >= 1, got $seqLen")
 }
 
 /** Whitespace token count per row — EPHEMERAL pure expression, fuses into
   * the consumer's plan ([[graft.ext.TextAnalysis.tokenCount]]). */
 final case class TokenCountOp(text: TextColumnType)
-  extends ScoreColumnType with EphemeralOp
+  extends ScoreColumnType with EphemeralOp with RowAligned
 
 /** Composite [0,1] heuristic quality score per row
   * ([[graft.ext.TextAnalysis.qualityScore]]). */
 final case class QualityScoreOp(text: TextColumnType)
-  extends ScoreColumnType with EphemeralOp
+  extends ScoreColumnType with EphemeralOp with RowAligned
 
 /** N-gram-heuristic language id per row (de/en/es/fr codes or "und" —
   * [[graft.ext.TextAnalysis.langId]]). */
 final case class LanguageIdOp(text: TextColumnType)
-  extends CategoricalColumnType with EphemeralOp
+  extends CategoricalColumnType with EphemeralOp with RowAligned
 
 /** Normalized md5 document fingerprint per row
   * ([[graft.ext.TextAnalysis.fingerprintMd5]]). */
 final case class FingerprintOp(text: TextColumnType)
-  extends TextColumnType with EphemeralOp
+  extends TextColumnType with EphemeralOp with RowAligned
 
 /** Gopher-style quality gate per row: the conjunction of the word-count /
   * mean-word-length / unique-fraction / stopword rules
@@ -592,7 +604,7 @@ final case class GopherKeepOp(
     maxWords: Long = 100000L,
     minMeanWordLen: Double = 3.0,
     maxMeanWordLen: Double = 10.0,
-    minUniqueFrac: Double = 0.2) extends BooleanColumnType with EphemeralOp {
+    minUniqueFrac: Double = 0.2) extends BooleanColumnType with EphemeralOp with RowAligned {
   require(minWords >= 0L && maxWords >= minWords,
     s"bad word bounds [$minWords, $maxWords]")
 }
@@ -607,7 +619,7 @@ final case class GopherKeepOp(
   * (corpus, reference) pair, ever. */
 final case class LmPerplexityOp(
     text: TextColumnType,
-    fitText: TextColumnType) extends ScoreColumnType
+    fitText: TextColumnType) extends ScoreColumnType with RowAligned
 
 /** CCNet-style perplexity quality tiers
   * ([[graft.ext.LangModel.ccnetBuckets]], Wenzek et al. 2020): score
@@ -620,7 +632,7 @@ final case class LmPerplexityOp(
 final case class CcnetBucketsOp(
     text: TextColumnType,
     lang: CategoricalColumnType,
-    fitText: TextColumnType) extends DatasetType
+    fitText: TextColumnType) extends DatasetType with RowAligned
 
 /** DSIR data selection over a text column ([[graft.ext.Dsir]], Xie et al.
   * 2023): importance weights of `text` rows against the `targetText`
@@ -812,7 +824,7 @@ final case class DropNearDuplicatesOp(
   * the pair op's expensive closure and are worth content-addressing. */
 final case class KeepBestPerClusterOp(
     priority: ScoreColumnType,
-    pairs: DatasetType) extends BooleanColumnType
+    pairs: DatasetType) extends BooleanColumnType with RowAligned
 
 /** Per-group corpus data card ([[graft.ext.Profile.corpusReport]]):
   * aligned (group, text) columns → one result row per distinct group with
@@ -858,7 +870,7 @@ final case class BloomMembershipOp(
     value: TextColumnType,
     reference: TextColumnType,
     numHashes: Long = 3L,
-    numBits: Long = 16384L) extends BooleanColumnType {
+    numBits: Long = 16384L) extends BooleanColumnType with RowAligned {
   require(numHashes >= 1L && numHashes <= 16L,
     s"numHashes must be in [1, 16], got $numHashes")
   require(numBits >= 64L && numBits % 64L == 0L && numBits <= (1L << 30),
@@ -892,7 +904,7 @@ final case class ChunkTextOp(
 final case class EpochShardOp(
     dataset: DatasetType,
     epoch: Long,
-    numShards: Long = 32L) extends DatasetType {
+    numShards: Long = 32L) extends DatasetType with RowAligned {
   require(numShards >= 1L && numShards <= 10000000L,
     s"numShards must be in [1, 1e7], got $numShards")
 }
@@ -943,7 +955,7 @@ final case class IvfPqTopKOp(
   * sniff, not an extension guess). Result dataset
   * `(row_idx, width, height, format)`. Non-ephemeral: decode is CPU-bound
   * codec work worth content-addressing. */
-final case class ImageMetaOp(image: BinaryColumnType) extends DatasetType
+final case class ImageMetaOp(image: BinaryColumnType) extends DatasetType with RowAligned
 
 /** True bilinear fit-within-`maxSide` resample of every image payload
   * ([[graft.ext.MediaCodecs.resizeFit]]), re-encoded as PNG — a binary
@@ -951,7 +963,7 @@ final case class ImageMetaOp(image: BinaryColumnType) extends DatasetType
   * or any other consumer. Aspect-preserving, never upscales. */
 final case class ImageResizeOp(
     image: BinaryColumnType,
-    maxSide: Long = 256L) extends BinaryColumnType {
+    maxSide: Long = 256L) extends BinaryColumnType with RowAligned {
   require(maxSide >= 1L, s"maxSide must be >= 1, got $maxSide")
 }
 
@@ -962,7 +974,7 @@ final case class ImageResizeOp(
   * vision encoder replaces the kernel, keeping this op's identity/shape. */
 final case class ImageEmbedOp(
     image: BinaryColumnType,
-    grid: Long = 2L) extends VectorColumnType {
+    grid: Long = 2L) extends VectorColumnType with RowAligned {
   require(grid >= 1L && grid <= 64L, s"grid must be in [1,64], got $grid")
 }
 
@@ -970,7 +982,7 @@ final case class ImageEmbedOp(
   * ([[graft.ext.MediaCodecs.decodeWav]] — chunk walk, full sample scan).
   * Result dataset `(row_idx, sample_rate, channels, n_samples,
   * duration_us, rms, peak)`. */
-final case class AudioMetaOp(audio: BinaryColumnType) extends DatasetType
+final case class AudioMetaOp(audio: BinaryColumnType) extends DatasetType with RowAligned
 
 /** Row-multiplying frame explosion over a concatenated-PNG stream column
   * ([[graft.ext.Multimodal.explodeFrames]]): a NEW dataset with one row per
@@ -995,7 +1007,7 @@ final case class TrainBpeTokenizerOp(
   * of subword tokens ([[graft.ext.Bpe.tokenizeColumn]]). */
 final case class BpeTokenizeOp(
     tokenizer: TokenizerType,
-    text: TextColumnType) extends ColumnType
+    text: TextColumnType) extends ColumnType with RowAligned
 
 /** Train a unigram-LM tokenizer ([[graft.ext.Unigram]], Kudo 2018 — the
   * SentencePiece family next to BPE): the artifact is the content-
@@ -1014,4 +1026,4 @@ final case class TrainUnigramTokenizerOp(
   * Viterbi pieces, words segmented independently in order. */
 final case class UnigramTokenizeOp(
     tokenizer: TokenizerType,
-    text: TextColumnType) extends ColumnType
+    text: TextColumnType) extends ColumnType with RowAligned

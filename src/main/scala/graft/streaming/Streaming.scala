@@ -18,13 +18,9 @@ import graft.ops.ColumnOps.releaseCheckpoints
   * which is how the tests assert batch parity).
   *
   * Scale notes (1000-executor framing):
-  *  - State stores shard by the grouping key, so per-user session state and
-  *    per-digest dedup state partition horizontally; the watermark bounds
-  *    state size — without it both grow forever.
-  *  - `session_window` is Spark's native gap-session operator (codegen'd,
-  *    mergeable state) — preferred over a hand-rolled
-  *    flatMapGroupsWithState for gap sessions; custom state remains the
-  *    escape hatch for semantics the built-in can't express.
+  *  - State stores shard by the grouping key, so per-user session state
+  *    partitions horizontally; the watermark bounds state size — without
+  *    it state grows forever.
   *
   * Operators that carry state across micro-batches or write a result are
   * `*ToSink` functions, one implementation each: every batch's output lands
@@ -46,72 +42,6 @@ final case class CountGapSession(user_id: String,
     n_events: Long, session_value: Double, closed_by: String)
 
 object Streaming {
-
-  /** Gap-based sessionization (the streaming form of `q_sessionize`):
-    * per-user sessions closed after `gap` of event-time silence.
-    * One state shuffle on (user_id); late events beyond `watermark` are
-    * dropped and their sessions finalized.
-    */
-  def sessionize(events: DataFrame, userCol: String, tsCol: String,
-                 valueCol: String, gap: String = "30 minutes",
-                 watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap), col(userCol))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col(valueCol).cast("decimal(18,2)")).cast("double").as("session_value"))
-      .select(col(userCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("session_value"))
-
-  /** Watermarked tumbling-window aggregate (the streaming form of
-    * `q_events_daily`): events per (window, type). Partial aggregation is
-    * map-side; only (window, type) keys shuffle.
-    */
-  def eventsPerWindow(events: DataFrame, tsCol: String, typeCol: String,
-                      valueCol: String, window_ : String = "1 day",
-                      watermark: String = "1 hour"): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(window(col(tsCol), window_), col(typeCol))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col(valueCol).cast("decimal(18,2)")).cast("double").as("total_value"))
-      .select(col("window.start").as("window_start"), col(typeCol),
-        col("n_events"), col("total_value"))
-
-  /** Streaming exact dedup (the streaming form of `Dedup.exactDuplicateGroups`
-    * applied at ingest): first-seen row per text digest wins; duplicates
-    * arriving within the watermark horizon are dropped. State is one
-    * 16-byte digest per distinct text, sharded by digest — the streaming
-    * analog of shuffling digests, never documents.
-    */
-  def dropDuplicateTexts(docs: DataFrame, textCol: String, tsCol: String,
-                         watermark: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("__digest", md5(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__digest")
-      .drop("__digest")
-
-  /** Streaming NEAR-dup dedup at ingest: first-seen row per 64-bit SimHash
-    * sketch wins ([[graft.ext.Dedup.simhash]] — the same sketch the batch
-    * `simhashNearDuplicates` bands on). Sketch collision (hamming 0) is
-    * exactly the boilerplate/near-identical mass that dominates streaming
-    * ingest duplication; hamming > 0 neighbors pass through and remain the
-    * batch operator's job (banded search needs a self-join no streaming
-    * state shape expresses cheaply). State is 8 bytes per distinct sketch
-    * within the watermark, sharded by sketch — strictly smaller state than
-    * the exact twin's 16-byte digests, and a superset of its drops
-    * whenever texts differ only in ways the sketch ignores.
-    */
-  def dropNearDuplicateTexts(docs: DataFrame, textCol: String, tsCol: String,
-                             watermark: String = "1 hour"): DataFrame =
-    docs
-      .withColumn("__sk64", graft.ext.Dedup.simhash(col(textCol)))
-      .withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark("__sk64")
-      .drop("__sk64")
 
   /** Sessions closed by `maxEvents` OR a time gap — the custom-state escape
     * hatch `session_window` cannot express (count-based closing resets
@@ -194,19 +124,6 @@ object Streaming {
             closed.iterator
           }
       }
-  }
-
-  /** Streaming text-quality annotation: the batch `TextAnalysis` expressions
-    * applied on a stream — stateless, so no watermark or shuffle at all;
-    * demonstrates that every row-local batch operator is streaming-ready
-    * as-is.
-    */
-  def annotateQuality(docs: DataFrame, textCol: String): DataFrame = {
-    val text = col(textCol)
-    docs
-      .withColumn("n_tokens", graft.ext.TextAnalysis.tokenCount(text).cast("long"))
-      .withColumn("quality", graft.ext.TextAnalysis.qualityScore(text))
-      .withColumn("pred_lang", graft.ext.TextAnalysis.langId(text))
   }
 
   /** Streaming multimodal ingest: REAL image decode on a stream of binary
@@ -1376,31 +1293,5 @@ object Streaming {
           .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
       }
     }
-  }
-
-  /** Permissive twin of [[annotateImageMeta]] — the streaming form of the
-    * batch `withImageMetaPermissive` robustness contract: a corrupt payload
-    * yields a null-meta row with the error message instead of throwing
-    * inside `mapPartitions` and killing the continuous query. Use this (not
-    * the strict form) on any ingest stream whose payloads aren't already
-    * validated upstream.
-    */
-  def annotateImageMetaPermissive(docs: DataFrame, idCol: String,
-                                  binCol: String): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    docs.select(col(idCol).cast("long"), col(binCol).cast("binary"))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.map { case (id, bytes) =>
-        try {
-          val (w, h, f) = graft.ext.MediaCodecs.decodeImageMeta(bytes)
-          (id, Option(w), Option(h), Option(f), Option.empty[String])
-        } catch {
-          case e: Exception =>
-            (id, Option.empty[Int], Option.empty[Int], Option.empty[String],
-              Some(String.valueOf(e.getMessage)))
-        }
-      })
-      .toDF(idCol, "width", "height", "format", "error")
   }
 }

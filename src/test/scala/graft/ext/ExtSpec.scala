@@ -108,6 +108,37 @@ class ExtSpec extends SparkTestBase {
     assert(probe == Set((20L, 5000L)))
   }
 
+  test("minhash handle: caches hold only live segments across appends and compactions") {
+    def docs(from: Int, n: Int) = (from until from + n).map(i =>
+      (i.toLong, (0 until 20).map(j => s"cache${i}x$j").mkString(" ")))
+      .toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-mhidx-cache-").toString
+    Dedup.buildMinhashIndex(spark, dir, docs(0, 6), "text", "doc_id")
+    val h = Dedup.openMinhashIndex(spark, dir)
+    def touchAndCheck(): Unit = {
+      Dedup.minhashDedupAgainstIndex(h, docs(0, 2), "text", "doc_id",
+        threshold = 0.9).count()
+      h.liveFileCount
+      val live = h.liveSegments.toSet
+      assert(h.segBuckets.nonEmpty && h.segBuckets.keySet.subsetOf(live),
+        h.segBuckets.keySet)
+      assert(h.segFileCounts.keySet == live, h.segFileCounts.keySet)
+      assert(h.shingleDfs.keySet.forall(_.toSet.subsetOf(live)))
+      assert(h.shingleDfs.size <= 1)
+    }
+    touchAndCheck()
+    for (round <- 0 until 2) {
+      for (b <- 0 until 2) {
+        Dedup.appendToMinhashIndex(h, docs(100 + 10 * (2 * round + b), 3),
+          "text", "doc_id")
+        touchAndCheck()
+      }
+      Dedup.compactMinhashIndex(h)
+      assert(h.liveSegments.length == 1)
+      touchAndCheck()
+    }
+  }
+
   test("minhash index: tagged append is exactly-once; excludeSeg replays the pre-append probe") {
     val a = (0 until 15).map(i =>
       (i.toLong, (0 until 30).map(j => s"eo${i}x$j").mkString(" ")))

@@ -137,8 +137,7 @@ class MultimodalSpec extends SparkTestBase {
     }
   }
 
-  test("WAVE_FORMAT_EXTENSIBLE: decodes like classic PCM; non-PCM SubFormat rejected, permissive row not crash") {
-    import spark.implicits._
+  test("WAVE_FORMAT_EXTENSIBLE: decodes like PCM; non-PCM SubFormat rejected") {
     val ext = MediaCodecs.encodeWavPcm16(10, 8000, 5.toShort, extensible = true)
     assert(MediaCodecs.decodeWav(ext) ==
       MediaCodecs.decodeWav(MediaCodecs.encodeWavPcm16(10, 8000, 5.toShort)))
@@ -149,12 +148,6 @@ class MultimodalSpec extends SparkTestBase {
     bad(44) = 3
     val e = intercept[IllegalArgumentException](MediaCodecs.decodeWav(bad))
     assert(e.getMessage.contains("SubFormat"))
-    // and the permissive Spark path turns it into an error ROW
-    val rows = Multimodal.withAudioMetaPermissive(
-        Seq((1L, ext), (2L, bad)).toDF("doc_id", "audio"), "doc_id", "audio")
-      .orderBy("doc_id").collect()
-    assert(rows(0).getAs[Int]("sample_rate") == 8000 && rows(0).isNullAt(5))
-    assert(rows(1).isNullAt(1) && rows(1).getAs[String]("error").contains("SubFormat"))
   }
 
   test("frame stream: signature-scan count + first-frame decode") {
@@ -465,26 +458,6 @@ class MultimodalSpec extends SparkTestBase {
     val out = Multimodal.withImageMeta(
       Multimodal.synthImages(feeding, "doc_id"), "doc_id", "img")
     assert(out.count() == 20L)
-  }
-
-  test("permissive WAV parse flags garbage, parses the rest") {
-    val wavs = Multimodal.synthWavs(ids, "doc_id")
-      .withColumn("audio", when(col("doc_id") % 10 === 3L,
-        lit("RIFFxxxxNOPE".getBytes("US-ASCII"))).otherwise(col("audio")))
-    val rows = Multimodal.withAudioMetaPermissive(wavs, "doc_id", "audio")
-      .orderBy("doc_id").collect()
-    assert(rows.length == 50)
-    rows.foreach { r =>
-      val id = r.getAs[Long]("doc_id")
-      if (id % 10 == 3L) {
-        assert(r.isNullAt(r.fieldIndex("sample_rate")))
-        assert(r.getAs[String]("error") != null)
-      } else {
-        assert(r.getAs[Int]("sample_rate") == Multimodal.wavRate(id))
-        assert(r.getAs[Double]("rms") == Multimodal.wavAmp(id).toDouble)
-        assert(r.isNullAt(r.fieldIndex("error")))
-      }
-    }
   }
 
   test("withImageEmbedding flows into the ANN operators' expected shape") {

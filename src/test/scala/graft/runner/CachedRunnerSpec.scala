@@ -282,6 +282,18 @@ class CachedRunnerSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(cache, cls, hash, "status.json")))
   }
 
+  test("uuidToOp on a corrupt remote status.json names the uuid and the file") {
+    val shared = newDir("graft-shared-")
+    val r = new CachedSparkRunner(spark, shared, newDir("graft-cache-"))
+    val rid = AssignRowIDOp(inline(3))
+    val (cls, hash) = (rid.uuid.split("_")(0), rid.uuid.split("_", 2)(1))
+    val remote = Paths.get(shared, cls, hash, "status.json")
+    Files.createDirectories(remote.getParent)
+    Files.writeString(remote, "{\"uuid\": \"" + rid.uuid + "\", \"sta")
+    val e = intercept[IllegalStateException](r.uuidToOp(rid.uuid))
+    assert(e.getMessage.contains(rid.uuid) && e.getMessage.contains(remote.toString))
+  }
+
   test("uuidToOp rehydrates from the shared store on a fresh machine") {
     val shared = newDir("graft-shared-")
     val machineA = new CachedSparkRunner(spark, shared, newDir("graft-cacheA-"))

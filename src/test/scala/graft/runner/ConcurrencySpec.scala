@@ -116,13 +116,4 @@ object ConcurrencySpec {
     FrameResult(in.select(col(graft.ops.ColumnOps.RowIdx),
       col(r.ValueCol).cast("double").as(r.ValueCol)))
   }
-
-  OpRegistry.register("CountingOp") { (o, resolve) =>
-    CountingOp(OpRegistry.op[ScoreColumnType](o, "input", resolve),
-      OpRegistry.str(o, "marker"))
-  }
-  OpRegistry.register("FlakyOp") { (o, resolve) =>
-    FlakyOp(OpRegistry.op[ScoreColumnType](o, "input", resolve),
-      OpRegistry.str(o, "marker"))
-  }
 }

@@ -168,6 +168,26 @@ class RunnerSpec extends SparkTestBase {
     assert(e.getMessage.contains("registerImplementation"))
   }
 
+  test("custom op named like a built-in or registered op is rejected") {
+    val e = intercept[IllegalArgumentException](
+      LocalSparkRunner.registerImplementation(classOf[RunnerSpec.TakeRowsOp]) {
+        (_, _) => throw new AssertionError("never runs")
+      })
+    assert(e.getMessage.contains("TakeRowsOp"))
+    intercept[IllegalArgumentException](
+      LocalSparkRunner.registerImplementation(classOf[TakeRowsOp]) {
+        (_, _) => throw new AssertionError("never runs")
+      })
+    val take = TakeRowsOp(inline(4), numRows = Some(2L))
+    assert(Graph.deserializeString(Graph.serializeToString(take)) == Seq(take))
+    // two custom classes cannot share a simple name either
+    RunnerSpec.ensureRegistered()
+    intercept[IllegalArgumentException](
+      LocalSparkRunner.registerImplementation(classOf[RunnerSpec.Clash.ScaleScoreOp]) {
+        (_, _) => throw new AssertionError("never runs")
+      })
+  }
+
   test("text-signal column ops: ephemeral, fused, and composable with masks") {
     val r = newRunner()
     val many = ("word " * 60).trim + " the unique extra tokens spread here"
@@ -351,6 +371,39 @@ class RunnerSpec extends SparkTestBase {
     val back = new LocalSparkRunner(spark, store).uuidToOp(split.uuid)
     assert(back == split)
     assert(back.asInstanceOf[AssignTrainTestSplitOp].dataset == ds)
+  }
+
+  test("uuidToOp on a corrupt status.json names the uuid and the file") {
+    val store = newStoreDir()
+    val r = new LocalSparkRunner(spark, store)
+    val rid = AssignRowIDOp(inline(3))
+    r.materialize(rid)
+    val status = r.opDir(rid).resolve("status.json")
+    val text = Files.readString(status)
+    Files.writeString(status, text.take(text.length / 2)) // truncated write
+    val e = intercept[IllegalStateException](
+      new LocalSparkRunner(spark, store).uuidToOp(rid.uuid))
+    assert(e.getMessage.contains(rid.uuid) && e.getMessage.contains(status.toString))
+  }
+
+  test("lengthOf over a row-aligned chain starts no Spark job once the dataset is counted") {
+    val r = newRunner()
+    val ds = TakeRowsOp(inline(10), skip = 2L)
+    assert(r.lengthOf(ds) == 5L)
+    val text = SelectTextColumnOp(ds, "text")
+    val chain = Seq(text, RedactPIIColumnOp(text), TokenCountOp(text),
+      HashedTfEmbeddingOp(text, dim = 4L),
+      JinjaTemplatizeOp("{{b}} {{a}}",
+        Map("b" -> TokenCountOp(text), "a" -> SelectScoreColumnOp(ds, "score"))),
+      ContaminationFlagOp(text, SelectTextColumnOp(inline(3), "text")),
+      GroupedOp(Seq(text, TokenCountOp(text))))
+    val meter = graft.Meter(spark)
+    try {
+      val before = meter.read()
+      chain.foreach(op => assert(r.lengthOf(op) == 5L, op.typeName))
+      assert((meter.read() - before).jobs == 0)
+    } finally spark.sparkContext.removeSparkListener(meter)
+    assert(r.lengthOf(JinjaTemplatizeOp("constant", Map.empty)) == 1L)
   }
 
   // ---------------- per-op goldens ----------------
@@ -711,16 +764,23 @@ class RunnerSpec extends SparkTestBase {
   }
 }
 
-/** Custom-op fixtures for the extensibility test: a user-defined op with a
-  * registered runner implementation and graph decoder (the reference's
-  * `@MyRunner.implementation` extension story), plus one left unregistered
-  * to pin the error message. */
+/** Custom-op fixtures for the extensibility test: a user-defined op whose
+  * one registration gives it a runner implementation and graph decoding
+  * (the reference's `@MyRunner.implementation` extension story), plus one
+  * left unregistered to pin the error message. */
 object RunnerSpec {
 
   final case class ScaleScoreOp(input: ScoreColumnType, factor: Double)
     extends ScoreColumnType
 
   final case class UnregisteredOp(dataset: DatasetType) extends DatasetType
+
+  // each shares its simple name, and so its store directory, with an op
+  // already known to the decoder
+  final case class TakeRowsOp(dataset: DatasetType) extends DatasetType
+  object Clash {
+    final case class ScaleScoreOp(input: ScoreColumnType) extends ScoreColumnType
+  }
 
   // object initializers run on first touch of the OBJECT, not its nested
   // classes — tests call this to force the registrations below
@@ -732,11 +792,5 @@ object RunnerSpec {
     val in = r.toFrame(op.input)
     FrameResult(in.select(col(graft.ops.ColumnOps.RowIdx),
       (col(r.ValueCol).cast("double") * op.factor).as(r.ValueCol)))
-  }
-
-  OpRegistry.register("ScaleScoreOp") { (o, resolve) =>
-    ScaleScoreOp(
-      OpRegistry.op[ScoreColumnType](o, "input", resolve),
-      OpRegistry.dbl(o, "factor"))
   }
 }

@@ -145,6 +145,24 @@ class OpRoundTripSpec extends AnyFunSuite {
     "TrainUnigramTokenizerOp", "UMAPVizOp", "UmapLayoutOp",
     "UnigramTokenizeOp", "VectorToScalarOp")
 
+  // the ops whose length is their first dataset or column dependency's
+  private val rowAlignedNames = Set(
+    "SelectTextColumnOp", "SelectVectorColumnOp", "SelectCategoricalColumnOp",
+    "SelectBooleanColumnOp", "SelectScoreColumnOp",
+    "SelectTrainTestSplitColumnOp", "SelectJSONColumnOp",
+    "SelectConversationColumnOp", "SelectBinaryColumnOp",
+    "CategoryToBooleanOp", "BooleanLogicOp", "ParseJSONColumnOp",
+    "VectorToScalarOp", "PairwiseArithmeticOp", "JinjaTemplatizeOp",
+    "AssignTrainTestSplitOp", "AssignRowIDOp", "ClassifierPredictOp",
+    "MulticlassPredictOp", "HashedTfEmbeddingOp", "LLMLayerActivationsOp",
+    "LLMLogitScoresOp", "LLMGenerateTextOp", "UMAPVizOp", "SpectralVizOp",
+    "UmapLayoutOp", "KMeansClusterOp", "PrototypeDropOp", "TokenBudgetKeepOp",
+    "KeepBestPerClusterOp", "BloomMembershipOp", "EpochShardOp",
+    "RedactPIIColumnOp", "TokenCountOp", "QualityScoreOp", "LanguageIdOp",
+    "FingerprintOp", "GopherKeepOp", "ContaminationFlagOp", "LmPerplexityOp",
+    "CcnetBucketsOp", "PackSequencesOp", "BpeTokenizeOp", "UnigramTokenizeOp",
+    "ImageMetaOp", "ImageResizeOp", "ImageEmbedOp", "AudioMetaOp")
+
   test("the fixture holds one instance of each of the 81 op classes") {
     assert(opClassNames.size == 81)
     assert(ops.map(_.typeName).toSet == opClassNames)
@@ -175,5 +193,10 @@ class OpRoundTripSpec extends AnyFunSuite {
       assert(back == Seq(op), op.typeName)
       assert(back.head.uuid == op.uuid, op.typeName)
     }
+  }
+
+  test("the row-aligned op classes are the 48 whose length follows an input") {
+    assert(rowAlignedNames.size == 48)
+    assert(ops.collect { case r: RowAligned => r.typeName }.toSet == rowAlignedNames)
   }
 }

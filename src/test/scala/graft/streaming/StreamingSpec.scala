@@ -64,110 +64,6 @@ class StreamingSpec extends SparkTestBase {
   private def ts(minutes: Int): Timestamp =
     Timestamp.valueOf(java.time.LocalDateTime.of(2026, 1, 1, 0, 0).plusMinutes(minutes.toLong))
 
-  test("streaming sessionize: gap sessions match the batch form") {
-    val rows = Seq(
-      ("u1", ts(0), 1.0), ("u1", ts(10), 2.0), // session 1: 2 events
-      ("u1", ts(50), 4.0),                     // >30m gap → session 2
-      ("u2", ts(5), 8.0))                      // own key → own session
-    val input = MemoryStream[(String, Timestamp, Double)]
-    val sessions = Streaming.sessionize(
-      input.toDF.toDF("user_id", "ts", "value"), "user_id", "ts", "value")
-    val q = sessions.writeStream.format("memory")
-      .queryName("sess").outputMode("complete").start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      val got = spark.table("sess")
-        .select("user_id", "n_events", "session_value")
-        .orderBy("user_id", "session_value")
-        .as[(String, Long, Double)].collect().toSeq
-      assert(got == Seq(("u1", 2L, 3.0), ("u1", 1L, 4.0), ("u2", 1L, 8.0)))
-
-      // batch parity: the same function on a batch frame, same sessions
-      val batch = Streaming.sessionize(
-        rows.toDF("user_id", "ts", "value"), "user_id", "ts", "value")
-        .select("user_id", "n_events", "session_value")
-        .orderBy("user_id", "session_value")
-        .as[(String, Long, Double)].collect().toSeq
-      assert(batch == got)
-    } finally q.stop()
-  }
-
-  test("streaming windowed aggregate matches batch") {
-    val rows = Seq(
-      ("click", ts(1), 1.0), ("click", ts(30), 2.0),  // same 1h window
-      ("view", ts(5), 5.0),
-      ("click", ts(90), 4.0))                          // next window
-    val input = MemoryStream[(String, Timestamp, Double)]
-    val agg = Streaming.eventsPerWindow(
-      input.toDF.toDF("event_type", "ts", "value"), "ts", "event_type", "value",
-      window_ = "1 hour")
-    val q = agg.writeStream.format("memory")
-      .queryName("winagg").outputMode("complete").start()
-    try {
-      input.addData(rows: _*)
-      q.processAllAvailable()
-      val got = spark.table("winagg")
-        .select("window_start", "event_type", "n_events", "total_value")
-        .orderBy("window_start", "event_type")
-        .as[(Timestamp, String, Long, Double)].collect().toSeq
-      assert(got == Seq(
-        (ts(0), "click", 2L, 3.0), (ts(0), "view", 1L, 5.0),
-        (ts(60), "click", 1L, 4.0)))
-    } finally q.stop()
-  }
-
-  test("streaming exact dedup: first-seen text wins within the watermark") {
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val deduped = Streaming.dropDuplicateTexts(
-      input.toDF.toDF("doc_id", "text", "ts"), "text", "ts")
-    val q = deduped.writeStream.format("memory")
-      .queryName("dedup").outputMode("append").start()
-    try {
-      input.addData((1L, "alpha", ts(0)), (2L, "alpha", ts(1)), (3L, "beta", ts(0)))
-      q.processAllAvailable()
-      // a duplicate arriving in a LATER micro-batch is still dropped (state)
-      input.addData((4L, "alpha", ts(2)), (5L, "gamma", ts(2)))
-      q.processAllAvailable()
-      val got = spark.table("dedup").select("doc_id", "text")
-        .as[(Long, String)].collect().toMap
-      assert(got.values.toSeq.sorted == Seq("alpha", "beta", "gamma"))
-      assert(got.keySet.intersect(Set(2L, 4L)).isEmpty) // dup rows dropped
-    } finally q.stop()
-  }
-
-  test("streaming near-dup dedup: sketch-identical texts drop, distinct pass") {
-    val input = MemoryStream[(Long, String, Timestamp)]
-    val deduped = Streaming.dropNearDuplicateTexts(
-      input.toDF.toDF("doc_id", "text", "ts"), "text", "ts")
-    val q = deduped.writeStream.format("memory")
-      .queryName("neardedup").outputMode("append").start()
-    try {
-      // "Alpha beta!" vs "alpha, BETA" — identical token multiset after
-      // the sketch's lowercase/non-alnum split, so identical 64-bit
-      // sketches: the second drops even though the raw texts differ
-      // (exactly what the exact-digest twin cannot catch)
-      input.addData(
-        (1L, "Alpha beta!", ts(0)),
-        (2L, "alpha, BETA", ts(1)),
-        (3L, "something entirely different here", ts(0)))
-      q.processAllAvailable()
-      input.addData((4L, "  ALPHA   beta  ", ts(2))) // later batch: state drops it
-      q.processAllAvailable()
-      val got = spark.table("neardedup").select("doc_id")
-        .as[Long].collect().toSet
-      assert(got == Set(1L, 3L), s"got $got")
-      // parity with the batch sketch: the surviving/dropped partition is
-      // exactly the batch simhash-collision grouping of the same rows
-      val batchSketches = Seq("Alpha beta!", "alpha, BETA",
-          "something entirely different here", "  ALPHA   beta  ")
-        .toDF("text").select(graft.ext.Dedup.simhash($"text")).as[Long].collect()
-      assert(batchSketches(0) == batchSketches(1) &&
-        batchSketches(0) == batchSketches(3) &&
-        batchSketches(0) != batchSketches(2))
-    } finally q.stop()
-  }
-
   test("count-or-gap sessions: custom state closes by count, gap, and timeout") {
     val input = MemoryStream[(String, Timestamp, Double)]
     val sessions = Streaming.sessionizeByCountOrGap(
@@ -250,9 +146,12 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("stateless text analysis runs on a stream as-is") {
+    import graft.ext.TextAnalysis
     val input = MemoryStream[(Long, String)]
-    val annotated = Streaming.annotateQuality(
-      input.toDF.toDF("doc_id", "text"), "text")
+    val annotated = input.toDF.toDF("doc_id", "text")
+      .withColumn("n_tokens", TextAnalysis.tokenCount($"text").cast("long"))
+      .withColumn("quality", TextAnalysis.qualityScore($"text"))
+      .withColumn("pred_lang", TextAnalysis.langId($"text"))
     val q = annotated.writeStream.format("memory")
       .queryName("qual").outputMode("append").start()
     try {
@@ -289,30 +188,6 @@ class StreamingSpec extends SparkTestBase {
         assert(w == Multimodal.imgW(id) && h == Multimodal.imgH(id)
           && f == Multimodal.imgFormat(id))
       }
-    } finally q.stop()
-  }
-
-  test("permissive streaming ingest: corrupt payload yields an error row, query survives") {
-    import graft.ext.MediaCodecs
-    val good = (0L until 3L).map(id => (id, MediaCodecs.encodeImage(16, 8, 0x123456, "png")))
-    val bad = Seq((99L, "not an image at all".getBytes("UTF-8")))
-    val input = MemoryStream[(Long, Array[Byte])]
-    val decoded = Streaming.annotateImageMetaPermissive(
-      input.toDF.toDF("doc_id", "img"), "doc_id", "img")
-    val q = decoded.writeStream.format("memory")
-      .queryName("mmperm").outputMode("append").start()
-    try {
-      input.addData(good ++ bad: _*)
-      q.processAllAvailable() // would throw here if the strict kernel ran
-      val rows = spark.table("mmperm")
-        .as[(Long, Option[Int], Option[Int], Option[String], Option[String])]
-        .collect().sortBy(_._1).toSeq
-      assert(rows.length == 4)
-      rows.filter(_._1 < 3).foreach { case (_, w, h, f, err) =>
-        assert(w.contains(16) && h.contains(8) && f.contains("png") && err.isEmpty)
-      }
-      val (_, w, h, f, err) = rows.last
-      assert(w.isEmpty && h.isEmpty && f.isEmpty && err.nonEmpty)
     } finally q.stop()
   }
 
