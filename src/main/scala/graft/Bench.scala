@@ -54,7 +54,7 @@ object Bench {
         val ops = meter.ops()
         if (record) ops.foreach { e =>
           touchedUuids(name) = touchedUuids.getOrElse(name, Set.empty) + e.uuid
-          if (e.resolved)
+          if (e.outcome == Meter.Computed)
             uuidCost(e.uuid) = math.max(uuidCost.getOrElse(e.uuid, 0.0), e.seconds)
         }
         name -> secs

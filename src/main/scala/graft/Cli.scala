@@ -147,13 +147,26 @@ object Cli {
         }
     }.toSeq
 
+  /** The selected ops, and how many store entries could not be read. */
+  private final case class Selection(ops: Seq[OpSpec], unreadable: Int) {
+    def exitCode: Int = if (unreadable > 0) 1 else 0
+  }
+
   /** Graph outputs + all transitive deps, filtered (reference
-    * `filter_ops`, `cli.py:290-352`). */
-  private def selectOps(a: Args, runner: LocalSparkRunner): Seq[OpSpec] = {
+    * `filter_ops`, `cli.py:290-352`). Without `--graph` the roots are the
+    * store's entries; each entry whose op cannot be read is reported on
+    * stderr as `unreadable <uuid>: <message>` and left out. */
+  private def selectOps(a: Args, runner: LocalSparkRunner): Selection = {
+    var unreadable = 0
     val roots: Seq[OpSpec] = a.graph match {
       case Some(path) => Graph.deserializeString(Files.readString(Paths.get(path)))
       case None => runner.listStore().flatMap { uuid =>
-        try Some(runner.uuidToOp(uuid)) catch { case _: Exception => None }
+        try Some(runner.uuidToOp(uuid)) catch {
+          case e: Exception =>
+            unreadable += 1
+            System.err.println(s"unreadable $uuid: ${e.getMessage}")
+            None
+        }
       }
     }
     val all = scala.collection.mutable.LinkedHashMap.empty[String, OpSpec]
@@ -178,7 +191,7 @@ object Cli {
         math.floorMod(
           java.lang.Long.parseLong(op.uuidHash.take(15), 16),
           a.shardCount.toLong) == a.shardIdx.toLong)
-    a.filterCount.fold(filtered)(filtered.take)
+    Selection(a.filterCount.fold(filtered)(filtered.take), unreadable)
   }
 
   private def makeRunner(spark: SparkSession, a: Args): LocalSparkRunner =
@@ -201,6 +214,13 @@ object Cli {
     }
 
   def main(argv: Array[String]): Unit = {
+    val code = run(argv)
+    if (code != 0) sys.exit(code)
+  }
+
+  /** Run one command; returns its exit code (non-zero when an op failed,
+    * nothing matched, or a store entry was unreadable). */
+  def run(argv: Array[String]): Int = {
     val a = parseArgs(argv)
     a.command match {
       // the reference names the command `materialize` with alias `run`
@@ -210,8 +230,8 @@ object Cli {
       case "summary" => cmdSummary(a)
       case "print" => cmdPrint(a)
       case "make-group" | "make_group" => cmdMakeGroup(a)
-      case "config" => cmdConfig(a)
-      case "gc" => cmdGc(a)
+      case "config" => cmdConfig(a); 0
+      case "gc" => cmdGc(a); 0
       case other => usage(s"unknown command $other")
     }
   }
@@ -298,28 +318,30 @@ object Cli {
     * store (status + embedded graph, so a later `run --filter-uuid` can
     * rehydrate it), and print its uuid (reference `make_group`,
     * `cli.py:520-535`). A single-op selection passes through un-wrapped. */
-  private def cmdMakeGroup(a: Args): Unit = {
+  private def cmdMakeGroup(a: Args): Int = {
     if (a.graph.isEmpty) usage("make-group requires --graph")
     val runner = makeRunner(null, a)
-    val ops = selectOps(a, runner)
-    if (ops.isEmpty) { System.err.println("error: no ops matched"); sys.exit(1) }
-    val op = ops match {
+    val sel = selectOps(a, runner)
+    if (sel.ops.isEmpty) { System.err.println("error: no ops matched"); return 1 }
+    val op = sel.ops match {
       case Seq(only) => only
       case many => GroupedOp(many.sortBy(_.uuid))
     }
     runner.prepare(op)
     println(op.uuid)
+    sel.exitCode
   }
 
   /** Materialize every selected op, skipping ones already done, with per-op
     * error capture (reference `cli.py:584-605`). `--parallel N` drives
     * INDEPENDENT selected ops on N threads through the runner's
     * thread-safe memo — shared dependencies still compute exactly once. */
-  private def cmdRun(a: Args): Unit = {
+  private def cmdRun(a: Args): Int = {
     if (a.graph.isEmpty) usage("run requires --graph")
     val (spark, owned) = sparkSession(a)
     val runner = makeRunner(spark, a)
-    val ops = selectOps(a, runner)
+    val sel = selectOps(a, runner)
+    val ops = sel.ops
     val failed = new java.util.concurrent.atomic.AtomicInteger(0)
     def runOne(op: OpSpec): Unit = {
       if (runner.hasResult(op)) {
@@ -353,24 +375,26 @@ object Cli {
     }
     runner.close()
     if (owned) spark.stop()
-    if (failed.get() > 0) sys.exit(1)
+    if (failed.get() > 0) 1 else sel.exitCode
   }
 
-  private def cmdStatus(a: Args): Unit = {
+  private def cmdStatus(a: Args): Int = {
     val runner = makeRunner(null, a)
-    selectOps(a, runner).sortBy(_.uuid).foreach { op =>
+    val sel = selectOps(a, runner)
+    sel.ops.sortBy(_.uuid).foreach { op =>
       val st = runner.status(op)
       if (a.json) println(Json.render(st.toJson))
       else println(s"${op.uuid}: ${st.state}")
     }
+    sel.exitCode
   }
 
   /** State counts by op type (reference `cli.py:417-489`); ephemerals are
     * elided from the table like the reference. */
-  private def cmdSummary(a: Args): Unit = {
+  private def cmdSummary(a: Args): Int = {
     val runner = makeRunner(null, a)
-    val ops = selectOps(a, runner)
-    val byType = ops.groupBy(_.typeName)
+    val sel = selectOps(a, runner)
+    val byType = sel.ops.groupBy(_.typeName)
     val rows = byType.toSeq.map { case (tpe, tops) =>
       val states = tops.map(op => runner.status(op).state)
         .filterNot(_ == OpState.Ephemeral)
@@ -392,21 +416,23 @@ object Cli {
           f"${c(OpState.Running)}%6d ${c(OpState.Completed)}%6d ${c(OpState.Failed)}%6d")
       }
     }
+    sel.exitCode
   }
 
   /** Pseudocode, JSONL, or Mermaid rendering (reference `cli.py:492-517`;
     * flowchart repr `op_spec.py:620-630`). */
-  private def cmdPrint(a: Args): Unit = {
+  private def cmdPrint(a: Args): Int = {
     if (a.graph.isEmpty) usage("print requires --graph")
     val outputs = Graph.deserializeString(Files.readString(Paths.get(a.graph.get)))
     a.format match {
       case "code" => outputs.foreach(op => println(op.toCode()))
       case "jsonl" =>
         val runner = makeRunner(null, a)
-        selectOps(a, runner).foreach(op => println(Json.render(op.toJson)))
+        selectOps(a, runner).ops.foreach(op => println(Json.render(op.toJson)))
       case "mermaid" => println(mermaid(outputs))
       case other => usage(s"unknown format $other")
     }
+    0
   }
 
   /** Mermaid flowchart of the graph: node per op, edge per dependency with

@@ -47,11 +47,20 @@ object Meter {
     def -(o: Reading): Reading = Reading(jobs - o.jobs, shuffleBytes - o.shuffleBytes)
   }
 
-  /** One `materialize` call: `resolved` is false for a memo hit (another
-    * call in this JVM already resolved the uuid), whose `seconds` is 0. A
-    * call that fails posts nothing. */
+  /** How one `materialize` call resolved its op. */
+  sealed trait Outcome
+  /** Another call in this JVM already resolved the uuid; `seconds` is 0. */
+  case object MemoHit extends Outcome
+  /** Read back from the store, computing nothing. */
+  case object StoreHit extends Outcome
+  /** Computed here (and persisted, unless the op is ephemeral). */
+  case object Computed extends Outcome
+  /** The call threw. */
+  case object Failed extends Outcome
+
+  /** One `materialize` call and its outcome. */
   final case class OpEvent(opClass: String, uuid: String, seconds: Double,
-      resolved: Boolean) extends SparkListenerEvent
+      outcome: Outcome) extends SparkListenerEvent
 
   def apply(spark: SparkSession): Meter = {
     val m = new Meter(spark.sparkContext)

@@ -3,7 +3,7 @@ package graft
 /** Profiling utility: run one named query (repeatedly) against an sf dir
   * with the same forced-evaluation sink as Bench, and print per run its
   * wall seconds, its Spark job count and, longest first, the runner ops it
-  * resolved (each op's seconds include the inputs it resolved first). The
+  * computed (each op's seconds include the inputs it resolved first). The
   * job count is the direct evidence for fixed-overhead work that a
   * wall-clock number hides under box noise. Optionally prints the formatted
   * plan. A comma-separated name list runs the whole sequence in order
@@ -30,7 +30,7 @@ object Prof {
         SparkEntry.queries(n)(spark, sfDir).write.format("noop").mode("overwrite").save()
         val secs = (System.nanoTime() - t0) / 1e9
         println(f"[prof] $n run $i: $secs%.2f s jobs=${(meter.read() - before).jobs}")
-        meter.ops().filter(_.resolved).sortBy(-_.seconds).foreach { e =>
+        meter.ops().filter(_.outcome == Meter.Computed).sortBy(-_.seconds).foreach { e =>
           println(f"[prof]   ${e.seconds}%7.2f s ${e.opClass} ${e.uuid}")
         }
       }

@@ -1,6 +1,6 @@
 package graft.ml
 
-import org.apache.spark.ml.{Estimator, Pipeline, PipelineModel, PipelineStage, Transformer}
+import org.apache.spark.ml.{Estimator, Pipeline, PipelineStage, Transformer}
 import org.apache.spark.ml.classification._
 import org.apache.spark.ml.feature.{Normalizer, StandardScaler}
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
@@ -194,8 +194,6 @@ object ClassifierRegistry {
         .setNu(dblP(if (sp.contains("nu")) sp else p, "nu", 0.5))
         .setMaxIter(intP(if (sp.contains("max_iter")) sp else p, "max_iter", 20)))
   }
-
-  def loadModel(path: String): Transformer = PipelineModel.load(path)
 }
 
 /** Train / predict / evaluate for linear probes over activation vectors —
@@ -293,9 +291,10 @@ object Probes {
     * accuracy-maximizing one).
     *
     * Distributed shape: one groupBy per (split, rounded score) builds the
-    * curve deltas; cardinality is hard-capped at `MaxCurvePoints` by
-    * fixed-grid re-binning, after which the descending-score cumulative sum
-    * is a bounded driver-side pass — no window over data at all.
+    * curve deltas, and one capped collect brings them and the per-split
+    * totals to the driver; past `MaxCurvePoints` rows the scores are
+    * re-binned to a fixed grid. The descending-score cumulative sum is a
+    * bounded driver-side pass — no window over data at all.
     */
   def evaluate(r: LocalSparkRunner, op: ClassifierEvaluationOp): JValue = {
     val score = r.toFrame(op.score).select(col(RowIdx), col(r.ValueCol).as("__score"))
@@ -315,26 +314,27 @@ object Probes {
       .withColumn("__label", when(col("__pos"), 1L).otherwise(0L))
       .withColumn("__s", round(col("__score").cast("double"), 9))
 
-    // per-(split, score) counts → per-split descending-score cumulative
-    // curve via a TWO-PHASE distributed prefix sum: range-partition on
-    // (split, score desc), windows partitioned by (split, physical
-    // partition) for local cumsums, then tiny per-partition offsets
-    // broadcast back. A plain Window.partitionBy(__split) degrades to a
-    // single-partition window whenever split is None (constant column is
-    // folded out of the partition spec) — the round-1 scale-killer.
+    // ONE action: the per-(split, rounded score) curve deltas, each group
+    // also carrying its score sum and non-null score count, collected with
+    // a cap of MaxCurvePoints + 1 rows. The per-split totals follow from
+    // the deltas on the driver (n_true = Σ tp, n_false = Σ fp, count = both;
+    // avg_score = Σ score / Σ count(score)).
     val curveRaw = eligible.groupBy(col("__split"), col("__s"))
       .agg(sum(col("__label")).as("__tp_here"),
-        sum(lit(1L) - col("__label")).as("__fp_here"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Bound the curve cardinality BEFORE the cumulative pass + collect:
-    // 9-dp rounding alone admits up to ~1e9 distinct points for continuous
-    // scores on a large eligible set — an unbounded driver-memory risk. Past
-    // `MaxCurvePoints` distinct (split, score) rows, scores are re-binned to
-    // a fixed uniform grid per split (bin representative = its max score,
-    // the standard curve approximation); under it, results are bit-identical
-    // to the unbinned form.
-    val curve =
-      if (curveRaw.count() <= MaxCurvePoints) curveRaw
+        sum(lit(1L) - col("__label")).as("__fp_here"),
+        sum(col("__score").cast("double")).as("__score_sum"),
+        count(col("__score")).as("__score_n"))
+    val curveCols = Seq("__split", "__s", "__tp_here", "__fp_here",
+      "__score_sum", "__score_n").map(col)
+    val capped = curveRaw.select(curveCols: _*).limit(MaxCurvePoints + 1).collect()
+    // Bound the curve cardinality the driver holds: 9-dp rounding alone
+    // admits up to ~1e9 distinct points for continuous scores on a large
+    // eligible set. Past `MaxCurvePoints` distinct (split, score) rows,
+    // scores are re-binned to a fixed uniform grid per split (bin
+    // representative = its max score, the standard curve approximation);
+    // under it, results are bit-identical to the unbinned form.
+    val curveRows =
+      if (capped.length <= MaxCurvePoints) capped
       else {
         System.err.println(s"[evaluate] curve exceeds $MaxCurvePoints " +
           "distinct scores; binning to a fixed grid (AUC/AP/threshold " +
@@ -351,36 +351,36 @@ object Probes {
           .groupBy(col("__split"), col("__bin"))
           .agg(max(col("__s")).as("__s"),
             sum(col("__tp_here")).as("__tp_here"),
-            sum(col("__fp_here")).as("__fp_here"))
-          .drop("__bin")
+            sum(col("__fp_here")).as("__fp_here"),
+            sum(col("__score_sum")).as("__score_sum"),
+            sum(col("__score_n")).as("__score_n"))
+          .select(curveCols: _*)
+          .collect()
       }
-    val totals = eligible.groupBy(col("__split"))
-      .agg(count(lit(1)).as("n"),
-        sum(col("__label")).as("n_true"),
-        sum(lit(1L) - col("__label")).as("n_false"),
-        avg(col("__score").cast("double")).as("avg_score"))
-      .collect().map(r0 => r0.getString(0) ->
-        (r0.getLong(1), r0.getLong(2), r0.getLong(3),
-          if (r0.isNullAt(4)) Double.NaN else r0.getDouble(4))).toMap
+    val bySplit = curveRows.groupBy(_.getString(0))
+    val totals = bySplit.map { case (k, rs) =>
+      val nT = rs.map(_.getLong(2)).sum
+      val nF = rs.map(_.getLong(3)).sum
+      val nScored = rs.map(_.getLong(5)).sum
+      val avgS =
+        if (nScored == 0) Double.NaN
+        else rs.filterNot(_.isNullAt(4)).map(_.getDouble(4)).sum / nScored
+      k -> (nT + nF, nT, nF, avgS)
+    }
 
-    // collect the (bounded — MaxCurvePoints) per-split curve DELTAS and run
-    // the descending-score cumulative sum on the driver: with cardinality
-    // capped upstream, a driver cumsum over ≤ 10⁴ points replaces the
-    // distributed prefix-sum of rounds 2-4, whose repartitionByRange +
-    // spark_partition_id offsets could disagree between the two subtree
-    // evaluations of the same exchange (re-sampled bounds) — the same
-    // nondeterminism class fixed in ColumnOps.withRowIdxByKey.
-    val curves: Map[String, Array[(Double, Long, Long)]] = curve
-      .select(col("__split"), col("__s"), col("__tp_here"), col("__fp_here"))
-      .collect()
-      .groupBy(_.getString(0))
+    // the descending-score cumulative sum over the (bounded —
+    // MaxCurvePoints) per-split curve DELTAS runs on the driver: a
+    // distributed prefix sum's repartitionByRange + spark_partition_id
+    // offsets can disagree between two evaluations of the same exchange
+    // (re-sampled bounds) — the nondeterminism class fixed in
+    // ColumnOps.withRowIdxByKey.
+    val curves: Map[String, Array[(Double, Long, Long)]] = bySplit
       .map { case (k, rs) =>
         var tp = 0L; var fp = 0L
         k -> rs.map(r0 => (r0.getDouble(1), r0.getLong(2), r0.getLong(3)))
           .sortBy(-_._1)
           .map { case (s, tph, fph) => tp += tph; fp += fph; (s, tp, fp) }
       }
-    curveRaw.unpersist()
 
     val recallGrid = Seq(0.1, 0.2, 0.3, 0.4, 0.5, 0.6, 0.7, 0.8, 0.9, 0.95, 0.99, 0.999)
 

@@ -22,8 +22,9 @@ import org.apache.spark.sql.types.StructType
   * can afford to fit on 100 TB of activations.
   *
   * fit() returns a stock [[LogisticRegressionModel]] (built via
-  * [[GraftMlBridge]]), so predict, persistence, and store round-trips are
-  * byte-identical to the LBFGS path.
+  * [[GraftMlBridge]]), so predict is the LBFGS path's, and the store keeps
+  * it the same way: one `model.json` ([[ModelCodec]]), written and read
+  * without a Spark job.
   */
 class DiffOfMeansClassifier(override val uid: String)
   extends Estimator[LogisticRegressionModel] {

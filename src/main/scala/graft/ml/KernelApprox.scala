@@ -229,8 +229,8 @@ class NystroemEstimator(override val uid: String)
   * scores, where exactly νn points violate). Every step is one
   * `treeAggregate`-shaped pass over the (cached) training frame — the same
   * distributed shape as an LBFGS iteration; driver state is O(dim).
-  * Returns a stock LinearSVCModel carrying (w, −ρ), so persistence and
-  * scoring reuse Spark ML's own machinery.
+  * Returns a stock LinearSVCModel carrying (w, −ρ), so scoring is Spark
+  * ML's own and the store keeps it as (w, b) in `model.json`.
   */
 class OneClassLinearSVM(override val uid: String)
   extends Estimator[org.apache.spark.ml.classification.LinearSVCModel] {
@@ -316,9 +316,8 @@ class OneClassLinearSVM(override val uid: String)
 
 /** A (kernel feature map → linear estimator) pair exposed as ONE estimator
   * with the `setFeaturesCol`/`setLabelCol` surface the probe harness
-  * drives reflectively. fit() returns a stock [[PipelineModel]], so
-  * persistence and store round-trips go through Spark ML's own
-  * reader/writer machinery (every stage is DefaultParams-writable). */
+  * drives reflectively. fit() returns a stock [[PipelineModel]] whose
+  * stages the store keeps in `model.json` ([[ModelCodec]]). */
 class KernelClassifier(
     override val uid: String,
     kernelStage: PipelineStage,

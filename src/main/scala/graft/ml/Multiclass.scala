@@ -122,10 +122,9 @@ object MulticlassRegistry {
   * index, the engine-wide tie-break).
   *
   * State lives entirely in Params (the centroid matrix as canonical JSON —
-  * classes × dim longs, the model IS small), so the stock
-  * `DefaultParamsWritable` machinery persists it and
-  * `PipelineModel.load` restores it through the same store round-trip as
-  * any Spark ML stage. Scoring compiles to Column expressions over plan
+  * classes × dim longs, the model IS small), so it is a params-only stage:
+  * the store keeps it in `model.json` through Spark's own param metadata
+  * ([[ModelCodec]]). Scoring compiles to Column expressions over plan
   * literals: map-only, no join, no shuffle — the 100 TB inference shape.
   */
 class QuantizedCentroidModel(override val uid: String)

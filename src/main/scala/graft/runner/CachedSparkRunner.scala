@@ -235,9 +235,9 @@ class CachedSparkRunner(
     * files, and unioning them would duplicate every row. Instead each
     * multi-file RESULT DIRECTORY (result.parquet/, model/) is staged as a
     * temp sibling and atomically renamed into place — first complete writer
-    * wins, the loser discards its staging; single files go through
-    * `copyAtomic` with the same first-writer-wins rule; `done` strictly
-    * last. If the shared op dir is already done, the push is a no-op
+    * wins, the loser discards its staging; single files (result.json,
+    * model.json, status.json) go through `copyAtomic` with the same
+    * first-writer-wins rule; `done` strictly last. If the shared op dir is already done, the push is a no-op
     * (content-addressed results are interchangeable). */
   private def push(op: OpSpec): Unit = {
     val from = cacheDir(op); val to = sharedDir(op)

@@ -29,9 +29,10 @@ final case class ModelResult(model: org.apache.spark.ml.Transformer) extends Mat
   *     every pull.
   *   - Non-ephemeral results persist to a content-addressed store
   *     `store/<ClassName>/<hash>/` as `result.parquet` (zstd) / `result.json`
-  *     / `model/`, plus a `done` marker and a `status.json` that embeds the
-  *     op's full serialized graph (the rehydration + cross-machine sharing
-  *     medium, reference `local_arrow_runner.py:250-269`). The second
+  *     / `model.json` or `model/` ([[graft.ml.ModelCodec]]), plus a `done`
+  *     marker and a `status.json` that embeds the op's full serialized graph
+  *     (the rehydration + cross-machine sharing medium, reference
+  *     `local_arrow_runner.py:250-269`). The second
   *     materialize of any op — in this process or another — is an
   *     O(metadata) store read, no recompute.
   *   - Positional identity: every dataset carries a deterministic
@@ -119,6 +120,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
   private def statusPath(op: OpSpec): Path = opDir(op).resolve("status.json")
   private def resultParquet(op: OpSpec): Path = opDir(op).resolve("result.parquet")
   private def resultJson(op: OpSpec): Path = opDir(op).resolve("result.json")
+  private def modelJson(op: OpSpec): Path = opDir(op).resolve("model.json")
   private def modelDir(op: OpSpec): Path = opDir(op).resolve("model")
 
   /** `done`-marker protocol (reference `local_arrow_runner.py:146-152`). */
@@ -284,35 +286,43 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     * overlap independent subgraphs on one cluster. */
   def materialize(op: OpSpec): MatResult = {
     val existing = memo.get(op.uuid)
-    if (existing != null) {
-      postOpEvent(op, 0.0, resolved = false)
-      return awaitResult(existing)
-    }
+    if (existing != null) return awaitMemo(op, existing)
     val fresh = new java.util.concurrent.CompletableFuture[MatResult]()
     val prior = memo.putIfAbsent(op.uuid, fresh)
-    if (prior != null) {
-      postOpEvent(op, 0.0, resolved = false)
-      return awaitResult(prior)
-    }
+    if (prior != null) return awaitMemo(op, prior)
+    val t0 = System.nanoTime()
+    def seconds = (System.nanoTime() - t0) / 1e9
     try {
-      val t0 = System.nanoTime()
-      val r = materializeAny(op)
-      postOpEvent(op, (System.nanoTime() - t0) / 1e9, resolved = true)
+      val (r, outcome) = materializeAny(op)
+      postOpEvent(op, seconds, outcome)
       fresh.complete(r)
       r
     } catch {
       case e: Throwable =>
+        postOpEvent(op, seconds, graft.Meter.Failed)
         fresh.completeExceptionally(e)
         memo.remove(op.uuid, fresh) // failures are not cached; retry recomputes
         throw e
     }
   }
 
+  /** A call that found the uuid in the memo: a memo hit, or a failure when
+    * the attempt it waited on failed. */
+  private def awaitMemo(op: OpSpec,
+      f: java.util.concurrent.CompletableFuture[MatResult]): MatResult = {
+    val r = try awaitResult(f) catch {
+      case e: Throwable => postOpEvent(op, 0.0, graft.Meter.Failed); throw e
+    }
+    postOpEvent(op, 0.0, graft.Meter.MemoHit)
+    r
+  }
+
   /** One [[graft.Meter.OpEvent]] per call on the session's listener bus
     * (asynchronous; read by the measuring programs' [[graft.Meter]]). */
-  private def postOpEvent(op: OpSpec, seconds: Double, resolved: Boolean): Unit =
+  private def postOpEvent(op: OpSpec, seconds: Double,
+      outcome: graft.Meter.Outcome): Unit =
     org.apache.spark.GraftBus.post(spark.sparkContext, graft.Meter.OpEvent(
-      op.getClass.getSimpleName, op.uuid, seconds, resolved))
+      op.getClass.getSimpleName, op.uuid, seconds, outcome))
 
   private def awaitResult(
       f: java.util.concurrent.CompletableFuture[MatResult]): MatResult =
@@ -348,9 +358,17 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     } finally pool.shutdown()
   }
 
-  private def materializeAny(op: OpSpec): MatResult = op match {
-    case g: GroupedOp => materializeGroup(g)
-    case _ => materialize0(op)
+  private def materializeAny(op: OpSpec): (MatResult, graft.Meter.Outcome) = op match {
+    case g: GroupedOp => (materializeGroup(g), graft.Meter.Computed)
+    case _ =>
+      // readResult = None means a concurrent gc collected the completed
+      // entry between the isDone probe and the read: fall through and
+      // recompute (the entry was legitimately unkept; correctness is
+      // content-addressed, not location-addressed)
+      (if (!op.isEphemeral && isDone(op)) readResult(op) else None) match {
+        case Some(r) => (r, graft.Meter.StoreHit)
+        case None => (materialize0(op), graft.Meter.Computed)
+      }
   }
 
   /** GroupedOp is a materialization UNIT, not a copy: members persist under
@@ -390,59 +408,53 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     }
 
   private def materialize0(op: OpSpec): MatResult = {
-    // memoization happens in materialize() — this body runs once per uuid.
-    // readResult = None means a concurrent gc collected the completed
-    // entry between the isDone probe and the read: fall through and
-    // recompute (the entry was legitimately unkept; correctness is
-    // content-addressed, not location-addressed)
-    (if (!op.isEphemeral && isDone(op)) readResult(op) else None).getOrElse {
-      if (op.isEphemeral) {
-        // stays lazy; nothing persisted (ephemeral fusion). Select frames —
-        // narrow (idx, value) projections pulled by many consumers (train
-        // AND predict AND eval all pull x) — additionally go to the Spark
-        // block cache, the distributed analog of the reference's in-process
-        // `_materialization_cache` (`local_arrow_runner.py:309-324`): lazy
-        // until first action, spills to disk, column pruning already
-        // happened at the select so the cached width is minimal.
-        compute(op) match {
-          case FrameResult(df) if op.isInstanceOf[SelectColumnOp] =>
-            val persisted = df.persist(
-              org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-            synchronized { cachedFrames += persisted }
-            FrameResult(persisted)
-          case other => other
-        }
-      } else {
-        // captured once so completed/failed statuses report the true
-        // duration (re-stamping at completion showed ~0 every time)
-        val started = Instant.now.toString
-        writeStatus(OpStatus(op.uuid, OpState.Running,
+    // memoization happens in materialize() — this body runs once per uuid
+    if (op.isEphemeral) {
+      // stays lazy; nothing persisted (ephemeral fusion). Select frames —
+      // narrow (idx, value) projections pulled by many consumers (train
+      // AND predict AND eval all pull x) — additionally go to the Spark
+      // block cache, the distributed analog of the reference's in-process
+      // `_materialization_cache` (`local_arrow_runner.py:309-324`): lazy
+      // until first action, spills to disk, column pruning already
+      // happened at the select so the cached width is minimal.
+      compute(op) match {
+        case FrameResult(df) if op.isInstanceOf[SelectColumnOp] =>
+          val persisted = df.persist(
+            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          synchronized { cachedFrames += persisted }
+          FrameResult(persisted)
+        case other => other
+      }
+    } else {
+      // captured once so completed/failed statuses report the true
+      // duration (re-stamping at completion showed ~0 every time)
+      val started = Instant.now.toString
+      writeStatus(OpStatus(op.uuid, OpState.Running,
+        startedAt = Some(started),
+        graph = Some(Graph.serialize(op))))
+      try {
+        val result = compute(op)
+        val fmt = persist(op, result)
+        writeStatus(OpStatus(op.uuid, OpState.Completed,
           startedAt = Some(started),
+          completedAt = Some(Instant.now.toString),
+          resultFormat = Some(fmt),
           graph = Some(Graph.serialize(op))))
-        try {
-          val result = compute(op)
-          val fmt = persist(op, result)
-          writeStatus(OpStatus(op.uuid, OpState.Completed,
+        Files.writeString(donePath(op), "")
+        onResultPersisted(op)
+        // re-read data results from the store so downstream consumers scan
+        // the compact persisted parquet, not the original lineage; if a
+        // concurrent gc swept our freshly-completed entry already, the
+        // in-hand computed result is the semantically-identical fallback
+        if (fmt == "parquet") readResult(op).getOrElse(result) else result
+      } catch {
+        case e: Throwable =>
+          writeStatus(OpStatus(op.uuid, OpState.Failed,
             startedAt = Some(started),
             completedAt = Some(Instant.now.toString),
-            resultFormat = Some(fmt),
+            error = Some(String.valueOf(e.getMessage)),
             graph = Some(Graph.serialize(op))))
-          Files.writeString(donePath(op), "")
-          onResultPersisted(op)
-          // re-read data results from the store so downstream consumers scan
-          // the compact persisted parquet, not the original lineage; if a
-          // concurrent gc swept our freshly-completed entry already, the
-          // in-hand computed result is the semantically-identical fallback
-          if (fmt == "parquet") readResult(op).getOrElse(result) else result
-        } catch {
-          case e: Throwable =>
-            writeStatus(OpStatus(op.uuid, OpState.Failed,
-              startedAt = Some(started),
-              completedAt = Some(Instant.now.toString),
-              error = Some(String.valueOf(e.getMessage)),
-              graph = Some(Graph.serialize(op))))
-            throw e
-        }
+          throw e
       }
     }
   }
@@ -459,9 +471,11 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         Files.writeString(tmp, Json.renderPretty(j)))
       "json"
     case ModelResult(m) =>
-      persistStaged(op, modelDir(op)) { tmp =>
-        m.asInstanceOf[org.apache.spark.ml.util.MLWritable]
-          .write.overwrite().save(tmp.toString)
+      graft.ml.ModelCodec.encode(m, spark) match {
+        case Some(json) =>
+          persistStaged(op, modelJson(op))(tmp => Files.writeString(tmp, json))
+        case None =>
+          persistStaged(op, modelDir(op))(tmp => graft.ml.ModelCodec.saveDir(m, tmp))
       }
       "model"
   }
@@ -604,9 +618,11 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
           return Some(FrameResult(spark.read.parquet(resultParquet(op).toString)))
         else if (Files.exists(resultJson(op)))
           return Some(JsonResult(Json.parse(Files.readString(resultJson(op)))))
-        else if (Files.exists(modelDir(op)))
+        else if (Files.exists(modelJson(op)))
           return Some(ModelResult(
-            graft.ml.ClassifierRegistry.loadModel(modelDir(op).toString)))
+            graft.ml.ModelCodec.decode(Files.readString(modelJson(op)))))
+        else if (Files.exists(modelDir(op)))
+          return Some(ModelResult(graft.ml.ModelCodec.loadDir(modelDir(op))))
       } catch {
         case _: org.apache.spark.sql.AnalysisException
            | _: java.io.FileNotFoundException

@@ -94,6 +94,37 @@ class CliSpec extends SparkTestBase {
     assert(out.contains(ds.uuid))
   }
 
+  test("status, summary and run report unreadable store entries and exit non-zero") {
+    val store = newStoreDir()
+    val r = new LocalSparkRunner(spark, store)
+    val good = AssignRowIDOp(LoadInlineJsonDatasetOp(Map("g" -> Seq(1L, 2L))))
+    val bad = AssignRowIDOp(LoadInlineJsonDatasetOp(Map("b" -> Seq(3L))))
+    r.materialize(good)
+    r.materialize(bad)
+    Files.writeString(r.opDir(bad).resolve("status.json"), "{not json")
+    def withStderr(f: => Int): (Int, String) = {
+      val buf = new java.io.ByteArrayOutputStream()
+      val saved = System.err
+      System.setErr(new java.io.PrintStream(buf, true))
+      try (f, buf.toString("UTF-8")) finally System.setErr(saved)
+    }
+    for (cmd <- Seq("status", "summary")) {
+      var code = 0
+      val (_, err) = withStderr {
+        val out = withStdout { code = Cli.run(Array(cmd, "--store", store)) }
+        assert(out.contains(if (cmd == "status") s"${good.uuid}: completed"
+          else "AssignRowIDOp"), s"$cmd:\n$out")
+        code
+      }
+      assert(code == 1, cmd)
+      assert(err.linesIterator.exists(l =>
+        l.startsWith(s"unreadable ${bad.uuid}: ") && l.contains("status.json")), s"$cmd:\n$err")
+    }
+    val g = writeGraph(store, good)
+    val (runCode, runErr) = withStderr(Cli.run(Array("run", "--store", store, "--graph", g)))
+    assert(runCode == 0 && runErr.isEmpty) // a graph names its ops; the store is not listed
+  }
+
   test("mermaid rendering emits nodes and labeled edges") {
     val store = newStoreDir()
     val ds = LoadInlineJsonDatasetOp(Map("x" -> Seq(1L, 2L)))

@@ -34,7 +34,8 @@ class MeterSpec extends SparkTestBase {
     metered { meter =>
       meter.ops() // events posted before the meter was added may still arrive
       val posted = (0 until 500).map(i =>
-        Meter.OpEvent("SomeOp", s"uuid-$i", i / 10.0, resolved = i % 2 == 0))
+        Meter.OpEvent("SomeOp", s"uuid-$i", i / 10.0,
+          if (i % 2 == 0) Meter.Computed else Meter.MemoHit))
       posted.foreach(GraftBus.post(spark.sparkContext, _))
       assert(meter.ops() == posted)
       assert(meter.ops().isEmpty)

@@ -102,6 +102,27 @@ class ProbeSpec extends SparkTestBase {
       .map(_.asInstanceOf[Double]) == scores)
   }
 
+  test("job counts: storing and loading a logistic pipeline runs no job; evaluate at most half the old") {
+    val meter = graft.Meter(spark)
+    try {
+      def jobs(f: => Unit): Long = {
+        val before = meter.read(); f; (meter.read() - before).jobs
+      }
+      val (_, model, score, eval) = chain("difference_of_means")
+      val r = newRunner()
+      val fitted = r.toModel(model)
+      r.toFrame(score) // every input of the evaluation resolved beforehand
+      val store = newStoreDir()
+      val write = jobs(new LocalSparkRunner(spark, store).writeModel(model, fitted))
+      val load = jobs(new LocalSparkRunner(spark, store).toModel(model))
+      val evaluate = jobs(r.toJson(eval))
+      // Spark ML's writer and reader ran 3 and 5 jobs here, and the
+      // three-action evaluation 13
+      assert(write == 0 && load == 0, s"write $write, load $load jobs")
+      assert(evaluate <= 13 / 2, s"evaluate ran $evaluate jobs")
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
   test("difference_of_means on separable data: high AUC via the full chain") {
     val r = newRunner()
     val (_, _, _, eval) = chain("difference_of_means")

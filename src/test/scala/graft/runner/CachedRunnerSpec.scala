@@ -96,6 +96,31 @@ class CachedRunnerSpec extends SparkTestBase {
     assert(scores.grouped(2).forall { case Seq(p, q) => p > q })
   }
 
+  test("a model.json result pushes to the shared store and pulls into another cache") {
+    val shared = newDir("graft-shared-")
+    val ds = LoadInlineJsonDatasetOp(Map(
+      "emb" -> Seq(Seq(1.0, 0.2), Seq(0.8, 0.0), Seq(-1.0, 0.1), Seq(-0.7, 0.3)),
+      "label" -> Seq("pos", "pos", "neg", "neg")))
+    val x = SelectVectorColumnOp(ds, "emb")
+    val cat = SelectCategoricalColumnOp(ds, "label")
+    val model = TrainClassifierOp("difference_of_means", x,
+      CategoryToBooleanOp(cat, Some(Seq("pos"))), CategoryToBooleanOp(cat, Some(Seq("neg"))))
+    def lr(m: org.apache.spark.ml.Transformer) =
+      m.asInstanceOf[org.apache.spark.ml.PipelineModel].stages.last
+        .asInstanceOf[org.apache.spark.ml.classification.LogisticRegressionModel]
+    val machineA = new CachedSparkRunner(spark, shared, newDir("graft-cacheA-"))
+    val fitted = lr(machineA.toModel(model))
+    val (cls, hash) = (model.uuid.takeWhile(_ != '_'), model.uuid.dropWhile(_ != '_').drop(1))
+    assert(Files.exists(Paths.get(shared, cls, hash, "model.json")))
+    assert(Files.exists(Paths.get(shared, cls, hash, "done")))
+
+    val machineB = new CachedSparkRunner(spark, shared, newDir("graft-cacheB-"))
+    assert(machineB.isDone(model))
+    assert(Files.exists(machineB.opDir(model).resolve("model.json")))
+    val pulled = lr(machineB.toModel(model))
+    assert(pulled.coefficients == fitted.coefficients && pulled.intercept == fitted.intercept)
+  }
+
   test("push is first-writer-wins: a complete shared result is never merged into") {
     val shared = newDir("graft-shared-")
     val rid = AssignRowIDOp(inline(4))

@@ -743,23 +743,39 @@ class RunnerSpec extends SparkTestBase {
     assert(st.error.nonEmpty)
   }
 
-  test("materialize posts one op event per call: resolved, then memo hit; none on failure") {
+  test("materialize posts one op event per call with its outcome") {
     val meter = graft.Meter(spark)
     try {
-      val r = newRunner()
+      val store = newStoreDir()
+      val r = new LocalSparkRunner(spark, store)
       val ds = AssignRowIDOp(inline(5))
       assert(!ds.isEphemeral)
       r.materialize(ds)
       r.materialize(ds)
       val mine = meter.ops().filter(_.uuid == ds.uuid)
-      assert(mine.map(e => (e.opClass, e.resolved)) ==
-        Seq("AssignRowIDOp" -> true, "AssignRowIDOp" -> false))
+      assert(mine.map(e => (e.opClass, e.outcome)) ==
+        Seq("AssignRowIDOp" -> graft.Meter.Computed, "AssignRowIDOp" -> graft.Meter.MemoHit))
       assert(mine.head.seconds > 0 && mine(1).seconds == 0.0)
+
+      // a store hit: a fresh runner serves a trained model from model.json
+      val x = SelectVectorColumnOp(LoadInlineJsonDatasetOp(Map(
+        "v" -> Seq(Seq(1.0, 0.0), Seq(0.9, 0.1), Seq(0.0, 1.0), Seq(0.1, 0.9)),
+        "y" -> Seq("a", "a", "b", "b"))), "v")
+      val y = SelectCategoricalColumnOp(x.dataset, "y")
+      val model = TrainClassifierOp("difference_of_means", x,
+        CategoryToBooleanOp(y, Some(Seq("a"))), CategoryToBooleanOp(y, Some(Seq("b"))))
+      r.materialize(model)
+      assert(Files.exists(r.opDir(model).resolve("model.json")))
+      meter.ops()
+      new LocalSparkRunner(spark, store).toModel(model)
+      assert(meter.ops().filter(_.uuid == model.uuid).map(_.outcome) ==
+        Seq(graft.Meter.StoreHit))
 
       val bad = AssignRowIDOp(MaskRowsOp(inline(3), CategoryToBooleanOp(
         SelectVectorColumnOp(inline(3), "text"), Some(Seq("x")))))
       intercept[Exception](r.materialize(bad))
-      assert(!meter.ops().exists(_.uuid == bad.uuid))
+      assert(meter.ops().filter(_.uuid == bad.uuid).map(_.outcome) ==
+        Seq(graft.Meter.Failed))
     } finally spark.sparkContext.removeSparkListener(meter)
   }
 }
