@@ -1700,4 +1700,144 @@ class StreamingSpec extends SparkTestBase {
       .as[Boolean].collect()
     assert(hits.forall(identity))
   }
+
+  /** Writes `batches` as `b0, b1, …` under a fresh dir, one file each, a
+    * second apart so the file source delivers them in that order. */
+  private def stagedBatches(prefix: String,
+                            batches: Seq[org.apache.spark.sql.DataFrame]): String = {
+    val dir = tmp(prefix)
+    for ((b, i) <- batches.zipWithIndex) {
+      b.coalesce(1).write.parquet(s"$dir/b$i")
+      if (i < batches.length - 1) Thread.sleep(1100)
+    }
+    dir
+  }
+
+  /** A file stream over the staged batches `names` of `dir`, one per
+    * micro-batch. */
+  private def batchStream(dir: String, names: String*) =
+    spark.readStream.schema(spark.read.parquet(s"$dir/b0").schema)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(s"$dir/{${names.mkString(",")}}/*.parquet")
+
+  /** Every row under `dir` minus its `batch_id`, as a sorted multiset. */
+  private def rowsWithoutBatchId(dir: String): Seq[String] =
+    spark.read.parquet(dir).drop("batch_id").collect().toSeq
+      .map(_.toSeq.map {
+        case a: Array[_] => a.mkString("[", ",", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).sorted
+
+  test("idle batch: a zero-row micro-batch writes nothing and changes no result") {
+    // every sink: non-empty, zero-row, non-empty. The idle batch id gets
+    // no data, state, card or ledger dir, and the outputs and state equal
+    // a run that never saw the zero-row file.
+    def words(tag: String) = (0 until 30).map(j => s"ib${tag}w$j").mkString(" ")
+    def textRows(docs: Seq[(Long, String, String)]) = docs.map {
+      case (id, tag, lang) => (id, words(tag), lang, 100L - id,
+        id % 3 * 10 + 5, s"s${id % 2}", s"v${id % 3}")
+    }.toDF("doc_id", "text", "lang", "prio", "n_tokens", "source", "v")
+    val text0 = textRows(Seq((0L, "a", "en"), (1L, "b", "de"),
+      (2L, "c", "en"), (3L, "d", "fr")))
+    val text2 = textRows(Seq((10L, "a", "en"), (11L, "e", "de"),
+      (12L, "f", "en"), (13L, "g", "en")))
+    def basis(j: Int): Array[Float] =
+      Array.tabulate(8)(i => if (i == j) 1.0f else 0.0f)
+    val head = (0 until 8).map(i => (i.toLong, basis(i % 4)))
+      .toDF("vec_id", "embedding")
+    val vec0 = Seq((100L, basis(0)), (101L, basis(1))).toDF("vec_id", "embedding")
+    val vec2 = Seq((200L, basis(0)), (201L, basis(2))).toDF("vec_id", "embedding")
+    val textDir = stagedBatches("graft-idle-text-",
+      Seq(text0, text0.limit(0), text2))
+    val vecDir = stagedBatches("graft-idle-vec-", Seq(vec0, vec0.limit(0), vec2))
+    val headText = Seq((1000L, words("a")), (1001L, words("h")))
+      .toDF("doc_id", "text")
+    def minhashIdx(): String = {
+      val idx = tmp("graft-idle-mh-")
+      graft.ext.Dedup.buildMinhashIndex(spark, idx, headText, "text", "doc_id")
+      idx
+    }
+    def cents = Similarity.centroidsByIds(head, "vec_id", "embedding", 0L until 4L)
+    val lm = graft.ext.LangModel.fit(text0, "text")
+    val fit = graft.ml.ExactKMeans.fit(head, "vec_id", "embedding",
+      Seq(0L, 1L), iters = 3)
+    val tokens = size(graft.ext.Corpus.words(col("text")))
+    type Run = (org.apache.spark.sql.DataFrame, String, String) => Unit
+    val cases: Seq[(String, String, Run)] = Seq(
+      ("pack", textDir, (s, sink, ck) => Streaming.packSequencesToSink(
+        s, "doc_id", tokens, 8L, sink, ck)),
+      ("pinned lm", textDir, (s, sink, ck) => Streaming.pinnedLmScoreToSink(
+        s, "doc_id", "text", lm, sink, ck)),
+      ("lm", textDir, (s, sink, ck) => Streaming.lmScoreToSink(
+        s, "doc_id", "text", sink, ck)),
+      ("semantic dedup", vecDir, (s, sink, ck) =>
+        Streaming.semanticDedupToSink(s, "vec_id", "embedding",
+          (0 until 4).map(j => (j, basis(j).toSeq)).toArray, 0.95, sink, ck)),
+      ("minhash", textDir, (s, sink, ck) => Streaming.minhashDedupIngestToSink(
+        s, minhashIdx(), "text", "doc_id", sink, ck, threshold = 0.9)),
+      ("curate", textDir, (s, sink, ck) => Streaming.curateIngestToSink(
+        s, "doc_id", "text", "lang", "prio", minhashIdx(), threshold = 0.9,
+        minTokens = 3L, budget = 90L, sink, ck)),
+      ("quota", textDir, (s, sink, ck) => Streaming.sourceQuotaToSink(
+        s, "source", "doc_id", maxPerSource = 3, sink, ck)),
+      ("ivf", vecDir, (s, sink, ck) => {
+        val idx = tmp("graft-idle-ivf-")
+        Similarity.buildIvfIndex(head, "vec_id", "embedding", cents, idx)
+        Streaming.ivfIngestToSink(s, idx, "vec_id", "embedding", k = 3,
+          nprobe = 1, sink, ck)
+      }),
+      ("pq", vecDir, (s, sink, ck) => {
+        val idx = tmp("graft-idle-pq-")
+        Similarity.buildIvfPqIndex(head, "vec_id", "embedding", cents,
+          Similarity.pqCodebooksByIds(head, "vec_id", "embedding", m = 4,
+            0L until 8L), idx)
+        Streaming.pqIngestToSink(s, idx, "vec_id", "embedding", k = 3,
+          nprobe = 1, sink, ck)
+      }),
+      ("sharded export", textDir, (s, sink, ck) =>
+        Streaming.shardedExportToSink(s, "doc_id", tokens, epoch = 3L,
+          numShards = 4, seqLen = 16L, sink, ck)),
+      ("data card", textDir, (s, sink, ck) => Streaming.corpusReportToSink(
+        s, "lang", "text", k = 4, sink, ck)),
+      ("token budget", textDir, (s, sink, ck) => Streaming.tokenBudgetToSink(
+        s, "lang", "doc_id", "prio", "n_tokens", budget = 30L, sink, ck)),
+      ("cms", textDir, (s, sink, ck) => Streaming.cmsSketchToSink(
+        s, "v", depth = 3, width = 16, sink, ck)),
+      ("bloom", textDir, (s, sink, ck) => Streaming.bloomBitmapToSink(
+        s, "v", numHashes = 3, numBits = 256, sink, ck)),
+      ("k-means", vecDir, (s, sink, ck) => Streaming.kmeansAssignToSink(
+        s, "vec_id", "embedding", fit, sink, ck)))
+    val outDirs = Seq("data", "_state", "card", "")
+    for ((name, src, run) <- cases) {
+      val idle = tmp("graft-idle-out-")
+      run(batchStream(src, "b0", "b1", "b2"), idle, tmp("graft-idle-ck-"))
+      val plain = tmp("graft-idle-out-")
+      run(batchStream(src, "b0", "b2"), plain, tmp("graft-idle-ck-"))
+      def exists(path: String) = new java.io.File(path).exists()
+      assert(outDirs.exists(d => exists(s"$idle/$d/batch_id=2")),
+        s"$name: the zero-row file did not make a micro-batch")
+      for (d <- outDirs)
+        assert(!exists(s"$idle/$d/batch_id=1"),
+          s"$name: the idle batch wrote $d/batch_id=1")
+      for (d <- outDirs if exists(s"$plain/$d/batch_id=0"))
+        assert(rowsWithoutBatchId(s"$idle/$d") ==
+          rowsWithoutBatchId(s"$plain/$d"),
+          s"$name: the idle batch changed $d")
+    }
+  }
+
+  test("null-valued batch: the CMS and Bloom sinks still land their state") {
+    // cmsSketch and bloomBitmap drop NULL values, so an all-NULL batch
+    // adds nothing, yet it is not idle: its running state must land
+    val dir = stagedBatches("graft-nullv-",
+      Seq(Seq("a", "b").toDF("v"), Seq[String](null, null).toDF("v")))
+    for (run <- Seq[(org.apache.spark.sql.DataFrame, String, String) => Unit](
+        (s, sink, ck) => Streaming.cmsSketchToSink(s, "v", 3, 16, sink, ck),
+        (s, sink, ck) => Streaming.bloomBitmapToSink(s, "v", 3, 256, sink, ck))) {
+      val sink = tmp("graft-nullv-out-")
+      run(batchStream(dir, "b0", "b1"), sink, tmp("graft-nullv-ck-"))
+      assert(rowsWithoutBatchId(s"$sink/_state/batch_id=1") ==
+        rowsWithoutBatchId(s"$sink/_state/batch_id=0"))
+    }
+  }
 }
