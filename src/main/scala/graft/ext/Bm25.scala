@@ -1,7 +1,9 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+
+import graft.ops.ColumnOps
 
 /** BM25 ranked retrieval over a text column (Robertson & Zaragoza 2009;
   * the idf form is Lucene's `ln(1 + (N - df + .5)/(df + .5))`, always
@@ -514,24 +516,17 @@ object Bm25 {
       // reads the persisted postings and the OLD df table, never the new
       // delta dir) — run them as concurrent Spark jobs so the per-batch
       // append wall is max(...), not their sum (the writeMinhashRows
-      // treatment; all three complete before the atomic commit below)
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // blocking{}: each leg parks its EC thread on a multi-second Spark
-      // job — mark it so the global EC grows past #cores rather than
-      // serializing the legs on a small driver
-      val deltaF = Future { blocking {
-        postings.repartition(nb, col("bucket"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/$deltaDir")
-      } }
+      // treatment; all three settle before the atomic commit below)
       // vocab-bounded df merge: old table + the batch's own term counts,
       // into a fresh versioned dir (the old one stays readable until the
       // pointer flips + one more cycle, see pruneVersions)
       val newDfDir = s"df_v${versionOf(st.dfDir) + 1}"
-      val dfF = Future { blocking {
-        spark.read.schema(dfSchema).parquet(s"$path/${st.dfDir}")
+      val Seq(_, _, add: Row) = ColumnOps.concurrently[Any](
+        () => postings.repartition(nb, col("bucket"))
+          .sortWithinPartitions(col("term"), col("doc_id"))
+          .write.mode("overwrite").partitionBy("bucket")
+          .parquet(s"$path/$deltaDir"),
+        () => spark.read.schema(dfSchema).parquet(s"$path/${st.dfDir}")
           .select(col("term"), col("df"))
           .union(postings.groupBy(col("term")).agg(count(lit(1)).as("df")))
           .groupBy(col("term")).agg(sum(col("df")).as("df"))
@@ -539,20 +534,10 @@ object Bm25 {
           .repartition(nb, col("bucket"))
           .sortWithinPartitions(col("term"))
           .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/$newDfDir")
-      } }
-      val addF = Future { blocking {
-        withWs.agg(count(lit(1)).as("n"),
-          coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head
-      } }
-      val inf = scala.concurrent.duration.Duration.Inf
-      // settle ALL three before leaving on failure — a detached delta/df
-      // writer racing a same-JVM retry of this append could interleave
-      // with its fresh writes (the concurrent-legs discipline)
-      try { Await.result(deltaF, inf); Await.result(dfF, inf) }
-      finally Seq(deltaF, dfF, addF).foreach(f => Await.ready(f, inf))
+          .parquet(s"$path/$newDfDir"),
+        () => withWs.agg(count(lit(1)).as("n"),
+          coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head)
       // additive stats + pointer flip LAST — the atomic commit point
-      val add = Await.result(addF, inf)
       writeStats(spark, path,
         (st.nDocs + add.getAs[Long]("n"), st.totalDl + add.getAs[Long]("dl")),
         nb, st.postingsDir, newDfDir, st.deltaDirs :+ deltaDir, tag,

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.ops.ColumnOps
+
 /** Deduplication operators for training-data pipelines, designed
   * shuffle-minimal for 100 TB:
   *
@@ -422,23 +424,14 @@ object Dedup {
     // independent folds into the same uncommitted dir — concurrent jobs
     // (the writeMinhashRows treatment): compaction wall is
     // max(keys, shingles), not their sum
-    locally {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      val keysF = Future {
-        minhashIndexKeys(h)
-          .repartition(m.numKeyBuckets, col("bucket"))
-          .sortWithinPartitions(col("band_key"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/$newSeg/keys")
-      }
-      val shinglesF = Future {
-        minhashIndexShingles(h)
-          .write.mode("overwrite").parquet(s"$path/$newSeg/shingles")
-      }
-      Await.result(keysF, scala.concurrent.duration.Duration.Inf)
-      Await.result(shinglesF, scala.concurrent.duration.Duration.Inf)
-    }
+    ColumnOps.concurrently(
+      () => minhashIndexKeys(h)
+        .repartition(m.numKeyBuckets, col("bucket"))
+        .sortWithinPartitions(col("band_key"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$path/$newSeg/keys"),
+      () => minhashIndexShingles(h)
+        .write.mode("overwrite").parquet(s"$path/$newSeg/shingles"))
     // last_tag and the segment counter survive compaction
     h.commit(m.copy(segs = m.segs.copy(live = List(newSeg))))
   }
@@ -666,41 +659,35 @@ object Dedup {
     // the two tables are independent writes into the SAME uncommitted
     // segment dir — run them as CONCURRENT Spark jobs (scheduler threads):
     // each is small in the micro-batch regime, so the wall cost of the
-    // append is max(shingles, keys) instead of their sum. Both must
-    // complete before the caller's manifest flip, hence the joined await.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // jid-SORTED within each file: the probe's point-lookup regime pushes
-    // the candidate-id set into this scan as an isin predicate, and the
-    // sort gives those lookups parquet min/max row-group skipping (the
-    // same treatment the keys table gets on band_key below)
-    val shinglesF = Future {
-      df.select(col(idCol).cast("long").as("jid"),
+    // append is max(shingles, keys) instead of their sum. Both settle
+    // before the caller's manifest flip.
+    ColumnOps.concurrently(
+      // jid-SORTED within each file: the probe's point-lookup regime
+      // pushes the candidate-id set into this scan as an isin predicate,
+      // and the sort gives those lookups parquet min/max row-group
+      // skipping (the same treatment the keys table gets on band_key)
+      () => df.select(col(idCol).cast("long").as("jid"),
           hashedShinglesUdf(shingleN)(wordsOf(col(textCol))).as("sh"))
         .sortWithinPartitions(col("jid"))
-        .write.mode("overwrite").parquet(s"$segDir/shingles")
-    }
-    // keys land bucket-partitioned (`bucket = pmod(band_key, B)` directory
-    // partitions) and band_key-SORTED within each file: a probe prunes to
-    // the batch's touched bucket directories at the source, so its read
-    // tracks the matched shards — not the whole key table — and the
-    // sorted row groups give the pushed key-membership predicates min/max
-    // skipping. The same treatment as [[graft.ext.Bm25.buildIndex]].
-    // PINNED partition count: repartition(col) alone lets AQE coalesce a
-    // small batch to ONE task, which then pays every bucket directory's
-    // parquet-writer init serially (~1.4 s per micro-batch at gate
-    // scale); pinning numKeyBuckets partitions writes the buckets in
-    // parallel and still lands exactly one file per bucket dir
-    val keysF = Future {
-      minhashBandKeys(df, textCol, idCol, shingleN, numPerms, numBands)
+        .write.mode("overwrite").parquet(s"$segDir/shingles"),
+      // keys land bucket-partitioned (`bucket = pmod(band_key, B)`
+      // directory partitions) and band_key-SORTED within each file: a
+      // probe prunes to the batch's touched bucket directories at the
+      // source, so its read tracks the matched shards — not the whole key
+      // table — and the sorted row groups give the pushed key-membership
+      // predicates min/max skipping. The same treatment as
+      // [[graft.ext.Bm25.buildIndex]]. PINNED partition count:
+      // repartition(col) alone lets AQE coalesce a small batch to ONE
+      // task, which then pays every bucket directory's parquet-writer
+      // init serially (~1.4 s per micro-batch at gate scale); pinning
+      // numKeyBuckets partitions writes the buckets in parallel and still
+      // lands exactly one file per bucket dir
+      () => minhashBandKeys(df, textCol, idCol, shingleN, numPerms, numBands)
         .withColumn("bucket", keyBucket(col("band_key"), numKeyBuckets))
         .repartition(numKeyBuckets, col("bucket"))
         .sortWithinPartitions(col("band_key"), col("doc_id"))
         .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$segDir/keys")
-    }
-    Await.result(shinglesF, scala.concurrent.duration.Duration.Inf)
-    Await.result(keysF, scala.concurrent.duration.Duration.Inf)
+        .parquet(s"$segDir/keys"))
   }
 
   /** Near-duplicate pairs of a NEW batch against a [[buildMinhashIndex]]

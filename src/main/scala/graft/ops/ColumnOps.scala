@@ -341,4 +341,21 @@ object ColumnOps {
         r.rdd.unpersist(blocking = false)
       case _ => ()
     })
+
+  /** Runs independent effects as concurrent Spark jobs, so their wall is
+    * the longest leg's rather than their sum, and returns their results
+    * in leg order. Every leg settles before this returns or throws: a
+    * failed leg never leaves a sibling writing behind the caller (e.g.
+    * into a segment dir a retry or a stream replay is about to rewrite).
+    * The first failure in leg order is rethrown. */
+  def concurrently[A](legs: (() => A)*): Seq[A] = {
+    import scala.concurrent.{Await, Future, blocking}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    // blocking{}: each leg parks its thread on a Spark job, so the global
+    // pool grows past #cores instead of serializing the legs on a small
+    // driver
+    val running = legs.map(leg => Future(blocking(leg())))
+    running.foreach(Await.ready(_, scala.concurrent.duration.Duration.Inf))
+    running.map(_.value.get.get)
+  }
 }

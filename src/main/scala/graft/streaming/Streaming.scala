@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
-import graft.ops.ColumnOps.releaseCheckpoints
+import graft.ops.ColumnOps.{concurrently, releaseCheckpoints}
 
 /** Structured Streaming forms of the engine's continuous-ingest operators.
   *
@@ -161,31 +161,26 @@ object Streaming {
     * Per micro-batch B: the layout lands at `sink/data/batch_id=B`, and the
     * running total after B (one row, `tokens`) at `sink/_state/batch_id=B`.
     * B reads its offset from the newest committed state before B
-    * ([[newestStateBefore]]) and both writes overwrite B's own
+    * ([[SinkState.prior]]) and both writes overwrite B's own
     * directories, so a replayed batch rewrites identical files (the
     * [[shardedExportToSink]] discipline). */
   def packSequencesToSink(docs: DataFrame, idCol: String, tokens: Column,
                           seqLen: Long,
                           sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // empty batch: nothing to lay out and the total is unchanged
-      if (!batch.isEmpty) {
-        val base = newestStateBefore(spark, sink, bid).map(p =>
-          spark.read.parquet(s"$sink/_state/batch_id=$p").head().getLong(0))
-        val data = s"$sink/data/batch_id=$bid"
-        graft.ext.Corpus.packSequences(batch, idCol, tokens, seqLen,
-            baseOffset = base.getOrElse(0L))
-          .write.mode("overwrite").parquet(data)
-        // the total AFTER this batch, summed from the just-written layout
-        // so the state is exactly what a reader of the data sees
-        spark.read.parquet(data)
-          .agg((lit(base.getOrElse(0L)) +
-            coalesce(sum(col("n_tokens")), lit(0L))).as("tokens"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-      }
+      val base = state.prior(bid).fold(0L)(_.head().getLong(0))
+      val data = s"$sink/data/batch_id=$bid"
+      graft.ext.Corpus.packSequences(batch, idCol, tokens, seqLen,
+          baseOffset = base)
+        .write.mode("overwrite").parquet(data)
+      // the total AFTER this batch, summed from the just-written layout
+      // so the state is exactly what a reader of the data sees
+      state.commit(bid, spark.read.parquet(data)
+        .agg((lit(base) + coalesce(sum(col("n_tokens")), lit(0L)))
+          .as("tokens"))
+        .coalesce(1))
     }
   }
 
@@ -205,9 +200,8 @@ object Streaming {
                           lm: graft.ext.LangModel.BigramLm,
                           sink: String, checkpoint: String): Unit =
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      if (!batch.isEmpty)
-        graft.ext.LangModel.score(batch, idCol, textCol, lm)
-          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+      graft.ext.LangModel.score(batch, idCol, textCol, lm)
+        .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
     }
 
   /** The ONLINE perplexity filter as a durable exactly-once sink (the
@@ -226,7 +220,7 @@ object Streaming {
     *     `sink/_state/batch_id=B`.
     *
     * EXACTLY-ONCE: the replay of a batch reads only state < B
-    * ([[newestStateBefore]]) and overwrites its own two directories, so a
+    * ([[SinkState.prior]]) and overwrites its own two directories, so a
     * crash between steps re-derives bit-identical verdicts and state —
     * the same discipline as every `*ToSink` (forced-restart-tested in
     * StreamingSpec). State size is the model's vocabulary² upper bound in
@@ -235,71 +229,33 @@ object Streaming {
   def lmScoreToSink(docs: DataFrame, idCol: String, textCol: String,
                     sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // round 22 (VERDICT r21 #2, the micro-batch job floor): LAZY
-      // checkpoints kill the two per-batch eager materialization jobs —
-      // the empty-guard take(1) now probes the checkpoint-marked frame
-      // (partition 1 computes into the cache; the rest cache lazily
-      // under the legs' own jobs, nothing computed twice). Guard
-      // semantics unchanged: idle batches write nothing. bp is lazy
-      // too: whichever concurrent leg touches it first
-      // computes-and-caches it (block-level locking makes the race
-      // safe).
-      val b = batch.localCheckpoint(false)
-      if (!b.isEmpty) {
-        val bp = graft.ext.LangModel.pairCounts(b, textCol)
-          .localCheckpoint(false)
-        val prior = newestStateBefore(spark, sink, bid)
-        val modelPairs = prior match {
-          case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-          case None => bp // bootstrap: the batch operator's self-fit
-        }
-        val scored = graft.ext.LangModel.score(b, idCol, textCol,
-          graft.ext.LangModel.fromPairCounts(modelPairs))
-        // the verdict write and the state fold are INDEPENDENT jobs
-        // (both read only localCheckpointed batch frames and PRIOR
-        // state dirs) and individually idempotent per-dir overwrites —
-        // run them concurrently; the batch wall is max(score, fold).
-        // The verdict table is batch-sized and keeps its natural
-        // partitioning; nothing reads file layout, the oracle reads
-        // content.
-        import scala.concurrent.{Await, Future, blocking}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        // blocking{}: each leg parks a global-EC thread on a Spark job
-        // for seconds — mark it so the EC grows past #cores instead of
-        // serializing the legs on a low-core driver
-        val dataF = Future { blocking {
-          scored.write.mode("overwrite")
-            .parquet(s"$sink/data/batch_id=$bid")
-        } }
+      // lazy: whichever concurrent leg touches it first computes and
+      // caches it (block-level locking makes the race safe)
+      val bp = graft.ext.LangModel.pairCounts(batch, textCol)
+        .localCheckpoint(false)
+      val prior = state.prior(bid)
+      // bootstrap: the batch operator's self-fit
+      val scored = graft.ext.LangModel.score(batch, idCol, textCol,
+        graft.ext.LangModel.fromPairCounts(prior.getOrElse(bp)))
+      // the verdict write and the state fold are INDEPENDENT jobs (both
+      // read only the batch and PRIOR state) and individually idempotent
+      // per-dir overwrites; the batch wall is max(score, fold). The
+      // verdict table is batch-sized and keeps its natural partitioning;
+      // nothing reads file layout, the oracle reads content.
+      try concurrently(
+        () => scored.write.mode("overwrite")
+          .parquet(s"$sink/data/batch_id=$bid"),
         // UNLIKE the sketch sinks (whose state is KBs by construction),
-        // the pair-count table is vocabulary-sized — it keeps the fold's
+        // the pair-count table is vocabulary-sized: it keeps the fold's
         // natural partitioning rather than funneling through one writer.
         // Replay only requires the state's CONTENT to be deterministic
-        // (it is — an exact count table); nothing reads file layout.
-        val stateF = Future { blocking {
-          val folded = prior match {
-            case None => bp
-            case Some(p) =>
-              spark.read.parquet(s"$sink/_state/batch_id=$p")
-                .unionByName(bp)
-                .groupBy(col("v"), col("w"))
-                .agg(sum(col("cnt")).as("cnt"))
-          }
-          folded.write.mode("overwrite")
-            .parquet(s"$sink/_state/batch_id=$bid")
-          pruneStateHistory(spark, sink, bid)
-        } }
-        val inf = scala.concurrent.duration.Duration.Inf
-        // settle BOTH legs before leaving the batch even on failure —
-        // no detached writer may race a same-JVM restart's replay
-        try Seq(dataF, stateF).foreach(Await.result(_, inf))
-        finally {
-          Seq(dataF, stateF).foreach(f => Await.ready(f, inf))
-          releaseCheckpoints(Seq(bp))
-        }
-      }
-      releaseCheckpoints(Seq(b))
+        // (it is, an exact count table); nothing reads file layout.
+        () => state.commit(bid, prior.fold(bp)(_.unionByName(bp)
+          .groupBy(col("v"), col("w"))
+          .agg(sum(col("cnt")).as("cnt")))))
+      finally releaseCheckpoints(Seq(bp))
     }
   }
 
@@ -354,88 +310,63 @@ object Streaming {
                           sink: String, checkpoint: String,
                           horizonBatches: Int = 0): Unit = {
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
       val assigned = graft.ext.Similarity
         .assignCells(batch, idCol, vecCol, centroids)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // touched cells double as the EMPTY-BATCH GUARD (round 22, VERDICT
-      // r21 #2): every row gets a cell, so touched is empty iff the
-      // batch is — the old separate `batch.isEmpty` take(1) job is
-      // folded into this collect, which also materializes the batch
-      // into the cache every later step reads. Idle batches still
-      // write nothing.
-      val touched = assigned.select(col("cell")).distinct()
-        .collect().map(_.getInt(0)).toSet
-      if (touched.nonEmpty) {
-      val b = assigned.select(col("cell"), col("id").as("id_b"),
-        col("__v").as("__vb"))
-      val inBatch = assigned
-        .select(col("cell"), col("id").as("id_a"), col("__v").as("__va"))
-        .join(b, Seq("cell"))
-        .filter(col("id_a") < col("id_b"))
-        .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
-          >= threshold)
-        .select(col("id_b").as("__dup"))
-      // prior rows: every committed state dir BEFORE this batch,
-      // restricted to the batch's touched cells at path construction
-      val hconf = spark.sparkContext.hadoopConfiguration
-      val statePaths = for {
-        p <- {
-          val root = new org.apache.hadoop.fs.Path(s"$sink/_state")
-          val fs = root.getFileSystem(hconf)
-          (if (fs.exists(root)) fs.listStatus(root).toSeq else Seq.empty)
-            .filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("batch_id="))
-            .filter { s =>
-              val id = s.getPath.getName.stripPrefix("batch_id=").toLong
-              // bounded horizon: batch B probes only the last
-              // `horizonBatches` batches' state (0 = exact/unbounded)
-              id < bid && (horizonBatches <= 0 || id >= bid - horizonBatches)
-            }
-            .map(_.getPath)
-        }
-        st <- p.getFileSystem(hconf).listStatus(p).toSeq
-        n = st.getPath.getName
-        if n.startsWith("cell=") &&
-          touched.contains(n.substring("cell=".length).toInt)
-      } yield st.getPath.toString
-      val dropped = (if (statePaths.isEmpty) inBatch
-        else inBatch.union(
-          spark.read.parquet(statePaths: _*)
-            .select(col("cell_d").as("cell"), col("__v").as("__va"))
-            .join(b, Seq("cell"))
-            .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
-              >= threshold)
-            .select(col("id_b").as("__dup")))).distinct()
-      assigned
-        .join(dropped, col("id") === col("__dup"), "left_outer")
-        .select(col("id"), col("cell"), col("__dup").isNull.as("keep"))
-        .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-      assigned
-        .select(col("id"), col("__v"), col("cell"),
-          col("cell").as("cell_d"))
-        .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell")
-        .parquet(s"$sink/_state/batch_id=$bid")
+      try {
+        // the batch's touched cells select the prior state dirs to read
+        val touched = assigned.select(col("cell")).distinct()
+          .collect().map(_.getInt(0)).toSet
+        val b = assigned.select(col("cell"), col("id").as("id_b"),
+          col("__v").as("__vb"))
+        val inBatch = assigned
+          .select(col("cell"), col("id").as("id_a"), col("__v").as("__va"))
+          .join(b, Seq("cell"))
+          .filter(col("id_a") < col("id_b"))
+          .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
+            >= threshold)
+          .select(col("id_b").as("__dup"))
+        // prior rows: every committed state dir BEFORE this batch (bounded
+        // horizon: only the last `horizonBatches` of them; 0 = exact/
+        // unbounded), restricted to the batch's touched cells at path
+        // construction
+        val hconf = spark.sparkContext.hadoopConfiguration
+        val statePaths = for {
+          id <- state.ids
+          if id < bid && (horizonBatches <= 0 || id >= bid - horizonBatches)
+          p = new org.apache.hadoop.fs.Path(state.dir(id))
+          st <- p.getFileSystem(hconf).listStatus(p).toSeq
+          n = st.getPath.getName
+          if n.startsWith("cell=") &&
+            touched.contains(n.substring("cell=".length).toInt)
+        } yield st.getPath.toString
+        val dropped = (if (statePaths.isEmpty) inBatch
+          else inBatch.union(
+            spark.read.parquet(statePaths: _*)
+              .select(col("cell_d").as("cell"), col("__v").as("__va"))
+              .join(b, Seq("cell"))
+              .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
+                >= threshold)
+              .select(col("id_b").as("__dup")))).distinct()
+        assigned
+          .join(dropped, col("id") === col("__dup"), "left_outer")
+          .select(col("id"), col("cell"), col("__dup").isNull.as("keep"))
+          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+        assigned
+          .select(col("id"), col("__v"), col("cell"),
+            col("cell").as("cell_d"))
+          .repartition(col("cell"))
+          .write.mode("overwrite").partitionBy("cell")
+          .parquet(state.dir(bid))
+      } finally assigned.unpersist()
       // horizon GC: state older than the probe window of EVERY future
       // batch — and of a crash-replay of THIS batch (which probes
-      // [bid - horizon, bid)) — is dead; best-effort deletes, the
-      // pruneStateHistory discipline. Caps durable state at
+      // [bid - horizon, bid)) — is dead. Caps durable state at
       // horizon × batch size instead of the whole corpus.
-      if (horizonBatches > 0) {
-        val root = new org.apache.hadoop.fs.Path(s"$sink/_state")
-        val fs = root.getFileSystem(hconf)
-        if (fs.exists(root)) fs.listStatus(root)
-          .filter(s => s.isDirectory &&
-            s.getPath.getName.startsWith("batch_id="))
-          .filter(_.getPath.getName.stripPrefix("batch_id=").toLong <
-            bid - horizonBatches)
-          .foreach(s =>
-            try fs.delete(s.getPath, true)
-            catch { case _: java.io.IOException => () })
-      }
-      }
-      assigned.unpersist()
+      if (horizonBatches > 0)
+        state.drop(state.ids.filter(_ < bid - horizonBatches))
     }
   }
 
@@ -482,15 +413,6 @@ object Streaming {
     // manifest read restores replay detection.
     val idx = graft.ext.Dedup.openMinhashIndex(spark, path)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // an idle trigger's empty batch has nothing to probe and nothing
-      // to append — skip the whole body rather than paying the probe's
-      // collect/checkpoint work and littering the sink with an empty
-      // batch_id=N partition (the appends already skip empty batches).
-      // The guard probes the PERSISTED batch (round 22): its take(1)
-      // caches what it computes, so unlike the old raw-source isEmpty
-      // nothing is ever scanned twice.
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!b.isEmpty) {
       // ID-BASED replay exclusion (round 17): a replayed probe must see
       // the pre-append index. Excluding the batch's own segment works
       // only while that segment still EXISTS — auto-compaction can fold
@@ -498,11 +420,11 @@ object Streaming {
       // the batch's doc IDS reconstructs the same view from any segment
       // layout (store ids are unique; vacuous on first delivery).
       val (pairs, probeCheckpoints) = graft.ext.Dedup.probeIndex(
-        idx, b, textCol, idCol, threshold, maxBucket,
-        excludeSeg = "", excludeDocs = Some(b.select(idCol)))
-      pairs.write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-      releaseCheckpoints(probeCheckpoints)
-      graft.ext.Dedup.appendToMinhashIndex(idx, b, textCol, idCol,
+        idx, batch, textCol, idCol, threshold, maxBucket,
+        excludeSeg = "", excludeDocs = Some(batch.select(idCol)))
+      try pairs.write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
+      finally releaseCheckpoints(probeCheckpoints)
+      graft.ext.Dedup.appendToMinhashIndex(idx, batch, textCol, idCol,
         tag = s"b$bid")
       // AUTO-COMPACTION policy: fold the accumulated micro-batch
       // segments back to one sorted base whenever the live count
@@ -521,8 +443,6 @@ object Streaming {
       if ((autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
           || (autoCompactFiles > 0L && idx.liveFileCount > autoCompactFiles))
         graft.ext.Dedup.compactMinhashIndex(idx)
-      }
-      b.unpersist()
     }
   }
 
@@ -560,13 +480,9 @@ object Streaming {
                          sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
     val idx = graft.ext.Dedup.openMinhashIndex(spark, indexPath)
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // empty-guard on the PERSISTED batch (round 22, VERDICT r21 #2):
-      // the take(1) caches what it computes, so nothing is scanned
-      // twice. Idle batches still skip every effect.
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!b.isEmpty) {
-      val withQ = b
+      val withQ = batch
         .withColumn("__nt",
           graft.ext.TextAnalysis.tokenCount(col(textCol)).cast("long"))
         .withColumn("quality_ok", col("__nt") >= minTokens)
@@ -588,11 +504,9 @@ object Streaming {
         .localCheckpoint(false)
       val notDup = qual.join(broadcast(dupIds),
         qual(idCol).cast("long") === col("__dup"), "left_anti")
-      val off = newestStateBefore(spark, sink, bid) match {
-        case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-        case None =>
-          import spark.implicits._
-          Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
+      val off = state.prior(bid).getOrElse {
+        import spark.implicits._
+        Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(langCol))
@@ -610,67 +524,42 @@ object Streaming {
         .select(col(idCol).cast("long").as("__bid"), col("cum_tokens"),
           col("admitted"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      bud.count() // materialize once, before the concurrent legs
-      // the three per-batch effects — verdict write, state fold,
-      // index append — are INDEPENDENT and individually idempotent
-      // (per-dir overwrites; tag-skipped append), so their relative
-      // order carries no replay semantics: a crash leaves any subset
-      // committed and the replay re-derives the rest bit-identically.
-      // Run them as concurrent Spark jobs so the batch wall is
-      // max(...), not their sum (the Bm25.appendToIndex treatment).
-      import scala.concurrent.{Await, Future, blocking}
-      import scala.concurrent.ExecutionContext.Implicits.global
-      // blocking{} on every leg: each parks its EC thread on a Spark
-      // job — without the marker a low-core driver's global EC
-      // (parallelism = #cores) can serialize the legs and lose the
-      // max(...) wall the comment above promises
-      val dataF = Future { blocking {
-        withQ
-          .select(col(idCol).cast("long").as("doc_id"), col("quality_ok"))
-          .join(broadcast(dupIds), col("doc_id") === col("__dup"), "left")
-          .join(broadcast(bud), col("doc_id") === col("__bid"), "left")
-          .select(col("doc_id"), col("quality_ok"),
-            (col("quality_ok") && col("__dup").isNotNull).as("is_dup"),
-            col("cum_tokens"),
-            coalesce(col("admitted"), lit(false)).as("admitted"))
-          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-      } }
-      // fill AFTER this batch: carried + ALL budget-stage rows' tokens
-      // (per-LANGUAGE fill — an ISO-bounded universe, so the one-file
-      // coalesce is metadata work, unlike the caller-shaped quota/
-      // token-budget sinks)
-      val stateF = Future { blocking {
-        off.unionByName(
-            notDup.groupBy(col(langCol).cast("string").as("__tb_g"))
-              .agg(sum(col("__nt")).as("__tb_off")))
-          .groupBy(col("__tb_g"))
-          .agg(sum(col("__tb_off")).as("__tb_off"))
-          .coalesce(1).write.mode("overwrite")
-          .parquet(s"$sink/_state/batch_id=$bid")
-        pruneStateHistory(spark, sink, bid)
-      } }
-      // the curated corpus grows by exactly the admitted rows
-      val appendF = Future { blocking {
-        val survivors = b.join(broadcast(bud.filter(col("admitted"))),
-          b(idCol).cast("long") === col("__bid"), "left_semi")
-        graft.ext.Dedup.appendToMinhashIndex(idx, survivors, textCol,
-          idCol, tag = s"b$bid")
-      } }
-      val inf = scala.concurrent.duration.Duration.Inf
-      val legs = Seq(dataF, stateF, appendF)
-      try legs.foreach(Await.result(_, inf))
-      finally {
-        // a failed leg must not leave SIBLING legs running detached —
-        // a zombie append racing a same-JVM stream restart's replay
-        // would break the tag-skipped exactly-once invariant. Block
-        // until every leg has settled (secondary failures surface via
-        // the first Await's exception), then release the caches.
-        legs.foreach(f => Await.ready(f, inf))
+      try {
+        bud.count() // materialize once, before the concurrent legs
+        // the three per-batch effects — verdict write, state fold,
+        // index append — are INDEPENDENT and individually idempotent
+        // (per-dir overwrites; tag-skipped append), so their relative
+        // order carries no replay semantics: a crash leaves any subset
+        // committed and the replay re-derives the rest bit-identically.
+        concurrently(
+          () => withQ
+            .select(col(idCol).cast("long").as("doc_id"), col("quality_ok"))
+            .join(broadcast(dupIds), col("doc_id") === col("__dup"), "left")
+            .join(broadcast(bud), col("doc_id") === col("__bid"), "left")
+            .select(col("doc_id"), col("quality_ok"),
+              (col("quality_ok") && col("__dup").isNotNull).as("is_dup"),
+              col("cum_tokens"),
+              coalesce(col("admitted"), lit(false)).as("admitted"))
+            .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid"),
+          // fill AFTER this batch: carried + ALL budget-stage rows' tokens
+          // (per-LANGUAGE fill — an ISO-bounded universe, so the one-file
+          // coalesce is metadata work, unlike the caller-shaped quota/
+          // token-budget sinks)
+          () => state.commit(bid, off.unionByName(
+              notDup.groupBy(col(langCol).cast("string").as("__tb_g"))
+                .agg(sum(col("__nt")).as("__tb_off")))
+            .groupBy(col("__tb_g"))
+            .agg(sum(col("__tb_off")).as("__tb_off"))
+            .coalesce(1)),
+          // the curated corpus grows by exactly the admitted rows
+          () => graft.ext.Dedup.appendToMinhashIndex(idx,
+            batch.join(broadcast(bud.filter(col("admitted"))),
+              batch(idCol).cast("long") === col("__bid"), "left_semi"),
+            textCol, idCol, tag = s"b$bid"))
+      } finally {
         bud.unpersist(); qual.unpersist()
         releaseCheckpoints(dupIds +: probeCheckpoints)
       }
-      }
-      b.unpersist()
     }
   }
 
@@ -695,9 +584,9 @@ object Streaming {
     * Admission equals the stream-order quota exactly (each batch's group
     * admits id-sorted on top of the carried count), and only ADMITTED rows
     * advance the count. Replay of B folds only state < B
-    * ([[newestStateBefore]]) and overwrites its own two dirs —
+    * ([[SinkState.prior]]) and overwrites its own two dirs —
     * byte-identical, forced-restart-tested; state GC keeps newest + one
-    * grace generation ([[pruneStateHistory]]). Null-safe on the source
+    * grace generation ([[SinkState.commit]]). Null-safe on the source
     * key (the tokenBudget discipline). Scale shape: one shuffle on the
     * source key for the per-batch rank (a skewed mega-source pays only
     * its own partition), and the state stays one long per distinct
@@ -708,14 +597,11 @@ object Streaming {
                         sink: String, checkpoint: String): Unit = {
     require(maxPerSource >= 1, s"maxPerSource must be >= 1, got $maxPerSource")
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // empty batch: no verdicts, counts unchanged
-      if (!batch.isEmpty) {
-      val off = newestStateBefore(spark, sink, bid) match {
-        case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-        case None =>
-          import spark.implicits._
-          Seq.empty[(String, Long)].toDF("__sq_key", "__sq_adm")
+      val off = state.prior(bid).getOrElse {
+        import spark.implicits._
+        Seq.empty[(String, Long)].toDF("__sq_key", "__sq_adm")
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(sourceCol)).orderBy(col(idCol))
@@ -733,23 +619,20 @@ object Streaming {
         .filter(col("n_kept") <= maxPerSource)
         .select(col(sourceCol), col(idCol), col("n_kept"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      kept.write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-      // counts AFTER this batch: carried + the batch's ADMITTED rows
-      off.unionByName(
-          kept.groupBy(col(sourceCol).cast("string").as("__sq_key"))
-            .agg(count(lit(1)).as("__sq_adm")))
-        .groupBy(col("__sq_key"))
-        .agg(sum(col("__sq_adm")).as("__sq_adm"))
-        // natural partitioning, like the join above argues: the source
+      try {
+        kept.write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
+        // counts AFTER this batch: carried + the batch's ADMITTED rows,
+        // in natural partitioning, like the join above argues: the source
         // universe is caller-shaped and can reach GBs at web scale — a
         // coalesce(1) here would fold that table through ONE task every
         // batch (the lmScoreToSink precedent: replay needs only content
         // determinism, nothing reads file layout)
-        .write.mode("overwrite")
-        .parquet(s"$sink/_state/batch_id=$bid")
-      pruneStateHistory(spark, sink, bid)
-      kept.unpersist()
-      }
+        state.commit(bid, off.unionByName(
+            kept.groupBy(col(sourceCol).cast("string").as("__sq_key"))
+              .agg(count(lit(1)).as("__sq_adm")))
+          .groupBy(col("__sq_key"))
+          .agg(sum(col("__sq_adm")).as("__sq_adm")))
+      } finally kept.unpersist()
     }
   }
 
@@ -788,19 +671,13 @@ object Streaming {
     // THIS checkpoint automatically (no opt-in parameter to forget)
     graft.ext.Similarity.recordIvfIngestCheckpoint(idx, checkpoint)
     runMicroBatches(vecs, checkpoint) { (batch, bid) =>
-      // empty-batch guard: same rationale as minhashDedupIngestToSink;
-      // probed on the PERSISTED batch so nothing scans twice (round 22)
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!b.isEmpty) {
-      graft.ext.Similarity.ivfTopKIndexed(idx, b, idCol, vecCol,
-          k, nprobe, excludeIds = Some(b.select(idCol)))
+      graft.ext.Similarity.ivfTopKIndexed(idx, batch, idCol, vecCol,
+          k, nprobe, excludeIds = Some(batch.select(idCol)))
         .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-      graft.ext.Similarity.appendToIvfIndex(idx, b, idCol, vecCol,
+      graft.ext.Similarity.appendToIvfIndex(idx, batch, idCol, vecCol,
         tag = s"b$bid")
       if (autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
         graft.ext.Similarity.compactIvfIndex(idx)
-      }
-      b.unpersist()
     }
   }
 
@@ -824,19 +701,13 @@ object Streaming {
     // listings across micro-batches (see [[ivfIngestToSink]])
     val idx = graft.ext.Similarity.openIvfIndex(spark, path)
     runMicroBatches(vecs, checkpoint) { (batch, bid) =>
-      // guard on the persisted batch, the ivfIngestToSink treatment
-      // (round 22)
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!b.isEmpty) {
-      graft.ext.Similarity.ivfPqTopKIndexed(idx, b, idCol, vecCol,
-          k, nprobe, excludeIds = Some(b.select(idCol)))
+      graft.ext.Similarity.ivfPqTopKIndexed(idx, batch, idCol, vecCol,
+          k, nprobe, excludeIds = Some(batch.select(idCol)))
         .write.mode("overwrite").parquet(s"$sink/batch_id=$bid")
-      graft.ext.Similarity.appendToIvfPqIndex(idx, b, idCol,
+      graft.ext.Similarity.appendToIvfPqIndex(idx, batch, idCol,
         vecCol, tag = s"b$bid")
       if (autoCompactAt > 0 && idx.liveSegments.length > autoCompactAt)
         graft.ext.Similarity.compactIvfPqIndex(idx)
-      }
-      b.unpersist()
     }
   }
 
@@ -859,9 +730,11 @@ object Streaming {
     * the replayed append was skipped), never duplicating rows. The sink
     * is a plain partitioned parquet table: `spark.read.parquet(sink)`
     * yields (batch_id, rank, doc_id, score_u6) — the per-batch alerting
-    * ledger of a growing corpus. Checkpointed: pass the same
-    * `checkpoint` across restarts; committed batches are never re-read.
-    * Single writer, like every index mutation. */
+    * ledger of a growing corpus. An empty micro-batch (an idle trigger)
+    * appends nothing and writes no `batch_id=N` dir, like every other
+    * sink. Checkpointed: pass the same `checkpoint` across restarts;
+    * committed batches are never re-read. Single writer, like every index
+    * mutation. */
   def bm25IngestToSink(docs: DataFrame, path: String, idCol: String,
                        textCol: String, terms: Seq[String], k: Int,
                        sink: String, checkpoint: String,
@@ -919,22 +792,14 @@ object Streaming {
                           epoch: Long, numShards: Int, seqLen: Long,
                           sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // empty micro-batch: nothing to export and nothing to record — a
-      // _SUCCESS-only data dir would poison later schema inference (the
-      // Bm25.appendToIndex lesson), and base lookup skips absent ids
-      if (!batch.isEmpty) {
       // bases = cumulative state of the newest COMMITTED batch before
       // this one (replay-safe: batch B never reads its own state row)
-      val prev = newestStateBefore(spark, sink, bid)
-      val (baseRows, baseTokens) = prev match {
-        case None => (Map.empty[Long, Long], Map.empty[Long, Long])
-        case Some(p) =>
-          val st = spark.read.parquet(s"$sink/_state/batch_id=$p")
-            .select(col("shard"), col("rows"), col("tokens")).collect()
-          (st.map(r => r.getLong(0) -> r.getLong(1)).toMap,
-           st.map(r => r.getLong(0) -> r.getLong(2)).toMap)
-      }
+      val st = state.prior(bid).fold(Array.empty[Row])(
+        _.select(col("shard"), col("rows"), col("tokens")).collect())
+      val baseRows = st.map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val baseTokens = st.map(r => r.getLong(0) -> r.getLong(2)).toMap
       val out = graft.ext.Corpus.epochShardPack(batch, idCol,
         tokens, epoch, numShards, seqLen, baseRows, baseTokens)
       out.write.mode("overwrite").partitionBy("shard")
@@ -953,10 +818,7 @@ object Streaming {
         (sh, br + cr, bt + ct)
       }
       import spark.implicits._
-      allShards.toDF("shard", "rows", "tokens").coalesce(1)
-        .write.mode("overwrite").parquet(s"$sink/_state/batch_id=$bid")
-      pruneStateHistory(spark, sink, bid)
-      }
+      state.commit(bid, allShards.toDF("shard", "rows", "tokens").coalesce(1))
     }
   }
 
@@ -967,67 +829,73 @@ object Streaming {
     * start is drained. The checkpoint is what the sinks' exactly-once
     * contract rests on: committed batches are never re-delivered, and the
     * one uncommitted batch a restart can replay keeps its batch id. Pass
-    * the same `checkpoint` across restarts; one writer per sink. */
+    * the same `checkpoint` across restarts; one writer per sink.
+    *
+    * The loop also owns the batch: it is persisted, so its emptiness test
+    * caches what it computes and the body never rescans the source; an
+    * empty batch (an idle trigger) skips the body and writes nothing; and
+    * the batch is released even when the body throws. A body therefore
+    * gets a persisted, non-empty batch and must not test or release it. */
   private def runMicroBatches(input: DataFrame, checkpoint: String)(
       body: (DataFrame, Long) => Unit): Unit =
     input.writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: Dataset[Row], bid: Long) =>
-        body(batch.toDF(), bid)
+        val b = batch.toDF()
+          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try if (!b.isEmpty) body(b, bid)
+        finally b.unpersist()
       }
       .start()
       .awaitTermination()
 
-  /** Newest COMMITTED cumulative-state batch id strictly before `bid`
-    * under `sink/_state/batch_id=N` — the shared replay-safety primitive
-    * of the `*ToSink` family: a replayed batch reads exactly the state
-    * its first attempt saw, never its own partial effects. Listed through
-    * the Hadoop FileSystem API (`java.io.File` only works on the local
-    * filesystem — on the HDFS/S3 sinks these exports target it returns
-    * null and every batch would silently fold from empty state). */
-  private def newestStateBefore(spark: org.apache.spark.sql.SparkSession,
-                                sink: String, bid: Long): Option[Long] = {
-    val statePath = new org.apache.hadoop.fs.Path(s"$sink/_state")
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(statePath)) fs.listStatus(statePath).toSeq else Seq.empty)
-      .filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith("batch_id="))
-      .map(_.getPath.getName.stripPrefix("batch_id=").toLong)
-      .filter(_ < bid)
-      .sorted.lastOption
-  }
+  /** The state a `*ToSink` carries across micro-batches: one directory per
+    * batch under `sink/_state/batch_id=N`, listed through the Hadoop
+    * FileSystem API (`java.io.File` only works on the local filesystem; on
+    * the HDFS/S3 sinks these exports target it returns null and every
+    * batch would silently fold from empty state).
+    *
+    * A CUMULATIVE sink writes the full fold after each batch: it reads
+    * [[prior]] and writes with [[commit]]. The replay of batch B reads
+    * exactly the state its first attempt saw, never its own partial
+    * effects. The append-shaped SemDeDup state, where every batch dir
+    * stays live, uses [[ids]] and [[dir]] only and must never commit. */
+  private final class SinkState(spark: org.apache.spark.sql.SparkSession,
+                                sink: String) {
+    private val root = new org.apache.hadoop.fs.Path(s"$sink/_state")
+    private def fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Bound the cumulative-state history once batch `bid`'s state has
-    * committed: delete every `sink/_state/batch_id=N` dir except the
-    * just-written `bid` and the newest one strictly below it (one grace
-    * generation — the segment stores' retention discipline). Replay-safe
-    * by construction: Structured Streaming can only replay the last
-    * uncommitted batch, whose fold reads exactly
-    * [[newestStateBefore]](B) — the retained grace dir; anything older
-    * is never read again once B's state exists. Each retained dir is the
-    * FULL fold, so storage stays O(2 × state size) instead of
-    * O(batches × state size). CUMULATIVE-state sinks only — the
-    * append-shaped SemDeDup state, where every batch dir stays live,
-    * must never call this. */
-  private def pruneStateHistory(spark: org.apache.spark.sql.SparkSession,
-                                sink: String, bid: Long): Unit = {
-    val statePath = new org.apache.hadoop.fs.Path(s"$sink/_state")
-    val fs = statePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(statePath)) {
-      val ids = fs.listStatus(statePath).toSeq
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith("batch_id="))
+    def dir(bid: Long): String = s"$sink/_state/batch_id=$bid"
+
+    /** The batch ids that have a state dir. */
+    def ids: Seq[Long] = {
+      val f = fs
+      (if (f.exists(root)) f.listStatus(root).toSeq else Seq.empty)
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("batch_id="))
         .map(_.getPath.getName.stripPrefix("batch_id=").toLong)
-      val grace = ids.filter(_ < bid).sorted.lastOption
-      ids.filter(i => i < bid && !grace.contains(i)).foreach { i =>
-        // best-effort, like the segment stores' sweep: a transient FS
-        // failure must not fail the batch — the dir is re-listed and
-        // swept on the next batch's prune
-        try fs.delete(
-          new org.apache.hadoop.fs.Path(s"$sink/_state/batch_id=$i"), true)
-        catch { case _: Exception => () }
-      }
+    }
+
+    /** The newest committed state strictly before batch `bid`. */
+    def prior(bid: Long): Option[DataFrame] =
+      ids.filter(_ < bid).maxOption.map(p => spark.read.parquet(dir(p)))
+
+    /** Overwrites batch `bid`'s state with `state`, then deletes every
+      * older state dir except the newest one (one grace generation, the
+      * segment stores' retention). Replay-safe: only the last uncommitted
+      * batch can replay, and its fold reads exactly that grace dir. Each
+      * retained dir is the full fold, so storage stays O(2 × state size). */
+    def commit(bid: Long, state: DataFrame): Unit = {
+      state.write.mode("overwrite").parquet(dir(bid))
+      drop(ids.filter(_ < bid).sorted.dropRight(1))
+    }
+
+    /** Deletes the state dirs of `old` batch ids. Best-effort, like the
+      * segment stores' sweep: a transient FS failure must not fail the
+      * batch, and the dir is listed and swept again by the next batch. */
+    def drop(old: Seq[Long]): Unit = old.foreach { i =>
+      try fs.delete(new org.apache.hadoop.fs.Path(dir(i)), true)
+      catch { case _: Exception => () }
     }
   }
 
@@ -1046,7 +914,7 @@ object Streaming {
     * Exactly-once mechanics (the shardedExportToSink discipline): both
     * writes are overwrite-idempotent into the batch's OWN directory, and
     * batch B folds ONLY the newest persisted state with id < B
-    * ([[newestStateBefore]]) — so a crash-and-replay of B sees exactly
+    * ([[SinkState.prior]]) — so a crash-and-replay of B sees exactly
     * what its first attempt saw and rewrites identical files.
     *
     * The fold itself is a #groups-row DataFrame aggregation, never a
@@ -1058,42 +926,25 @@ object Streaming {
   def corpusReportToSink(docs: DataFrame, groupCol: String, textCol: String,
                          k: Int, sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // empty batch: the previous card already IS the running card.
-      // The batch's own per-group aggregate doubles as the guard
-      // (round 22, the cmsSketchToSink treatment): probing the
-      // persisted aggregate decides emptiness exactly (groupBy keeps
-      // every row, so agg empty ⟺ batch empty) and runs the expensive
-      // aggregation under the probe for the fold-write to reuse.
-      val agg = graft.ext.Profile
-        .corpusAggregates(batch, groupCol, textCol, k)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!agg.isEmpty) {
-      val folded = newestStateBefore(spark, sink, bid) match {
-        case None => agg
-        case Some(p) =>
-          spark.read.parquet(s"$sink/_state/batch_id=$p")
-            .unionByName(agg)
-            .groupBy(col(groupCol))
-            .agg(sum(col("n_docs")).as("n_docs"),
-              sum(col("n_tokens")).as("n_tokens"),
-              sum(col("n_chars")).as("n_chars"),
-              slice(array_sort(array_distinct(flatten(
-                collect_list(col("__kmv"))))), 1, k).as("__kmv"))
-      }
-      folded.coalesce(1).write.mode("overwrite")
-        .parquet(s"$sink/_state/batch_id=$bid")
+      val agg = graft.ext.Profile.corpusAggregates(batch, groupCol, textCol, k)
+      state.commit(bid, state.prior(bid).fold(agg)(_.unionByName(agg)
+        .groupBy(col(groupCol))
+        .agg(sum(col("n_docs")).as("n_docs"),
+          sum(col("n_tokens")).as("n_tokens"),
+          sum(col("n_chars")).as("n_chars"),
+          slice(array_sort(array_distinct(flatten(
+            collect_list(col("__kmv"))))), 1, k).as("__kmv")))
+        .coalesce(1))
       // the card derives from the READ-BACK state, so it reflects
       // exactly what the next batch will fold on
-      spark.read.parquet(s"$sink/_state/batch_id=$bid")
+      spark.read.parquet(state.dir(bid))
         .withColumn("est_distinct_texts",
           graft.ext.Profile.kmvEstimate(col("__kmv"), k))
         .drop("__kmv")
         .coalesce(1).write.mode("overwrite")
         .parquet(s"$sink/card/batch_id=$bid")
-      pruneStateHistory(spark, sink, bid)
-      }
-      agg.unpersist()
     }
   }
 
@@ -1113,7 +964,7 @@ object Streaming {
     * the group already ingested: the curated-backfill norm, pinned in
     * StreamingSpec) and degrades to arrival-order-first-fill otherwise,
     * the natural semantics of a live budget counter. Replay of
-    * batch B folds only state < B ([[newestStateBefore]]) and overwrites
+    * batch B folds only state < B ([[SinkState.prior]]) and overwrites
     * its own directories — byte-identical output, forced-restart-tested.
     * Null-group safety: the state stores the group's STRING image and the
     * join is null-safe (`<=>`), so a null group keeps its fill. */
@@ -1121,17 +972,11 @@ object Streaming {
                         priorityCol: String, tokensCol: String, budget: Long,
                         sink: String, checkpoint: String): Unit = {
     val spark = docs.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      // empty batch: no verdicts and the fill level is unchanged;
-      // guard probed on the PERSISTED batch (round 22, nothing scans
-      // twice)
-      val b = batch.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!b.isEmpty) {
-      val off = newestStateBefore(spark, sink, bid) match {
-        case Some(p) => spark.read.parquet(s"$sink/_state/batch_id=$p")
-        case None =>
-          import spark.implicits._
-          Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
+      val off = state.prior(bid).getOrElse {
+        import spark.implicits._
+        Seq.empty[(String, Long)].toDF("__tb_g", "__tb_off")
       }
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col(groupCol))
@@ -1139,7 +984,7 @@ object Streaming {
         .rowsBetween(
           org.apache.spark.sql.expressions.Window.unboundedPreceding,
           org.apache.spark.sql.expressions.Window.currentRow)
-      b.withColumn("__tb_inc", sum(col(tokensCol).cast("long")).over(w))
+      batch.withColumn("__tb_inc", sum(col(tokensCol).cast("long")).over(w))
         // no forced broadcast — the group universe is caller-chosen and
         // can be domain-sized; parquet-backed state has accurate stats,
         // so the optimizer picks broadcast vs shuffle (see the quota
@@ -1151,19 +996,14 @@ object Streaming {
         .withColumn("keep", col("cum_tokens") <= budget)
         .drop("__tb_g", "__tb_inc", "__tb_off")
         .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-      // fill AFTER this batch: carried + the batch's per-group totals
-      off.unionByName(
-          b.groupBy(col(groupCol).cast("string").as("__tb_g"))
+      // fill AFTER this batch: carried + the batch's per-group totals,
+      // in natural partitioning (the quota sink's argument, verbatim):
+      // the group universe is domain-sized — no single-task funnel
+      state.commit(bid, off.unionByName(
+          batch.groupBy(col(groupCol).cast("string").as("__tb_g"))
             .agg(sum(col(tokensCol).cast("long")).as("__tb_off")))
         .groupBy(col("__tb_g"))
-        .agg(sum(col("__tb_off")).as("__tb_off"))
-        // natural partitioning (the quota sink's argument, verbatim):
-        // the group universe is domain-sized — no single-task funnel
-        .write.mode("overwrite")
-        .parquet(s"$sink/_state/batch_id=$bid")
-      pruneStateHistory(spark, sink, bid)
-      }
-      b.unpersist()
+        .agg(sum(col("__tb_off")).as("__tb_off")))
     }
   }
 
@@ -1175,7 +1015,7 @@ object Streaming {
     * `(row, bucket, cnt)` rows — the state IS the queryable artifact)
     * lands at `sink/_state/batch_id=B`. The fold is the sketch's sum
     * monoid as a DataFrame aggregation; replay of batch B folds only the
-    * newest state < B ([[newestStateBefore]]) and overwrites its own
+    * newest state < B ([[SinkState.prior]]) and overwrites its own
     * directory — byte-identical, forced-restart-tested. A monitoring
     * probe reads the newest batch dir at any time and sees the exact
     * sketch of everything ingested so far. */
@@ -1183,33 +1023,15 @@ object Streaming {
                       depth: Int, width: Int,
                       sink: String, checkpoint: String): Unit = {
     val spark = values.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(values, checkpoint) { (batch, bid) =>
-      // the BATCH's own sketch doubles as the empty-guard (round 22):
-      // probing the persisted per-batch sketch decides emptiness and
-      // caches the expensive leg (the batch aggregation's shuffle runs
-      // under the probe; the fold-write job reuses it) — the old form
-      // paid a raw-source take(1) AND a full re-aggregation in the
-      // write. The `|| !batch.isEmpty` arm fires only when the sketch
-      // is empty (all values NULL — cmsSketch drops nulls): such a
-      // batch is NOT idle and must still land its (unchanged) running
-      // state at batch_id=B, exactly as before this round.
-      val bs = graft.ext.Profile.cmsSketch(batch, valueCol,
-          depth, width)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (!bs.isEmpty || !batch.isEmpty) {
-      val folded = newestStateBefore(spark, sink, bid) match {
-        case None => bs
-        case Some(p) =>
-          spark.read.parquet(s"$sink/_state/batch_id=$p")
-            .unionByName(bs)
-            .groupBy(col("row"), col("bucket"))
-            .agg(sum(col("cnt")).as("cnt"))
-      }
-      folded.coalesce(1).write.mode("overwrite")
-        .parquet(s"$sink/_state/batch_id=$bid")
-      pruneStateHistory(spark, sink, bid)
-      }
-      bs.unpersist()
+      // an all-NULL batch has an empty sketch (cmsSketch drops nulls) but
+      // is not idle: it still lands its unchanged running state
+      val bs = graft.ext.Profile.cmsSketch(batch, valueCol, depth, width)
+      state.commit(bid, state.prior(bid).fold(bs)(_.unionByName(bs)
+        .groupBy(col("row"), col("bucket"))
+        .agg(sum(col("cnt")).as("cnt")))
+        .coalesce(1))
     }
   }
 
@@ -1226,31 +1048,19 @@ object Streaming {
                         numHashes: Int, numBits: Int,
                         sink: String, checkpoint: String): Unit = {
     val spark = values.sparkSession
+    val state = new SinkState(spark, sink)
     runMicroBatches(values, checkpoint) { (batch, bid) =>
-      // keeps the take(1) guard (round 22 audit): the batch feeds exactly
-      // one downstream action (the bitmap collect), so a count-as-guard
-      // would rescan rather than fold; and guarding on the bitmap being
-      // nonzero instead would silently skip an all-NULL-values batch,
-      // which the running-bitmap contract says must still land its
-      // (unchanged) state at batch_id=B
-      if (!batch.isEmpty) {
+      // an all-NULL batch sets no bit but is not idle: it still lands its
+      // unchanged running bitmap
       val bw = graft.ext.Profile.bloomBitmap(batch, valueCol,
         numHashes, numBits)
-      val prev = newestStateBefore(spark, sink, bid) match {
-        case None => new Array[Long](numBits / 64)
-        case Some(p) =>
-          spark.read.parquet(s"$sink/_state/batch_id=$p")
-            .select(col("idx"), col("word")).orderBy(col("idx"))
-            .collect().map(_.getLong(1))
-      }
+      val prev = state.prior(bid).fold(new Array[Long](numBits / 64))(
+        _.select(col("idx"), col("word")).orderBy(col("idx"))
+          .collect().map(_.getLong(1)))
       import spark.implicits._
-      prev.zip(bw).map { case (a, b) => a | b }.zipWithIndex
-        .map { case (w, i) => (i.toLong, w) }.toSeq
-        .toDF("idx", "word")
-        .coalesce(1).write.mode("overwrite")
-        .parquet(s"$sink/_state/batch_id=$bid")
-      pruneStateHistory(spark, sink, bid)
-      }
+      state.commit(bid, prev.zip(bw).map { case (a, b) => a | b }
+        .zipWithIndex.map { case (w, i) => (i.toLong, w) }.toSeq
+        .toDF("idx", "word").coalesce(1))
     }
   }
 
@@ -1287,11 +1097,9 @@ object Streaming {
       .coalesce(1) // k x dim rows — model metadata by construction
       .write.mode("overwrite").parquet(s"$sink/_model")
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
-      if (!batch.isEmpty) {
-        graft.ml.ExactKMeans
-          .assign(batch, col(idCol), col(vecCol), fit)
-          .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
-      }
+      graft.ml.ExactKMeans
+        .assign(batch, col(idCol), col(vecCol), fit)
+        .write.mode("overwrite").parquet(s"$sink/data/batch_id=$bid")
     }
   }
 }

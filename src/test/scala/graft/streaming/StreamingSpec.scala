@@ -1806,7 +1806,14 @@ class StreamingSpec extends SparkTestBase {
       ("bloom", textDir, (s, sink, ck) => Streaming.bloomBitmapToSink(
         s, "v", numHashes = 3, numBits = 256, sink, ck)),
       ("k-means", vecDir, (s, sink, ck) => Streaming.kmeansAssignToSink(
-        s, "vec_id", "embedding", fit, sink, ck)))
+        s, "vec_id", "embedding", fit, sink, ck)),
+      ("bm25", textDir, (s, sink, ck) => {
+        val idx = tmp("graft-idle-bm25-")
+        graft.ext.Bm25.buildIndex(headText, "doc_id", "text", idx,
+          numBuckets = 4)
+        Streaming.bm25IngestToSink(s, idx, "doc_id", "text",
+          Seq("ibaw1", "ibew2"), k = 5, sink, ck)
+      }))
     val outDirs = Seq("data", "_state", "card", "")
     for ((name, src, run) <- cases) {
       val idle = tmp("graft-idle-out-")
@@ -1824,6 +1831,19 @@ class StreamingSpec extends SparkTestBase {
           rowsWithoutBatchId(s"$plain/$d"),
           s"$name: the idle batch changed $d")
     }
+  }
+
+  test("a failing sink body fails the query and releases its batch") {
+    // the priority column is missing, so the body throws after the loop
+    // has persisted the batch; the leak check must see nothing pinned
+    val dir = stagedBatches("graft-failbody-",
+      Seq(Seq((1L, "en", 5L)).toDF("doc_id", "lang", "n_tokens")))
+    val rdds = spark.sparkContext.getPersistentRDDs.size
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      Streaming.tokenBudgetToSink(batchStream(dir, "b0"), "lang", "doc_id",
+        "no_such_priority", "n_tokens", budget = 10L,
+        tmp("graft-failbody-out-"), tmp("graft-failbody-ck-")))
+    assert(leftBehind(rdds).isEmpty)
   }
 
   test("null-valued batch: the CMS and Bloom sinks still land their state") {

@@ -11,7 +11,13 @@ import pyarrow.parquet as pq
 import pandas as pd
 
 sfdir, outdir = sys.argv[1], sys.argv[2]
-con = duckdb.connect()
+# an explicit memory cap and a spill directory: with DuckDB's default cap
+# (80% of RAM) and no spill dir, a large oracle query can fail with
+# `bad allocation` instead of spilling to disk
+con = duckdb.connect(config={
+    "memory_limit": "4GB",
+    "temp_directory": os.path.join(outdir, ".duckdb_tmp"),
+})
 for p in glob.glob(f"{sfdir}/*.parquet"):
     name = os.path.basename(p)[:-8]
     con.sql(f"CREATE VIEW {name} AS SELECT * FROM '{p}'")
