@@ -536,7 +536,7 @@ object Bm25 {
           .write.mode("overwrite").partitionBy("bucket")
           .parquet(s"$path/$newDfDir"),
         () => withWs.agg(count(lit(1)).as("n"),
-          coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head)
+          coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head())
       // additive stats + pointer flip LAST — the atomic commit point
       writeStats(spark, path,
         (st.nDocs + add.getAs[Long]("n"), st.totalDl + add.getAs[Long]("dl")),
