@@ -393,4 +393,50 @@ class Bm25Spec extends SparkTestBase {
     assert(h.deltaSegments === Bm25.openIndex(spark, hIdx).deltaSegments,
       "cached stats drifted from the committed pointer")
   }
+
+  test("probe rows over an append history are pinned through compaction " +
+       "and reopen") {
+    // one history holding every df edge case the probe must count right:
+    // doc 2 (pear) and doc 5 (kiwi) appended in two segments with a term
+    // in both, doc 5 twice in one batch, null and empty texts, kiwi and
+    // mango only in deltas, a query term absent from the index and a
+    // repeated query term
+    val idx = java.nio.file.Files.createTempDirectory("bm25-pin-").toString
+    Bm25.buildIndex(Seq[(Long, String)](
+        (1L, "apple pear plum"), (2L, "pear pear fig"), (3L, null),
+        (4L, "")).toDF("doc_id", "text"),
+      "doc_id", "text", idx, numBuckets = 4)
+    val h = Bm25.openIndex(spark, idx)
+    Bm25.appendToIndex(h, Seq[(Long, String)](
+        (5L, "apple kiwi kiwi"), (5L, "kiwi pear"), (2L, "apple apple pear"),
+        (6L, null)).toDF("doc_id", "text"), "doc_id", "text", tag = "a1")
+    Bm25.appendToIndex(h, Seq[(Long, String)](
+        (7L, "kiwi mango apple"), (8L, ""), (5L, "mango kiwi"))
+      .toDF("doc_id", "text"), "doc_id", "text")
+    val queries = Seq(Seq("apple", "kiwi", "missing", "apple"),
+      Seq("mango"), Seq("pear", "fig"))
+    val phrases = Seq(0L -> Seq("apple", "kiwi"), 1L -> Seq("kiwi", "kiwi"),
+      2L -> Seq("pear"), 3L -> Seq("missing", "pear"),
+      4L -> Seq("kiwi", "mango"))
+    def probes(hh: Bm25.Bm25IndexHandle) = (
+      queries.map(q => Bm25.topKIndexed(hh, q, k = 10).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq),
+      Bm25.phraseCountManyIndexed(hh, phrases)
+        .orderBy(col("phrase_id"), col("doc_id")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+    // rows captured from the df-table store layout; the probe must keep
+    // returning exactly these, whatever the store derives df from
+    val pinned = (
+      Seq(
+        Seq((1L, 5L, 4336883L), (2L, 7L, 2454061L), (3L, 2L, 2234260L),
+          (4L, 1L, 1507304L)),
+        Seq((1L, 5L, 1473441L), (2L, 7L, 1205297L)),
+        Seq((1L, 2L, 3468588L), (2L, 5L, 921318L), (3L, 1L, 753652L))),
+      Seq((0L, 5L, 1L), (2L, 1L, 1L), (2L, 2L, 1L), (2L, 5L, 1L),
+        (4L, 7L, 1L)))
+    assert(probes(h) === pinned, "append history")
+    Bm25.compactIndex(h)
+    assert(probes(h) === pinned, "after compaction")
+    assert(probes(Bm25.openIndex(spark, idx)) === pinned, "reopened")
+  }
 }
