@@ -642,8 +642,8 @@ object RetrievalQueries {
     Query("q_bm25_stream", (s, dir) => {
       // STREAMING INGEST of the inverted index: the corpus tail arrives
       // in 2 micro-batches appended into a fresh COPY of the head-built
-      // index (postings append + vocab-bounded df merge behind a staged
-      // rename + additive stats LAST — probe-anytime consistency); the
+      // index (one postings delta segment per batch + additive stats
+      // LAST — probe-anytime consistency); the
       // standing query against the final index (the sink's last batch)
       // shares q_bm25's oracle: streamed build == batch corpus scan, bit
       // for bit

@@ -209,20 +209,26 @@ object Bm25 {
     *    per (document, distinct term), partitioned by `bucket =
     *    hash(term) % numBuckets` with one cell-keyed shuffle before the
     *    write (one file per bucket, not tasks×buckets)
-    *  - `df_vK/bucket=N/` — rows `(term, df)` in the same layout
     *  - `stats_mK/` — ONE row `(n_docs, total_dl, n_buckets, postings_dir,
-    *    df_dir, …)`, always written LAST and committed via [[StoreMeta]]'s
-    *    versioned-dir + `_SUCCESS` discipline: a probe resolves the
-    *    postings and df directories through the stats row it read, so a
-    *    table swap (df merge on append, postings rewrite on
+    *    delta_dirs, …)`, always written LAST and committed via
+    *    [[StoreMeta]]'s versioned-dir + `_SUCCESS` discipline: a probe
+    *    resolves the postings directories through the stats row it read,
+    *    so a table swap (a delta segment on append, a postings rewrite on
     *    [[compactIndex]]) is an atomic pointer flip — no probe can ever
     *    see a missing or partial table, and a crash mid-flip leaves the
     *    previous pointer whole.
     *
+    * There is no document-frequency table: a term's df is the number of
+    * its live postings rows (one per (document, term)), which the probe
+    * counts from the rows it reads anyway (Lucene likewise sums per-segment
+    * docFreq at query time). A store written when df was kept in its own
+    * versioned table still opens: the stats row's extra column is ignored
+    * and the next [[compactIndex]] sweeps the table.
+    *
     * Build cost: one token-stream shuffle (the `(doc, term)` tf
-    * aggregation) + a term-keyed df aggregation — both linear, paid once
-    * per corpus. A probe prunes to the query terms' bucket DIRECTORIES at
-    * the source and pushes the term equality into the parquet scan. */
+    * aggregation), linear, paid once per corpus. A probe prunes to the
+    * query terms' bucket DIRECTORIES at the source and pushes the term
+    * equality into the parquet scan. */
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
                  path: String, numBuckets: Int = 64): Unit = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
@@ -243,20 +249,10 @@ object Bm25 {
       .sortWithinPartitions(col("term"), col("doc_id"))
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/postings_v0")
-    // df from the postings themselves (one row per (doc, term) = exactly
-    // the document frequency), re-read from the store so the df pass
-    // scans narrow columns instead of re-tokenizing the corpus
-    spark.read.schema(postingsSchema).parquet(s"$path/postings_v0")
-      .groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("bucket", bUdf(col("term")))
-      .repartition(nb, col("bucket"))
-      .sortWithinPartitions(col("term"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/df_v0")
     writeStats(spark, path, withWs.agg(count(lit(1)),
         coalesce(sum(size(col("__ws")).cast("long")), lit(0L))).head
       match { case r => (r.getLong(0), r.getLong(1)) },
-      nb, "postings_v0", "df_v0", Nil, "", nextSeg = 0L)
+      nb, "postings_v0", Nil, "", nextSeg = 0L)
   }
 
   /** Resolved index metadata: counts + the CURRENT table directories —
@@ -269,7 +265,7 @@ object Bm25 {
     * still holds; ADVICE r16). */
   private[ext] final case class IndexStats(nDocs: Long, totalDl: Long,
                                       nBuckets: Int, postingsDir: String,
-                                      dfDir: String, deltaDirs: List[String],
+                                      deltaDirs: List[String],
                                       lastTag: String, nextSeg: Long)
 
   /** The committed stats pointer row as a DataFrame — the public probe
@@ -283,7 +279,6 @@ object Bm25 {
     val st = indexStatsDf(spark, path).head
     IndexStats(st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"),
       st.getAs[Int]("n_buckets"), st.getAs[String]("postings_dir"),
-      st.getAs[String]("df_dir"),
       st.getAs[scala.collection.Seq[String]]("delta_dirs").toList,
       st.getAs[String]("last_tag"), st.getAs[Long]("next_seg"))
   }
@@ -334,14 +329,13 @@ object Bm25 {
   // overwrite deletes-then-writes) or half-written after a crash
   private def writeStats(spark: org.apache.spark.sql.SparkSession,
                          path: String, counts: (Long, Long), nBuckets: Int,
-                         postingsDir: String, dfDir: String,
-                         deltaDirs: List[String], lastTag: String,
-                         nextSeg: Long): Unit = {
+                         postingsDir: String, deltaDirs: List[String],
+                         lastTag: String, nextSeg: Long): Unit = {
     import spark.implicits._
     StoreMeta.write(
-      Seq((counts._1, counts._2, nBuckets, postingsDir, dfDir, deltaDirs,
-          lastTag, nextSeg))
-        .toDF("n_docs", "total_dl", "n_buckets", "postings_dir", "df_dir",
+      Seq((counts._1, counts._2, nBuckets, postingsDir, deltaDirs, lastTag,
+          nextSeg))
+        .toDF("n_docs", "total_dl", "n_buckets", "postings_dir",
           "delta_dirs", "last_tag", "next_seg"),
       path, "stats")
   }
@@ -363,14 +357,6 @@ object Bm25 {
     org.apache.spark.sql.types.StructField("pos",
       org.apache.spark.sql.types.ArrayType(
         org.apache.spark.sql.types.IntegerType)),
-    org.apache.spark.sql.types.StructField("bucket",
-      org.apache.spark.sql.types.IntegerType)))
-
-  private val dfSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("term",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("df",
-      org.apache.spark.sql.types.LongType),
     org.apache.spark.sql.types.StructField("bucket",
       org.apache.spark.sql.types.IntegerType)))
 
@@ -462,15 +448,15 @@ object Bm25 {
     * maintenance story (the text analog of
     * [[Similarity.appendToIvfIndex]]): a daily crawl lands as a NEW
     * bucket-partitioned DELTA SEGMENT (the LSM / Lucene-segment shape —
-    * the live postings are never touched), the df table is merged
-    * VOCABULARY-bounded (old df rows + the batch's own df — never a
-    * corpus rescan) into a new versioned directory, and the stats pointer
-    * row is rewritten LAST. The flip is therefore the batch's ATOMIC
-    * commit: a probe racing an append sees either the whole old index or
-    * the whole new one — never a partial table, never appended postings
-    * scored with stale df. Append == full rebuild is test-asserted
-    * bit-for-bit; [[compactIndex]] folds accumulated segments back into
-    * one base.
+    * the live postings are never touched) and the stats pointer row is
+    * rewritten LAST. Work and files are BATCH-bounded: nothing is
+    * rewritten per vocabulary term, because the probe counts df from the
+    * live postings (see [[buildIndex]]). The flip is therefore the batch's
+    * ATOMIC commit: a probe racing an append sees either the whole old
+    * index or the whole new one — never a partial table, never appended
+    * postings scored against stale counts. Append == full rebuild is
+    * test-asserted bit-for-bit; [[compactIndex]] folds accumulated
+    * segments back into one base.
     *
     * EXACTLY-ONCE ingest: pass a non-empty `tag` (e.g. the micro-batch
     * id). Every pre-flip effect is written to tag-derived names with
@@ -499,57 +485,37 @@ object Bm25 {
       Corpus.words(col(textCol)).as("__ws")).persist()
     try {
     // idle micro-batch: committing it would add a _SUCCESS-only delta dir
-    // (zero-row partitionBy write) and a useless df version — skip whole
+    // (zero-row partitionBy write) and a useless stats version — skip whole
     // (the appendToMinhashIndex discipline; ADVICE r16 high)
     if (withWs.isEmpty) return
-    val postings = postingsOf(withWs, bUdf).persist()
-    try {
-      // monotone counter, not list position: after a compaction empties
-      // the list, position naming would recycle postings_d0 and overwrite
-      // a retired dir still on disk (and still readable by a grace-window
-      // probe holding the pre-compaction pointer)
-      val deltaDir =
-        if (tag.nonEmpty) s"postings_d$tag"
-        else s"postings_d${st.nextSeg}"
-      // the delta write, the df merge, and the additive stats aggregate
-      // are three INDEPENDENT jobs before the pointer flip (the df merge
-      // reads the persisted postings and the OLD df table, never the new
-      // delta dir) — run them as concurrent Spark jobs so the per-batch
-      // append wall is max(...), not their sum (the writeMinhashRows
-      // treatment; all three settle before the atomic commit below)
-      // vocab-bounded df merge: old table + the batch's own term counts,
-      // into a fresh versioned dir (the old one stays readable until the
-      // pointer flips + one more cycle, see pruneVersions)
-      val newDfDir = s"df_v${versionOf(st.dfDir) + 1}"
-      val Seq(_, _, add: Row) = ColumnOps.concurrently[Any](
-        () => postings.repartition(nb, col("bucket"))
-          .sortWithinPartitions(col("term"), col("doc_id"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/$deltaDir"),
-        () => spark.read.schema(dfSchema).parquet(s"$path/${st.dfDir}")
-          .select(col("term"), col("df"))
-          .union(postings.groupBy(col("term")).agg(count(lit(1)).as("df")))
-          .groupBy(col("term")).agg(sum(col("df")).as("df"))
-          .withColumn("bucket", bUdf(col("term")))
-          .repartition(nb, col("bucket"))
-          .sortWithinPartitions(col("term"))
-          .write.mode("overwrite").partitionBy("bucket")
-          .parquet(s"$path/$newDfDir"),
-        () => withWs.agg(count(lit(1)).as("n"),
-          coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head())
-      // additive stats + pointer flip LAST — the atomic commit point
-      writeStats(spark, path,
-        (st.nDocs + add.getAs[Long]("n"), st.totalDl + add.getAs[Long]("dl")),
-        nb, st.postingsDir, newDfDir, st.deltaDirs :+ deltaDir, tag,
-        st.nextSeg + 1L)
-      h.stats = st.copy(
-        nDocs = st.nDocs + add.getAs[Long]("n"),
-        totalDl = st.totalDl + add.getAs[Long]("dl"),
-        dfDir = newDfDir, deltaDirs = st.deltaDirs :+ deltaDir,
-        lastTag = tag, nextSeg = st.nextSeg + 1L)
-      h.retireDirs(Seq(st.dfDir))
-      pruneVersions(spark, path, "df", versionOf(newDfDir))
-    } finally postings.unpersist()
+    // monotone counter, not list position: after a compaction empties
+    // the list, position naming would recycle postings_d0 and overwrite
+    // a retired dir still on disk (and still readable by a grace-window
+    // probe holding the pre-compaction pointer)
+    val deltaDir =
+      if (tag.nonEmpty) s"postings_d$tag"
+      else s"postings_d${st.nextSeg}"
+    // the delta write and the additive stats aggregate are INDEPENDENT
+    // jobs before the pointer flip — run them as concurrent Spark jobs so
+    // the per-batch append wall is max(...), not their sum (the
+    // writeMinhashRows treatment; both settle before the atomic commit).
+    // The postings feed the delta write only, so they are not persisted.
+    val Seq(_, add: Row) = ColumnOps.concurrently[Any](
+      () => postingsOf(withWs, bUdf).repartition(nb, col("bucket"))
+        .sortWithinPartitions(col("term"), col("doc_id"))
+        .write.mode("overwrite").partitionBy("bucket")
+        .parquet(s"$path/$deltaDir"),
+      () => withWs.agg(count(lit(1)).as("n"),
+        coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head())
+    // additive stats + pointer flip LAST — the atomic commit point
+    writeStats(spark, path,
+      (st.nDocs + add.getAs[Long]("n"), st.totalDl + add.getAs[Long]("dl")),
+      nb, st.postingsDir, st.deltaDirs :+ deltaDir, tag, st.nextSeg + 1L)
+    h.stats = st.copy(
+      nDocs = st.nDocs + add.getAs[Long]("n"),
+      totalDl = st.totalDl + add.getAs[Long]("dl"),
+      deltaDirs = st.deltaDirs :+ deltaDir,
+      lastTag = tag, nextSeg = st.nextSeg + 1L)
     } finally withWs.unpersist()
   }
 
@@ -562,17 +528,20 @@ object Bm25 {
     * atomic cutover; probes racing it read either layout, both complete.
     * Orphan delta dirs on disk but absent from the CURRENT stats —
     * crashed-append leftovers and segments retired by a previous
-    * compaction, all ≥ one writer cycle old — are swept first. Cost: one
+    * compaction, all ≥ one writer cycle old — are swept first, together
+    * with the df tables of a store written when df was stored. Cost: one
     * bucket-keyed shuffle of the postings, no corpus access. */
   def compactIndex(h: Bm25IndexHandle): Unit = {
     val spark = h.spark
     val path = h.path
     val st = h.stats
     // sweep orphans (not referenced by the stats a concurrent probe could
-    // currently hold): anything postings_d* outside st.deltaDirs
+    // currently hold): anything postings_d* outside st.deltaDirs, and every
+    // df table (no probe reads one)
     val live = st.deltaDirs.toSet
-    StoreMeta.sweep(spark, path,
-      n => n.startsWith("postings_d") && !live.contains(n))
+    StoreMeta.sweep(spark, path, n =>
+      (n.startsWith("postings_d") && !live.contains(n)) ||
+        n.startsWith("df_v"))
     val newDir = s"postings_v${versionOf(st.postingsDir) + 1}"
     readPostings(h, lit(true), buckets = None)
       .repartition(st.nBuckets, col("bucket"))
@@ -580,7 +549,7 @@ object Bm25 {
       .write.mode("overwrite").partitionBy("bucket")
       .parquet(s"$path/$newDir")
     writeStats(spark, path, (st.nDocs, st.totalDl), st.nBuckets,
-      newDir, st.dfDir, Nil, st.lastTag, st.nextSeg) // counter survives
+      newDir, Nil, st.lastTag, st.nextSeg) // counter survives
     h.stats = st.copy(postingsDir = newDir, deltaDirs = Nil)
     h.retireDirs(st.postingsDir :: st.deltaDirs)
     pruneVersions(spark, path, "postings", versionOf(newDir))
@@ -670,12 +639,14 @@ object Bm25 {
     * corpus scan [[rank]] pays is gone. The per-term contribution columns
     * aggregate in a fixed fold order (each per-term sum touches at most
     * one posting row per document), so the IEEE arithmetic replays
-    * [[rank]] term for term. The handle's cached stats row and per-dir
-    * bucket listings are reused across calls (see [[Bm25IndexHandle]]). */
+    * [[rank]] term for term. Document frequencies come from the same
+    * pruned rows: one map-only term count over them, merged driver-side
+    * (≤ |distinct terms| entries per task), so no store-wide df table is
+    * read or kept.
+    * The handle's cached stats row and per-dir bucket listings are reused
+    * across calls (see [[Bm25IndexHandle]]). */
   def topKIndexed(h: Bm25IndexHandle, terms: Seq[String], k: Int,
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    val spark = h.spark
-    val path = h.path
     require(terms.nonEmpty, "terms must be non-empty")
     require(k >= 1, s"k must be >= 1, got $k")
     val st = h.stats
@@ -686,17 +657,24 @@ object Bm25 {
         s"n_docs=$nDocs)")
     val distinctTerms = terms.distinct
     val qBuckets = distinctTerms.map(bucketOf(_, st.nBuckets)).distinct
-    val dfMap: Map[String, Long] = spark.read.schema(dfSchema)
-      .parquet(s"$path/${st.dfDir}")
-      .filter(col("bucket").isin(qBuckets: _*) &&
-        col("term").isin(distinctTerms: _*))
-      .select(col("term"), col("df")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val post = readPostings(h, col("term").isin(distinctTerms: _*),
+      Some(qBuckets))
+    // df(t) = live postings rows of t: one per (document, term) in every
+    // segment, exactly what build and append used to count into a table.
+    // Counted in ONE map-only job: each task tallies its rows per query
+    // term and the driver merges ≤ |distinct terms| entries per task (a
+    // grouped count would add a shuffle stage, i.e. a second job)
+    val dfMap: Map[String, Long] = post.select(col("term")).rdd
+      .mapPartitions { rows =>
+        val c = scala.collection.mutable.HashMap.empty[String, Long]
+        rows.foreach(r => c.updateWith(r.getString(0))(n =>
+          Some(n.getOrElse(0L) + 1L)))
+        c.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
     val n = lit(nDocs.toDouble)
     val avgdl = lit(totalDl.toDouble) / n // same IEEE division as rank's
     val dl = col("dl").cast("double")
-    val post = readPostings(h, col("term").isin(distinctTerms: _*),
-      Some(qBuckets))
     val perTerm = terms.zipWithIndex.map { case (t, i) =>
       sum(when(col("term") === t,
         termContribution(col("tf"), lit(dfMap.getOrElse(t, 0L)).cast("long"),

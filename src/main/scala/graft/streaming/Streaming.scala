@@ -712,9 +712,10 @@ object Streaming {
   }
 
   /** Streaming INGEST of the inverted BM25 index
-    * ([[graft.ext.Bm25.buildIndex]]) with a standing top-k query. Postings,
-    * df counts and stats are all order-independent sums over the row
-    * multiset, so the accumulated index equals `buildIndex(all batches)`
+    * ([[graft.ext.Bm25.buildIndex]]) with a standing top-k query. Postings
+    * and stats (and the df counts the probe derives from the postings) are
+    * order-independent sums over the row multiset, so the accumulated
+    * index equals `buildIndex(all batches)`
     * EXACTLY regardless of arrival slicing, and the last batch's top-k is
     * the batch query's. MUTATES the index at `path`; that is the point.
     *

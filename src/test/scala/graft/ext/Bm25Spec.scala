@@ -187,7 +187,7 @@ class Bm25Spec extends SparkTestBase {
     val idxIncr = java.nio.file.Files.createTempDirectory("bm25-incr-").toString
     Bm25.buildIndex(full, "doc_id", "text", idxFull, numBuckets = 8)
     Bm25.buildIndex(head, "doc_id", "text", idxIncr, numBuckets = 8)
-    // two appends: the df merge must compose, not just apply once
+    // two appends: the df counts must compose, not just apply once
     Bm25.appendToIndex(Bm25.openIndex(spark, idxIncr),
       tail.filter($"doc_id" <= 35), "doc_id", "text")
     Bm25.appendToIndex(Bm25.openIndex(spark, idxIncr),
@@ -381,7 +381,7 @@ class Bm25Spec extends SparkTestBase {
     Bm25.buildIndex(head, "doc_id", "text", hIdx, numBuckets = 4)
     val h = Bm25.openIndex(spark, hIdx)
     // warm the listing cache before the mutations: the handle must keep
-    // it current through its own append (df version flip) and compaction
+    // it current through its own append (stats flip) and compaction
     probe(Bm25.topKIndexed(h, terms, k = 10, k1 = 1.2, b = 0.75))
     Bm25.appendToIndex(h, b0, "doc_id", "text", tag = "b0")
     Bm25.compactIndex(h)
@@ -438,5 +438,64 @@ class Bm25Spec extends SparkTestBase {
     Bm25.compactIndex(h)
     assert(probes(h) === pinned, "after compaction")
     assert(probes(Bm25.openIndex(spark, idx)) === pinned, "reopened")
+  }
+
+  test("a store written with a df table and a df_dir stats column opens, " +
+       "probes, appends, and loses the table on compaction") {
+    val rng = new scala.util.Random(53)
+    val vocab = Seq("red", "green", "blue", "cyan", "teal")
+    val all = (1L to 36L).map(i =>
+      (i, Seq.fill(2 + rng.nextInt(6))(vocab(rng.nextInt(vocab.length)))
+        .mkString(" ")))
+    def batch(lo: Long, hi: Long) =
+      all.filter(t => t._1 >= lo && t._1 <= hi).toDF("doc_id", "text")
+    // the older layout after one tagged append: the postings base and
+    // delta, df_v0 (base counts) and df_v1 (current counts) partitioned
+    // like the postings, and an 8-column stats row pointing at df_v1
+    val old = java.nio.file.Files.createTempDirectory("bm25-old-").toString
+    Bm25.buildIndex(batch(1, 12), "doc_id", "text", old, numBuckets = 4)
+    Bm25.appendToIndex(Bm25.openIndex(spark, old), batch(13, 24),
+      "doc_id", "text", tag = "t1")
+    def writeDf(dirs: Seq[String], out: String): Unit =
+      dirs.map(d => spark.read.parquet(s"$old/$d")).reduce(_ union _)
+        .groupBy(col("term"), col("bucket")).count().withColumnRenamed("count", "df")
+        .repartition(4, col("bucket")).sortWithinPartitions(col("term"))
+        .write.mode("overwrite").partitionBy("bucket").parquet(s"$old/$out")
+    writeDf(Seq("postings_v0"), "df_v0")
+    writeDf(Seq("postings_v0", "postings_dt1"), "df_v1")
+    val st = Bm25.indexStatsDf(spark, old).head
+    StoreMeta.write(Seq((st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"),
+        st.getAs[Int]("n_buckets"), st.getAs[String]("postings_dir"), "df_v1",
+        st.getAs[scala.collection.Seq[String]]("delta_dirs").toSeq,
+        st.getAs[String]("last_tag"), st.getAs[Long]("next_seg")))
+      .toDF("n_docs", "total_dl", "n_buckets", "postings_dir", "df_dir",
+        "delta_dirs", "last_tag", "next_seg"), old, "stats")
+    assert(Bm25.indexStatsDf(spark, old).columns.contains("df_dir"))
+    def dfDirs() = new java.io.File(old).listFiles().map(_.getName)
+      .filter(_.startsWith("df_")).toSet
+    assert(dfDirs() === Set("df_v0", "df_v1"))
+    val fresh = java.nio.file.Files.createTempDirectory("bm25-new-").toString
+    Bm25.buildIndex(batch(1, 24), "doc_id", "text", fresh, numBuckets = 4)
+    val terms = Seq("red", "teal", "red")
+    val phrases = Seq(0L -> Seq("green", "blue"), 1L -> Seq("cyan"))
+    def probes(p: String) = {
+      val hh = Bm25.openIndex(spark, p)
+      (Bm25.topKIndexed(hh, terms, k = 30).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq,
+        Bm25.phraseCountManyIndexed(hh, phrases)
+          .orderBy(col("phrase_id"), col("doc_id")).collect()
+          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq)
+    }
+    assert(probes(old) === probes(fresh), "old layout probes differ")
+    val h = Bm25.openIndex(spark, old)
+    assert(h.deltaSegments === 1)
+    Bm25.appendToIndex(h, batch(25, 36), "doc_id", "text", tag = "t2")
+    Bm25.appendToIndex(Bm25.openIndex(spark, fresh), batch(25, 36),
+      "doc_id", "text", tag = "t2")
+    assert(Bm25.indexStatsDf(spark, old).head.getAs[Long]("n_docs") === 36L)
+    assert(probes(old) === probes(fresh), "old layout differs after append")
+    Bm25.compactIndex(h)
+    assert(dfDirs().isEmpty, s"df tables survived compaction: ${dfDirs()}")
+    assert(probes(old) === probes(fresh), "old layout differs after compact")
   }
 }

@@ -9,7 +9,8 @@ import org.apache.spark.sql.functions._
   * exact set of `seg_*` directories on disk and the committed manifest row
   * (`segments`, `last_tag`, `next_seg`). Stores written by an older build
   * must keep opening, so segment names and manifest semantics are part of
-  * the format, not an implementation detail.
+  * the format, not an implementation detail. The BM25 store is pinned the
+  * same way by its whole top-level directory set and stats version.
   */
 class StoreLayoutSpec extends SparkTestBase {
   import spark.implicits._
@@ -114,5 +115,46 @@ class StoreLayoutSpec extends SparkTestBase {
         ((df, tag) => Similarity.appendToIvfPqIndex(h, df, "vec_id",
           "embedding", tag = tag), () => Similarity.compactIvfPqIndex(h))
       })
+  }
+
+  test("BM25 top-level dirs and stats versions are pinned through build, " +
+    "append, replay, idle, compact: one delta and one stats version per " +
+    "append, no df table") {
+    val texts = (b: Int) => (0 until 4).map { i =>
+      val id = (100 * b + i).toLong
+      (id, s"batch $b row $i the quick brown fox $id")
+    }.toDF("doc_id", "text")
+    val path = tmp("graft-layout-bm25-")
+    def check(step: String, dirs: Set[String], statsVersion: Int): Unit = {
+      assert(new java.io.File(path).listFiles().map(_.getName).toSet == dirs,
+        s"BM25 after $step: dirs")
+      assert(StoreMeta.currentVersion(spark, path, "stats") == statsVersion,
+        s"BM25 after $step: stats version")
+    }
+    Bm25.buildIndex(texts(0), "doc_id", "text", path, numBuckets = 4)
+    check("build", Set("postings_v0", "stats_m0"), 0)
+    val h = Bm25.openIndex(spark, path)
+    Bm25.appendToIndex(h, texts(1), "doc_id", "text", tag = "t1")
+    check("tagged append",
+      Set("postings_v0", "postings_dt1", "stats_m0", "stats_m1"), 1)
+    Bm25.appendToIndex(h, texts(1), "doc_id", "text", tag = "t1")
+    check("replayed tag",
+      Set("postings_v0", "postings_dt1", "stats_m0", "stats_m1"), 1)
+    Bm25.appendToIndex(h, texts(0).limit(0), "doc_id", "text", tag = "t2")
+    check("idle batch",
+      Set("postings_v0", "postings_dt1", "stats_m0", "stats_m1"), 1)
+    Bm25.appendToIndex(h, texts(2), "doc_id", "text")
+    check("untagged append", Set("postings_v0", "postings_dt1",
+      "postings_d1", "stats_m1", "stats_m2"), 2)
+    Bm25.compactIndex(h)
+    check("first compact", Set("postings_v0", "postings_v1", "postings_dt1",
+      "postings_d1", "stats_m2", "stats_m3"), 3)
+    Bm25.appendToIndex(h, texts(3), "doc_id", "text", tag = "t3")
+    check("append after compact", Set("postings_v0", "postings_v1",
+      "postings_dt1", "postings_d1", "postings_dt3", "stats_m3",
+      "stats_m4"), 4)
+    Bm25.compactIndex(h)
+    check("second compact", Set("postings_v1", "postings_v2",
+      "postings_dt3", "stats_m4", "stats_m5"), 5)
   }
 }
