@@ -610,25 +610,28 @@ object Corpus {
     * n_seqs)`; zero-token docs get `n_seqs = 0` and NULL first/last.
     * `bucket` must be monotone in `idCol` (e.g.
     * [[graft.ops.ColumnOps.rangeBucket]]).
+    *
+    * `baseOffset` shifts the whole layout by an already-packed token count
+    * — the cross-batch coupling of the STREAMING sink
+    * ([[graft.streaming.Streaming.packSequencesToSink]]): each batch
+    * packs distributed, batches concatenate through this one scalar.
     */
   def packSequences(docs: DataFrame, idCol: String, tokens: Column,
-                    seqLen: Long, bucket: Column): DataFrame =
+                    seqLen: Long, bucket: Column,
+                    baseOffset: Long = 0L): DataFrame =
     packSeq(docs.select(col(idCol), tokens.cast("long").as("n_tokens")),
-      idCol, seqLen, bucket)
+      idCol, seqLen, bucket, baseOffset)
 
   /** [[packSequences]] with the range-bucket bound derived IN-PLAN: the
     * 1-row `max(idCol)` aggregate is broadcast-cross-joined onto the rows
     * and the bucket expression reads it per row — no eager driver-side
     * action anywhere in the build (callers that already know the id range
     * structurally should pass an explicit bucket instead and skip the tiny
-    * extra aggregate job).
-    *
-    * `baseOffset` shifts the whole layout by an already-packed token count
-    * — the cross-batch coupling of the STREAMING sink
-    * ([[graft.streaming.Streaming.packSequencesToSink]]): each batch
-    * packs distributed, batches concatenate through this one scalar. */
+    * extra aggregate job). Over a CACHED input the bound's aggregate was
+    * measured to run once per reference, three times (AQE did not reuse
+    * its exchange); pass an explicit bucket there too. */
   def packSequences(docs: DataFrame, idCol: String, tokens: Column,
-                    seqLen: Long, baseOffset: Long = 0L): DataFrame = {
+                    seqLen: Long): DataFrame = {
     val withTok = docs.select(col(idCol), tokens.cast("long").as("n_tokens"))
     val np = withTok.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
@@ -637,14 +640,13 @@ object Corpus {
     val bucket = when(col("__pk_upper") <= 0, lit(0L)).otherwise(
       least(floor(col(idCol).cast("double") * np / col("__pk_upper")),
         lit(np - 1L))).cast("long")
-    packSeq(withTok.crossJoin(broadcast(upper)), idCol, seqLen, bucket,
-        baseOffset)
+    packSeq(withTok.crossJoin(broadcast(upper)), idCol, seqLen, bucket, 0L)
       .drop("__pk_upper")
   }
 
   private def packSeq(withTok: DataFrame, idCol: String,
                       seqLen: Long, bucket: Column,
-                      baseOffset: Long = 0L): DataFrame = {
+                      baseOffset: Long): DataFrame = {
     require(seqLen >= 1, s"seqLen must be >= 1, got $seqLen")
     require(baseOffset >= 0, s"baseOffset must be >= 0, got $baseOffset")
     graft.ops.ColumnOps

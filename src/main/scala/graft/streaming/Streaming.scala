@@ -172,7 +172,13 @@ object Streaming {
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
       val base = state.prior(bid).fold(0L)(_.head().getLong(0))
       val data = s"$sink/data/batch_id=$bid"
+      // the range-bucket bound as a driver value: the in-plan bound is
+      // recomputed over the cached batch for each of its three references
+      // (two shuffle jobs and two broadcast jobs per batch more)
+      val upper = batch.agg(max(col(idCol)).cast("double")).head()
       graft.ext.Corpus.packSequences(batch, idCol, tokens, seqLen,
+          graft.ops.ColumnOps.rangeBucket(batch, col(idCol),
+            if (upper.isNullAt(0)) 0.0 else upper.getDouble(0) + 1.0),
           baseOffset = base)
         .write.mode("overwrite").parquet(data)
       // the total AFTER this batch, summed from the just-written layout
