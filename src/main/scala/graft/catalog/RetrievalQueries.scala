@@ -643,10 +643,9 @@ object RetrievalQueries {
       // STREAMING INGEST of the inverted index: the corpus tail arrives
       // in 2 micro-batches appended into a fresh COPY of the head-built
       // index (one postings delta segment per batch + additive stats
-      // LAST — probe-anytime consistency); the
-      // standing query against the final index (the sink's last batch)
-      // shares q_bm25's oracle: streamed build == batch corpus scan, bit
-      // for bit
+      // LAST — probe-anytime consistency); the standing query against
+      // the final index (the sink's last batch) shares q_bm25's oracle:
+      // streamed build == batch corpus scan, bit for bit
       val idx = copyDir(bm25HeadIndexFor(s, dir))
       val tail = bm25TailFixtureFor(s, dir)
       val stream = s.readStream

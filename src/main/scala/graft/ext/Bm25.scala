@@ -642,9 +642,8 @@ object Bm25 {
     * [[rank]] term for term. Document frequencies come from the same
     * pruned rows: one map-only term count over them, merged driver-side
     * (≤ |distinct terms| entries per task), so no store-wide df table is
-    * read or kept.
-    * The handle's cached stats row and per-dir bucket listings are reused
-    * across calls (see [[Bm25IndexHandle]]). */
+    * read or kept. The handle's cached stats row and per-dir bucket
+    * listings are reused across calls (see [[Bm25IndexHandle]]). */
   def topKIndexed(h: Bm25IndexHandle, terms: Seq[String], k: Int,
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "terms must be non-empty")

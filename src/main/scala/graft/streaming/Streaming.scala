@@ -721,9 +721,9 @@ object Streaming {
     * ([[graft.ext.Bm25.buildIndex]]) with a standing top-k query. Postings
     * and stats (and the df counts the probe derives from the postings) are
     * order-independent sums over the row multiset, so the accumulated
-    * index equals `buildIndex(all batches)`
-    * EXACTLY regardless of arrival slicing, and the last batch's top-k is
-    * the batch query's. MUTATES the index at `path`; that is the point.
+    * index equals `buildIndex(all batches)` EXACTLY regardless of arrival
+    * slicing, and the last batch's top-k is the batch query's. MUTATES the
+    * index at `path`; that is the point.
     *
     * Per-batch results go to a durable SINK, EXACTLY-ONCE end to
     * end across restarts. Per micro-batch: (1) the batch appends to the
