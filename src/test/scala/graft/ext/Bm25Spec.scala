@@ -458,7 +458,8 @@ class Bm25Spec extends SparkTestBase {
       "doc_id", "text", tag = "t1")
     def writeDf(dirs: Seq[String], out: String): Unit =
       dirs.map(d => spark.read.parquet(s"$old/$d")).reduce(_ union _)
-        .groupBy(col("term"), col("bucket")).count().withColumnRenamed("count", "df")
+        .groupBy(col("term"), col("bucket")).count()
+        .withColumnRenamed("count", "df")
         .repartition(4, col("bucket")).sortWithinPartitions(col("term"))
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$old/$out")
     writeDf(Seq("postings_v0"), "df_v0")
