@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.StoredParquet
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -578,10 +579,10 @@ object Similarity {
     if (paths.isEmpty)
       // rare (a probe whose cells match nothing stored): an all-false
       // filter over the first segment keeps the schema without reading rows
-      h.spark.read.parquet(s"${h.path}/${segs.head}").filter(lit(false))
+      StoredParquet.read(h.spark, s"${h.path}/${segs.head}").filter(lit(false))
         .select(("cell" +: cols).map(col): _*)
     else
-      h.spark.read.parquet(paths: _*)
+      StoredParquet.read(h.spark, paths: _*)
         .select(col("cell_d").as("cell") +: cols.map(col): _*)
   }
 
@@ -650,7 +651,7 @@ object Similarity {
                             path: String,
                             dir: String = "centroids")
       : Array[(Int, Seq[Float])] =
-    spark.read.parquet(s"$path/$dir")
+    StoredParquet.read(spark, s"$path/$dir")
       .collect()
       .map(r => (r.getAs[Int]("cent_id"),
         r.getAs[scala.collection.Seq[Float]]("centroid").toSeq))
@@ -658,7 +659,7 @@ object Similarity {
 
   private def readCodebooks(spark: org.apache.spark.sql.SparkSession,
                             path: String): PqCodebooks = {
-    val cwRows = spark.read.parquet(s"$path/codebooks")
+    val cwRows = StoredParquet.read(spark, s"$path/codebooks")
       .collect()
       .map(r => (r.getAs[Int]("sub"), r.getAs[Int]("code"),
         r.getAs[scala.collection.Seq[Float]]("word").toArray))

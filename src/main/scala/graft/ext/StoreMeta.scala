@@ -70,7 +70,7 @@ object StoreMeta {
     require(v >= 0,
       s"StoreMeta.read: no committed ${prefix}_m<K> under $root — " +
         "not an initialized store")
-    spark.read.parquet(s"$root/${prefix}_m$v")
+    graft.ops.StoredParquet.read(spark, s"$root/${prefix}_m$v")
   }
 
   /** Commit `df` as the next version and prune everything older than the

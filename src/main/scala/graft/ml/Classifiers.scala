@@ -227,22 +227,32 @@ object Probes {
         when(col("__pos"), 1.0).otherwise(0.0).as("label"),
         (col("__pos") && col("__neg")).as("__both"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE parallel pass materializes the training set and yields both
-    // validation aggregates (size, pos∩neg overlap) — the round-4 form ran
-    // a separate limit(1).count() job that re-evaluated the whole 3-way
-    // join just for the disjointness check. The iterative fit then runs
-    // over partitioning sized to the DATA, not to
-    // spark.sql.shuffle.partitions — an LBFGS/tree iteration launches a
-    // task per partition, so a small probe set on wide partitioning pays
-    // ~numPartitions×maxIter task overheads for kilobytes of work (measured
-    // ~4 s of the 7 s train at sf0.1). coalesce on the cached frame merges
-    // partitions without recomputing or reshuffling; at real scale
-    // rowsPerPartition keeps full parallelism.
-    val v = labeledWide.agg(count(lit(1)), sum(col("__both").cast("long"))).head()
-    val n = v.getLong(0)
+    // ONE map-only pass over the cached training set tallies both
+    // validation figures (size, pos∩neg overlap; a null __both is no
+    // overlap): each task counts its rows and the driver adds one pair per
+    // task. AQE fills the cache in a job of its own first; an aggregate
+    // would add a shuffle-map job and a result job to that, the tally adds
+    // one. The iterative fit then runs over partitioning sized to the
+    // DATA, not to spark.sql.shuffle.partitions — an LBFGS/tree iteration
+    // launches a task per partition, so a small probe set on wide
+    // partitioning pays ~numPartitions×maxIter task overheads for
+    // kilobytes of work (measured ~4 s of the 7 s train at sf0.1).
+    // coalesce on the cached frame merges partitions without recomputing
+    // or reshuffling; at real scale rowsPerPartition keeps full
+    // parallelism.
+    val (n, overlap) = labeledWide.select(col("__both")).rdd
+      .mapPartitions { rows =>
+        var size = 0L; var both = 0L
+        rows.foreach { r =>
+          size += 1
+          if (!r.isNullAt(0) && r.getBoolean(0)) both += 1
+        }
+        Iterator((size, both))
+      }
+      .collect().foldLeft((0L, 0L)) { case ((a, b), (c, d)) => (a + c, b + d) }
     if (n == 0) throw new IllegalArgumentException(
       "no training rows (positives ∪ negatives ∩ domain is empty)")
-    if (v.getLong(1) > 0) throw new IllegalArgumentException(
+    if (overlap > 0) throw new IllegalArgumentException(
       "positives and negatives overlap (must be disjoint)")
     val rowsPerPartition = 100000L
     val np = labeledWide.rdd.getNumPartitions.toLong

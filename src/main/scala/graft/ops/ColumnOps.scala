@@ -130,27 +130,30 @@ object ColumnOps {
   /** Distributed EXCLUSIVE prefix-sum of `value` over the total order
     * (bucket asc, keys asc): per-bucket inclusive window cumsum (window
     * PARTITIONED by the bucket — parallel, never single-partition),
-    * per-bucket totals → prefix offsets over the tiny numBuckets-row
-    * aggregate (broadcast inequality self-join), global exclusive sum =
-    * bucket offset + inclusive local − own value. Same two-phase shape as
-    * [[withRowIdxByKnownRange]]; `bucket` must be monotone non-decreasing
-    * in the intended total order (e.g. [[rangeBucket]] over the key).
+    * per-bucket totals collected to the driver (one row per bucket, so
+    * bounded by the bucket count) and turned into exclusive offsets there,
+    * global exclusive sum = bucket offset + inclusive local − own value.
+    * The totals run as one aggregate when this is called; the offsets
+    * enter the plan as a map literal. `bucket` (cast to long) must be
+    * monotone non-decreasing in the intended total order (e.g.
+    * [[rangeBucket]] over the key).
     */
   def withPrefixSum(df: DataFrame, out: String, value: Column,
                     bucket: Column, keys: Column*): DataFrame = {
-    val pid = "__ps_pid"; val v = "__ps_v"; val inc = "__ps_inc"; val off = "__ps_off"
-    val parted = df.withColumn(pid, bucket).withColumn(v, value.cast("long"))
+    val pid = "__ps_pid"; val v = "__ps_v"; val inc = "__ps_inc"
+    val parted = df.withColumn(pid, bucket.cast("long"))
+      .withColumn(v, value.cast("long"))
     val local = parted.withColumn(inc,
       sum(col(v)).over(Window.partitionBy(col(pid)).orderBy(keys: _*)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-    val totals = parted.groupBy(col(pid)).agg(sum(col(v)).as("__ps_tot"))
-    val offsets = totals.as("a")
-      .join(broadcast(totals.as("b")), col(s"b.$pid") < col(s"a.$pid"), "left")
-      .groupBy(col(s"a.$pid").as(pid))
-      .agg(coalesce(sum(col("b.__ps_tot")), lit(0L)).as(off))
-    local.join(broadcast(offsets), pid)
-      .withColumn(out, col(off) + col(inc) - col(v))
-      .drop(pid, v, inc, off)
+    val totals = parted.groupBy(col(pid))
+      .agg(coalesce(sum(col(v)), lit(0L)))
+      .collect().collect { case r if !r.isNullAt(0) => (r.getLong(0), r.getLong(1)) }
+      .sortBy(_._1)
+    val offsets = totals.map(_._1).zip(totals.scanLeft(0L)(_ + _._2)).toMap
+    local.withColumn(out,
+        element_at(typedLit(offsets), col(pid)) + col(inc) - col(v))
+      .drop(pid, v, inc)
   }
 
   /** Deterministic 0-based row index in file order — for keyless sources
@@ -351,10 +354,15 @@ object ColumnOps {
   def concurrently[A](legs: (() => A)*): Seq[A] = {
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.ExecutionContext.Implicits.global
+    // a pool thread keeps the Spark local properties (job group,
+    // description) of the thread that created it; each leg runs with the
+    // caller's instead, so its jobs are tagged and cancelled with the
+    // caller's
+    val caller = org.apache.spark.GraftBus.callerProperties()
     // blocking{}: each leg parks its thread on a Spark job, so the global
     // pool grows past #cores instead of serializing the legs on a small
     // driver
-    val running = legs.map(leg => Future(blocking(leg())))
+    val running = legs.map(leg => Future(blocking(caller.run(leg()))))
     running.foreach(Await.ready(_, scala.concurrent.duration.Duration.Inf))
     running.map(_.value.get.get)
   }

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.spec._
-import graft.ops.{ColumnOps, Template}
+import graft.ops.{ColumnOps, StoredParquet, Template}
 
 /** Result of materializing one op. */
 sealed trait MatResult
@@ -615,7 +615,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       // the same bounded re-check, not escape as a materialize failure
       try {
         if (Files.exists(resultParquet(op)))
-          return Some(FrameResult(spark.read.parquet(resultParquet(op).toString)))
+          return Some(FrameResult(
+            StoredParquet.read(spark, resultParquet(op).toString)))
         else if (Files.exists(resultJson(op)))
           return Some(JsonResult(Json.parse(Files.readString(resultJson(op)))))
         else if (Files.exists(modelJson(op)))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 import graft.ops.ColumnOps.{concurrently, releaseCheckpoints}
+import graft.ops.StoredParquet
 
 /** Structured Streaming forms of the engine's continuous-ingest operators.
   *
@@ -183,7 +184,7 @@ object Streaming {
         .write.mode("overwrite").parquet(data)
       // the total AFTER this batch, summed from the just-written layout
       // so the state is exactly what a reader of the data sees
-      state.commit(bid, spark.read.parquet(data)
+      state.commit(bid, StoredParquet.read(spark, data)
         .agg((lit(base) + coalesce(sum(col("n_tokens")), lit(0L)))
           .as("tokens"))
         .coalesce(1))
@@ -350,7 +351,7 @@ object Streaming {
         } yield st.getPath.toString
         val dropped = (if (statePaths.isEmpty) inBatch
           else inBatch.union(
-            spark.read.parquet(statePaths: _*)
+            StoredParquet.read(spark, statePaths: _*)
               .select(col("cell_d").as("cell"), col("__v").as("__va"))
               .join(b, Seq("cell"))
               .filter(graft.ext.Similarity.cosine(col("__va"), col("__vb"))
@@ -814,7 +815,7 @@ object Streaming {
       // cumulative per-shard state AFTER this batch: base + this batch's
       // contribution (read back from the just-written files so the state
       // reflects exactly what a reader will see)
-      val contrib = spark.read.parquet(s"$sink/data/batch_id=$bid")
+      val contrib = StoredParquet.read(spark, s"$sink/data/batch_id=$bid")
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("r"), sum(col("n_tokens")).as("t"))
         .collect()
@@ -885,7 +886,7 @@ object Streaming {
 
     /** The newest committed state strictly before batch `bid`. */
     def prior(bid: Long): Option[DataFrame] =
-      ids.filter(_ < bid).maxOption.map(p => spark.read.parquet(dir(p)))
+      ids.filter(_ < bid).maxOption.map(p => StoredParquet.read(spark, dir(p)))
 
     /** Overwrites batch `bid`'s state with `state`, then deletes every
       * older state dir except the newest one (one grace generation, the
@@ -946,7 +947,7 @@ object Streaming {
         .coalesce(1))
       // the card derives from the READ-BACK state, so it reflects
       // exactly what the next batch will fold on
-      spark.read.parquet(state.dir(bid))
+      StoredParquet.read(spark, state.dir(bid))
         .withColumn("est_distinct_texts",
           graft.ext.Profile.kmvEstimate(col("__kmv"), k))
         .drop("__kmv")

@@ -88,6 +88,39 @@ class StoreMetaSpec extends SparkTestBase {
     assert(e.getMessage.contains("not an initialized store"))
   }
 
+  test("opening each stored index runs one Spark job: its meta row, read with the footer's schema") {
+    val meter = graft.Meter(spark)
+    def jobs(f: => Unit): Long = {
+      val before = meter.read(); f; (meter.read() - before).jobs
+    }
+    try {
+      val text = docs(0 until 8, "alpha beta")
+      val bm = tmp("graft-open-bm25-")
+      Bm25.buildIndex(text, "doc_id", "text", bm)
+      val mh = tmp("graft-open-mh-")
+      Dedup.buildMinhashIndex(spark, mh, text, "text", "doc_id")
+      def basis(j: Int): Array[Float] =
+        Array.tabulate(8)(i => if (i == j) 1.0f else 0.0f)
+      val corpus = (0 until 8).map(i => (i.toLong, basis(i % 4)))
+        .toDF("vec_id", "embedding")
+      val cents = Similarity.centroidsByIds(corpus, "vec_id", "embedding",
+        0L until 4L)
+      val ivf = tmp("graft-open-ivf-")
+      Similarity.buildIvfIndex(corpus, "vec_id", "embedding", cents, ivf)
+      val pq = tmp("graft-open-pq-")
+      Similarity.buildIvfPqIndex(corpus, "vec_id", "embedding", cents,
+        Similarity.pqCodebooksByIds(corpus, "vec_id", "embedding", m = 4,
+          0L until 8L), pq)
+      // schema inference of the meta row ran a second job per open
+      val opens = Seq(
+        "bm25" -> jobs(Bm25.openIndex(spark, bm)),
+        "minhash" -> jobs(Dedup.openMinhashIndex(spark, mh)),
+        "ivf" -> jobs(Similarity.openIvfIndex(spark, ivf)),
+        "ivf-pq" -> jobs(Similarity.openIvfIndex(spark, pq)))
+      assert(opens.forall(_._2 == 1), s"jobs per open: $opens")
+    } finally spark.sparkContext.removeSparkListener(meter)
+  }
+
   private def docs(ids: Range, text: String) =
     ids.map(i => (i.toLong, s"$text w$i common")).toDF("doc_id", "text")
 

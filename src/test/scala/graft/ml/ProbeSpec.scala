@@ -110,6 +110,10 @@ class ProbeSpec extends SparkTestBase {
       }
       val (_, model, score, eval) = chain("difference_of_means")
       val r = newRunner()
+      // every input of the training resolved beforehand
+      (Seq(model.x, model.positives, model.negatives) ++ model.trainDomain)
+        .foreach(r.toFrame)
+      val train = jobs(r.toModel(model))
       val fitted = r.toModel(model)
       r.toFrame(score) // every input of the evaluation resolved beforehand
       val store = newStoreDir()
@@ -120,6 +124,9 @@ class ProbeSpec extends SparkTestBase {
       // three-action evaluation 13
       assert(write == 0 && load == 0, s"write $write, load $load jobs")
       assert(evaluate <= 13 / 2, s"evaluate ran $evaluate jobs")
+      // the validation is one map-only job after AQE's cache fill; the
+      // aggregate it replaced ran a shuffle-map and a result job (12 in all)
+      assert(train <= 11, s"train ran $train jobs")
     } finally spark.sparkContext.removeSparkListener(meter)
   }
 

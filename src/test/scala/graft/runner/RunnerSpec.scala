@@ -347,6 +347,49 @@ class RunnerSpec extends SparkTestBase {
     assert(r2.toValues(rid) == Seq(0L, 1L))
   }
 
+  test("a fresh runner's parquet store hit runs no Spark job until its first action") {
+    val store = newStoreDir()
+    val rid = AssignRowIDOp(inline(10))
+    new LocalSparkRunner(spark, store).materialize(rid)
+    val r2 = new LocalSparkRunner(spark, store)
+    val meter = graft.Meter(spark)
+    val served = try {
+      val before = meter.read()
+      val df = r2.toFrame(rid)
+      assert((meter.read() - before).jobs == 0, "the store hit ran a Spark job")
+      assert(meter.ops().filter(_.uuid == rid.uuid).map(_.outcome) ==
+        Seq(graft.Meter.StoreHit))
+      df
+    } finally spark.sparkContext.removeSparkListener(meter)
+    // what plain schema inference reads from the same dir
+    val inferred = spark.read.parquet(
+      r2.opDir(rid).resolve("result.parquet").toString)
+    assert(served.schema == inferred.schema)
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.orderBy("__row_idx").collect().map(_.toSeq).toSeq
+    assert(rows(served) == rows(inferred))
+  }
+
+  test("a result dir whose part files lack Spark's row metadata still opens") {
+    import spark.implicits._
+    val store = newStoreDir()
+    val op = AssignRowIDOp(inline(2))
+    new LocalSparkRunner(spark, store)
+      .writeFrame(op, Seq((0L, "a"), (1L, "b")).toDF("id", "name"))
+    // the same rows, written by a tool that records no Spark schema
+    val dir = new LocalSparkRunner(spark, store).opDir(op)
+      .resolve("result.parquet")
+    Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-"))
+      .foreach(Files.delete)
+    graft.ops.StoredParquetSpec.writeForeign(spark,
+      dir.resolve("part-00000-foreign.parquet"), Seq(0L -> "a", 1L -> "b"))
+    assert(graft.ops.StoredParquet.footerSchema(spark, Seq(dir.toString)).isEmpty)
+    val df = new LocalSparkRunner(spark, store).toFrame(op)
+    assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
+      .toSeq == Seq((0L, "a"), (1L, "b")))
+  }
+
   test("hasResult for ephemeral ops follows dependency readiness") {
     val r = newRunner()
     val ds = inline(6)

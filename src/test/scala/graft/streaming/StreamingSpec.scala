@@ -1833,6 +1833,50 @@ class StreamingSpec extends SparkTestBase {
     }
   }
 
+  test("sink state and batch read-backs read what schema inference reads") {
+    // the stateful sinks read their carried state and their just-written
+    // batches back through StoredParquet (footer schema, no inference
+    // job); every dir they write must read back identically either way,
+    // partition columns (sharded export's shard, semantic dedup's cell)
+    // included
+    def basis(j: Int): Array[Float] =
+      Array.tabulate(8)(i => if (i == j) 1.0f else 0.0f)
+    def textRows(ids: Range) = ids.map(i =>
+      (i.toLong, s"w$i common words here x${i % 3}", if (i % 2 == 0) "en" else "de"))
+      .toDF("doc_id", "text", "lang")
+    val textDir = stagedBatches("graft-rb-text-",
+      Seq(textRows(0 until 6), textRows(10 until 16)))
+    val vecDir = stagedBatches("graft-rb-vec-", Seq(
+      Seq((100L, basis(0)), (101L, basis(1))).toDF("vec_id", "embedding"),
+      Seq((200L, basis(0)), (201L, basis(2))).toDF("vec_id", "embedding")))
+    val tokens = size(graft.ext.Corpus.words(col("text")))
+    type Run = (org.apache.spark.sql.DataFrame, String, String) => Unit
+    val cases: Seq[(String, String, Run)] = Seq(
+      ("pack", textDir, (s, sink, ck) => Streaming.packSequencesToSink(
+        s, "doc_id", tokens, 8L, sink, ck)),
+      ("sharded export", textDir, (s, sink, ck) =>
+        Streaming.shardedExportToSink(s, "doc_id", tokens, epoch = 3L,
+          numShards = 4, seqLen = 16L, sink, ck)),
+      ("data card", textDir, (s, sink, ck) => Streaming.corpusReportToSink(
+        s, "lang", "text", k = 4, sink, ck)),
+      ("lm", textDir, (s, sink, ck) => Streaming.lmScoreToSink(
+        s, "doc_id", "text", sink, ck)),
+      ("bloom", textDir, (s, sink, ck) => Streaming.bloomBitmapToSink(
+        s, "lang", numHashes = 3, numBits = 256, sink, ck)),
+      ("semantic dedup", vecDir, (s, sink, ck) =>
+        Streaming.semanticDedupToSink(s, "vec_id", "embedding",
+          (0 until 4).map(j => (j, basis(j).toSeq)).toArray, 0.95, sink, ck)))
+    for ((name, src, run) <- cases) {
+      val sink = tmp("graft-rb-out-")
+      run(batchStream(src, "b0", "b1"), sink, tmp("graft-rb-ck-"))
+      val dirs = graft.ops.StoredParquetSpec.datasetDirs(sink)
+      assert(dirs.exists(_.contains("_state")), s"$name: no state dir")
+      for (d <- dirs)
+        graft.ops.StoredParquetSpec.differenceFromInferred(spark, d)
+          .foreach(diff => fail(s"$name: $diff"))
+    }
+  }
+
   test("a failing sink body fails the query and releases its batch") {
     // the priority column is missing, so the body throws after the loop
     // has persisted the batch; the leak check must see nothing pinned
