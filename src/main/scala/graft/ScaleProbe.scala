@@ -685,7 +685,7 @@ object ScaleProbe {
                 .select((col("doc_id") + 70000000L).as("doc_id"), col("text")),
               "doc_id", "text", tag = s"m$i")
           }
-          parquetCount(bi, "postings_")
+          parquetCount(bi, "seg_")
         }
         measure(s"bm25 maint probe-pre $lbl", s"segments=$nAppends+base") {
           graft.ext.Bm25.topKIndexed(
@@ -696,7 +696,7 @@ object ScaleProbe {
             s"live=1000 docs, history=$nAppends appends") {
           graft.ext.Bm25.compactIndex(
             graft.ext.Bm25.openIndex(spark, bi.toString))
-          parquetCount(bi, "postings_v")
+          parquetCount(bi, "seg_c")
         }
         measure(s"bm25 maint probe-post $lbl", "1 segment") {
           graft.ext.Bm25.topKIndexed(
@@ -805,7 +805,7 @@ object ScaleProbe {
         measure(s"bm25 maint compact live=$live", "history=10 appends") {
           graft.ext.Bm25.compactIndex(
             graft.ext.Bm25.openIndex(spark, bi.toString))
-          parquetCount(bi, "postings_v")
+          parquetCount(bi, "seg_c")
         }
         rmTree(bi)
       }

@@ -198,32 +198,45 @@ object Bm25 {
   private def bucketOf(term: String, numBuckets: Int): Int =
     math.floorMod(graft.ext.Dedup.hash64(BucketSeed, term).toInt, numBuckets)
 
+  /** [[bucketOf]] as a column function: the `bucket=N` dir a term's
+    * postings are written to, and how a read restores the column. */
+  private def bucketCol(term: Column, numBuckets: Int): Column =
+    udf((t: String) => bucketOf(t, numBuckets)).apply(term)
+
   /** Build a stored INVERTED INDEX at `path` — the BM25 serving shape:
     * once the corpus is indexed, a query reads only its own terms'
     * posting lists instead of scanning 100 TB of text per query (the
     * text-retrieval analog of [[Similarity.buildIvfIndex]]'s
     * cell-partitioned store).
     *
-    * Layout (VERSIONED — the stats row is the pointer):
-    *  - `postings_vK/bucket=N/` — rows `(term, doc_id, tf, dl, pos)`, one
-    *    per (document, distinct term), partitioned by `bucket =
+    * Layout (the [[StoreMeta]] segment protocol the MinHash, IVF and
+    * IVF-PQ stores share — the stats row is the pointer):
+    *  - `seg_<name>/bucket=N/` — rows `(term, doc_id, tf, dl, pos)`, one per
+    *    (document, distinct term), partitioned by `bucket =
     *    hash(term) % numBuckets` with one cell-keyed shuffle before the
-    *    write (one file per bucket, not tasks×buckets)
-    *  - `stats_mK/` — ONE row `(n_docs, total_dl, n_buckets, postings_dir,
-    *    delta_dirs, …)`, always written LAST and committed via
+    *    write (one file per bucket, not tasks×buckets). The build writes
+    *    `seg_base`, each append one more segment, and [[compactIndex]]
+    *    folds the live segments into a fresh `seg_c<gen>`.
+    *  - `stats_mK/` — ONE row `(n_docs, total_dl, n_buckets, segments,
+    *    last_tag, next_seg)`, always written LAST and committed via
     *    [[StoreMeta]]'s versioned-dir + `_SUCCESS` discipline: a probe
-    *    resolves the postings directories through the stats row it read,
-    *    so a table swap (a delta segment on append, a postings rewrite on
-    *    [[compactIndex]]) is an atomic pointer flip — no probe can ever
-    *    see a missing or partial table, and a crash mid-flip leaves the
-    *    previous pointer whole.
+    *    resolves the live segments through the stats row it read, so a
+    *    segment append or a compaction is an atomic pointer flip — no
+    *    probe can ever see a missing or partial table, and a crash
+    *    mid-flip leaves the previous pointer whole.
     *
     * There is no document-frequency table: a term's df is the number of
     * its live postings rows (one per (document, term)), which the probe
     * counts from the rows it reads anyway (Lucene likewise sums per-segment
-    * docFreq at query time). A store written when df was kept in its own
-    * versioned table still opens: the stats row's extra column is ignored
-    * and the next [[compactIndex]] sweeps the table.
+    * docFreq at query time). A store written before BM25 joined the
+    * segment protocol (its stats row names a postings base and delta
+    * dirs, and it may still carry df tables) keeps opening: those dirs
+    * are its live segments, and its first two [[compactIndex]] calls
+    * sweep the old names.
+    *
+    * Ids must be unique across the store and every later batch (the
+    * ingest norm — ids assigned on arrival): a repeated id is scored as
+    * two documents.
     *
     * Build cost: one token-stream shuffle (the `(doc, term)` tf
     * aggregation), linear, paid once per corpus. A probe prunes to the
@@ -232,44 +245,22 @@ object Bm25 {
   def buildIndex(docs: DataFrame, idCol: String, textCol: String,
                  path: String, numBuckets: Int = 64): Unit = {
     require(numBuckets >= 1, s"numBuckets must be >= 1, got $numBuckets")
-    val spark = docs.sparkSession
-    val withWs = docs.select(col(idCol).cast("long").as("doc_id"),
-      Corpus.words(col(textCol)).as("__ws"))
-    val nb = numBuckets
-    val bUdf = udf { t: String => math.floorMod(
-      graft.ext.Dedup.hash64(BucketSeed, t).toInt, nb) }
-    val postings = postingsOf(withWs, bUdf)
-    // sortWithinPartitions(term): a bucket directory holds 1/numBuckets of
-    // ALL postings, which grows with the corpus — term-sorted row groups
-    // give the probe's pushed term-equality parquet min/max skipping, so
-    // the probe reads ~the matched postings, not the whole bucket
-    // pinned partition count: keeps AQE from coalescing a small write to
-    // one task that pays every bucket's parquet-writer init serially
-    postings.repartition(nb, col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/postings_v0")
-    writeStats(spark, path, withWs.agg(count(lit(1)),
-        coalesce(sum(size(col("__ws")).cast("long")), lit(0L))).head
-      match { case r => (r.getLong(0), r.getLong(1)) },
-      nb, "postings_v0", Nil, "", nextSeg = 0L)
+    val withWs = tokenized(docs, idCol, textCol)
+    writePostings(postingsOf(withWs, numBuckets), numBuckets,
+      s"$path/seg_base")
+    val (n, dl) = counts(withWs)
+    writeStats(docs.sparkSession, path,
+      IndexStats(n, dl, numBuckets, StoreMeta.Segments.Base))
   }
 
-  /** Resolved index metadata: counts + the CURRENT table directories —
-    * `postingsDir` the compacted base, `deltaDirs` the committed append
-    * segments (LSM/Lucene-segment shape), `lastTag` the most recent
-    * append's idempotence tag, `nextSeg` the monotone counter that names
-    * untagged delta segments (never reused, even across compactions — a
-    * list-position name would recycle `postings_d0` after a compaction
-    * resets the list and overwrite a retired dir a grace-window reader
-    * still holds; ADVICE r16). */
+  /** Resolved index metadata: the additive counts, the bucket count, and
+    * the segment manifest ([[StoreMeta.Segments]]). */
   private[ext] final case class IndexStats(nDocs: Long, totalDl: Long,
-                                      nBuckets: Int, postingsDir: String,
-                                      deltaDirs: List[String],
-                                      lastTag: String, nextSeg: Long)
+                                           nBuckets: Int,
+                                           segs: StoreMeta.Segments)
 
   /** The committed stats pointer row as a DataFrame — the public probe
-    * for tests/tools (`n_docs`, `total_dl`, `n_buckets`, the table dirs). */
+    * for tests/tools (`n_docs`, `total_dl`, `n_buckets`, the manifest). */
   def indexStatsDf(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
     StoreMeta.read(spark, path, "stats")
@@ -277,10 +268,15 @@ object Bm25 {
   private def readStats(spark: org.apache.spark.sql.SparkSession,
                         path: String): IndexStats = {
     val st = indexStatsDf(spark, path).head
+    val segs =
+      if (st.schema.fieldNames.contains("segments")) StoreMeta.Segments.of(st)
+      // the older layout: the postings base and delta dirs are the live
+      // segments (see buildIndex)
+      else StoreMeta.Segments(st.getAs[String]("postings_dir") ::
+        st.getAs[scala.collection.Seq[String]]("delta_dirs").toList,
+        st.getAs[String]("last_tag"), st.getAs[Long]("next_seg"))
     IndexStats(st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"),
-      st.getAs[Int]("n_buckets"), st.getAs[String]("postings_dir"),
-      st.getAs[scala.collection.Seq[String]]("delta_dirs").toList,
-      st.getAs[String]("last_tag"), st.getAs[Long]("next_seg"))
+      st.getAs[Int]("n_buckets"), segs)
   }
 
   /** Driver-side HANDLE over a [[buildIndex]] store for repeated
@@ -288,12 +284,11 @@ object Bm25 {
     * the [[graft.ext.Dedup.MinhashIndexHandle]] / `Similarity.IvfIndexHandle`
     * discipline applied to the text index): re-reading the stats pointer
     * row (a versioned-dir listing plus a 1-task Spark job) and re-listing
-    * every postings directory's buckets on EVERY micro-batch is pure
-    * driver fixed overhead that sets the per-batch latency floor. Caches
-    * (a) the stats row, kept current in memory as this handle's own
-    * appends/compactions commit, and (b) each postings/delta dir's bucket
-    * listing — dirs are immutable once committed (new content always
-    * lands under a fresh versioned/tagged name).
+    * every segment's buckets on EVERY micro-batch is pure driver fixed
+    * overhead that sets the per-batch latency floor. Caches (a) the stats
+    * row, kept current in memory as this handle's own appends/compactions
+    * commit, and (b) each segment's bucket listing
+    * ([[StoreMeta.PartitionDirs]]).
     *
     * Single writer; all mutations of this store must go through the SAME
     * handle — after an out-of-band write, call [[Bm25IndexHandle.refresh]].
@@ -303,19 +298,22 @@ object Bm25 {
       private[ext] val spark: org.apache.spark.sql.SparkSession,
       val path: String) {
     private[ext] var stats: IndexStats = readStats(spark, path)
-    private val dirBuckets =
-      scala.collection.mutable.HashMap.empty[String, Array[Int]]
-    /** Live delta-segment count (what an auto-compaction policy
+    private[ext] val bucketDirs =
+      new StoreMeta.PartitionDirs(spark, path, "", "bucket")
+    /** Live segments past the base (what an auto-compaction policy
       * thresholds on). */
-    def deltaSegments: Int = stats.deltaDirs.length
-    private[ext] def bucketsOf(dir: String): Array[Int] =
-      dirBuckets.getOrElseUpdate(dir, bucketDirsOf(spark, path, dir))
-    private[ext] def retireDirs(dirs: Seq[String]): Unit =
-      dirs.foreach(dirBuckets.remove)
+    def deltaSegments: Int = stats.segs.live.length - 1
+    /** Commit `st` as the store's stats row and keep it as this handle's
+      * stats; the listings of segments it retires are dropped. */
+    private[ext] def commit(st: IndexStats): Unit = {
+      writeStats(spark, path, st)
+      bucketDirs.retain(st.segs.live)
+      stats = st
+    }
     /** Re-read the stats pointer and drop cached listings — required only
       * after a DIFFERENT writer mutated the store. */
     def refresh(): Unit = {
-      stats = readStats(spark, path); dirBuckets.clear()
+      stats = readStats(spark, path); bucketDirs.clear()
     }
   }
 
@@ -328,15 +326,13 @@ object Bm25 {
   // store's commit point and must never be transiently missing (a plain
   // overwrite deletes-then-writes) or half-written after a crash
   private def writeStats(spark: org.apache.spark.sql.SparkSession,
-                         path: String, counts: (Long, Long), nBuckets: Int,
-                         postingsDir: String, deltaDirs: List[String],
-                         lastTag: String, nextSeg: Long): Unit = {
+                         path: String, st: IndexStats): Unit = {
     import spark.implicits._
     StoreMeta.write(
-      Seq((counts._1, counts._2, nBuckets, postingsDir, deltaDirs, lastTag,
-          nextSeg))
-        .toDF("n_docs", "total_dl", "n_buckets", "postings_dir",
-          "delta_dirs", "last_tag", "next_seg"),
+      Seq((st.nDocs, st.totalDl, st.nBuckets, st.segs.live, st.segs.lastTag,
+          st.segs.nextSeg))
+        .toDF("n_docs", "total_dl", "n_buckets", "segments", "last_tag",
+          "next_seg"),
       path, "stats")
   }
 
@@ -366,27 +362,14 @@ object Bm25 {
   private val postingsFileSchema = org.apache.spark.sql.types.StructType(
     postingsSchema.filterNot(_.name == "bucket"))
 
-  /** The bucket= directories present under `path/$dir` (a delta segment
-    * only holds the buckets its batch touched). */
-  private def bucketDirsOf(spark: org.apache.spark.sql.SparkSession,
-                           path: String, dir: String): Array[Int] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/$dir")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Array.empty
-    else fs.listStatus(p).map(_.getPath.getName)
-      .filter(_.startsWith("bucket="))
-      .map(_.substring("bucket=".length).toInt)
-  }
-
-  /** The index's postings as ONE DataFrame: the compacted base plus every
-    * committed delta segment in a single MULTI-PATH scan — one listing
-    * and one FileSourceScan for the whole history, instead of an N-way
-    * union whose per-segment fixed cost (listing + scan planning) made
-    * long-history probes and compactions linear in append count. Bucket
-    * pruning happens at PATH construction (`buckets` — the probe knows
-    * its terms' buckets driver-side), strictly stronger than partition
-    * pruning: unmatched directories are never even listed. Spark cannot
-    * do this itself: sibling roots each holding bucket= layers trip its
+  /** The index's postings as ONE DataFrame: every live segment in a
+    * single MULTI-PATH scan — one listing and one FileSourceScan for the
+    * whole history, instead of an N-way union whose per-segment fixed
+    * cost (listing + scan planning) made long-history probes and
+    * compactions linear in append count. Bucket pruning happens at PATH
+    * construction (`buckets` — the probe knows its terms' buckets
+    * driver-side, [[StoreMeta.PartitionDirs]]). Spark cannot do this
+    * itself: sibling roots each holding bucket= layers trip its
     * conflicting-directory-structures check, so the bucket column is
     * recomputed from the term (bit-identical — that is how it was
     * derived at write time). `pred` carries the row-level predicates
@@ -394,61 +377,62 @@ object Bm25 {
   private def readPostings(h: Bm25IndexHandle, pred: Column,
                            buckets: Option[Seq[Int]]): DataFrame = {
     val spark = h.spark
-    val st = h.stats
-    val cols = Seq("term", "doc_id", "tf", "dl", "pos", "bucket")
-    val sel = buckets.map(_.toSet)
-    val paths = for {
-      d <- st.postingsDir :: st.deltaDirs
-      b <- h.bucketsOf(d) if sel.forall(_.contains(b))
-    } yield s"${h.path}/$d/bucket=$b"
-    val nb = st.nBuckets
-    val bUdf = udf { t: String => math.floorMod(
-      graft.ext.Dedup.hash64(BucketSeed, t).toInt, nb) }
+    val paths = h.bucketDirs.paths(h.stats.segs.live, buckets)
     if (paths.isEmpty)
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        postingsSchema).select(cols.map(col): _*)
+        spark.sparkContext.emptyRDD[Row],
+        postingsSchema)
     else
       spark.read.schema(postingsFileSchema).parquet(paths: _*)
         .filter(pred)
-        .withColumn("bucket", bUdf(col("term")))
-        .select(cols.map(col): _*)
+        .withColumn("bucket", bucketCol(col("term"), h.stats.nBuckets))
   }
 
-  /** `dir_vK` → K. */
-  private def versionOf(dir: String): Int =
-    dir.substring(dir.lastIndexOf("_v") + 2).toInt
+  /** `(doc_id, __ws)`: each document's id and word array. */
+  private def tokenized(docs: DataFrame, idCol: String,
+                        textCol: String): DataFrame =
+    docs.select(col(idCol).cast("long").as("doc_id"),
+      Corpus.words(col(textCol)).as("__ws"))
 
-  /** Best-effort removal of superseded `prefix_vK` dirs older than the
-    * PREVIOUS version: the previous version outlives one flip so a probe
-    * that resolved the old pointer just before a flip can finish its read
-    * (single-writer; probes are bounded by one writer cycle). */
-  private def pruneVersions(spark: org.apache.spark.sql.SparkSession,
-                            path: String, prefix: String,
-                            current: Int): Unit =
-    StoreMeta.sweep(spark, path, n => n.startsWith(s"${prefix}_v") &&
-      scala.util.Try(versionOf(n)).toOption.exists(_ < current - 1))
+  /** The additive stats of a [[tokenized]] batch: (documents, words). */
+  private def counts(withWs: DataFrame): (Long, Long) = {
+    val r = withWs.agg(count(lit(1)),
+      coalesce(sum(size(col("__ws")).cast("long")), lit(0L))).head()
+    (r.getLong(0), r.getLong(1))
+  }
 
   /** Postings rows `(term, doc_id, tf, dl, pos, bucket)` for a tokenized
     * corpus — `pos` the sorted 0-based token positions of the term in the
     * document (the POSITIONAL payload that makes the index answer phrase
     * queries without a corpus scan; Lucene stores the same). */
-  private def postingsOf(withWs: DataFrame,
-                         bUdf: org.apache.spark.sql.expressions
-                           .UserDefinedFunction): DataFrame =
+  private def postingsOf(withWs: DataFrame, numBuckets: Int): DataFrame =
     withWs
       .select(col("doc_id"), size(col("__ws")).cast("long").as("dl"),
         posexplode(col("__ws")).as(Seq("pos", "term")))
       .groupBy(col("term"), col("doc_id"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"),
         sort_array(collect_list(col("pos"))).as("pos"))
-      .withColumn("bucket", bUdf(col("term")))
+      .withColumn("bucket", bucketCol(col("term"), numBuckets))
+
+  /** Write postings rows as one segment at `dir`. sortWithinPartitions
+    * (term): a bucket directory holds 1/numBuckets of ALL postings, which
+    * grows with the corpus — term-sorted row groups give the probe's
+    * pushed term-equality parquet min/max skipping, so the probe reads
+    * ~the matched postings, not the whole bucket. The pinned partition
+    * count keeps AQE from coalescing a small write to one task that pays
+    * every bucket's parquet-writer init serially. */
+  private def writePostings(postings: DataFrame, numBuckets: Int,
+                            dir: String): Unit =
+    postings.repartition(numBuckets, col("bucket"))
+      .sortWithinPartitions(col("term"), col("doc_id"))
+      .write.mode("overwrite").partitionBy("bucket")
+      .parquet(dir)
 
   /** Append new documents to a [[buildIndex]] store — the 100 TB
     * maintenance story (the text analog of
     * [[Similarity.appendToIvfIndex]]): a daily crawl lands as a NEW
-    * bucket-partitioned DELTA SEGMENT (the LSM / Lucene-segment shape —
-    * the live postings are never touched) and the stats pointer row is
+    * bucket-partitioned SEGMENT (the LSM / Lucene-segment shape — the
+    * live postings are never touched) and the stats pointer row is
     * rewritten LAST. Work and files are BATCH-bounded: nothing is
     * rewritten per vocabulary term, because the probe counts df from the
     * live postings (see [[buildIndex]]). The flip is therefore the batch's
@@ -456,103 +440,67 @@ object Bm25 {
     * index or the whole new one — never a partial table, never appended
     * postings scored against stale counts. Append == full rebuild is
     * test-asserted bit-for-bit; [[compactIndex]] folds accumulated
-    * segments back into one base.
+    * segments back into one. Ids must be unique across the store and
+    * every later batch, as in [[buildIndex]].
     *
     * EXACTLY-ONCE ingest: pass a non-empty `tag` (e.g. the micro-batch
-    * id). Every pre-flip effect is written to tag-derived names with
-    * overwrite semantics, and the flip records the tag — so a crashed
-    * attempt leaves only invisible orphans that the retry overwrites, and
-    * a RE-DELIVERED batch (streaming restart replaying an uncommitted
-    * micro-batch whose effects DID land) is detected by `tag ==
-    * last_tag` and skipped whole. Single writer; appends and compactions
-    * must not overlap each other. The handle's cached stats row replaces
-    * the per-batch pointer re-read (see [[Bm25IndexHandle]]). */
+    * id). A re-delivered batch (`tag == last_tag`: a streaming restart
+    * replaying an uncommitted micro-batch whose effects DID land) and an
+    * idle (empty) batch are skipped whole; a crashed attempt leaves an
+    * unreferenced segment that the retry overwrites (the segment
+    * protocol, [[StoreMeta.appendSegment]]). Single writer; appends and
+    * compactions must not overlap each other. The handle's cached stats
+    * row replaces the per-batch pointer re-read (see
+    * [[Bm25IndexHandle]]). */
   def appendToIndex(h: Bm25IndexHandle, docs: DataFrame, idCol: String,
                     textCol: String, tag: String = ""): Unit = {
-    val spark = h.spark
-    val path = h.path
     val st = h.stats
-    if (tag.nonEmpty && st.lastTag == tag) return // replayed, already applied
-    val nb = st.nBuckets
-    val bUdf = udf { t: String => math.floorMod(
-      graft.ext.Dedup.hash64(BucketSeed, t).toInt, nb) }
     // PERSISTED tokenized projection (round 22): the postings leg and the
     // additive-stats leg below both read it — unpersisted, each re-scanned
-    // the source and re-tokenized the batch. The empty-guard probes THIS
-    // frame (1:1 rows with `docs`, so the guard is exact), caching what it
-    // computes instead of paying a separate raw-source take(1).
-    val withWs = docs.select(col(idCol).cast("long").as("doc_id"),
-      Corpus.words(col(textCol)).as("__ws")).persist()
+    // the source and re-tokenized the batch. The segment protocol's
+    // empty-guard probes THIS frame (1:1 rows with `docs`, so the guard is
+    // exact), caching what it computes instead of paying a separate
+    // raw-source take(1).
+    val withWs = tokenized(docs, idCol, textCol).persist()
     try {
-    // idle micro-batch: committing it would add a _SUCCESS-only delta dir
-    // (zero-row partitionBy write) and a useless stats version — skip whole
-    // (the appendToMinhashIndex discipline; ADVICE r16 high)
-    if (withWs.isEmpty) return
-    // monotone counter, not list position: after a compaction empties
-    // the list, position naming would recycle postings_d0 and overwrite
-    // a retired dir still on disk (and still readable by a grace-window
-    // probe holding the pre-compaction pointer)
-    val deltaDir =
-      if (tag.nonEmpty) s"postings_d$tag"
-      else s"postings_d${st.nextSeg}"
-    // the delta write and the additive stats aggregate are INDEPENDENT
-    // jobs before the pointer flip — run them as concurrent Spark jobs so
-    // the per-batch append wall is max(...), not their sum (the
-    // writeMinhashRows treatment; both settle before the atomic commit).
-    // The postings feed the delta write only, so they are not persisted.
-    val Seq(_, add: Row) = ColumnOps.concurrently[Any](
-      () => postingsOf(withWs, bUdf).repartition(nb, col("bucket"))
-        .sortWithinPartitions(col("term"), col("doc_id"))
-        .write.mode("overwrite").partitionBy("bucket")
-        .parquet(s"$path/$deltaDir"),
-      () => withWs.agg(count(lit(1)).as("n"),
-        coalesce(sum(size(col("__ws")).cast("long")), lit(0L)).as("dl")).head())
-    // additive stats + pointer flip LAST — the atomic commit point
-    writeStats(spark, path,
-      (st.nDocs + add.getAs[Long]("n"), st.totalDl + add.getAs[Long]("dl")),
-      nb, st.postingsDir, st.deltaDirs :+ deltaDir, tag, st.nextSeg + 1L)
-    h.stats = st.copy(
-      nDocs = st.nDocs + add.getAs[Long]("n"),
-      totalDl = st.totalDl + add.getAs[Long]("dl"),
-      deltaDirs = st.deltaDirs :+ deltaDir,
-      lastTag = tag, nextSeg = st.nextSeg + 1L)
+      // the segment write and the additive stats aggregate are INDEPENDENT
+      // jobs before the pointer flip — run them as concurrent Spark jobs so
+      // the per-batch append wall is max(...), not their sum (the
+      // writeMinhashRows treatment; both settle before the atomic commit).
+      // The postings feed the segment write only, so they are not persisted.
+      StoreMeta.appendSegment(h.path, st.segs, tag, withWs) { segDir =>
+        val Seq(_, (n: Long, dl: Long)) = ColumnOps.concurrently[Any](
+          () => writePostings(postingsOf(withWs, st.nBuckets), st.nBuckets,
+            segDir),
+          () => counts(withWs))
+        (n, dl)
+      }.foreach { case (segs, (n, dl)) =>
+        h.commit(IndexStats(st.nDocs + n, st.totalDl + dl, st.nBuckets, segs))
+      }
     } finally withWs.unpersist()
   }
 
-  /** Compact a [[buildIndex]] store: fold the accumulated delta segments
-    * and the base into ONE fresh bucket-partitioned, term-sorted postings
-    * version — after thousands of micro-batch appends the probe would
-    * otherwise touch one small file (and row group) per batch and its
-    * term min/max skipping degrades toward footer-reading every segment.
-    * The stats flip (same counts, new base, empty delta list) is the
-    * atomic cutover; probes racing it read either layout, both complete.
-    * Orphan delta dirs on disk but absent from the CURRENT stats —
-    * crashed-append leftovers and segments retired by a previous
-    * compaction, all ≥ one writer cycle old — are swept first, together
-    * with the df tables of a store written when df was stored. Cost: one
+  /** Compact a [[buildIndex]] store: fold the live segments into ONE
+    * fresh bucket-partitioned, term-sorted `seg_c<gen>` — after thousands
+    * of micro-batch appends the probe would otherwise touch one small
+    * file (and row group) per batch and its term min/max skipping
+    * degrades toward footer-reading every segment. The stats flip (same
+    * counts, one live segment) is the atomic cutover; probes racing it
+    * read either layout, both complete. Segment dirs the stats row does
+    * not list — crashed-append leftovers and the previous compaction's
+    * inputs, all ≥ one writer cycle old — are swept first
+    * ([[StoreMeta.compactionSegment]]), together with an older layout's
+    * df tables and no-longer-live postings dirs. Cost: one
     * bucket-keyed shuffle of the postings, no corpus access. */
   def compactIndex(h: Bm25IndexHandle): Unit = {
-    val spark = h.spark
-    val path = h.path
     val st = h.stats
-    // sweep orphans (not referenced by the stats a concurrent probe could
-    // currently hold): anything postings_d* outside st.deltaDirs, and every
-    // df table (no probe reads one)
-    val live = st.deltaDirs.toSet
-    StoreMeta.sweep(spark, path, n =>
-      (n.startsWith("postings_d") && !live.contains(n)) ||
-        n.startsWith("df_v"))
-    val newDir = s"postings_v${versionOf(st.postingsDir) + 1}"
-    readPostings(h, lit(true), buckets = None)
-      .repartition(st.nBuckets, col("bucket"))
-      .sortWithinPartitions(col("term"), col("doc_id"))
-      .write.mode("overwrite").partitionBy("bucket")
-      .parquet(s"$path/$newDir")
-    writeStats(spark, path, (st.nDocs, st.totalDl), st.nBuckets,
-      newDir, Nil, st.lastTag, st.nextSeg) // counter survives
-    h.stats = st.copy(postingsDir = newDir, deltaDirs = Nil)
-    h.retireDirs(st.postingsDir :: st.deltaDirs)
-    pruneVersions(spark, path, "postings", versionOf(newDir))
+    val live = st.segs.live.toSet
+    val (newSeg, _) = StoreMeta.compactionSegment(h.spark, h.path, st.segs,
+      alsoSweep = n => n.startsWith("df_v") ||
+        (n.startsWith("postings_") && !live.contains(n)))
+    writePostings(readPostings(h, lit(true), buckets = None), st.nBuckets,
+      s"${h.path}/$newSeg")
+    h.commit(st.copy(segs = st.segs.copy(live = List(newSeg))))
   }
 
   /** Exact PHRASE occurrence counts against a [[buildIndex]] store —
@@ -642,7 +590,7 @@ object Bm25 {
     * [[rank]] term for term. Document frequencies come from the same
     * pruned rows: one map-only term count over them, merged driver-side
     * (≤ |distinct terms| entries per task), so no store-wide df table is
-    * read or kept. The handle's cached stats row and per-dir bucket
+    * read or kept. The handle's cached stats row and per-segment bucket
     * listings are reused across calls (see [[Bm25IndexHandle]]). */
   def topKIndexed(h: Bm25IndexHandle, terms: Seq[String], k: Int,
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {

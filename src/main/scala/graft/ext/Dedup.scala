@@ -398,7 +398,7 @@ object Dedup {
     StoreMeta.appendSegment(h.path, m.segs, tag, newDocs) { segDir =>
       writeMinhashRows(newDocs, textCol, idCol, m.shingleN, m.numPerms,
         m.numBands, m.numKeyBuckets, segDir)
-    }.foreach(segs => h.commit(m.copy(segs = segs)))
+    }.foreach { case (segs, _) => h.commit(m.copy(segs = segs)) }
   }
 
   /** COMPACT a segmented [[buildMinhashIndex]] store back to one segment —
@@ -478,9 +478,8 @@ object Dedup {
       * manifest; the caches of segments it retires are dropped. */
     private[ext] def commit(m: MinhashMeta): Unit = {
       writeMinhashMeta(spark, path, m)
-      liveSegments.diff(m.segs.live).foreach { s =>
-        segBuckets.remove(s); segFileCounts.remove(s)
-      }
+      keyDirs.retain(m.segs.live)
+      liveSegments.diff(m.segs.live).foreach(segFileCounts.remove)
       shingleDfs.clear()
       meta = m
     }
@@ -488,7 +487,7 @@ object Dedup {
       * after a DIFFERENT writer mutated the store. */
     def refresh(): Unit = {
       meta = readMinhashMeta(spark, path)
-      segBuckets.clear(); segFileCounts.clear(); shingleDfs.clear()
+      keyDirs.clear(); segFileCounts.clear(); shingleDfs.clear()
     }
     // cached per-segment parquet FILE counts (same immutability argument
     // as the bucket listings): what a file-count auto-compaction policy
@@ -517,20 +516,11 @@ object Dedup {
       * so an ingest loop pays one tiny-dir listing per append, not a
       * store re-walk per batch. */
     def liveFileCount: Long = liveSegments.map(filesOf).sum
-    // cached per-segment bucket-directory listings: a committed segment
-    // is immutable, so its set of bucket= dirs is listed ONCE per handle
-    // life — the bucket-pruned multi-path reads below select directories
-    // from this map instead of re-listing the store per probe
-    private[ext] val segBuckets =
-      scala.collection.mutable.HashMap.empty[String, Array[Int]]
-    private[ext] def bucketsOf(seg: String): Array[Int] =
-      segBuckets.getOrElseUpdate(seg, {
-        val p = new org.apache.hadoop.fs.Path(s"$path/$seg/keys")
-        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        if (!fs.exists(p)) Array.empty
-        else fs.listStatus(p).map(_.getPath.getName)
-          .filter(_.startsWith("bucket=")).map(_.substring("bucket=".length).toInt)
-      })
+    // cached per-segment bucket-directory listings: the bucket-pruned
+    // multi-path reads below select directories from it instead of
+    // re-listing the store per probe
+    private[ext] val keyDirs =
+      new StoreMeta.PartitionDirs(spark, path, "/keys", "bucket")
     // ALL live segments' keys as ONE multi-path FileSourceScan — one
     // listing, files read in parallel — instead of an N-way union of
     // per-segment scans, whose per-segment fixed cost (listing + scan
@@ -542,11 +532,7 @@ object Dedup {
     // (bit-identical: it was derived as pmod(band_key, B) at write time).
     private[ext] def prunedKeys(segs: Seq[String],
                                 buckets: Option[Seq[Int]]): DataFrame = {
-      val sel = buckets.map(_.toSet)
-      val paths = for {
-        s <- segs
-        b <- bucketsOf(s) if sel.forall(_.contains(b))
-      } yield s"$path/$s/keys/bucket=$b"
+      val paths = keyDirs.paths(segs, buckets)
       if (paths.isEmpty)
         spark.createDataFrame(
           spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],

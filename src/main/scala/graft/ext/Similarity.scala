@@ -389,9 +389,10 @@ object Similarity {
     *      (recentring writes a fresh `centroids_g<gen>` and flips the
     *      pointer, so a new dir is a new cache key);
     *  (c) the PQ codebooks — immutable for the store's whole life;
-    *  (d) each segment's `cell=N` directory listing — segments are
-    *      immutable once committed; retired segments are dropped when
-    *      this handle's own compaction retires them.
+    *  (d) each segment's `cell=N` directory listing
+    *      ([[StoreMeta.PartitionDirs]]) — segments are immutable once
+    *      committed; retired segments are dropped when this handle's own
+    *      compaction retires them.
     *
     * Single writer (the store's standing contract); all mutations of this
     * store must go through the SAME handle — after an out-of-band write,
@@ -404,8 +405,8 @@ object Similarity {
     private val centCache =
       scala.collection.mutable.HashMap.empty[String, Array[(Int, Seq[Float])]]
     private var cbCache: Option[PqCodebooks] = None
-    private val segCells =
-      scala.collection.mutable.HashMap.empty[String, Seq[(Int, String)]]
+    private[ext] val cellDirs =
+      new StoreMeta.PartitionDirs(spark, path, "", "cell")
     /** The manifest's live segment list (probe view; an auto-compaction
       * policy thresholds on its length). */
     def liveSegments: List[String] = meta.segs.live
@@ -414,22 +415,18 @@ object Similarity {
     private[ext] def codebooks: PqCodebooks = cbCache.getOrElse {
       val cb = readCodebooks(spark, path); cbCache = Some(cb); cb
     }
-    /** `(cell, dirPath)` of one committed segment — listed once for the
-      * segment's immutable life. */
-    private[ext] def cellDirs(seg: String): Seq[(Int, String)] =
-      segCells.getOrElseUpdate(seg, listCellDirs(spark, s"$path/$seg"))
     /** Commit `m` as the store's meta row and keep it as this handle's
       * manifest; the listings of segments it retires are dropped. */
     private[ext] def commit(m: IvfMeta): Unit = {
       writeIvfMeta(spark, path, m)
-      liveSegments.diff(m.segs.live).foreach(segCells.remove)
+      cellDirs.retain(m.segs.live)
       meta = m
     }
     /** Re-read the manifest and drop every cache — required only after a
       * DIFFERENT writer mutated the store. */
     def refresh(): Unit = {
       meta = readIvfMeta(spark, path)
-      centCache.clear(); cbCache = None; segCells.clear()
+      centCache.clear(); cbCache = None; cellDirs.clear()
     }
   }
 
@@ -470,7 +467,7 @@ object Similarity {
     StoreMeta.appendSegment(h.path, m.segs, tag, newRows) { segDir =>
       writeIvfSegment(newRows, corpusId, corpusVec,
         new CentArrays(h.centroids(m.centDir)), segDir)
-    }.foreach(segs => h.commit(m.copy(segs = segs)))
+    }.foreach { case (segs, _) => h.commit(m.copy(segs = segs)) }
   }
 
   /** COMPACT a segmented IVF store back to one generation: every live
@@ -573,9 +570,7 @@ object Similarity {
   private def storedCells(h: IvfIndexHandle, cells: Option[Seq[Int]],
                           cols: String*): DataFrame = {
     val segs = h.liveSegments
-    val sel = cells.map(_.toSet)
-    val paths = segs.flatMap(h.cellDirs).collect {
-      case (cell, p) if sel.forall(_.contains(cell)) => p }
+    val paths = h.cellDirs.paths(segs, cells)
     if (paths.isEmpty)
       // rare (a probe whose cells match nothing stored): an all-false
       // filter over the first segment keeps the schema without reading rows
@@ -584,19 +579,6 @@ object Similarity {
     else
       StoredParquet.read(h.spark, paths: _*)
         .select(col("cell_d").as("cell") +: cols.map(col): _*)
-  }
-
-  private[ext] def listCellDirs(spark: org.apache.spark.sql.SparkSession,
-                                segDir: String): Seq[(Int, String)] = {
-    val segPath = new org.apache.hadoop.fs.Path(segDir)
-    val fs = segPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    (if (fs.exists(segPath)) fs.listStatus(segPath).toSeq else Nil)
-      .flatMap { st =>
-        val n = st.getPath.getName
-        if (n.startsWith("cell="))
-          Some((n.substring("cell=".length).toInt, st.getPath.toString))
-        else None
-      }
   }
 
   // one IVF-PQ segment: codes-only cell-partitioned rows (the
@@ -631,7 +613,7 @@ object Similarity {
     StoreMeta.appendSegment(h.path, m.segs, tag, newRows) { segDir =>
       writePqSegment(newRows, corpusId, corpusVec,
         new CentArrays(h.centroids(m.centDir)), h.codebooks, segDir)
-    }.foreach(segs => h.commit(m.copy(segs = segs)))
+    }.foreach { case (segs, _) => h.commit(m.copy(segs = segs)) }
   }
 
   /** COMPACT a segmented [[buildIvfPqIndex]] store back to one

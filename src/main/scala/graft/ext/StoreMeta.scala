@@ -2,10 +2,11 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 
-/** Atomic single-row metadata commits for the stored-index family
+/** Atomic single-row metadata commits for the four stored indexes
   * ([[Bm25]] stats, [[Dedup]] MinHash meta, [[Similarity]] IVF / IVF-PQ
-  * meta), and the segment protocol the MinHash, IVF and IVF-PQ stores
-  * share ([[Segments]], [[appendSegment]], [[compactionSegment]]).
+  * meta), the segment protocol they share ([[Segments]],
+  * [[appendSegment]], [[compactionSegment]]), and the per-segment
+  * partition-dir listing their handles cache ([[PartitionDirs]]).
   *
   * The one-row pointer table IS each store's commit point, so it must
   * never be half-written or transiently missing. A plain
@@ -25,8 +26,8 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   *    a crashed attempt has no `_SUCCESS` and is invisible; the previous
   *    version is still whole until the next writer prunes it;
   *  - pruning keeps the current AND previous committed versions (the
-  *    one-writer-cycle grace window the data-table flips already use, see
-  *    [[Bm25]] `pruneVersions`), so an in-flight reader that resolved the
+  *    one-writer-cycle grace window that retired segments also get, see
+  *    [[compactionSegment]]), so an in-flight reader that resolved the
   *    old pointer just before a flip can finish its read.
   *
   * Single writer per store (the family's standing contract); readers are
@@ -121,8 +122,8 @@ object StoreMeta {
 
   // ---------------- segment protocol ----------------
 
-  /** The segment manifest of a MinHash, IVF or IVF-PQ store, stored in its
-    * `meta` row as `segments`, `last_tag`, `next_seg`: the live segment
+  /** The segment manifest of a stored index, stored in its meta (BM25:
+    * stats) row as `segments`, `last_tag`, `next_seg`: the live segment
     * dirs in append order, the most recent append's idempotence tag, and
     * the monotone counter that names untagged segments. The counter is
     * never recycled, even after a compaction resets the list: a
@@ -142,22 +143,23 @@ object StoreMeta {
 
   /** Append `batch` as one immutable segment: `write` receives the
     * segment's directory under `root` and must write the whole batch
-    * there; the caller commits the returned manifest with its meta row
+    * there, and its result comes back beside the new manifest; the
+    * caller commits that manifest with its meta row
     * (the commit point — until then the segment is an unreferenced dir
     * that a retry overwrites). A tagged append lands in `seg_<tag>`, an
     * untagged one in `seg_<nextSeg>`. Returns None, writing nothing, for
     * a replay (`tag` equals the manifest's last tag: its effects already
     * landed — EXACTLY-ONCE under streaming replay) and for an idle
     * (empty) batch, which would otherwise commit a junk segment. */
-  private[ext] def appendSegment(root: String, m: Segments, tag: String,
-                                 batch: DataFrame)(write: String => Unit)
-      : Option[Segments] =
+  private[ext] def appendSegment[A](root: String, m: Segments, tag: String,
+                                    batch: DataFrame)(write: String => A)
+      : Option[(Segments, A)] =
     if (tag.nonEmpty && m.lastTag == tag) None
     else if (batch.isEmpty) None
     else {
       val seg = if (tag.nonEmpty) s"seg_$tag" else s"seg_${m.nextSeg}"
-      write(s"$root/$seg")
-      Some(Segments(m.live :+ seg, tag, m.nextSeg + 1L))
+      val written = write(s"$root/$seg")
+      Some((Segments(m.live :+ seg, tag, m.nextSeg + 1L), written))
     }
 
   /** Start a compaction of the store at `root`: sweep the orphans — every
@@ -180,5 +182,44 @@ object StoreMeta {
         scala.util.Try(s.drop(5).toInt).getOrElse(-1)
     } match { case Nil => 0; case gs => gs.max + 1 }
     (s"seg_c$gen", gen)
+  }
+
+  /** A store handle's cache of its committed segments' partition dirs
+    * `<root>/<seg><sub>/<key>=N`. A committed segment is immutable, so
+    * each is listed once per segment life; a probe selects dirs by value
+    * at path construction (strictly stronger than partition pruning:
+    * unmatched dirs are never listed) and reads them as one unpartitioned
+    * multi-path scan, restoring the partition column its own way. */
+  private[ext] final class PartitionDirs(spark: SparkSession, root: String,
+                                         sub: String, key: String) {
+    private val listed =
+      scala.collection.mutable.HashMap.empty[String, Seq[(Int, String)]]
+
+    private def of(seg: String): Seq[(Int, String)] =
+      listed.getOrElseUpdate(seg, {
+        val dir = s"$root/$seg$sub"
+        val (fs, p) = fsOf(spark, dir)
+        if (!fs.exists(p)) Nil
+        else fs.listStatus(p).toSeq.map(_.getPath.getName).collect {
+          case n if n.startsWith(s"$key=") =>
+            (n.substring(key.length + 1).toInt, s"$dir/$n")
+        }
+      })
+
+    /** The dirs of `segs` in segment order, only those whose value is in
+      * `values` when given. */
+    def paths(segs: Seq[String], values: Option[Seq[Int]]): Seq[String] = {
+      val sel = values.map(_.toSet)
+      segs.flatMap(of).collect { case (v, p) if sel.forall(_.contains(v)) => p }
+    }
+
+    /** Forget every segment outside `live` — the ones a commit retired. */
+    def retain(live: Seq[String]): Unit =
+      listed.filterInPlace((seg, _) => live.contains(seg))
+
+    def clear(): Unit = listed.clear()
+
+    /** The segments listed so far. */
+    private[ext] def segments: collection.Set[String] = listed.keySet
   }
 }

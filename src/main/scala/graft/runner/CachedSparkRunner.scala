@@ -105,32 +105,12 @@ class CachedSparkRunner(
   }
 
   /** Cache + shared uuids (CLI status/summary see remote results too). */
-  override def listStore(): Seq[String] = {
-    val locals = super.listStore()
-    val root = Paths.get(sharedUri)
-    if (!Files.exists(root)) return locals
-    def children(dir: Path): Seq[Path] = {
-      val s = Files.list(dir)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList
-      } finally s.close()
-    }
-    val shared = for {
-      clsDir <- children(root) if Files.isDirectory(clsDir)
-      hashDir <- children(clsDir) if Files.isDirectory(hashDir)
-    } yield s"${clsDir.getFileName}_${hashDir.getFileName}"
-    (locals ++ shared).distinct.sorted
-  }
+  override def listStore(): Seq[String] =
+    (super.listStore() ++
+      LocalSparkRunner.storeEntries(Paths.get(sharedUri)).map(_._1))
+      .distinct.sorted
 
   // ---------------- dir sync ----------------
-
-  private def walkFiles(root: Path): Seq[Path] = {
-    import scala.jdk.CollectionConverters._
-    val s = Files.walk(root) // stream holds directory handles: must close
-    try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
-    finally s.close()
-  }
 
   // staging names carry (pid, thread, attempt#): pid alone collides when
   // two THREADS of one JVM stage toward the same destination (same hazard
@@ -213,7 +193,7 @@ class CachedSparkRunner(
       "." + to.getFileName + ".pull" + ProcessHandle.current().pid() +
         "t" + Thread.currentThread().getId + "n" + pullAttempts.incrementAndGet())
     try {
-      walkFiles(from).foreach { f =>
+      LocalSparkRunner.regularFiles(from).foreach { f =>
         val d = tmp.resolve(from.relativize(f))
         Files.createDirectories(d.getParent)
         Files.copy(f, d, StandardCopyOption.REPLACE_EXISTING)
@@ -253,7 +233,7 @@ class CachedSparkRunner(
       if (!Files.exists(dest)) {
         if (Files.isDirectory(e)) {
           val tmp = stagingName(dest, "tmp")
-          walkFiles(e).foreach { f =>
+          LocalSparkRunner.regularFiles(e).foreach { f =>
             val d = tmp.resolve(e.relativize(f))
             Files.createDirectories(d.getParent)
             Files.copy(f, d, StandardCopyOption.REPLACE_EXISTING)

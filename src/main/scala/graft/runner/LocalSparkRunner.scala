@@ -130,6 +130,31 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     * (write-through point for tiered runners; no-op here). */
   protected def onResultPersisted(op: OpSpec): Unit = ()
 
+  /** The last steps of every completion, after the result landed: the
+    * `completed` status, then the `done` marker, then the write-through
+    * hook (a reader that sees `done` finds the status; the hook copies
+    * both up). */
+  private def markCompleted(op: OpSpec, started: String, fmt: String): Unit = {
+    writeStatus(OpStatus(op.uuid, OpState.Completed,
+      startedAt = Some(started),
+      completedAt = Some(Instant.now.toString),
+      resultFormat = Some(fmt),
+      graph = Some(Graph.serialize(op))))
+    markDone(op)
+  }
+
+  private def markDone(op: OpSpec): Unit = {
+    Files.writeString(donePath(op), "")
+    onResultPersisted(op)
+  }
+
+  private def markFailed(op: OpSpec, started: String, e: Throwable): Unit =
+    writeStatus(OpStatus(op.uuid, OpState.Failed,
+      startedAt = Some(started),
+      completedAt = Some(Instant.now.toString),
+      error = Some(String.valueOf(e.getMessage)),
+      graph = Some(Graph.serialize(op))))
+
   /** Reference `has_result`: ephemeral ops are "ready" iff all their deps
     * are ready (`local_arrow_runner.py:230-248`). */
   def hasResult(op: OpSpec): Boolean = op match {
@@ -186,14 +211,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     if (isDone(op)) false
     else {
       val started = Instant.now.toString
-      val fmt = persist(op, result)
-      writeStatus(OpStatus(op.uuid, OpState.Completed,
-        startedAt = Some(started),
-        completedAt = Some(Instant.now.toString),
-        resultFormat = Some(fmt),
-        graph = Some(Graph.serialize(op))))
-      Files.writeString(donePath(op), "")
-      onResultPersisted(op)
+      markCompleted(op, started, persist(op, result))
       memo.remove(op.uuid) // injected result wins over any lazy plan
       true
     }
@@ -217,21 +235,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
   }
 
   /** All op UUIDs present in the store (for CLI status/summary). */
-  def listStore(): Seq[String] = {
-    val root = Paths.get(storeUri)
-    if (!Files.exists(root)) return Seq.empty
-    def children(dir: Path): Seq[Path] = {
-      val s = Files.list(dir) // DirectoryStream-backed: must be closed
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.toList
-      } finally s.close()
-    }
-    (for {
-      clsDir <- children(root) if Files.isDirectory(clsDir)
-      hashDir <- children(clsDir) if Files.isDirectory(hashDir)
-    } yield s"${clsDir.getFileName}_${hashDir.getFileName}").sorted
-  }
+  def listStore(): Seq[String] =
+    LocalSparkRunner.storeEntries(Paths.get(storeUri)).map(_._1).sorted
 
   // ---------------- entry points ----------------
 
@@ -385,25 +390,11 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
           startedAt = Some(started), graph = Some(Graph.serialize(g))))
       try {
         val results = g.ops.map(materialize)
-        if (!isDone(g)) {
-          writeStatus(OpStatus(g.uuid, OpState.Completed,
-            startedAt = Some(started),
-            completedAt = Some(Instant.now.toString),
-            resultFormat = Some("grouped"),
-            graph = Some(Graph.serialize(g))))
-          Files.writeString(donePath(g), "")
-          onResultPersisted(g)
-        }
+        if (!isDone(g)) markCompleted(g, started, "grouped")
         results.lastOption.getOrElse(
           throw new IllegalArgumentException("GroupedOp with no ops"))
       } catch {
-        case e: Throwable =>
-          writeStatus(OpStatus(g.uuid, OpState.Failed,
-            startedAt = Some(started),
-            completedAt = Some(Instant.now.toString),
-            error = Some(String.valueOf(e.getMessage)),
-            graph = Some(Graph.serialize(g))))
-          throw e
+        case e: Throwable => markFailed(g, started, e); throw e
       }
     }
 
@@ -435,26 +426,14 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       try {
         val result = compute(op)
         val fmt = persist(op, result)
-        writeStatus(OpStatus(op.uuid, OpState.Completed,
-          startedAt = Some(started),
-          completedAt = Some(Instant.now.toString),
-          resultFormat = Some(fmt),
-          graph = Some(Graph.serialize(op))))
-        Files.writeString(donePath(op), "")
-        onResultPersisted(op)
+        markCompleted(op, started, fmt)
         // re-read data results from the store so downstream consumers scan
         // the compact persisted parquet, not the original lineage; if a
         // concurrent gc swept our freshly-completed entry already, the
         // in-hand computed result is the semantically-identical fallback
         if (fmt == "parquet") readResult(op).getOrElse(result) else result
       } catch {
-        case e: Throwable =>
-          writeStatus(OpStatus(op.uuid, OpState.Failed,
-            startedAt = Some(started),
-            completedAt = Some(Instant.now.toString),
-            error = Some(String.valueOf(e.getMessage)),
-            graph = Some(Graph.serialize(op))))
-          throw e
+        case e: Throwable => markFailed(op, started, e); throw e
       }
     }
   }
@@ -662,8 +641,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         ColumnOps.withRowIdxByFileOrder(raw).write
           .mode("overwrite").option("compression", "zstd").parquet(tmp.toString)
       }
-      Files.writeString(donePath(op), "")
-      onResultPersisted(op)
+      markDone(op)
     }
     readResult(op) match {
       case Some(FrameResult(df)) => df
@@ -1549,7 +1527,7 @@ object LocalSparkRunner {
                              totalBytes: Long): String = {
     val p = Paths.get(path)
     if (!Files.isDirectory(p)) return FileHasher.sha256(path)
-    val files = walkRegularFiles(p)
+    val files = regularFiles(p)
       .filterNot(_.getFileName.toString.startsWith("."))
     val pairs = spark match {
       case Some(s) if files.length > DistributeHashMinFiles ||
@@ -1600,10 +1578,29 @@ object LocalSparkRunner {
     }
   }
 
-  private def walkRegularFiles(root: Path): Seq[Path] = {
+  /** Every regular file under `root`, recursively. */
+  private[runner] def regularFiles(root: Path): Seq[Path] = {
     import scala.jdk.CollectionConverters._
     val s = Files.walk(root) // stream holds directory handles: must close
     try s.iterator().asScala.filter(Files.isRegularFile(_)).toList
     finally s.close()
+  }
+
+  /** `(uuid, dir)` of every entry `<root>/<Cls>/<hash>` of a store laid
+    * out like [[LocalSparkRunner.opDir]], in path order; none when
+    * `root` does not exist. Stray regular files at either level are not
+    * entries. */
+  private[runner] def storeEntries(root: Path): Seq[(String, Path)] = {
+    def dirs(dir: Path): Seq[Path] =
+      if (!Files.isDirectory(dir)) Nil
+      else {
+        import scala.jdk.CollectionConverters._
+        val s = Files.list(dir) // DirectoryStream-backed: must be closed
+        try s.iterator().asScala.filter(Files.isDirectory(_)).toList
+          .sortBy(_.toString)
+        finally s.close()
+      }
+    for (clsDir <- dirs(root); entry <- dirs(clsDir))
+      yield (s"${clsDir.getFileName}_${entry.getFileName}", entry)
   }
 }

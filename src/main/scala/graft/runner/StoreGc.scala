@@ -54,8 +54,7 @@ object StoreGc {
     def ageDays(p: Path): Double =
       (now - Files.getLastModifiedTime(p).toMillis) / 86400000.0
     var kept = 0; var gone = 0; var freed = 0L
-    for (clsDir <- children(root); entry <- children(clsDir)) {
-      val uuid = s"${clsDir.getFileName}_${entry.getFileName}"
+    for ((uuid, entry) <- LocalSparkRunner.storeEntries(root)) {
       val doneFile = entry.resolve("done")
       val complete = Files.exists(doneFile)
       val age = ageDays(if (complete) doneFile else entry)

@@ -751,15 +751,15 @@ object Streaming {
     // one handle per run (round 21, the minhashDedupIngestToSink
     // discipline applied to the text index): the per-batch append/
     // compact/probe trio otherwise re-reads the stats pointer and
-    // re-lists every postings dir's buckets on EVERY micro-batch — pure
+    // re-lists every segment's buckets on EVERY micro-batch — pure
     // driver round-trips in the per-batch latency floor. A restart
     // builds a fresh handle whose stats read restores replay detection.
     val idx = graft.ext.Bm25.openIndex(spark, path)
     runMicroBatches(docs, checkpoint) { (batch, bid) =>
       graft.ext.Bm25.appendToIndex(idx, batch, idCol, textCol,
         tag = s"b$bid")
-      // AUTO-COMPACTION before the probe: fold the delta history to one
-      // bucket-sorted base when it crosses the threshold. Replay-safe
+      // AUTO-COMPACTION before the probe: fold the segment history to one
+      // bucket-sorted segment when its deltas cross the threshold. Replay-safe
       // without any exclusion machinery — compaction is
       // content-preserving and the BM25 probe scores the index's
       // CONTENT (a replayed batch's append is tag-skipped, so the

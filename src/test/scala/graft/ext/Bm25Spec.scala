@@ -118,7 +118,7 @@ class Bm25Spec extends SparkTestBase {
       (i, s"w${i % 7} w${i % 5} shared")).toDF("doc_id", "text")
     val idx = java.nio.file.Files.createTempDirectory("bm25-idx2-").toString
     Bm25.buildIndex(docs, "doc_id", "text", idx, numBuckets = 16)
-    val buckets = new java.io.File(s"$idx/postings_v0").listFiles()
+    val buckets = new java.io.File(s"$idx/seg_base").listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("bucket="))
     assert(buckets > 2, s"fixture too small to show pruning ($buckets dirs)")
     val probe = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
@@ -233,38 +233,36 @@ class Bm25Spec extends SparkTestBase {
         .orderBy(col("doc_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq)
     val before = probes()
+    def segDirs() = new java.io.File(idx).listFiles().map(_.getName)
+      .filter(_.startsWith("seg_")).toSet
     // four appends → four delta segments beside the base
-    val deltasBefore = new java.io.File(idx).listFiles()
-      .count(_.getName.startsWith("postings_d"))
-    assert(deltasBefore === 4, s"expected 4 delta segments, $deltasBefore")
-    val filesBefore = parquetFiles("postings_")
+    assert(segDirs() === Set("seg_base", "seg_0", "seg_1", "seg_2", "seg_3"))
+    val filesBefore = parquetFiles("seg_")
     Bm25.compactIndex(Bm25.openIndex(spark, idx))
-    val filesAfter = parquetFiles("postings_v1")
+    val filesAfter = parquetFiles("seg_c0")
     assert(filesAfter < filesBefore,
       s"compaction did not shrink: $filesBefore -> $filesAfter files")
     assert(probes() === before, "compaction changed a probe answer")
-    // superseded versions are pruned down to current + previous
-    val dirs = new java.io.File(idx).listFiles().map(_.getName).toSet
-    assert(dirs.contains("postings_v1") && dirs.contains("postings_v0"))
+    // the compaction's inputs stay on disk for one writer cycle
+    assert(segDirs().contains("seg_c0") && segDirs().contains("seg_base"))
     // the folded-in segments are retired from stats; the orphan sweep of
     // the NEXT compaction removes them from disk (one writer cycle later)
     Bm25.appendToIndex(Bm25.openIndex(spark, idx), all.filter(_._1 == 1L)
       .map { case (i, t) => (i + 1000L, t) }.toDF("doc_id", "text"),
       "doc_id", "text")
     val afterAppend = probes()
-    Bm25.compactIndex(Bm25.openIndex(spark, idx)) // -> v2
-    val remaining = new java.io.File(idx).listFiles().map(_.getName)
-      .filter(_.startsWith("postings_d")).toSet
-    // only the segment retired by THIS compaction may linger; the four
-    // retired by the previous one are gone (monotone counter: the 5th
-    // append was postings_d4 — d0..d3 are never reused)
-    assert(remaining.subsetOf(Set("postings_d4")),
+    Bm25.compactIndex(Bm25.openIndex(spark, idx)) // -> seg_c1
+    val remaining = segDirs().filterNot(_.startsWith("seg_c"))
+    // only the segment retired by THIS compaction may linger; the base and
+    // the four deltas retired by the previous one are gone (monotone
+    // counter: the 5th append was seg_4 — seg_0..seg_3 are never reused)
+    assert(remaining.subsetOf(Set("seg_4")),
       s"stale delta segments not swept: $remaining")
-    // base versions prune down to current + previous
-    Bm25.compactIndex(Bm25.openIndex(spark, idx)) // -> v3, prunes v0 and v1
-    val dirs2 = new java.io.File(idx).listFiles().map(_.getName).toSet
-    assert(dirs2.contains("postings_v3") && dirs2.contains("postings_v2")
-      && !dirs2.contains("postings_v1") && !dirs2.contains("postings_v0"))
+    // compacted generations prune down to current + previous
+    Bm25.compactIndex(Bm25.openIndex(spark, idx)) // -> seg_c2, drops seg_c0
+    val dirs2 = segDirs()
+    assert(dirs2.contains("seg_c2") && dirs2.contains("seg_c1")
+      && !dirs2.contains("seg_c0") && !dirs2.contains("seg_base"))
     assert(probes() === afterAppend,
       "compaction changed a probe answer after the extra append")
   }
@@ -294,13 +292,13 @@ class Bm25Spec extends SparkTestBase {
     def probe() = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
       Seq("alpha", "w3"), k = 20)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    assert(files("postings_") >= 21L,
-      s"expected >= 21 fragmented files, got ${files("postings_")}")
+    assert(files("seg_") >= 21L,
+      s"expected >= 21 fragmented files, got ${files("seg_")}")
     val before = probe()
     Bm25.compactIndex(Bm25.openIndex(spark, idx))
-    // current version after the first compaction of a v0 base is v1
-    assert(files("postings_v1") <= 4L,
-      s"compacted version carries ${files("postings_v1")} files, want <= 4")
+    // the first compaction writes generation seg_c0
+    assert(files("seg_c0") <= 4L,
+      s"compacted generation carries ${files("seg_c0")} files, want <= 4")
     assert(probe() === before, "compaction changed a probe answer")
   }
 
@@ -449,13 +447,20 @@ class Bm25Spec extends SparkTestBase {
         .mkString(" ")))
     def batch(lo: Long, hi: Long) =
       all.filter(t => t._1 >= lo && t._1 <= hi).toDF("doc_id", "text")
-    // the older layout after one tagged append: the postings base and
-    // delta, df_v0 (base counts) and df_v1 (current counts) partitioned
-    // like the postings, and an 8-column stats row pointing at df_v1
+    // the older layout after one tagged append: the postings base
+    // postings_v0 and delta postings_dt1, df_v0 (base counts) and df_v1
+    // (current counts) partitioned like the postings, and an 8-column
+    // stats row pointing at them. The postings files are the same as a
+    // segment's, so the segment dirs of a fresh build are renamed.
     val old = java.nio.file.Files.createTempDirectory("bm25-old-").toString
     Bm25.buildIndex(batch(1, 12), "doc_id", "text", old, numBuckets = 4)
     Bm25.appendToIndex(Bm25.openIndex(spark, old), batch(13, 24),
       "doc_id", "text", tag = "t1")
+    val st = Bm25.indexStatsDf(spark, old).head
+    def rename(from: String, to: String): Unit = java.nio.file.Files.move(
+      java.nio.file.Paths.get(old, from), java.nio.file.Paths.get(old, to))
+    rename("seg_base", "postings_v0")
+    rename("seg_t1", "postings_dt1")
     def writeDf(dirs: Seq[String], out: String): Unit =
       dirs.map(d => spark.read.parquet(s"$old/$d")).reduce(_ union _)
         .groupBy(col("term"), col("bucket")).count()
@@ -464,17 +469,17 @@ class Bm25Spec extends SparkTestBase {
         .write.mode("overwrite").partitionBy("bucket").parquet(s"$old/$out")
     writeDf(Seq("postings_v0"), "df_v0")
     writeDf(Seq("postings_v0", "postings_dt1"), "df_v1")
-    val st = Bm25.indexStatsDf(spark, old).head
     StoreMeta.write(Seq((st.getAs[Long]("n_docs"), st.getAs[Long]("total_dl"),
-        st.getAs[Int]("n_buckets"), st.getAs[String]("postings_dir"), "df_v1",
-        st.getAs[scala.collection.Seq[String]]("delta_dirs").toSeq,
-        st.getAs[String]("last_tag"), st.getAs[Long]("next_seg")))
+        st.getAs[Int]("n_buckets"), "postings_v0", "df_v1",
+        Seq("postings_dt1"), "t1", 1L))
       .toDF("n_docs", "total_dl", "n_buckets", "postings_dir", "df_dir",
         "delta_dirs", "last_tag", "next_seg"), old, "stats")
-    assert(Bm25.indexStatsDf(spark, old).columns.contains("df_dir"))
-    def dfDirs() = new java.io.File(old).listFiles().map(_.getName)
-      .filter(_.startsWith("df_")).toSet
-    assert(dfDirs() === Set("df_v0", "df_v1"))
+    assert(Bm25.indexStatsDf(spark, old).columns.toSeq === Seq("n_docs",
+      "total_dl", "n_buckets", "postings_dir", "df_dir", "delta_dirs",
+      "last_tag", "next_seg"))
+    def oldDirs() = new java.io.File(old).listFiles().map(_.getName)
+      .filter(n => n.startsWith("df_") || n.startsWith("postings_")).toSet
+    assert(oldDirs() === Set("df_v0", "df_v1", "postings_v0", "postings_dt1"))
     val fresh = java.nio.file.Files.createTempDirectory("bm25-new-").toString
     Bm25.buildIndex(batch(1, 24), "doc_id", "text", fresh, numBuckets = 4)
     val terms = Seq("red", "teal", "red")
@@ -490,13 +495,22 @@ class Bm25Spec extends SparkTestBase {
     assert(probes(old) === probes(fresh), "old layout probes differ")
     val h = Bm25.openIndex(spark, old)
     assert(h.deltaSegments === 1)
+    // the replayed tag is still detected through the older stats row
+    Bm25.appendToIndex(h, batch(13, 24), "doc_id", "text", tag = "t1")
+    assert(Bm25.indexStatsDf(spark, old).head.getAs[Long]("n_docs") === 24L)
     Bm25.appendToIndex(h, batch(25, 36), "doc_id", "text", tag = "t2")
     Bm25.appendToIndex(Bm25.openIndex(spark, fresh), batch(25, 36),
       "doc_id", "text", tag = "t2")
     assert(Bm25.indexStatsDf(spark, old).head.getAs[Long]("n_docs") === 36L)
     assert(probes(old) === probes(fresh), "old layout differs after append")
     Bm25.compactIndex(h)
-    assert(dfDirs().isEmpty, s"df tables survived compaction: ${dfDirs()}")
+    assert(oldDirs() === Set("postings_v0", "postings_dt1"),
+      s"df tables survived compaction: ${oldDirs()}")
     assert(probes(old) === probes(fresh), "old layout differs after compact")
+    // the second compaction sweeps the last older-layout names
+    Bm25.compactIndex(h)
+    assert(oldDirs().isEmpty, s"older-layout dirs survived: ${oldDirs()}")
+    assert(probes(old) === probes(fresh),
+      "old layout differs after the second compact")
   }
 }

@@ -120,8 +120,8 @@ class ExtSpec extends SparkTestBase {
         threshold = 0.9).count()
       h.liveFileCount
       val live = h.liveSegments.toSet
-      assert(h.segBuckets.nonEmpty && h.segBuckets.keySet.subsetOf(live),
-        h.segBuckets.keySet)
+      assert(h.keyDirs.segments.nonEmpty &&
+        h.keyDirs.segments.subsetOf(live), h.keyDirs.segments)
       assert(h.segFileCounts.keySet == live, h.segFileCounts.keySet)
       assert(h.shingleDfs.keySet.forall(_.toSet.subsetOf(live)))
       assert(h.shingleDfs.size <= 1)

@@ -4,13 +4,14 @@ import graft.SparkTestBase
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Pins the on-disk segment layout of the three segmented stores (MinHash,
-  * IVF, IVF-PQ): after every step of one fixed maintenance sequence, the
-  * exact set of `seg_*` directories on disk and the committed manifest row
+/** Pins the on-disk segment layout of the four stored indexes (BM25,
+  * MinHash, IVF, IVF-PQ): after every step of one fixed maintenance
+  * sequence, the exact set of top-level directories on disk (segments,
+  * the current and previous manifest versions, and each store's fixed
+  * tables), the committed manifest version, and the manifest row
   * (`segments`, `last_tag`, `next_seg`). Stores written by an older build
   * must keep opening, so segment names and manifest semantics are part of
-  * the format, not an implementation detail. The BM25 store is pinned the
-  * same way by its whole top-level directory set and stats version.
+  * the format, not an implementation detail.
   */
 class StoreLayoutSpec extends SparkTestBase {
   import spark.implicits._
@@ -18,12 +19,9 @@ class StoreLayoutSpec extends SparkTestBase {
   private def tmp(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
-  private def segDirs(path: String): Set[String] =
-    new java.io.File(path).listFiles().map(_.getName)
-      .filter(_.startsWith("seg_")).toSet
-
-  private def manifest(path: String): (Seq[String], String, Long) = {
-    val m = StoreMeta.read(spark, path, "meta").head()
+  private def manifest(path: String,
+                       prefix: String): (Seq[String], String, Long) = {
+    val m = StoreMeta.read(spark, path, prefix).head()
     (m.getAs[scala.collection.Seq[String]]("segments").toSeq,
       m.getAs[String]("last_tag"), m.getAs[Long]("next_seg"))
   }
@@ -32,53 +30,69 @@ class StoreLayoutSpec extends SparkTestBase {
     * append and compact operations of ONE handle, which does every later
     * write), then runs tagged append, the same tag replayed, an idle
     * (empty) tagged batch, untagged append, compact, tagged append,
-    * compact — asserting the directory set and manifest row after each
-    * step. */
-  private def pinLayout(name: String, path: String, batch: Int => DataFrame,
+    * compact — asserting the directory set, the manifest version under
+    * `prefix` and the manifest row after each step. `fixed` names the
+    * store's top-level dirs outside the segment protocol. */
+  private def pinLayout(name: String, path: String, prefix: String,
+                        fixed: Set[String], batch: Int => DataFrame,
                         empty: DataFrame, build: DataFrame => Unit,
                         open: () => ((DataFrame, String) => Unit,
                                      () => Unit)): Unit = {
-    def check(step: String, dirs: Set[String], segs: Seq[String],
-              lastTag: String, nextSeg: Long): Unit = {
-      assert(segDirs(path) == dirs, s"$name after $step: dirs")
-      assert(manifest(path) == ((segs, lastTag, nextSeg)),
+    def check(step: String, segDirs: Set[String], version: Int,
+              segs: Seq[String], lastTag: String, nextSeg: Long): Unit = {
+      val metaDirs = Set(version - 1, version).filter(_ >= 0)
+        .map(v => s"${prefix}_m$v")
+      assert(new java.io.File(path).listFiles().map(_.getName).toSet ==
+        segDirs ++ metaDirs ++ fixed, s"$name after $step: dirs")
+      assert(StoreMeta.currentVersion(spark, path, prefix) == version,
+        s"$name after $step: manifest version")
+      assert(manifest(path, prefix) == ((segs, lastTag, nextSeg)),
         s"$name after $step: manifest")
     }
     build(batch(0))
-    check("build", Set("seg_base"), Seq("seg_base"), "", 0L)
+    check("build", Set("seg_base"), 0, Seq("seg_base"), "", 0L)
     val (append, compact) = open()
     append(batch(1), "t1")
-    check("tagged append", Set("seg_base", "seg_t1"),
+    check("tagged append", Set("seg_base", "seg_t1"), 1,
       Seq("seg_base", "seg_t1"), "t1", 1L)
     append(batch(1), "t1")
-    check("replayed tag", Set("seg_base", "seg_t1"),
+    check("replayed tag", Set("seg_base", "seg_t1"), 1,
       Seq("seg_base", "seg_t1"), "t1", 1L)
     append(empty, "t2")
-    check("idle batch", Set("seg_base", "seg_t1"),
+    check("idle batch", Set("seg_base", "seg_t1"), 1,
       Seq("seg_base", "seg_t1"), "t1", 1L)
     append(batch(2), "")
-    check("untagged append", Set("seg_base", "seg_t1", "seg_1"),
+    check("untagged append", Set("seg_base", "seg_t1", "seg_1"), 2,
       Seq("seg_base", "seg_t1", "seg_1"), "", 2L)
     compact()
-    check("first compact", Set("seg_base", "seg_t1", "seg_1", "seg_c0"),
+    check("first compact", Set("seg_base", "seg_t1", "seg_1", "seg_c0"), 3,
       Seq("seg_c0"), "", 2L)
     append(batch(3), "t3")
     check("append after compact",
-      Set("seg_base", "seg_t1", "seg_1", "seg_c0", "seg_t3"),
+      Set("seg_base", "seg_t1", "seg_1", "seg_c0", "seg_t3"), 4,
       Seq("seg_c0", "seg_t3"), "t3", 3L)
     compact()
-    check("second compact", Set("seg_c0", "seg_t3", "seg_c1"),
+    check("second compact", Set("seg_c0", "seg_t3", "seg_c1"), 5,
       Seq("seg_c1"), "t3", 3L)
   }
 
-  test("segment dirs and manifest rows are pinned for MinHash, IVF and " +
-    "IVF-PQ through build, append, replay, idle, compact") {
+  test("segment dirs and manifest rows are pinned for BM25, MinHash, IVF " +
+    "and IVF-PQ through build, append, replay, idle, compact") {
     val texts = (b: Int) => (0 until 4).map { i =>
       val id = (100 * b + i).toLong
       (id, s"batch $b row $i the quick brown fox jumps over lazy dog $id")
     }.toDF("doc_id", "text")
+    val bm = tmp("graft-layout-bm25-")
+    pinLayout("BM25", bm, "stats", Set.empty, texts, texts(0).limit(0),
+      df => Bm25.buildIndex(df, "doc_id", "text", bm, numBuckets = 4),
+      () => {
+        val h = Bm25.openIndex(spark, bm)
+        ((df, tag) => Bm25.appendToIndex(h, df, "doc_id", "text", tag = tag),
+          () => Bm25.compactIndex(h))
+      })
+
     val mh = tmp("graft-layout-mh-")
-    pinLayout("MinHash", mh, texts, texts(0).limit(0),
+    pinLayout("MinHash", mh, "meta", Set.empty, texts, texts(0).limit(0),
       df => Dedup.buildMinhashIndex(spark, mh, df, "text", "doc_id"),
       () => {
         val h = Dedup.openMinhashIndex(spark, mh)
@@ -98,7 +112,7 @@ class StoreLayoutSpec extends SparkTestBase {
       m = 4, 0L until 8L)
 
     val ivf = tmp("graft-layout-ivf-")
-    pinLayout("IVF", ivf, vecs, corpus.limit(0),
+    pinLayout("IVF", ivf, "meta", Set("centroids"), vecs, corpus.limit(0),
       df => Similarity.buildIvfIndex(df, "vec_id", "embedding", cents, ivf),
       () => {
         val h = Similarity.openIvfIndex(spark, ivf)
@@ -107,7 +121,8 @@ class StoreLayoutSpec extends SparkTestBase {
       })
 
     val pq = tmp("graft-layout-pq-")
-    pinLayout("IVF-PQ", pq, vecs, corpus.limit(0),
+    pinLayout("IVF-PQ", pq, "meta", Set("centroids", "codebooks"), vecs,
+      corpus.limit(0),
       df => Similarity.buildIvfPqIndex(df, "vec_id", "embedding", cents, cb,
         pq),
       () => {
@@ -115,46 +130,5 @@ class StoreLayoutSpec extends SparkTestBase {
         ((df, tag) => Similarity.appendToIvfPqIndex(h, df, "vec_id",
           "embedding", tag = tag), () => Similarity.compactIvfPqIndex(h))
       })
-  }
-
-  test("BM25 top-level dirs and stats versions are pinned through build, " +
-    "append, replay, idle, compact: one delta and one stats version per " +
-    "append, no df table") {
-    val texts = (b: Int) => (0 until 4).map { i =>
-      val id = (100 * b + i).toLong
-      (id, s"batch $b row $i the quick brown fox $id")
-    }.toDF("doc_id", "text")
-    val path = tmp("graft-layout-bm25-")
-    def check(step: String, dirs: Set[String], statsVersion: Int): Unit = {
-      assert(new java.io.File(path).listFiles().map(_.getName).toSet == dirs,
-        s"BM25 after $step: dirs")
-      assert(StoreMeta.currentVersion(spark, path, "stats") == statsVersion,
-        s"BM25 after $step: stats version")
-    }
-    Bm25.buildIndex(texts(0), "doc_id", "text", path, numBuckets = 4)
-    check("build", Set("postings_v0", "stats_m0"), 0)
-    val h = Bm25.openIndex(spark, path)
-    Bm25.appendToIndex(h, texts(1), "doc_id", "text", tag = "t1")
-    check("tagged append",
-      Set("postings_v0", "postings_dt1", "stats_m0", "stats_m1"), 1)
-    Bm25.appendToIndex(h, texts(1), "doc_id", "text", tag = "t1")
-    check("replayed tag",
-      Set("postings_v0", "postings_dt1", "stats_m0", "stats_m1"), 1)
-    Bm25.appendToIndex(h, texts(0).limit(0), "doc_id", "text", tag = "t2")
-    check("idle batch",
-      Set("postings_v0", "postings_dt1", "stats_m0", "stats_m1"), 1)
-    Bm25.appendToIndex(h, texts(2), "doc_id", "text")
-    check("untagged append", Set("postings_v0", "postings_dt1",
-      "postings_d1", "stats_m1", "stats_m2"), 2)
-    Bm25.compactIndex(h)
-    check("first compact", Set("postings_v0", "postings_v1", "postings_dt1",
-      "postings_d1", "stats_m2", "stats_m3"), 3)
-    Bm25.appendToIndex(h, texts(3), "doc_id", "text", tag = "t3")
-    check("append after compact", Set("postings_v0", "postings_v1",
-      "postings_dt1", "postings_d1", "postings_dt3", "stats_m3",
-      "stats_m4"), 4)
-    Bm25.compactIndex(h)
-    check("second compact", Set("postings_v1", "postings_v2",
-      "postings_dt3", "stats_m4", "stats_m5"), 5)
   }
 }

@@ -147,17 +147,17 @@ class StoreMetaSpec extends SparkTestBase {
       docs(4 until 6, "beta"), "doc_id", "text")
     Bm25.appendToIndex(Bm25.openIndex(spark, idx),
       docs(6 until 8, "gamma"), "doc_id", "text")
-    def deltaDirs() = new java.io.File(idx).listFiles()
-      .map(_.getName).filter(_.startsWith("postings_d")).sorted.toSeq
-    assert(deltaDirs() == Seq("postings_d0", "postings_d1"))
+    def segDirs() = new java.io.File(idx).listFiles()
+      .map(_.getName).filter(_.startsWith("seg_")).sorted.toSeq
+    assert(segDirs() == Seq("seg_0", "seg_1", "seg_base"))
     Bm25.compactIndex(Bm25.openIndex(spark, idx))
-    // post-compaction, the next append must NOT reuse postings_d0 (the
+    // post-compaction, the next append must NOT reuse seg_0 (the
     // retired dir survives the grace window on disk)
     Bm25.appendToIndex(Bm25.openIndex(spark, idx),
       docs(8 until 10, "delta"), "doc_id", "text")
     val st = Bm25.indexStatsDf(spark, idx).head
-    assert(st.getAs[scala.collection.Seq[String]]("delta_dirs").toSeq ==
-      Seq("postings_d2"))
+    assert(st.getAs[scala.collection.Seq[String]]("segments").toSeq ==
+      Seq("seg_c0", "seg_2"))
     assert(st.getAs[Long]("n_docs") == 10L)
     // append == rebuild still bit-for-bit after the compact+append cycle
     val viaIndex = Bm25.topKIndexed(Bm25.openIndex(spark, idx),
