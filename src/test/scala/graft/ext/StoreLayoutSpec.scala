@@ -76,21 +76,13 @@ class StoreLayoutSpec extends SparkTestBase {
       Seq("seg_c1"), "t3", 3L)
   }
 
-  test("segment dirs and manifest rows are pinned for BM25, MinHash, IVF " +
-    "and IVF-PQ through build, append, replay, idle, compact") {
-    val texts = (b: Int) => (0 until 4).map { i =>
-      val id = (100 * b + i).toLong
-      (id, s"batch $b row $i the quick brown fox jumps over lazy dog $id")
-    }.toDF("doc_id", "text")
-    val bm = tmp("graft-layout-bm25-")
-    pinLayout("BM25", bm, "stats", Set.empty, texts, texts(0).limit(0),
-      df => Bm25.buildIndex(df, "doc_id", "text", bm, numBuckets = 4),
-      () => {
-        val h = Bm25.openIndex(spark, bm)
-        ((df, tag) => Bm25.appendToIndex(h, df, "doc_id", "text", tag = tag),
-          () => Bm25.compactIndex(h))
-      })
+  private val texts = (b: Int) => (0 until 4).map { i =>
+    val id = (100 * b + i).toLong
+    (id, s"batch $b row $i the quick brown fox jumps over lazy dog $id")
+  }.toDF("doc_id", "text")
 
+  test("segment dirs and manifest rows are pinned for MinHash, IVF and " +
+    "IVF-PQ through build, append, replay, idle, compact") {
     val mh = tmp("graft-layout-mh-")
     pinLayout("MinHash", mh, "meta", Set.empty, texts, texts(0).limit(0),
       df => Dedup.buildMinhashIndex(spark, mh, df, "text", "doc_id"),
@@ -129,6 +121,19 @@ class StoreLayoutSpec extends SparkTestBase {
         val h = Similarity.openIvfIndex(spark, pq)
         ((df, tag) => Similarity.appendToIvfPqIndex(h, df, "vec_id",
           "embedding", tag = tag), () => Similarity.compactIvfPqIndex(h))
+      })
+  }
+
+  test("BM25 top-level dirs and stats versions are pinned through build, " +
+    "append, replay, idle, compact: one delta and one stats version per " +
+    "append, no df table") {
+    val bm = tmp("graft-layout-bm25-")
+    pinLayout("BM25", bm, "stats", Set.empty, texts, texts(0).limit(0),
+      df => Bm25.buildIndex(df, "doc_id", "text", bm, numBuckets = 4),
+      () => {
+        val h = Bm25.openIndex(spark, bm)
+        ((df, tag) => Bm25.appendToIndex(h, df, "doc_id", "text", tag = tag),
+          () => Bm25.compactIndex(h))
       })
   }
 }
