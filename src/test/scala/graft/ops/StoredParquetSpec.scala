@@ -71,6 +71,45 @@ class StoredParquetSpec extends SparkTestBase {
     assert(e1.getCondition == e2.getCondition)
   }
 
+  /** Spark jobs of a global aggregate over `op`'s stored result, served by
+    * a fresh runner over `store` (a store hit). */
+  private def storeHitAggregateJobs(store: String, op: OpSpec): Long = {
+    val r = new LocalSparkRunner(spark, store)
+    jobsOf { r.toFrame(op).agg(org.apache.spark.sql.functions.count("*")).collect(); () }
+  }
+
+  private def storedFrame(partitions: Int): (String, OpSpec) = {
+    val store = newStoreDir()
+    val op = AssignRowIDOp(LoadInlineJsonDatasetOp(Map("x" -> (0 until 40).map(_.toLong))))
+    new LocalSparkRunner(spark, store).writeFrame(op,
+      (0 until 40).map(i => (i.toLong, s"row $i")).toDF("id", "name")
+        .repartition(partitions))
+    val parts = Files.list(new LocalSparkRunner(spark, store).opDir(op)
+        .resolve("result.parquet")).iterator().asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+    assert(parts == partitions)
+    (store, op)
+  }
+
+  test("a store hit's aggregate over a one-file result plans no exchange: 1 job") {
+    val (store, op) = storedFrame(1)
+    assert(storeHitAggregateJobs(store, op) == 1)
+  }
+
+  test("a store hit's aggregate over a two-file result keeps its exchange: 2 jobs") {
+    val (store, op) = storedFrame(2)
+    assert(storeHitAggregateJobs(store, op) == 2)
+  }
+
+  test("a one-file result larger than spark.sql.files.openCostInBytes keeps its exchange") {
+    val (store, op) = storedFrame(1)
+    val key = "spark.sql.files.openCostInBytes"
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "16")
+    try assert(storeHitAggregateJobs(store, op) == 2)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   private def assertStoreOpensAsInferred(root: Path, atLeast: Int): Unit = {
     val dirs = datasetDirs(root.toString)
     assert(dirs.size >= atLeast, s"only ${dirs.size} dataset dirs under $root")
