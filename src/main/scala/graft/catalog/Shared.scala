@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ext.{LangModel, Similarity}
+import graft.ops.StoredParquet
 
 /** Builders, fixtures and oracle fragments used by more than one query
   * family. Anything used by a single family lives in that family's file. */
@@ -93,15 +94,17 @@ object Shared {
 
   /** Reads a sink table back: every batch's rows without the `batch_id`
     * partition column, or with `newestOnly` only the newest `batch_id=B`
-    * directory (a running state or card, or the last batch's verdicts). */
+    * directory (a running state or card, or the last batch's verdicts).
+    * The sink wrote every file, so the schema comes from its footers
+    * ([[graft.ops.StoredParquet]]), with no inference job. */
   private[catalog] def readSink(s: SparkSession, dir: String,
                                 newestOnly: Boolean = false): DataFrame =
-    if (!newestOnly) s.read.parquet(dir).drop("batch_id")
+    if (!newestOnly) StoredParquet.read(s, dir).drop("batch_id")
     else {
       val newest = new java.io.File(dir).list()
         .filter(_.startsWith("batch_id="))
         .maxBy(_.stripPrefix("batch_id=").toLong)
-      s.read.parquet(s"$dir/$newest")
+      StoredParquet.read(s, s"$dir/$newest")
     }
 
   /** Hybrid-retrieval gate constants (shared engine/oracle): the query

@@ -440,10 +440,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
 
   private def persist(op: OpSpec, result: MatResult): String = result match {
     case FrameResult(df) =>
-      persistStaged(op, resultParquet(op)) { tmp =>
-        df.write.mode("overwrite").option("compression", "zstd")
-          .parquet(tmp.toString)
-      }
+      persistStaged(op, resultParquet(op))(StoredParquet.write(df, _))
       "parquet"
     case JsonResult(j) =>
       persistStaged(op, resultJson(op))(tmp =>
@@ -579,8 +576,10 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     * from under us (done marker gone too — a concurrent gc legitimately
     * swept a completed, unkept entry; deleteTreeTolerant removes the
     * marker first, so the collected state is unambiguous): the caller
-    * recomputes. A STANDING done with persistently absent results remains
-    * a hard error — that is real store corruption. */
+    * recomputes. A STANDING done with persistently absent results, or
+    * with part files that disagree with the result's
+    * [[StoredParquet.SchemaFile]], remains a hard error — that is real
+    * store corruption. */
   private def readResult(op: OpSpec): Option[MatResult] = {
     // bounded re-check: a cross-process replace claim ([[persistStaged]])
     // has a two-rename-wide window where done exists but the result is
@@ -589,7 +588,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     while (attempt < 3) {
       // the READ itself is inside the retry, not just the exists() probe: a
       // cross-process aside/restore swap between exists() and the parquet
-      // footer read (or the JSON/model load) surfaces as AnalysisException /
+      // listing (or the JSON/model load) surfaces as AnalysisException /
       // FileNotFoundException / NoSuchFileException and must be absorbed by
       // the same bounded re-check, not escape as a materialize failure
       try {
@@ -604,6 +603,11 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         else if (Files.exists(modelDir(op)))
           return Some(ModelResult(graft.ml.ModelCodec.loadDir(modelDir(op))))
       } catch {
+        // a gc sweeping the entry mid-listing removed `done` first
+        case e: StoredParquet.CorruptDir if isDone(op) =>
+          throw new IllegalStateException(
+            s"corrupt result for ${op.uuid} at ${e.dir}: ${e.detail}", e)
+        case _: StoredParquet.CorruptDir => ()
         case _: org.apache.spark.sql.AnalysisException
            | _: java.io.FileNotFoundException
            | _: java.nio.file.NoSuchFileException if attempt < 2 => ()
@@ -637,10 +641,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     * staged-rename protocol as any result. */
   private def stampedLoad(op: OpSpec, raw: => DataFrame): DataFrame = {
     if (!(isDone(op) && Files.exists(resultParquet(op)))) {
-      persistStaged(op, resultParquet(op)) { tmp =>
-        ColumnOps.withRowIdxByFileOrder(raw).write
-          .mode("overwrite").option("compression", "zstd").parquet(tmp.toString)
-      }
+      persistStaged(op, resultParquet(op))(
+        StoredParquet.write(ColumnOps.withRowIdxByFileOrder(raw), _))
       markDone(op)
     }
     readResult(op) match {

@@ -18,7 +18,7 @@ import graft.runner.LocalSparkRunner
   * fresh runner predicting exactly what the in-memory model predicted;
   * known shapes land as `model.json`, the rest as a Spark ML `model/`
   * directory, and `model/` directories of older stores keep serving. */
-class ModelStoreSpec extends SparkTestBase {
+class ModelStoreSpec extends SparkTestBase with graft.ops.StoredSchemaPins {
 
   private val RowIdx = graft.ops.ColumnOps.RowIdx
 

@@ -116,6 +116,45 @@ class StoredParquetSpec extends SparkTestBase {
     dirs.foreach(d => assertSameAsInferred(d))
   }
 
+  test("a runner result written without _schema.json (the earlier layout) opens the same") {
+    val store = newStoreDir()
+    val ds = LoadInlineJsonDatasetOp(Map(
+      "v" -> (0 until 12).map(_.toDouble), "f" -> (0 until 12).map(_ % 3 == 0)))
+    val op = AssignRowIDOp(MaskRowsOp(ds, SelectBooleanColumnOp(ds, "f")))
+    new LocalSparkRunner(spark, store).materialize(op)
+    val dir = new LocalSparkRunner(spark, store).opDir(op).resolve("result.parquet")
+    val withFile = new LocalSparkRunner(spark, store).toFrame(op)
+    val (schema, rows) = (withFile.schema, rowsOf(withFile))
+    Files.delete(dir.resolve(StoredParquet.SchemaFile))
+    val earlier = new LocalSparkRunner(spark, store).toFrame(op)
+    assert(earlier.schema == schema)
+    assert(rowsOf(earlier) == rows)
+    assertSameAsInferred(dir.toString)
+  }
+
+  test("every gate *_stream sink table reads as inferred") {
+    // query -> the tag of the temp sink dir (graft-<tag>-out-*) it writes
+    val sinks = Seq("q_pack_stream" -> "packstream", "q_lm_stream" -> "lmstream",
+      "q_incr_stream" -> "incrstream", "q_sem_stream" -> "semstream",
+      "q_bm25_stream" -> "bm25stream", "q_domain_cap_stream" -> "dcs",
+      "q_bloom_stream" -> "blstream", "q_cms_stream" -> "cmsstream",
+      "q_stats_stream" -> "statsstream", "q_tb_stream" -> "tbstream",
+      "q_km_stream" -> "kmstream")
+    val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def sinkDirs(tag: String): Set[Path] = {
+      val s = Files.list(tmpRoot)
+      try s.iterator().asScala.filter(_.getFileName.toString
+        .startsWith(s"graft-$tag-out-")).toSet finally s.close()
+    }
+    sinks.foreach { case (q, tag) =>
+      val before = sinkDirs(tag)
+      graft.SparkEntry.queries(q)(spark, graft.SparkTestBase.SmokeSfDir).collect()
+      val made = (sinkDirs(tag) -- before).toSeq
+      assert(made.size == 1, s"$q wrote sink dirs $made")
+      assertStoreOpensAsInferred(made.head, 2)
+    }
+  }
+
   test("every dataset dir of a runner store and of the four index stores reads as inferred") {
     // the writers are unchanged, so these stores have the on-disk shape
     // the previous reader (plain inference) served
@@ -175,6 +214,33 @@ object StoredParquetSpec {
         kids.exists(n => n.startsWith("part-") && n.endsWith(".parquet")) ||
           kids.exists(n => n.contains("=") && !n.startsWith("_"))
       }.map(_.toString).toSeq
+
+  /** Every runner result under store `root` whose first part file's
+    * footer carries Spark's schema, and whose [[StoredParquet.SchemaFile]]
+    * is missing or records another schema. Results without that footer key
+    * (written by another tool, or damaged on purpose) are not judged. */
+  def schemaFileMismatches(spark: org.apache.spark.sql.SparkSession,
+                           root: String): Seq[String] =
+    Files.walk(java.nio.file.Paths.get(root)).iterator().asScala.toList
+      .filter(d => Files.isDirectory(d) && d.getFileName.toString == "result.parquet")
+      .flatMap { d =>
+        val footer = scala.util.Try(StoredParquet.footerSchema(spark, Seq(d.toString)))
+          .toOption.flatten
+        val file = d.resolve(StoredParquet.SchemaFile)
+        footer.flatMap { f =>
+          if (!Files.exists(file)) Some(s"$d has no ${StoredParquet.SchemaFile}")
+          else {
+            val recorded = graft.spec.Json.parse(Files.readString(file)) match {
+              case graft.spec.JObj(fs) => fs.get("schema").collect {
+                case graft.spec.JString(j) => org.apache.spark.sql.types.DataType.fromJson(j)
+              }
+              case _ => None
+            }
+            if (recorded.contains(f)) None
+            else Some(s"$d records $recorded, its footer $f")
+          }
+        }
+      }
 
   /** How [[StoredParquet.read]] of `paths` differs from schema inference
     * (`spark.read.parquet`): no footer schema found, or a different schema

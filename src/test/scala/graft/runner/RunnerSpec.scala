@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions.col
   * hand-computed rows out) plus the cache/ephemeral behaviors
   * (`tests/test_ephemeral_has_result.py`).
   */
-class RunnerSpec extends SparkTestBase {
+class RunnerSpec extends SparkTestBase with graft.ops.StoredSchemaPins {
 
   private def inline(n: Int = 10): LoadInlineJsonDatasetOp =
     LoadInlineJsonDatasetOp(Map(
@@ -382,12 +382,42 @@ class RunnerSpec extends SparkTestBase {
     Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
       .filter(_.getFileName.toString.startsWith("part-"))
       .foreach(Files.delete)
+    // nor does such a tool leave the schema file this engine writes
+    Files.delete(dir.resolve(graft.ops.StoredParquet.SchemaFile))
     graft.ops.StoredParquetSpec.writeForeign(spark,
       dir.resolve("part-00000-foreign.parquet"), Seq(0L -> "a", 1L -> "b"))
     assert(graft.ops.StoredParquet.footerSchema(spark, Seq(dir.toString)).isEmpty)
     val df = new LocalSparkRunner(spark, store).toFrame(op)
     assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
       .toSeq == Seq((0L, "a"), (1L, "b")))
+  }
+
+  test("a part file truncated or deleted, or a truncated _schema.json, under done is a corrupt result naming the uuid and the dir") {
+    val store = newStoreDir()
+    val rid = AssignRowIDOp(inline(10))
+    new LocalSparkRunner(spark, store).materialize(rid)
+    val dir = new LocalSparkRunner(spark, store).opDir(rid).resolve("result.parquet")
+    val part = Files.list(dir).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .filter(_.getFileName.toString.startsWith("part-")).head
+    def corrupt(): Unit = {
+      val e = intercept[IllegalStateException](
+        new LocalSparkRunner(spark, store).toFrame(rid))
+      assert(e.getMessage.startsWith(s"corrupt result for ${rid.uuid} at $dir"),
+        e.getMessage)
+    }
+    def truncate(f: java.nio.file.Path): Array[Byte] = {
+      val bytes = Files.readAllBytes(f)
+      Files.write(f, bytes.take(bytes.length / 2))
+      bytes
+    }
+    val schemaFile = dir.resolve(graft.ops.StoredParquet.SchemaFile)
+    val recorded = truncate(schemaFile)
+    corrupt()
+    Files.write(schemaFile, recorded)
+    truncate(part)
+    corrupt()
+    Files.delete(part)
+    corrupt()
   }
 
   test("hasResult for ephemeral ops follows dependency readiness") {
