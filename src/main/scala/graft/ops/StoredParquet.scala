@@ -83,9 +83,7 @@ object StoredParquet {
       all.find(_.getPath.getName == SchemaFile).map(s => checked(fs, dir, all, s))
     }
     val schema = recorded.headOption.orElse(
-      try listed.iterator.flatMap { case (fs, _, all) => firstPart(fs, all) }
-        .nextOption().flatMap(footerKey(conf, _))
-      catch { case _: java.io.IOException => None })
+      footerOf(conf, listed.iterator.map { case (fs, _, all) => (fs, all) }))
     val df = schema match {
       case Some(s) => spark.read.schema(s).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
@@ -108,13 +106,19 @@ object StoredParquet {
   private[graft] def footerSchema(spark: SparkSession,
                                   paths: Seq[String]): Option[StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    try paths.iterator.flatMap { p =>
+    footerOf(conf, paths.iterator.map { p =>
       val path = new Path(p)
       val fs = path.getFileSystem(conf)
-      firstPart(fs, fs.listStatus(path).toSeq)
-    }.nextOption().flatMap(footerKey(conf, _))
-    catch { case _: java.io.IOException => None }
+      (fs, fs.listStatus(path).toSeq)
+    })
   }
+
+  /** [[footerSchema]] over lazily listed dirs: (file system, listing). */
+  private def footerOf(conf: org.apache.hadoop.conf.Configuration,
+                       dirs: Iterator[(FileSystem, Seq[FileStatus])]): Option[StructType] =
+    try dirs.flatMap { case (fs, all) => firstPart(fs, all) }
+      .nextOption().flatMap(footerKey(conf, _))
+    catch { case _: java.io.IOException => None }
 
   private def footerKey(conf: org.apache.hadoop.conf.Configuration,
                         file: Path): Option[StructType] = {
