@@ -64,11 +64,26 @@ object StoredParquet {
   /** The frame stored under `paths`. When the one path holds exactly one
     * data file that Spark reads as a single split, the frame is declared
     * single-partition (`coalesce(1)`, the same one scan task), so Catalyst
-    * plans no exchange for an aggregate, window or sort above it.
+    * plans no exchange for an aggregate, window or sort above it. Every
+    * stage above it then runs in that one task too, so a dataset that a
+    * whole graph computes from opens with [[readSource]] instead.
     *
     * @throws CorruptDir when a dir's [[SchemaFile]] disagrees with its
     *                    part files */
   def read(spark: SparkSession, paths: String*): DataFrame = {
+    val (df, oneSplit) = open(spark, paths)
+    if (oneSplit) df.coalesce(1) else df
+  }
+
+  /** [[read]] without the single-partition declaration: stages above the
+    * scan keep their exchanges and their parallelism. */
+  def readSource(spark: SparkSession, dir: String): DataFrame =
+    open(spark, Seq(dir))._1
+
+  /** The frame stored under `paths`, and whether it is one dir holding one
+    * data file that Spark reads as a single split. */
+  private def open(spark: SparkSession,
+                   paths: Seq[String]): (DataFrame, Boolean) = {
     val conf = spark.sparkContext.hadoopConfiguration
     val listed = paths.map { p =>
       val dir = new Path(p)
@@ -88,32 +103,20 @@ object StoredParquet {
       case Some(s) => spark.read.schema(s).parquet(paths: _*)
       case None => spark.read.parquet(paths: _*)
     }
-    listed match {
+    val oneSplit = listed match {
       case Seq((_, _, all)) =>
         val (dirs, files) = all.filter(s => visible(s.getPath.getName))
           .partition(_.isDirectory)
-        if (dirs.isEmpty && files.size == 1 && files.head.getLen <= singleSplitBytes(spark))
-          df.coalesce(1)
-        else df
-      case _ => df
+        dirs.isEmpty && files.size == 1 && files.head.getLen <= singleSplitBytes(spark)
+      case _ => false
     }
+    (df, oneSplit)
   }
 
   /** The schema Spark recorded in the footer of the first part file found
-    * under `paths`, or None. An IO failure (a file removed between the
-    * listing and the open) is None as well: the fallback's own read then
-    * reports it the way it always did. */
-  private[graft] def footerSchema(spark: SparkSession,
-                                  paths: Seq[String]): Option[StructType] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    footerOf(conf, paths.iterator.map { p =>
-      val path = new Path(p)
-      val fs = path.getFileSystem(conf)
-      (fs, fs.listStatus(path).toSeq)
-    })
-  }
-
-  /** [[footerSchema]] over lazily listed dirs: (file system, listing). */
+    * in `dirs` (file system, listing), or None. An IO failure (a file
+    * removed between the listing and the open) is None as well: the
+    * fallback's own read then reports it the way it always did. */
   private def footerOf(conf: org.apache.hadoop.conf.Configuration,
                        dirs: Iterator[(FileSystem, Seq[FileStatus])]): Option[StructType] =
     try dirs.flatMap { case (fs, all) => firstPart(fs, all) }

@@ -370,7 +370,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       // entry between the isDone probe and the read: fall through and
       // recompute (the entry was legitimately unkept; correctness is
       // content-addressed, not location-addressed)
-      (if (!op.isEphemeral && isDone(op)) readResult(op) else None) match {
+      (if (!op.isEphemeral && isDone(op)) readResult(op, StoredParquet.read(spark, _))
+       else None) match {
         case Some(r) => (r, graft.Meter.StoreHit)
         case None => (materialize0(op), graft.Meter.Computed)
       }
@@ -431,7 +432,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         // the compact persisted parquet, not the original lineage; if a
         // concurrent gc swept our freshly-completed entry already, the
         // in-hand computed result is the semantically-identical fallback
-        if (fmt == "parquet") readResult(op).getOrElse(result) else result
+        if (fmt == "parquet") readResult(op, StoredParquet.read(spark, _)).getOrElse(result)
+        else result
       } catch {
         case e: Throwable => markFailed(op, started, e); throw e
       }
@@ -578,9 +580,11 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     * marker first, so the collected state is unambiguous): the caller
     * recomputes. A STANDING done with persistently absent results, or
     * with part files that disagree with the result's
-    * [[StoredParquet.SchemaFile]], remains a hard error — that is real
-    * store corruption. */
-  private def readResult(op: OpSpec): Option[MatResult] = {
+    * [[StoredParquet.SchemaFile]] on every attempt, remains a hard error —
+    * that is real store corruption. A parquet result opens with
+    * `openParquet` (its dir). */
+  private def readResult(op: OpSpec,
+                         openParquet: String => DataFrame): Option[MatResult] = {
     // bounded re-check: a cross-process replace claim ([[persistStaged]])
     // has a two-rename-wide window where done exists but the result is
     // mid-swap; one short retry absorbs it
@@ -593,8 +597,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       // the same bounded re-check, not escape as a materialize failure
       try {
         if (Files.exists(resultParquet(op)))
-          return Some(FrameResult(
-            StoredParquet.read(spark, resultParquet(op).toString)))
+          return Some(FrameResult(openParquet(resultParquet(op).toString)))
         else if (Files.exists(resultJson(op)))
           return Some(JsonResult(Json.parse(Files.readString(resultJson(op)))))
         else if (Files.exists(modelJson(op)))
@@ -603,14 +606,17 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         else if (Files.exists(modelDir(op)))
           return Some(ModelResult(graft.ml.ModelCodec.loadDir(modelDir(op))))
       } catch {
+        // a mid-swap listing can pair one writer's part files with the
+        // other's part list: as transient as the exceptions below
+        case _: StoredParquet.CorruptDir
+           | _: org.apache.spark.sql.AnalysisException
+           | _: java.io.FileNotFoundException
+           | _: java.nio.file.NoSuchFileException if attempt < 2 => ()
         // a gc sweeping the entry mid-listing removed `done` first
         case e: StoredParquet.CorruptDir if isDone(op) =>
           throw new IllegalStateException(
             s"corrupt result for ${op.uuid} at ${e.dir}: ${e.detail}", e)
         case _: StoredParquet.CorruptDir => ()
-        case _: org.apache.spark.sql.AnalysisException
-           | _: java.io.FileNotFoundException
-           | _: java.nio.file.NoSuchFileException if attempt < 2 => ()
       }
       attempt += 1
       if (attempt < 3) Thread.sleep(50L * attempt)
@@ -645,7 +651,9 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         StoredParquet.write(ColumnOps.withRowIdxByFileOrder(raw), _))
       markDone(op)
     }
-    readResult(op) match {
+    // a source dataset: every op of the graph computes above its scan, so
+    // it keeps its exchanges (StoredParquet.readSource)
+    readResult(op, StoredParquet.readSource(spark, _)) match {
       case Some(FrameResult(df)) => df
       // stamp collected mid-read by a concurrent gc: serve the unstamped
       // computation (same rows, same index) — a later load re-stamps

@@ -18,9 +18,6 @@ trait SparkTestBase extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkTestBase {
-  /** The smallest generated scale factor of the query tables (TESTDATA.md). */
-  val SmokeSfDir = "/root/testdata/sf0.001"
-
   lazy val session: SparkSession = {
     val s = GraftSession.builder("local[4]")
       .appName("graft-test")

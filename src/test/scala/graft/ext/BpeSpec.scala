@@ -177,7 +177,7 @@ class BpeSpec extends SparkTestBase {
     val sc = spark.sparkContext
     val before = sc.getPersistentRDDs.keySet
     for (q <- Seq("q_bpe_train", "q_bpe_encode", "q_tok_compare"))
-      graft.SparkEntry.queries(q)(spark, graft.SparkTestBase.SmokeSfDir).collect()
+      graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
     val leaked = sc.getPersistentRDDs.keySet -- before
     assert(leaked.isEmpty, s"persisted RDDs left behind: $leaked")
   }

@@ -121,7 +121,7 @@ class UnigramSpec extends SparkTestBase {
     import graft.spec._
     val r = new graft.runner.LocalSparkRunner(spark,
       java.nio.file.Files.createTempDirectory("unistore").toString)
-    val ds = r.fromParquet(s"${graft.SparkTestBase.SmokeSfDir}/documents.parquet")
+    val ds = r.fromParquet("/root/testdata/sf0.001/documents.parquet")
     val text = SelectTextColumnOp(ds, "text")
     val tok = TrainUnigramTokenizerOp(text, seedMulti = 10L, rounds = 1L,
       pieceLen = 3L)
@@ -137,7 +137,7 @@ class UnigramSpec extends SparkTestBase {
     assert(out.map(_.toString).sorted.toSeq ==
       again.map(_.toString).sorted.toSeq)
     // rebuilt text: pieces of each word concatenate back to the word
-    val fitDf = spark.read.parquet(s"${graft.SparkTestBase.SmokeSfDir}/documents.parquet")
+    val fitDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val words = Bpe.wordCounts(fitDf.select(col("text")), "text")
       .collect().map(_.getString(0)).toSet
     out.foreach { row =>
@@ -152,5 +152,5 @@ class UnigramSpec extends SparkTestBase {
   }
 
   private def t(name: String) =
-    spark.read.parquet(s"${graft.SparkTestBase.SmokeSfDir}/$name.parquet")
+    spark.read.parquet(s"/root/testdata/sf0.001/$name.parquet")
 }

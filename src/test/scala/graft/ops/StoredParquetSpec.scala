@@ -58,7 +58,7 @@ class StoredParquetSpec extends SparkTestBase {
     val dir = tmp("graft-stored-foreign-")
     StoredParquetSpec.writeForeign(spark, dir.resolve("part-00000-x.parquet"),
       Seq(1L -> "a", 2L -> "b"))
-    assert(StoredParquet.footerSchema(spark, Seq(dir.toString)).isEmpty)
+    assert(StoredParquetSpec.footerSchema(spark, dir.toString).isEmpty)
     val df = StoredParquet.read(spark, dir.toString)
     assert(df.schema == spark.read.parquet(dir.toString).schema)
     assert(rowsOf(df) == Seq("1|a", "2|b"))
@@ -110,6 +110,20 @@ class StoredParquetSpec extends SparkTestBase {
     finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
+  test("a stamped one-file source dataset keeps its exchange: 2 jobs") {
+    val src = tmp("graft-stored-source-").resolve("t").toString
+    (0 until 40).map(i => (i.toLong, s"row $i")).toDF("id", "name")
+      .coalesce(1).write.parquet(src)
+    val store = newStoreDir()
+    val load = new LocalSparkRunner(spark, store).fromParquet(src)
+    new LocalSparkRunner(spark, store).toFrame(load).collect() // stamps it
+    val parts = Files.list(new LocalSparkRunner(spark, store).opDir(load)
+        .resolve("result.parquet")).iterator().asScala
+      .count(_.getFileName.toString.startsWith("part-"))
+    assert(parts == 1)
+    assert(storeHitAggregateJobs(store, load) == 2)
+  }
+
   private def assertStoreOpensAsInferred(root: Path, atLeast: Int): Unit = {
     val dirs = datasetDirs(root.toString)
     assert(dirs.size >= atLeast, s"only ${dirs.size} dataset dirs under $root")
@@ -148,7 +162,7 @@ class StoredParquetSpec extends SparkTestBase {
     }
     sinks.foreach { case (q, tag) =>
       val before = sinkDirs(tag)
-      graft.SparkEntry.queries(q)(spark, graft.SparkTestBase.SmokeSfDir).collect()
+      graft.SparkEntry.queries(q)(spark, "/root/testdata/sf0.001").collect()
       val made = (sinkDirs(tag) -- before).toSeq
       assert(made.size == 1, s"$q wrote sink dirs $made")
       assertStoreOpensAsInferred(made.head, 2)
@@ -204,6 +218,29 @@ object StoredParquetSpec {
       case x => x
     }.mkString("|")).sorted
 
+  /** The schema Spark recorded under [[StoredParquet.RowMetadataKey]] in
+    * the footer of the first part file under `dir`, read here with
+    * parquet-mr itself; None without a part file or without the key. */
+  def footerSchema(spark: org.apache.spark.sql.SparkSession,
+                   dir: String): Option[org.apache.spark.sql.types.StructType] = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val walk = Files.walk(java.nio.file.Paths.get(dir))
+    val part = try walk.iterator().asScala.find { f =>
+      val n = f.getFileName.toString
+      n.startsWith("part-") && n.endsWith(".parquet")
+    } finally walk.close()
+    part.flatMap { f =>
+      val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+      val json = try reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(StoredParquet.RowMetadataKey) finally reader.close()
+      Option(json).map(org.apache.spark.sql.types.DataType.fromJson).collect {
+        case st: org.apache.spark.sql.types.StructType => st
+      }
+    }
+  }
+
   /** Every parquet dataset dir under `root`: a dir holding part files, or
     * the root of `name=value` partition dirs. */
   def datasetDirs(root: String): Seq[String] =
@@ -224,8 +261,7 @@ object StoredParquetSpec {
     Files.walk(java.nio.file.Paths.get(root)).iterator().asScala.toList
       .filter(d => Files.isDirectory(d) && d.getFileName.toString == "result.parquet")
       .flatMap { d =>
-        val footer = scala.util.Try(StoredParquet.footerSchema(spark, Seq(d.toString)))
-          .toOption.flatten
+        val footer = footerSchema(spark, d.toString)
         val file = d.resolve(StoredParquet.SchemaFile)
         footer.flatMap { f =>
           if (!Files.exists(file)) Some(s"$d has no ${StoredParquet.SchemaFile}")
@@ -248,7 +284,7 @@ object StoredParquetSpec {
   def differenceFromInferred(spark: org.apache.spark.sql.SparkSession,
                              paths: String*): Option[String] = {
     val where = paths.mkString(", ")
-    if (StoredParquet.footerSchema(spark, paths).isEmpty)
+    if (paths.forall(footerSchema(spark, _).isEmpty))
       Some(s"no footer schema under $where")
     else {
       val stored = StoredParquet.read(spark, paths: _*)

@@ -386,7 +386,7 @@ class RunnerSpec extends SparkTestBase with graft.ops.StoredSchemaPins {
     Files.delete(dir.resolve(graft.ops.StoredParquet.SchemaFile))
     graft.ops.StoredParquetSpec.writeForeign(spark,
       dir.resolve("part-00000-foreign.parquet"), Seq(0L -> "a", 1L -> "b"))
-    assert(graft.ops.StoredParquet.footerSchema(spark, Seq(dir.toString)).isEmpty)
+    assert(graft.ops.StoredParquetSpec.footerSchema(spark, dir.toString).isEmpty)
     val df = new LocalSparkRunner(spark, store).toFrame(op)
     assert(df.orderBy("id").collect().map(r => (r.getLong(0), r.getString(1)))
       .toSeq == Seq((0L, "a"), (1L, "b")))
@@ -418,6 +418,40 @@ class RunnerSpec extends SparkTestBase with graft.ops.StoredSchemaPins {
     corrupt()
     Files.delete(part)
     corrupt()
+  }
+
+  test("a result dir swapped for a racer's equal result mid-read is served, not reported corrupt") {
+    import java.nio.file.StandardCopyOption.{ATOMIC_MOVE, REPLACE_EXISTING}
+    val store = newStoreDir()
+    val rid = AssignRowIDOp(inline(10))
+    new LocalSparkRunner(spark, store).materialize(rid)
+    val r2 = new LocalSparkRunner(spark, store)
+    val dir = r2.opDir(rid).resolve("result.parquet")
+    val rows = spark.read.parquet(dir.toString).orderBy("__row_idx")
+      .collect().map(_.toSeq).toSeq
+    // a racer's complete result of the same op: equal rows, other part names
+    val racer = r2.opDir(rid).resolve("racer.parquet")
+    graft.ops.StoredParquet.write(spark.read.parquet(dir.toString), racer)
+    def parts(d: java.nio.file.Path): Set[String] =
+      Files.list(d).toArray.map(_.asInstanceOf[java.nio.file.Path])
+        .map(_.getFileName.toString).filter(_.startsWith("part-")).toSet
+    val racerParts = parts(racer)
+    assert(racerParts.nonEmpty && (racerParts & parts(dir)).isEmpty)
+    // what a reader sees in the swap window: this writer's part files
+    // listed, the racer's part list opened
+    val schemaFile = graft.ops.StoredParquet.SchemaFile
+    Files.copy(racer.resolve(schemaFile), dir.resolve(schemaFile), REPLACE_EXISTING)
+    // the swap completes while the reader retries
+    val swap = new Thread(() => {
+      Thread.sleep(20)
+      Files.move(dir, r2.opDir(rid).resolve("aside.parquet"), ATOMIC_MOVE)
+      Files.move(racer, dir, ATOMIC_MOVE)
+    })
+    swap.start()
+    val served = try r2.toFrame(rid) finally swap.join()
+    assert(served.inputFiles.map(f => new org.apache.hadoop.fs.Path(f).getName)
+      .toSet == racerParts)
+    assert(served.orderBy("__row_idx").collect().map(_.toSeq).toSeq == rows)
   }
 
   test("hasResult for ephemeral ops follows dependency readiness") {
