@@ -612,10 +612,10 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
            | _: org.apache.spark.sql.AnalysisException
            | _: java.io.FileNotFoundException
            | _: java.nio.file.NoSuchFileException if attempt < 2 => ()
-        // a gc sweeping the entry mid-listing removed `done` first
         case e: StoredParquet.CorruptDir if isDone(op) =>
           throw new IllegalStateException(
             s"corrupt result for ${op.uuid} at ${e.dir}: ${e.detail}", e)
+        // a gc sweeping the entry mid-listing removed `done` first
         case _: StoredParquet.CorruptDir => ()
       }
       attempt += 1
