@@ -916,7 +916,7 @@ object ScaleProbe {
       .reduce(_ union _)
     measure("row-idx + slice over 6M rows", "kept rows") {
       val idx = graft.ops.ColumnOps.withRowIdxByKey(li10, col("l_orderkey"), col("l_linenumber"))
-      graft.ops.ColumnOps.takeRows(idx, skip = 1000, offset = 7).count()
+      graft.ops.ColumnOps.takeRows(idx, skip = 1000, offset = 7, numRows = None).count()
     }
     // 50k-doc minhash LSH + verify
     val docs = spark.read.parquet(s"$dir/documents.parquet")

@@ -338,12 +338,15 @@ object RelationalQueries {
     // ---- filters / row selection (SURVEY §2.3) ----
 
     Query("q_take_rows", (s, dir) => {
-      // TakeRowsOp: table[10::7][:50] over the canonical row order
+      // TakeRowsOp: table[10::7][:50] over the canonical row order; the
+      // slice re-indexes, so the old index is kept as row_idx first
       val base = ColumnOps.withRowIdxByKey(
-        t(s, dir, "lineitem"), col("l_orderkey"), col("l_linenumber"))
+          t(s, dir, "lineitem"), col("l_orderkey"), col("l_linenumber"))
+        .withColumn("row_idx", col(ColumnOps.RowIdx))
       ColumnOps.takeRows(base, skip = 7, offset = 10, numRows = Some(50))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
-          col(ColumnOps.RowIdx).as("row_idx"))
+          col("row_idx"))
+        .orderBy(col("row_idx"))
     },
       """WITH t AS (SELECT l_orderkey, l_linenumber, l_quantity,
         |CAST(row_number() OVER (ORDER BY l_orderkey, l_linenumber) AS BIGINT) - 1 AS row_idx
@@ -354,7 +357,7 @@ object RelationalQueries {
 
     Query("q_mask_rows", (s, dir) => {
       val li = t(s, dir, "lineitem")
-      ColumnOps.maskRows(li, ColumnOps.categoryToBoolean(col("l_returnflag"), Set("R")))
+      li.filter(ColumnOps.categoryToBoolean(col("l_returnflag"), Some(Seq("R")), None))
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
     },
@@ -364,9 +367,10 @@ object RelationalQueries {
     Query("q_category_to_boolean", (s, dir) => {
       t(s, dir, "orders")
         .select(col("o_orderkey"),
-          ColumnOps.categoryToBoolean(col("o_orderstatus"), Set("O", "F")).as("is_of"),
-          ColumnOps.categoryToBoolean(col("o_orderstatus"), Set.empty,
-            Some(Set("P"))).as("not_p"))
+          ColumnOps.categoryToBoolean(col("o_orderstatus"),
+            Some(Seq("O", "F")), None).as("is_of"),
+          ColumnOps.categoryToBoolean(col("o_orderstatus"),
+            None, Some(Seq("P"))).as("not_p"))
         .orderBy(col("o_orderkey"))
     },
       """SELECT o_orderkey, o_orderstatus IN ('F', 'O') AS is_of,
@@ -449,8 +453,8 @@ object RelationalQueries {
         |FROM customer ORDER BY c_custkey""".stripMargin),
 
     Query("q_assign_rowid", (s, dir) => {
-      ColumnOps.assignRowId(t(s, dir, "orders"), col("o_orderkey"))
-        .select(col("o_orderkey"), col("row_id"))
+      ColumnOps.withRowIdxByKey(t(s, dir, "orders"), col("o_orderkey"))
+        .select(col("o_orderkey"), col(ColumnOps.RowIdx).as("row_id"))
         .orderBy(col("o_orderkey"))
     },
       """SELECT o_orderkey,
@@ -459,9 +463,10 @@ object RelationalQueries {
 
     Query("q_train_test_split", (s, dir) => {
       // exact-count contract: ceil(0.25*n) test rows, rest train
-      ColumnOps.assignTrainTestSplit(t(s, dir, "customer"),
-          Some(0.25), None, seed = 19190115L)
-        .groupBy(col("split")).agg(count(lit(1)).as("cnt"))
+      // over a file-order row index, as the runner stamps a loaded dataset
+      val indexed = ColumnOps.withRowIdxByFileOrder(t(s, dir, "customer"))
+      ColumnOps.assignTrainTestSplit(indexed, Some(0.25), None, seed = 19190115L)
+        .groupBy(col(ColumnOps.ValueCol).as("split")).agg(count(lit(1)).as("cnt"))
         .orderBy(col("split"))
     },
       """SELECT 'test' AS split, CAST(ceil(0.25 * COUNT(*)) AS BIGINT) AS cnt FROM customer

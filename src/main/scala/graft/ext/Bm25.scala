@@ -35,8 +35,9 @@ object Bm25 {
   val Quant: Double = 1e6
 
   /** One term's BM25 contribution — the SINGLE definition of the score
-    * arithmetic, shared by [[rank]] and [[rankMany]] so the IEEE op order
-    * (and therefore the SQL replay) can never drift between them. */
+    * arithmetic, shared by the scan pass ([[rank]], [[rankMany]]) and
+    * [[topKIndexed]] so the IEEE op order (and therefore the SQL replay)
+    * can never drift between them. */
   private def termContribution(tf0: Column, df0: Column, n: Column,
                                dl: Column, avgdl: Column,
                                k1: Double, b: Double): Column = {
@@ -47,21 +48,22 @@ object Bm25 {
       (tf + lit(k1) * (lit(1.0) - lit(b) + lit(b) * (dl / avgdl)))
   }
 
-  /** Top-`k` documents for `terms`: (rank, id, score_u6) with `score_u6`
-    * the micro-unit-quantized BM25 score and rank 1-based over
-    * (score_u6 desc, id asc). */
-  def rank(docs: DataFrame, idCol: String, textCol: String,
-           terms: Seq[String], k: Int,
-           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(terms.nonEmpty, "terms must be non-empty")
-    require(k >= 1, s"k must be >= 1, got $k")
+  /** The scan scoring pass behind [[rank]] and [[rankMany]]: `docs`'
+    * `idCol` beside one micro-unit-quantized score column per term list,
+    * in `termLists` order. One aggregation yields a single stats row over
+    * the union of the terms (broadcast cross join); one hash-lookup UDF
+    * pass over each document's words yields every term's tf. */
+  private def scoredDocs(docs: DataFrame, idCol: String, textCol: String,
+                         termLists: Seq[Seq[String]], caller: String,
+                         k1: Double, b: Double): (DataFrame, Seq[Column]) = {
+    val allTerms: Seq[String] = termLists.flatten.distinct
     val withWs = docs.select(col(idCol),
       Corpus.words(col(textCol)).as("__ws"))
     val ws = col("__ws")
     val stats = withWs.agg(
       count(lit(1)).as("n_docs"),
       sum(size(ws).cast("long")).as("total_dl") +:
-        terms.zipWithIndex.map { case (t, i) =>
+        allTerms.zipWithIndex.map { case (t, i) =>
           sum(when(array_contains(ws, t), 1L).otherwise(0L)).as(s"df$i")
         }: _*)
     val n = col("n_docs").cast("double")
@@ -72,37 +74,51 @@ object Bm25 {
     // reaches this branch: the cross join is empty.)
     val avgdl = col("total_dl").cast("double") /
       when(col("total_dl") > 0L, n).otherwise(raise_error(concat(
-        lit("Bm25.rank: degenerate corpus (all documents empty; n_docs="),
+        lit(s"Bm25.$caller: degenerate corpus (all documents empty; n_docs="),
         col("n_docs"), lit(")"))))
-    // one pass over the words, one hash lookup each: tfs for ALL query
-    // terms at once (duplicate terms share the same count, matching the
-    // per-term filter form this replaces). Null word array (null text)
-    // stays null, propagating exactly like size(filter(null, …)).
-    val termIdx: Map[String, Seq[Int]] = terms.zipWithIndex
-      .groupBy(_._1).map { case (t, ps) => t -> ps.map(_._2) }
-    val nTerms = terms.length
+    // one pass over the words, one hash lookup each: tfs for ALL terms at
+    // once (a term repeated in a list reads the same count). Null word
+    // array (null text) stays null, propagating exactly like
+    // size(filter(null, …)).
+    val posOf: Map[String, Int] = allTerms.zipWithIndex.toMap
+    val nTerms = allTerms.length
     val tfUdf = udf { ws0: scala.collection.Seq[String] =>
       if (ws0 == null) null
       else {
         val c = new Array[Long](nTerms)
-        ws0.foreach(w => termIdx.get(w).foreach(_.foreach(c(_) += 1L)))
+        ws0.foreach(w => posOf.get(w).foreach(c(_) += 1L))
         c
       }
     }
     // named column, not an inline expression: each term's contribution
     // reads the same array, and a per-reference inline would re-run the
-    // UDF `terms.length` times per row (CollapseProject keeps the
-    // projection boundary for repeated non-cheap expressions)
+    // UDF once per term per row (CollapseProject keeps the projection
+    // boundary for repeated non-cheap expressions)
     val scored = withWs.crossJoin(broadcast(stats))
       .withColumn("__tf", tfUdf(ws))
-    val contribs = terms.zipWithIndex.map { case (_, i) =>
-      termContribution(element_at(col("__tf"), i + 1), col(s"df$i"),
-        n, dl, avgdl, k1, b)
+    val scores = termLists.map { ts =>
+      val score = ts.map { t =>
+        val i = posOf(t)
+        termContribution(element_at(col("__tf"), i + 1), col(s"df$i"),
+          n, dl, avgdl, k1, b)
+      }.reduceLeft(_ + _)
+      round(score * Quant).cast("long")
     }
-    val score = contribs.reduceLeft(_ + _)
+    (scored, scores)
+  }
+
+  /** Top-`k` documents for `terms`: (rank, id, score_u6) with `score_u6`
+    * the micro-unit-quantized BM25 score and rank 1-based over
+    * (score_u6 desc, id asc). */
+  def rank(docs: DataFrame, idCol: String, textCol: String,
+           terms: Seq[String], k: Int,
+           k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+    require(terms.nonEmpty, "terms must be non-empty")
+    require(k >= 1, s"k must be >= 1, got $k")
+    val (scored, Seq(score)) =
+      scoredDocs(docs, idCol, textCol, Seq(terms), "rank", k1, b)
     val top = scored
-      .select(col(idCol),
-        round(score * Quant).cast("long").as("score_u6"))
+      .select(col(idCol), score.as("score_u6"))
       .orderBy(col("score_u6").desc, col(idCol))
       .limit(k)
     top.select(
@@ -129,8 +145,8 @@ object Bm25 {
     * plan literals like [[rank]]'s term list: the batch must be
     * driver-bounded.
     *
-    * Determinism matches [[rank]] term for term: the same
-    * [[termContribution]] ops folded in each query's own term order,
+    * Determinism matches [[rank]] term for term: the same scoring pass,
+    * [[termContribution]] folded in each query's own term order,
     * micro-quantized, ties by id ASC. */
   def rankMany(docs: DataFrame, idCol: String, textCol: String,
                queries: Seq[(Long, Seq[String])], k: Int,
@@ -141,42 +157,10 @@ object Bm25 {
     queries.foreach { case (qid, ts) =>
       require(ts.nonEmpty, s"query $qid has no terms") }
     require(k >= 1, s"k must be >= 1, got $k")
-    val allTerms: Seq[String] = queries.flatMap(_._2).distinct
-    val withWs = docs.select(col(idCol),
-      Corpus.words(col(textCol)).as("__ws"))
-    val ws = col("__ws")
-    val stats = withWs.agg(
-      count(lit(1)).as("n_docs"),
-      sum(size(ws).cast("long")).as("total_dl") +:
-        allTerms.zipWithIndex.map { case (t, i) =>
-          sum(when(array_contains(ws, t), 1L).otherwise(0L)).as(s"df$i")
-        }: _*)
-    val n = col("n_docs").cast("double")
-    val dl = size(ws).cast("double")
-    val avgdl = col("total_dl").cast("double") /
-      when(col("total_dl") > 0L, n).otherwise(raise_error(concat(
-        lit("Bm25.rankMany: degenerate corpus (all documents empty; " +
-          "n_docs="), col("n_docs"), lit(")"))))
-    val posOf: Map[String, Int] = allTerms.zipWithIndex.toMap
-    val nTerms = allTerms.length
-    val tfUdf = udf { ws0: scala.collection.Seq[String] =>
-      if (ws0 == null) null
-      else {
-        val c = new Array[Long](nTerms)
-        ws0.foreach(w => posOf.get(w).foreach(c(_) += 1L))
-        c
-      }
-    }
-    val scored = withWs.crossJoin(broadcast(stats))
-      .withColumn("__tf", tfUdf(ws))
-    val perQuery = queries.map { case (qid, ts) =>
-      val score = ts.map { t =>
-        val i = posOf(t)
-        termContribution(element_at(col("__tf"), i + 1), col(s"df$i"),
-          n, dl, avgdl, k1, b)
-      }.reduceLeft(_ + _)
-      struct(lit(qid).cast("long").as("query_id"),
-        round(score * Quant).cast("long").as("score_u6"))
+    val (scored, scores) =
+      scoredDocs(docs, idCol, textCol, queries.map(_._2), "rankMany", k1, b)
+    val perQuery = queries.zip(scores).map { case ((qid, _), score) =>
+      struct(lit(qid).cast("long").as("query_id"), score.as("score_u6"))
     }
     val exploded = scored
       .select(col(idCol), explode(array(perQuery: _*)).as("__q"))

@@ -40,12 +40,13 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("text_md5"))
       .agg(min(col(idCol)).as("keep_id"), count(lit(1)).as("n_copies"))
 
-  /** The deduplicated dataset itself: the min-id representative per text. */
-  def dropExactDuplicates(df: DataFrame, textCol: String, idCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(md5(col(textCol))).orderBy(col(idCol))
-    df.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
-  }
+  /** The deduplicated dataset itself: the min-id representative per text,
+    * `df`'s columns in their order. A left-semi join on the
+    * [[exactDuplicateGroups]] keep ids: the dedup decision shuffles
+    * digests and ids, never documents. `idCol` must be unique and non-null. */
+  def dropExactDuplicates(df: DataFrame, textCol: String, idCol: String): DataFrame =
+    df.join(exactDuplicateGroups(df, textCol, idCol).select(col("keep_id").as(idCol)),
+      Seq(idCol), "left_semi")
 
   // ---------- shingling ----------
 

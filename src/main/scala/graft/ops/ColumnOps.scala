@@ -20,6 +20,8 @@ import org.apache.spark.sql.functions._
 object ColumnOps {
 
   val RowIdx = "__row_idx"
+  /** The value column of a runner column result. */
+  val ValueCol = "value"
 
   /** Deterministic 0-based row index from an explicit total ordering (keys
     * must be distinct as a tuple) — scale-safe two-phase construction (no
@@ -194,35 +196,37 @@ object ColumnOps {
   }
 
   /** TakeRowsOp (reference `dataset_ops.py:222-230`): python slice
-    * `table[offset::skip][:num_rows]` re-expressed over the row index.
-    * The limit keeps the plan a pushed-down filter + local limit.
+    * `table[offset::skip][:num_rows]` over the row index, re-indexed in
+    * CLOSED FORM: a kept row's new position is (old - offset) / skip, so
+    * the whole slice, head-limit included, is a pure parallel filter — no
+    * window, no sort, no limit operator.
     */
-  def takeRows(df: DataFrame, skip: Int = 1, offset: Int = 0,
-               numRows: Option[Int] = None): DataFrame = {
+  def takeRows(df: DataFrame, skip: Long, offset: Long,
+               numRows: Option[Long]): DataFrame = {
     require(skip >= 1, s"skip must be >= 1, got $skip")
-    val sliced = df.filter(
-      (col(RowIdx) >= offset) && ((col(RowIdx) - offset) % skip === 0))
-    numRows match {
-      case Some(n) =>
-        // keep deterministic: first n in row-index order
-        sliced.orderBy(col(RowIdx)).limit(n)
-      case None => sliced
+    val kept = df.filter(col(RowIdx) >= offset &&
+      (col(RowIdx) - offset) % skip === 0)
+    val newIdx = ((col(RowIdx) - offset) / skip).cast("long")
+    val sliced = numRows match {
+      case Some(n) => kept.filter(newIdx < n)
+      case None => kept
     }
+    sliced.withColumn(RowIdx, newIdx)
   }
 
   /** CategoryToBooleanOp (reference `dataset_ops.py:248-316`):
-    * membership of a categorical column in `trueValues`.
-    * With both sets given, rows outside the union are invalid (hard error in
-    * the reference — here `validateCategoryUniverse` performs that check).
-    * With only `falseValues`, result is the negated membership.
+    * membership of a categorical column in `trueValues`; with only
+    * `falseValues`, the negated membership. `Some(empty)` true values mean
+    * "nothing is true". With both sets given, rows outside the union are
+    * invalid (hard error in the reference — `validateCategoryUniverse`
+    * performs that check).
     */
-  def categoryToBoolean(c: Column, trueValues: Set[String],
-                        falseValues: Option[Set[String]] = None): Column =
-    if (trueValues.nonEmpty) c.isin(trueValues.toSeq.sorted: _*)
-    else falseValues match {
-      case Some(fv) => !c.isin(fv.toSeq.sorted: _*)
-      case None => throw new IllegalArgumentException(
-        "one of trueValues/falseValues required")
+  def categoryToBoolean(c: Column, trueValues: Option[Seq[String]],
+                        falseValues: Option[Seq[String]]): Column =
+    (trueValues, falseValues) match {
+      case (Some(tv), _) => c.isin(tv: _*)
+      case (None, Some(fv)) => !c.isin(fv: _*)
+      case _ => throw new IllegalArgumentException("no value sets")
     }
 
   /** The reference's subset validation: observed values must be within
@@ -282,56 +286,63 @@ object ColumnOps {
   }
 
   /** AssignTrainTestSplitOp (reference `dataset_ops.py:168-184`,
-    * `local_arrow_runner.py:538-620`): seeded *exact-count* random
-    * assignment. float proportion ⇒ test = ceil(p*n) (reference:
-    * `local_arrow_runner.py:567-572`), int ⇒ absolute count; the complement
-    * is inferred. Deterministic for a given seed *within this engine* (RNG
-    * differs from CPython's `random.sample` — documented contract,
-    * SURVEY §7.4.3).
+    * `local_arrow_runner.py:538-620`): seeded *exact-count* assignment of
+    * each `__row_idx` to `value` "test" or "train". A Double size is a
+    * proportion (test = ceil, train = floor), a Long or Int an absolute
+    * count; the complement is inferred, default test 0.25. Deterministic
+    * per seed within this engine (RNG differs from CPython's
+    * `random.sample` — documented contract, SURVEY §7.4.3).
     *
-    * Distributed: `rand(seed)` is deterministic per partition+offset for a
-    * fixed partitioning; exact count needs a global rank — built with the
-    * scale-safe two-phase index over the draw (`withRowIdxByKey`), never a
-    * single-partition window. The total row count is folded into the same
-    * plan as a broadcast 1-row aggregate (no eager driver-side `count()`),
-    * so the whole op is one lazy DataFrame.
+    * The draw is `xxhash64(row index, seed)`: a function of the row's
+    * positional identity only, so the assignment does not depend on how
+    * the input is partitioned. It is uniform over the full signed-long
+    * range — a known distribution, so the rank's bucket is a pure
+    * expression (no count+sample jobs; exact order within buckets via the
+    * (draw, idx) sort). The total row count enters the same plan as a
+    * broadcast 1-row aggregate, so the whole op is one lazy DataFrame.
     */
-  def assignTrainTestSplit(df: DataFrame, testFraction: Option[Double],
-                           testCount: Option[Int], seed: Long): DataFrame = {
-    testFraction.foreach(p =>
-      require(p >= 0 && p <= 1, s"test proportion $p out of [0,1]"))
-    // the draw is uniform on [0,1) by construction, so the rank's range
-    // bucket is a pure expression — no sampling pass (withRowIdxByKey's
-    // eager count+sample exists only for keys of UNKNOWN distribution)
-    val drawn = df.withColumn("__draw", rand(seed))
+  def assignTrainTestSplit(df: DataFrame, testSize: Option[Any],
+                           trainSize: Option[Any], seed: Long): DataFrame = {
+    val drawn = df.select(col(RowIdx).as("__orig_idx"))
+      .withColumn("__draw", xxhash64(col("__orig_idx"), lit(seed)))
     val ranked = withRowIdxByKnownRange(drawn,
-      rangeBucket(drawn, col("__draw"), 1.0), col("__draw"))
+      fullRangeBucket(drawn, col("__draw")),
+      col("__draw"), col("__orig_idx"))
+      .withColumnRenamed(RowIdx, "__rank")
     val total = ranked.agg(count(lit(1)).as("__n"))
-    val nTestCol: Column = (testFraction, testCount) match {
-      case (Some(p), None) => ceil(lit(p) * col("__n")).cast("long")
-      case (None, Some(c)) => lit(c.toLong)
-      case _               => ceil(lit(0.25) * col("__n")).cast("long") // reference default
+    def resolveCount(size: Any, isTest: Boolean): Column = size match {
+      // reference semantics: test = ceil, train = floor
+      case d: Double =>
+        if (isTest) ceil(lit(d) * col("__n")).cast("long")
+        else floor(lit(d) * col("__n")).cast("long")
+      case c: Long => lit(c)
+      case c: Int => lit(c.toLong)
+      case other => throw new IllegalArgumentException(s"bad size $other")
+    }
+    val nTest: Column = (testSize, trainSize) match {
+      case (Some(t), _) => resolveCount(t, isTest = true)
+      case (None, Some(tr)) => col("__n") - resolveCount(tr, isTest = false)
+      case _ => ceil(lit(0.25) * col("__n")).cast("long")
+    }
+    // materialize-time validation, in-plan (reference errors:
+    // `tests/test_local_arrow_runner.py:551-568`): counts within [0, n];
+    // when BOTH sizes are given they must cover the dataset exactly
+    var guard: Column = when(nTest < 0 || nTest > col("__n"),
+      raise_error(format_string(
+        "train/test size must be between 0 and the dataset length (n=%s)", col("__n"))))
+    (testSize, trainSize) match {
+      case (Some(t), Some(tr)) =>
+        val nTrain = resolveCount(tr, isTest = false)
+        guard = coalesce(guard, when(nTest + nTrain =!= col("__n"),
+          raise_error(format_string(
+            "train size + test size must equal dataset size (n=%s)", col("__n")))))
+      case _ =>
     }
     ranked.crossJoin(broadcast(total))
-      .withColumn("split",
-        when(col(RowIdx) < nTestCol, "test").otherwise("train"))
-      .drop("__draw", "__n", RowIdx)
+      .select(col("__orig_idx").as(RowIdx),
+        coalesce(guard.cast("string"),
+          when(col("__rank") < nTest, "test").otherwise("train")).as(ValueCol))
   }
-
-  /** AssignRowIDOp (declared but unimplemented in the reference,
-    * `dataset_ops.py:161-166`) — here implemented as the deterministic
-    * row index, exposed as a column.
-    */
-  def assignRowId(df: DataFrame, orderKeys: Column*): DataFrame =
-    if (orderKeys.nonEmpty) withRowIdxByKey(df, orderKeys: _*).withColumnRenamed(RowIdx, "row_id")
-    else withRowIdxByFileOrder(df).withColumnRenamed(RowIdx, "row_id")
-
-  /** MaskRowsOp (reference `dataset_ops.py:233-245`) for the *fused* case:
-    * mask is an expression over the same lineage ⇒ a plain filter
-    * (predicate-pushdown friendly). The runner handles the cross-dataset
-    * case with a `__row_idx` equi-join.
-    */
-  def maskRows(df: DataFrame, mask: Column): DataFrame = df.filter(mask)
 
   /** Drops the blocks behind `localCheckpoint`ed frames once nothing reads
     * them. `unpersist` does not reach them: a local checkpoint lives on the

@@ -47,7 +47,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
 
   import LocalSparkRunner._
 
-  val ValueCol = "value"
+  val ValueCol = ColumnOps.ValueCol
   private val RowIdx = ColumnOps.RowIdx
 
   // future-based memo: the map entry is claimed BEFORE computing (so a
@@ -683,18 +683,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       FrameResult(selectColumn(sel))
 
     case TakeRowsOp(dataset, skip, offset, numRows) =>
-      // table[offset::skip][:num_rows] with a CLOSED-FORM re-index: the new
-      // position of a kept row is (old-offset)/skip, so slicing (including
-      // the head-limit) is a pure parallel filter — no window, no limit op.
-      val df = frame(dataset)
-      val kept = df.filter(col(RowIdx) >= offset &&
-        (col(RowIdx) - offset) % skip === 0)
-      val newIdx = ((col(RowIdx) - offset) / skip).cast("long")
-      val sliced = numRows match {
-        case Some(n) => kept.filter(newIdx < n)
-        case None => kept
-      }
-      FrameResult(sliced.withColumn(RowIdx, newIdx))
+      FrameResult(ColumnOps.takeRows(frame(dataset), skip, offset, numRows))
 
     case MaskRowsOp(dataset, mask) =>
       val df = frame(dataset)
@@ -711,12 +700,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
         val universe = trueValues.get ++ falseValues.get
         ColumnOps.validateCategoryUniverse(in, col(ValueCol), universe.toSet)
       }
-      val expr = (trueValues, falseValues) match {
-        case (Some(tv), _) => col(ValueCol).isin(tv: _*)
-        case (None, Some(fv)) => !col(ValueCol).isin(fv: _*)
-        case _ => throw new IllegalArgumentException("no value sets")
-      }
-      FrameResult(in.select(col(RowIdx), expr.as(ValueCol)))
+      FrameResult(in.select(col(RowIdx), ColumnOps.categoryToBoolean(
+        col(ValueCol), trueValues, falseValues).as(ValueCol)))
 
     case BooleanLogicOp(operation, left, right) =>
       val l = frame(left)
@@ -793,7 +778,8 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       }
 
     case AssignTrainTestSplitOp(dataset, testSize, trainSize, seed) =>
-      FrameResult(assignSplit(frame(dataset), testSize, trainSize, seed))
+      FrameResult(ColumnOps.assignTrainTestSplit(
+        frame(dataset), testSize, trainSize, seed))
 
     case AssignRowIDOp(dataset) =>
       FrameResult(frame(dataset).select(col(RowIdx), col(RowIdx).as(ValueCol)))
@@ -895,7 +881,7 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       val words = graft.ext.Profile.bloomBitmap(ref, "__v",
         bmo.numHashes.toInt, bmo.numBits.toInt)
       // a null value is not a member of anything: coalesce the null
-      // verdict (md5(null) propagates) to false
+      // verdict (the md5 of a null is null) to false
       FrameResult(frame(bmo.value).select(col(RowIdx),
         coalesce(graft.ext.Profile.bloomMightContain(words,
             col(ValueCol).cast("string"),
@@ -965,54 +951,29 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       val df = frame(dataset)
       checkSameLength(dataset, text, "text")
       // first occurrence per content digest = min row idx — and that min
-      // IS the survivor set, no join-back needed; the dedup decision
-      // shuffles 16-byte digests + longs, never documents
-      val keepIdx = frame(text)
-        .select(col(RowIdx), md5(col(ValueCol)).as("__dig"))
-        .groupBy(col("__dig")).agg(min(col(RowIdx)).as(RowIdx))
-        .select(col(RowIdx))
+      // IS the survivor set; the dedup decision shuffles 16-byte digests +
+      // longs, never documents
+      val keepIdx = graft.ext.Dedup.exactDuplicateGroups(
+          frame(text), ValueCol, RowIdx)
+        .select(col("keep_id").as(RowIdx))
       FrameResult(reindex(df.join(keepIdx, RowIdx), lengthOf(dataset)))
 
     case ContaminationFlagOp(text, benchmark, n, minOverlap) =>
-      val t = frame(text)
-      // benchmark grams broadcast as 64-bit hashes, computed string-free
-      // and per-doc-distinct'd row-locally (ext.Corpus shape)
-      val bg = broadcast(frame(benchmark)
-        .select(explode(
-          graft.ext.Corpus.wordNgramHashes(col(ValueCol), n.toInt)).as("__g"))
-        .distinct())
-      val counts = t
-        .select(col(RowIdx), explode(array_distinct(
-          graft.ext.Corpus.wordNgramHashes(col(ValueCol), n.toInt))).as("__g"))
-        .join(bg, "__g")
-        .groupBy(col(RowIdx)).agg(count(lit(1)).as("__n"))
-      FrameResult(t.select(col(RowIdx))
-        .join(counts, Seq(RowIdx), "left")
-        .select(col(RowIdx),
-          (coalesce(col("__n"), lit(0L)) >= minOverlap).as(ValueCol)))
+      FrameResult(graft.ext.Corpus.contamination(frame(text), frame(benchmark),
+          ValueCol, RowIdx, n.toInt, minOverlap)
+        .select(col(RowIdx), col("is_contaminated").as(ValueCol)))
 
     case StratifiedSampleOp(dataset, stratum, frac, salt) =>
-      FrameResult(sampleByStratum(dataset, stratum, lit(frac), salt))
+      FrameResult(stratumSampled(dataset, stratum)(
+        graft.ext.Corpus.stratifiedSample(_, "__st", RowIdx, frac, salt)))
 
     case TemperatureSampleOp(dataset, stratum, alpha, frac, salt) =>
-      val df = frame(dataset)
-      checkSameLength(dataset, stratum, "stratum")
-      val keepIdx = graft.ext.Corpus.temperatureSample(
-          frame(stratum).select(col(RowIdx), col(ValueCol).as("__st")),
-          "__st", RowIdx, alpha, frac, salt)
-        .select(col(RowIdx))
-      FrameResult(reindex(df.join(keepIdx, RowIdx), lengthOf(dataset)))
+      FrameResult(stratumSampled(dataset, stratum)(
+        graft.ext.Corpus.temperatureSample(_, "__st", RowIdx, alpha, frac, salt)))
 
     case MixtureSampleOp(dataset, stratum, fracs, defaultFrac, salt) =>
-      val fracCol =
-        if (fracs.isEmpty) lit(defaultFrac)
-        else coalesce(
-          element_at(
-            map(fracs.toSeq.sortBy(_._1)
-              .flatMap { case (k, v) => Seq(lit(k), lit(v)) }: _*),
-            col("__st")),
-          lit(defaultFrac))
-      FrameResult(sampleByStratum(dataset, stratum, fracCol, salt))
+      FrameResult(stratumSampled(dataset, stratum)(
+        graft.ext.Corpus.mixtureSample(_, "__st", RowIdx, fracs, defaultFrac, salt)))
 
     case PackSequencesOp(tokens, seqLen) =>
       val tf = frame(tokens)
@@ -1303,25 +1264,17 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
       .drop("__old_idx")
   }
 
-  /** Shared core of Stratified/MixtureSampleOp: md5 rank on the ROW INDEX
-    * (selection depends only on positional identity + salt, not on how the
-    * stratum column was computed), keep floor(|stratum| * frac) per
-    * stratum, survivors re-indexed. `fracCol` may reference the stratum
-    * value as `__st` (per-stratum fractions). */
-  private def sampleByStratum(dataset: DatasetType, stratum: OpSpec,
-                              fracCol: Column, salt: String): DataFrame = {
+  /** The Stratified/Temperature/MixtureSampleOp frame: `sample` (a
+    * `Corpus` sampler) gets the `(__row_idx, __st)` frame and ranks on the
+    * ROW INDEX, so selection depends only on positional identity + salt,
+    * not on how the stratum column was computed; the kept rows are joined
+    * back and re-indexed. */
+  private def stratumSampled(dataset: DatasetType, stratum: OpSpec)(
+      sample: DataFrame => DataFrame): DataFrame = {
     val df = frame(dataset)
     checkSameLength(dataset, stratum, "stratum")
-    val rankKey = md5(concat_ws(":", lit(salt), col(RowIdx).cast("string")))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__st")).orderBy(rankKey, col(RowIdx))
-    val cw = org.apache.spark.sql.expressions.Window.partitionBy(col("__st"))
-    val keepIdx = frame(stratum)
-      .select(col(RowIdx), col(ValueCol).as("__st"))
-      .withColumn("__rk", row_number().over(w))
-      .withColumn("__n", count(lit(1)).over(cw))
-      .filter(col("__rk") <= floor(col("__n") * fracCol))
-      .select(col(RowIdx))
+    val keepIdx = sample(frame(stratum)
+      .select(col(RowIdx), col(ValueCol).as("__st"))).select(col(RowIdx))
     reindex(df.join(keepIdx, RowIdx), lengthOf(dataset))
   }
 
@@ -1329,56 +1282,6 @@ class LocalSparkRunner(val spark: SparkSession, val storeUri: String) {
     val na = lengthOf(a); val nb = lengthOf(b)
     if (na != nb) throw new IllegalArgumentException(
       s"$what length mismatch: dataset has $na rows, $what has $nb")
-  }
-
-  /** Exact-count seeded split (reference `local_arrow_runner.py:538-620`):
-    * float = proportion (test=ceil, train=floor), int = absolute, complement
-    * inferred, default test 0.25. Deterministic per seed within this engine.
-    */
-  private def assignSplit(df: DataFrame, testSize: Option[Any],
-                          trainSize: Option[Any], seed: Long): DataFrame = {
-    // the draw is a seeded hash, uniform over the full signed-long range —
-    // a known distribution, so the rank's bucket is a pure expression (no
-    // count+sample jobs; exact order within buckets via (draw, idx) sort)
-    val drawn = df.select(col(RowIdx).as("__orig_idx"))
-      .withColumn("__draw", xxhash64(col("__orig_idx"), lit(seed)))
-    val ranked = ColumnOps.withRowIdxByKnownRange(drawn,
-      ColumnOps.fullRangeBucket(drawn, col("__draw")),
-      col("__draw"), col("__orig_idx"))
-      .withColumnRenamed(RowIdx, "__rank")
-    val total = ranked.agg(count(lit(1)).as("__n"))
-    def resolveCount(size: Any, isTest: Boolean): Column = size match {
-      // reference semantics: test = ceil, train = floor
-      case d: Double =>
-        if (isTest) ceil(lit(d) * col("__n")).cast("long")
-        else floor(lit(d) * col("__n")).cast("long")
-      case c: Long => lit(c)
-      case c: Int => lit(c.toLong)
-      case other => throw new IllegalArgumentException(s"bad size $other")
-    }
-    val nTest: Column = (testSize, trainSize) match {
-      case (Some(t), _) => resolveCount(t, isTest = true)
-      case (None, Some(tr)) => col("__n") - resolveCount(tr, isTest = false)
-      case _ => ceil(lit(0.25) * col("__n")).cast("long")
-    }
-    // materialize-time validation, in-plan (reference errors:
-    // `tests/test_local_arrow_runner.py:551-568`): counts within [0, n];
-    // when BOTH sizes are given they must cover the dataset exactly
-    var guard: Column = when(nTest < 0 || nTest > col("__n"),
-      raise_error(format_string(
-        "train/test size must be between 0 and the dataset length (n=%s)", col("__n"))))
-    (testSize, trainSize) match {
-      case (Some(t), Some(tr)) =>
-        val nTrain = resolveCount(tr, isTest = false)
-        guard = coalesce(guard, when(nTest + nTrain =!= col("__n"),
-          raise_error(format_string(
-            "train size + test size must equal dataset size (n=%s)", col("__n")))))
-      case _ =>
-    }
-    ranked.crossJoin(broadcast(total))
-      .select(col("__orig_idx").as(RowIdx),
-        coalesce(guard.cast("string"),
-          when(col("__rank") < nTest, "test").otherwise("train")).as(ValueCol))
   }
 
   private val strictJsonUdf = udf { s: String =>

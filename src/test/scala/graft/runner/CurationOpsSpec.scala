@@ -94,6 +94,37 @@ class CurationOpsSpec extends SparkTestBase {
     assert(salted.map(_.getAs[String]("v")).toSeq != again)
   }
 
+  // one 100-row stratum: IEEE 100 × 0.29 = 28.999999999999996 and
+  // 100 × 0.57 = 56.99999999999999, one row short of the documented floor
+  private val oneStratum = LoadInlineJsonDatasetOp(Map(
+    "v" -> (0 until 100).map(_.toString),
+    "lang" -> Seq.fill(100)("en")))
+
+  /** `v` of the dataset rows at the row indexes `kept` holds. */
+  private def vsAt(r: LocalSparkRunner, kept: org.apache.spark.sql.DataFrame) =
+    r.toFrame(oneStratum).join(kept.select("__row_idx"), "__row_idx")
+      .collect().map(_.getAs[String]("v")).toSet
+
+  test("StratifiedSampleOp: floor(frac·n) for a non-dyadic frac, the Corpus kernel's rows") {
+    val r = newRunner()
+    val lang = SelectCategoricalColumnOp(oneStratum, "lang")
+    val kept = r.toFrame(StratifiedSampleOp(oneStratum, lang, frac = 0.29))
+      .collect().map(_.getAs[String]("v")).toSet
+    assert(kept.size == 29)
+    assert(kept == vsAt(r, graft.ext.Corpus.stratifiedSample(
+      r.toFrame(lang), "value", "__row_idx", 0.29, "graft")))
+  }
+
+  test("MixtureSampleOp: floor(frac·n) for a non-dyadic frac, the Corpus kernel's rows") {
+    val r = newRunner()
+    val lang = SelectCategoricalColumnOp(oneStratum, "lang")
+    val kept = r.toFrame(MixtureSampleOp(oneStratum, lang, Map("en" -> 0.57)))
+      .collect().map(_.getAs[String]("v")).toSet
+    assert(kept.size == 57)
+    assert(kept == vsAt(r, graft.ext.Corpus.mixtureSample(
+      r.toFrame(lang), "value", "__row_idx", Map("en" -> 0.57), 0.0, "graft")))
+  }
+
   test("spec validation errors") {
     intercept[IllegalArgumentException] {
       StratifiedSampleOp(corpus, SelectCategoricalColumnOp(corpus, "lang"), 1.5)

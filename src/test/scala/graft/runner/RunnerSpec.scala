@@ -695,6 +695,25 @@ class RunnerSpec extends SparkTestBase with graft.ops.StoredSchemaPins {
       .count(_ == "test") == 3)
   }
 
+  test("train/test split: the same rows whether the dataset reads as 1 partition or 4") {
+    val r = newRunner()
+    val dir = Files.createTempDirectory("graft-split-")
+    import spark.implicits._
+    val rows = (0 until 40).map(i => (i.toLong, s"v$i")).toDF("id", "v")
+    rows.coalesce(1).write.parquet(s"$dir/one")
+    rows.repartition(4).write.parquet(s"$dir/four")
+    def split(path: String, parts: Int) = {
+      val ds = r.fromParquet(path)
+      assert(r.toFrame(ds).rdd.getNumPartitions == parts)
+      r.toValues(AssignTrainTestSplitOp(ds, Some(0.25)))
+    }
+    val one = split(s"$dir/one", 1)
+    assert(one.count(_ == "test") == 10)
+    // the draw hashes the row index, not a per-partition stream, so each
+    // index gets the same split under either partitioning
+    assert(split(s"$dir/four", 4) == one)
+  }
+
   test("nested GroupedOp materializes recursively; group persists no result copy") {
     val r = newRunner()
     val ds = inline(4)
